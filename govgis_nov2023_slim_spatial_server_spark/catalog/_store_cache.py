@@ -2,8 +2,8 @@
 
 `spatial_mm._spatial_layers` and `geo_analytics._geo_store` build a
 synthetic polygon store once per session (ingest-once / query-many, the
-reference's load_data.py vs app.py split) and pin it with an eager
-`localCheckpoint`. A plain module dict keyed by ``(id(spark), sf_dir)``
+reference's load_data.py vs app.py split) and pin it with
+`session.checkpoint`. A plain module dict keyed by ``(id(spark), sf_dir)``
 has two failure modes the property harnesses exposed in review:
 
 * unbounded growth — harnesses that iterate many random sf_dirs
@@ -25,21 +25,6 @@ from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def store_width(spark: SparkSession, n_rows: int, rows_per_task: int = 1024,
-                floor: int = 4) -> int:
-    """Partition width for a materialized store: ~rows_per_task rows per
-    task, floored at 4 (so heavy per-row kernels — e.g. the union-area
-    rasterize — still parallelize on tiny gate stores) and capped at
-    defaultParallelism. Measured at the 15 k-row sf0.1 store (r10): an
-    unconditional repartition(32) cost spatial_point_filter ~0.45-0.54 s
-    min-of-3 vs ~0.29 s at width 14-16, with union_area NO worse
-    (~5.1 s vs ~5.9 s) — half-width cuts per-scan scheduling overhead
-    while ~1 k rows/task keeps every kernel busy. At 100 TB-scale row
-    counts the cap wins and this degenerates to defaultParallelism."""
-    return min(spark.sparkContext.defaultParallelism,
-               max(floor, n_rows // rows_per_task))
 
 
 class MaterializedStoreCache:

@@ -13,7 +13,7 @@ from ..functions.hashes import char_shingles
 from ..functions.text import tokens
 from ..functions.vector import dot, euclidean_distance, l2_norm
 from ..schemas import load_table
-from ..session import coalesce_materialized, local_rows_df
+from ..session import checkpoint, local_rows_df
 from ._registry import fmt_vec_sql, query, rnd_nz
 from .vector_text import PROBE_SQL, PROBE_VEC
 
@@ -1407,8 +1407,8 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Then right-size the per-level map stages (r16, guide §2.2/§6):
     # the pairs inherit the self-join's 64-partition width, so every
     # level's join+distinct otherwise schedules 64 near-empty tasks —
-    # see session.coalesce_materialized.
-    pp = coalesce_materialized(pp.localCheckpoint(eager=True))
+    # see session.checkpoint.
+    pp = checkpoint(pp)
     e = pp.select(
         F.explode(
             F.array(

@@ -47,10 +47,10 @@ from ..functions.spatial import (
 )
 from ..operators.spatial_join import grid_blocked_overlap_join
 from ..schemas import load_table
-from ..session import ensure_min_partitions, local_rows_df
+from ..session import GEOMETRY_STORE, checkpoint, local_rows_df, spread
 from ..sources.ingest import derive_bbox
 from ._registry import query
-from ._store_cache import MaterializedStoreCache, store_width
+from ._store_cache import MaterializedStoreCache
 
 # --------------------------------------------------------------------------
 # Deterministic polygon store (binary-exact lattice)
@@ -192,9 +192,8 @@ def _geo_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         # map-only geo kernel would run near-serially on a 32-core local
         # session (r9 rehearsal find: the union-area rasterize at 1× ran
         # on 2 cores). The shuffle moves a few MB once at ingest time;
-        # width sized by store rows (see _store_cache.store_width).
-        par = store_width(spark, wkb.count())
-        return derive_bbox(wkb).repartition(par).localCheckpoint(eager=True)
+        # width sized by store rows (see session.GEOMETRY_STORE).
+        return checkpoint(spread(derive_bbox(wkb)), GEOMETRY_STORE)
 
     return _geo_store_cache.get_or_build(spark, sf_dir, _build)
 
@@ -1531,15 +1530,14 @@ def spatial_union_snap_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: identical to `spatial_union_rings` (rasterize → engine
     pre-merge → ONE dissolve-key Exchange → 25-row broadcast) except the
-    jittered store builds inline (no cache — single consumer), width-
-    sized by `store_width` before the WKB UDF so the encode and the
-    rasterize parallelize. At 100 TB the snap tolerance is the declared
+    jittered store builds inline (no cache — single consumer), spread by
+    `session.spread` before the WKB UDF so the encode and the rasterize
+    parallelize. At 100 TB the snap tolerance is the declared
     contract: finer lattices trade rasterize rows for fidelity; the
     runs stay boundary-proportional at any cell size."""
     from ..operators.dissolve import merge_runs, union_rings_by_key
 
     c = load_table(spark, sf_dir, "customer")
-    par = store_width(spark, c.count())
     k = F.col("c_custkey")
     x0 = (
         F.lit(-125.0)
@@ -1553,14 +1551,16 @@ def spatial_union_snap_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = F.lit(1.0) + (k % 7).cast("double") * 0.25
     h = F.lit(1.0) + (k % 5).cast("double") * 0.25
-    params = c.select(
-        "c_custkey",
-        "c_nationkey",
-        x0.alias("x0"),
-        y0.alias("y0"),
-        w.alias("w"),
-        h.alias("h"),
-    ).repartition(par)
+    params = spread(
+        c.select(
+            "c_custkey",
+            "c_nationkey",
+            x0.alias("x0"),
+            y0.alias("y0"),
+            w.alias("w"),
+            h.alias("h"),
+        )
+    )
     wkb = params.select(
         "c_custkey",
         "c_nationkey",
@@ -1796,7 +1796,6 @@ def _snap_tagged_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dissolve import merge_runs
 
     c = load_table(spark, sf_dir, "customer")
-    par = store_width(spark, c.count())
     k = F.col("c_custkey")
     x0 = (
         F.lit(-125.0)
@@ -1810,14 +1809,16 @@ def _snap_tagged_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = F.lit(1.0) + (k % 7).cast("double") * 0.25
     h = F.lit(1.0) + (k % 5).cast("double") * 0.25
-    params = c.select(
-        "c_custkey",
-        "c_nationkey",
-        x0.alias("x0"),
-        y0.alias("y0"),
-        w.alias("w"),
-        h.alias("h"),
-    ).repartition(par)
+    params = spread(
+        c.select(
+            "c_custkey",
+            "c_nationkey",
+            x0.alias("x0"),
+            y0.alias("y0"),
+            w.alias("w"),
+            h.alias("h"),
+        )
+    )
     wkb = params.select(
         "c_custkey",
         (F.col("c_nationkey").cast("long") * 2 + (k % 2)).alias("c_nationkey"),
@@ -2088,12 +2089,12 @@ def spatial_clip_convex_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.spatial import _clip_pieces_int64
 
     a, b = _convex_store_sides(c)
-    # ensure_min_partitions: the scalar-join change made this a
+    # spread: the scalar-join change made this a
     # broadcast join over the single-file customer scan, so the join +
     # Arrow kernel inherited ONE partition and serialized on one core
     # (r15 optimization, guide §2.5); spreading the probe side keeps
     # join and kernel map-side parallel. No-op at scale.
-    pairs = grid_blocked_overlap_join(ensure_min_partitions(a), b, cell=32.0)
+    pairs = grid_blocked_overlap_join(spread(a), b, cell=32.0)
     sel = pairs.select(
         "akey", F.col("bkey_r").alias("bkey"),
         "ax", "ay", "ar", "bx_r", "by_r", "bs_r",
@@ -2322,7 +2323,7 @@ def spatial_clip_concave_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization round measurement; the downstream kernel was always
     # parallel because the grid join shuffles first). At 100 TB the
     # scan carries thousands of splits and this is a no-op.
-    a = ensure_min_partitions(
+    a = spread(
         c.where(ck % 2 == 1).select(
             ck.alias("akey"),
             F.when(is_bottom, bottom_xs).otherwise(left_xs).alias("sxs"),
@@ -2614,12 +2615,12 @@ def spatial_clip_convex_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.spatial import clip_ring_rows_batch
 
     a, b = _convex_store_sides(c)
-    # ensure_min_partitions: the scalar-join change made this a
+    # spread: the scalar-join change made this a
     # broadcast join over the single-file customer scan, so the join +
     # Arrow kernel inherited ONE partition and serialized on one core
     # (r15 optimization, guide §2.5); spreading the probe side keeps
     # join and kernel map-side parallel. No-op at scale.
-    pairs = grid_blocked_overlap_join(ensure_min_partitions(a), b, cell=32.0)
+    pairs = grid_blocked_overlap_join(spread(a), b, cell=32.0)
     sel = pairs.select(
         "akey", F.col("bkey_r").alias("bkey"),
         "ax", "ay", "ar", "bx_r", "by_r", "bs_r",
@@ -3090,10 +3091,10 @@ def spatial_clip_holed_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..functions.spatial import holed_boundary_rows_batch
 
-    # ensure_min_partitions: the broadcast grid join inherits the
+    # spread: the broadcast grid join inherits the
     # single-file customer scan's ONE partition, serializing the
     # boundary kernel on one core (r15 optimization, guide §2.5).
-    pairs = grid_blocked_overlap_join(ensure_min_partitions(a), b, cell=64.0)
+    pairs = grid_blocked_overlap_join(spread(a), b, cell=64.0)
     sel = pairs.select(
         "akey", F.col("bkey_r").alias("bkey"),
         "pax", "pay", "par", "pad", "pas",
@@ -3232,12 +3233,12 @@ def spatial_clip_holed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ax, ay = (8 * (ck % 641)).cast("long"), (8 * (ck % 677)).cast("long")
     axs, ays = _notched_octagon_arrays(ax, ay, r, d, ck % 4 == 1)
     ahx, ahy = _hole_arrays(ax, ay)
-    # ensure_min_partitions: the single-file customer scan is ONE
+    # spread: the single-file customer scan is ONE
     # partition at bench scale, serializing both store-sized Python
     # decompositions onto one core each (r15 optimization measurement);
     # no-op at 100 TB where the scan carries thousands of splits.
     a = _pieces(
-        ensure_min_partitions(
+        spread(
             c.where(ck % 2 == 1).select(
                 ck.alias("akey"), axs.alias("sxs"), ays.alias("sys"),
                 ahx.alias("hxs"), ahy.alias("hys"),
@@ -3250,7 +3251,7 @@ def spatial_clip_holed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bxs, bys = _notched_octagon_arrays(bx, by, r, d, ck % 4 == 0)
     bhx, bhy = _hole_arrays(bx, by)
     b = _pieces(
-        ensure_min_partitions(
+        spread(
             c.where(ck % 2 == 0).select(
                 ck.alias("bkey"), bxs.alias("sxs"), bys.alias("sys"),
                 bhx.alias("hxs"), bhy.alias("hys"),
@@ -3361,12 +3362,12 @@ def spatial_clip_general_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (8 + 8 * (F.expr("c_custkey DIV 4") % 2)).cast("long")
     ax, ay = (8 * (ck % 569)).cast("long"), (8 * (ck % 587)).cast("long")
     axs, ays = _notched_octagon_arrays(ax, ay, r, d, ck % 4 == 1)
-    # ensure_min_partitions: the single-file customer scan is ONE
+    # spread: the single-file customer scan is ONE
     # partition at bench scale, serializing both store-sized Python
     # decompositions onto one core each (r15 optimization measurement);
     # no-op at 100 TB where the scan carries thousands of splits.
     a = _pieces(
-        ensure_min_partitions(
+        spread(
             c.where(ck % 2 == 1).select(
                 ck.alias("akey"), axs.alias("sxs"), ays.alias("sys")
             )
@@ -3377,7 +3378,7 @@ def spatial_clip_general_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     by = (8 * (ck % 599) + 4).cast("long")
     bxs, bys = _notched_octagon_arrays(bx, by, r, d, ck % 4 == 0)
     b = _pieces(
-        ensure_min_partitions(
+        spread(
             c.where(ck % 2 == 0).select(
                 ck.alias("bkey"), bxs.alias("sxs"), bys.alias("sys")
             )

@@ -19,11 +19,7 @@ from pyspark.sql import functions as F
 from ..functions.hashes import word_shingle_hashes, word_shingles
 from ..operators.windows import floor_round
 from ..schemas import load_table
-from ..session import (
-    coalesce_materialized,
-    ensure_min_partitions,
-    local_rows_df,
-)
+from ..session import checkpoint, local_rows_df, spread
 from ._registry import fmt_vec_sql, query, rnd_nz
 from .vector_text import _SHINGLE_SQL
 
@@ -99,7 +95,7 @@ def cooccurrence_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is MB-scale while the token stream is the corpus; ordering for
     the LIMIT is on exact integers with a lexical tie-break."""
     d = _t(spark, sf_dir, "documents")
-    toks = _tokens_pos(ensure_min_partitions(d))
+    toks = _tokens_pos(spread(d))
     wd = Window.partitionBy("doc_id").orderBy("pos")
     nb = toks.select(
         "w",
@@ -179,7 +175,7 @@ def phrase_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the winning pair is a 1-row broadcast onto a map-only
     corpus rewrite; the pair search is one window + map-combined count."""
     d = _t(spark, sf_dir, "documents")
-    toks = _tokens_pos(ensure_min_partitions(d))
+    toks = _tokens_pos(spread(d))
     wd = Window.partitionBy("doc_id").orderBy("pos")
     bg = toks.select(
         F.col("w").alias("a"), F.lead("w", 1).over(wd).alias("b")
@@ -254,7 +250,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     from ..functions.vector import dot
 
-    scored = ensure_min_partitions(e).select(
+    scored = spread(e).select(
         dot("embedding", _V0).alias("w"),
         F.posexplode("embedding").alias("pos", "x"),
     )
@@ -314,7 +310,7 @@ def ngram_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: hashes come from word_shingle_hashes (token-hash mixing — no
     # per-shingle string allocation; membership-identical, see its
     # docstring; 1.79 → 1.53 s med on this entry).
-    sh = ensure_min_partitions(d).select(
+    sh = spread(d).select(
         "doc_id", word_shingle_hashes("text", 3).alias("s")
     )
     ex = sh.select(
@@ -458,7 +454,7 @@ def ngram_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures uncapped candidate pairs growing 54x/378x at 20x/60x rows
     while capped stays exactly linear."""
     d = _t(spark, sf_dir, "documents")
-    kept = _capped_shingle_hashes(ensure_min_partitions(d))
+    kept = _capped_shingle_hashes(spread(d))
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = kept.select(F.col("doc_id").alias("id_a"), "sh")
     b = kept.select(F.col("doc_id").alias("id_b"), "sh")
@@ -601,7 +597,7 @@ def substring_dup_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     base = (
-        ensure_min_partitions(d)
+        spread(d)
         .select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= 4)
     )
@@ -609,10 +605,10 @@ def substring_dup_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint (r15 optimization): the positional-gram subtree
     # feeds the df aggregate and BOTH self-join branches — the barrier
     # computes the scan+posexplode+hash pass once instead of three
-    # times; fresh per invocation. Narrowed after materialization (r16,
-    # session.coalesce_materialized): the 64-task spread width otherwise
+    # times; fresh per invocation. Narrowed by row count (r16,
+    # session.checkpoint): the 64-task spread width otherwise
     # re-schedules across the three downstream scans.
-    grams = coalesce_materialized(grams.localCheckpoint(eager=True))
+    grams = checkpoint(grams)
     hot = (
         grams.groupBy("sh")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -734,7 +730,7 @@ def substring_trim_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus instead of ranking it."""
     d = _t(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
-    base = ensure_min_partitions(d).select("doc_id", toks.alias("toks"))
+    base = spread(d).select("doc_id", toks.alias("toks"))
     grams = _positional_gram_hashes(base.where(F.size("toks") >= 4))
     hot = (
         grams.groupBy("sh")
@@ -863,7 +859,7 @@ def matryoshka_rerank_16(spark: SparkSession, sf_dir: str) -> DataFrame:
         * l2_norm(F.array(*[F.lit(float(x)) for x in PROBE_VEC]))
     )
     cand = (
-        ensure_min_partitions(e)
+        spread(e)
         .select("vec_id", "label", d16.alias("d16"), dfull.alias("d_full"))
         .orderBy("d16", "vec_id")
         .limit(30)
@@ -920,7 +916,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         F.broadcast(probes)
-        .crossJoin(ensure_min_partitions(e))
+        .crossJoin(spread(e))
         .where(F.col("vec_id") != F.col("probe_id"))
         .withColumn("__d", dist)
         .where((F.col("__d") >= 0.3) & (F.col("__d") < 0.7))
@@ -986,7 +982,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import dot, l2_norm
 
     e = _t(spark, sf_dir, "embeddings")
-    blk = ensure_min_partitions(e.where(F.col("vec_id") < 200)).select(
+    blk = spread(e.where(F.col("vec_id") < 200)).select(
         "vec_id", "embedding"
     )
     # norms are per-VECTOR: compute them once per side before the pair
@@ -1196,7 +1192,7 @@ def udtf_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     spark.udtf.register("trigrams_udtf", _trigram_udtf())
     view = f"__docs_udtf_{abs(hash(sf_dir)) % 10_000}"
-    ensure_min_partitions(d).select("doc_id", "text").createOrReplaceTempView(view)
+    spread(d).select("doc_id", "text").createOrReplaceTempView(view)
     return spark.sql(
         f"""
         SELECT g.gram, COUNT(*) AS cnt
@@ -1283,7 +1279,7 @@ def kmeans_two_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_vector.py; kmeans_assign_step still grades the native
     LEAST form) — so a 100 TB corpus is read once per iteration with no
     shuffle beyond the k-row aggregate."""
-    e = ensure_min_partitions(_t(spark, sf_dir, "embeddings"))
+    e = spread(_t(spark, sf_dir, "embeddings"))
     seeds = sorted(
         e.where(F.col("vec_id").between(1, 8)).select("vec_id", "embedding").collect(),
         key=lambda r: r["vec_id"],
@@ -1412,7 +1408,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic in degree — the df cap is applied before either join."""
     d = _t(spark, sf_dir, "documents")
     # 8-byte hashed shingle keys (same rationale as ngram_containment_topk)
-    ex = _capped_shingle_hashes(ensure_min_partitions(d))
+    ex = _capped_shingle_hashes(spread(d))
     pa = ex.select(F.col("doc_id").alias("u"), "sh")
     pb = ex.select(F.col("doc_id").alias("v"), "sh")
     edges = (
@@ -1712,7 +1708,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row xxhash64 re-derivation in the prefix machinery. Candidate
     # completeness is unchanged: any globally consistent shingle order
     # works, and (df, hash) is one.
-    t = ensure_min_partitions(d).select(
+    t = spread(d).select(
         "doc_id", word_shingle_hashes("text", 3).alias("s")
     )
     # the shingle-hash-set table feeds THREE join branches (explode,

@@ -732,7 +732,7 @@ def bpe_encode_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical greatest/least-guarded positional rewrite in DuckDB list
     lambdas — engine and oracle share the spec but not the execution
     path. Exact integer outputs; no rounding anywhere."""
-    from ..session import ensure_min_partitions
+    from ..session import spread
 
     # Parallelism (r15 optimization, guide §2.5): the single-file corpus
     # scans as ONE partition, serializing the tokenize/explode map side;
@@ -741,7 +741,7 @@ def bpe_encode_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # core. The spread is a no-op at scale; the pinned repartition
     # shuffles only VOCABULARY-sized rows (never the corpus) and keeps
     # the per-word merge chain — the entry's real compute — parallel.
-    d = ensure_min_partitions(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     n_part = spark.sparkContext.defaultParallelism * 2
     words = (
         d.select(
@@ -851,10 +851,10 @@ def bigram_lm_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring runs (write once, broadcast if the vocab head is truncated).
     DuckDB's 1-based list indexing pairs ws[i], ws[i+1] over i ∈
     [1, len-1], matching Spark's slice-zip bigram formation."""
-    from ..session import ensure_min_partitions
+    from ..session import spread
 
     d = _t(spark, sf_dir, "documents")
-    toks = ensure_min_partitions(d).select(
+    toks = spread(d).select(
         "doc_id", F.split(F.trim(F.col("text")), " ").alias("ws")
     )
     bi = toks.select(

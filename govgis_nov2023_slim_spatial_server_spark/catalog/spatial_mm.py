@@ -24,10 +24,10 @@ from ..functions.spatial import (
 from ..functions.text import html_to_markdown_udf
 from ..operators.multimodal import extract_byte_stats, with_binary_payload
 from ..schemas import load_table
-from ..session import ensure_min_partitions, local_rows_df
+from ..session import GEOMETRY_STORE, checkpoint, local_rows_df, spread
 from ..sources.ingest import derive_bbox
 from ._registry import query
-from ._store_cache import MaterializedStoreCache, store_width
+from ._store_cache import MaterializedStoreCache
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -81,9 +81,8 @@ def _spatial_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # source file would freeze a 1-2-partition layout into the
         # checkpoint and serialize every downstream scan-side kernel;
         # width sized by store rows so small stores don't pay 32-task
-        # scheduling per scan (see _store_cache.store_width)
-        par = store_width(spark, wkb.count())
-        return derive_bbox(wkb).repartition(par).localCheckpoint(eager=True)
+        # scheduling per scan (see session.GEOMETRY_STORE)
+        return checkpoint(spread(derive_bbox(wkb)), GEOMETRY_STORE)
 
     return _spatial_layers_cache.get_or_build(spark, sf_dir, _build)
 
@@ -711,10 +710,10 @@ def spatial_nn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("c_custkey").alias("c_custkey"))
     )
     pk = F.col("p_partkey")
-    # ensure_min_partitions (r15 optimization, guide §2.5): keeps the
-    # kernel pass parallel over the single-file part scan. No-op at
-    # scale where the point table carries many splits.
-    p = ensure_min_partitions(_t(spark, sf_dir, "part")).select(
+    # spread (r15 optimization, guide §2.5): keeps the kernel pass
+    # parallel over the single-file part scan. No-op at scale where the
+    # point table carries many splits.
+    p = spread(_t(spark, sf_dir, "part")).select(
         "p_partkey",
         ((pk * 13) % 401).cast("long").alias("px"),
         ((pk * 29) % 161).cast("long").alias("py"),
@@ -765,8 +764,8 @@ def _ring_bottomk_map(
     Exactness: every quantity is int64 (coordinates are mod-401/161
     lattice values, so dsq < 2^18); the bottom-k order is the single
     integer key ``dsq·2^44 + custkey`` — exactly the (dsq, custkey)
-    lexicographic tie-break, valid while custkey < 2^44 (asserted;
-    ~10^13, far above any TPC-H scale). -1 sentinels mark missing
+    lexicographic tie-break, valid while 1 <= custkey < 2^44 (both
+    asserted; ~10^13, far above any TPC-H scale). -1 sentinels mark missing
     candidates (fewer facilities than k).
 
     Scale shape: the facility position table is the entry's existing
@@ -800,6 +799,9 @@ def _ring_bottomk_map(
     )
     if full is not None:
         assert int(full[2].max()) < (1 << 44), "custkey outgrew the enc"
+        # a key <= 0 would collide with the -1 missing-candidate sentinel
+        # and break the dsq·2^44 + custkey order
+        assert int(full[2].min()) >= 1, "custkey must be >= 1"
     cache: dict = {}
 
     def _ring_arrays(cxy):
@@ -973,7 +975,7 @@ def spatial_knn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same probe-side spread as the k=1 sibling (r15 optimization,
     # guide §2.5): keeps the kernel pass parallel over the single-file
     # part scan
-    p = ensure_min_partitions(_t(spark, sf_dir, "part")).select(
+    p = spread(_t(spark, sf_dir, "part")).select(
         "p_partkey",
         ((pk * 13) % 401).cast("long").alias("px"),
         ((pk * 29) % 161).cast("long").alias("py"),

@@ -275,13 +275,13 @@ def ann_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed (~6× the 0.03 random-scan baseline; tests assert the margin).
     Clustered real embeddings land far higher at the same probe budget."""
     from ..operators.knn import similarity_join, similarity_join_lsh
-    from ..session import ensure_min_partitions
+    from ..session import spread
 
     e = _t(spark, sf_dir, "embeddings")
     # r15 (guide §2.5): both branches run their distance kernels on the
     # corpus-scan side of a broadcast join — a single small parquet file
     # scans as ONE partition and serializes them; no-op at scale.
-    e = ensure_min_partitions(e)
+    e = spread(e)
     probes = e.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_emb")
     )
@@ -859,9 +859,9 @@ def ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # probes and corpus both derive from the shingle table → materialize
     # once, spread across cores first (single-file scan = one partition)
-    from ..session import ensure_min_partitions
+    from ..session import spread
 
-    sh = ensure_min_partitions(d).select(
+    sh = spread(d).select(
         "doc_id", word_shingles("text", 3).alias("s")
     ).localCheckpoint(eager=True)
     probes = sh.where(F.col("doc_id") < 10).select(
@@ -1189,14 +1189,14 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings demonstrates on raw terms."""
     from ..functions.hashes import _let
     from ..functions.text import _FP_BASE, _FP_MOD
-    from ..session import ensure_min_partitions
+    from ..session import spread
 
     # The whole selection chain is per-document map work over the scan:
     # a single-file corpus scans as ONE partition and the interpreted
     # HOF chain serializes on one core (r15 optimization, guide §2.5 —
     # same class as the MinHash spread). The round-robin spread is a
     # no-op at scale where scans carry thousands of splits.
-    d = ensure_min_partitions(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     toks_col = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
 
     def tok_hash(t):
@@ -1544,24 +1544,35 @@ def dedup_keep_best_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = docs.join(comp, docs.doc_id == comp.id, "left").select(
         "doc_id", F.coalesce("comp", "doc_id").alias("component"), "__q"
     )
-    # One map-combinable aggregate instead of two windows (r15, guide
-    # §2.3): min(struct(-q, doc_id, q)) IS the (quality DESC, doc_id ASC)
-    # window pick — double negation is exact, struct order is
-    # lexicographic, and the third field never decides (equal (-q, id)
-    # implies equal q). Partial aggregation replaces the window's full
-    # sort of every member row. nq coalesces NULL quality to +inf
-    # (ADVICE r15): struct comparison sorts a NULL field FIRST, which
-    # would let a NULL-quality doc WIN the pick, while the window form's
-    # orderBy(desc) put NULLs LAST — +inf loses to every real -q, and an
-    # all-NULL group still picks the lowest doc_id with a NULL
-    # kept_quality, exactly the window's result. Latent-only: quality is
-    # NULL only for NULL text, absent from testdata and the property
-    # corpora.
+    return _keep_best_per_component(m)
+
+
+def _keep_best_per_component(m: DataFrame) -> DataFrame:
+    """Per ``component``: the highest-``__q`` member, ties to the lowest
+    ``doc_id``; NaN and NULL quality both rank last.
+
+    One map-combinable aggregate instead of two windows (r15, guide
+    §2.3): min(struct(-q, doc_id, q)) IS the (quality DESC, doc_id ASC)
+    window pick — double negation is exact, struct order is
+    lexicographic, and the third field never decides (equal (-q, id)
+    implies equal q). Partial aggregation replaces the window's full
+    sort of every member row. nq coalesces NULL quality to +inf
+    (ADVICE r15): struct comparison sorts a NULL field FIRST, which
+    would let a NULL-quality doc WIN the pick, while the window form's
+    orderBy(desc) put NULLs LAST — +inf loses to every real -q, and an
+    all-NULL group still picks the lowest doc_id with a NULL
+    kept_quality, exactly the window's result. NaN quality becomes NULL
+    first (ADVICE r16): Spark ranks NaN above +inf, so a NaN doc would
+    lose to a NULL-quality doc here while the window's orderBy(desc)
+    ranks it first; as NULL both forms agree. Latent-only: quality is
+    NULL only for NULL text and never NaN in testdata and the property
+    corpora."""
+    q = F.nanvl(F.col("__q"), F.lit(None).cast("double"))
     best = F.min(
         F.struct(
-            F.coalesce(-F.col("__q"), F.lit(float("inf"))).alias("nq"),
+            F.coalesce(-q, F.lit(float("inf"))).alias("nq"),
             F.col("doc_id").alias("kid"),
-            F.col("__q").alias("q"),
+            q.alias("q"),
         )
     ).alias("b")
     return (
@@ -1910,11 +1921,11 @@ def bigram_top_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg and a TakeOrdered top-k. At 100 TB the map-side combine absorbs
     almost everything: bigram cardinality ≪ bigram count. The slice/zip
     HOFs are interpreted per element, so the single-file test scan is
-    spread across cores first (ensure_min_partitions) — at real scale the
+    spread across cores first (session.spread) — at real scale the
     many-file scan parallelizes itself."""
-    from ..session import ensure_min_partitions
+    from ..session import spread
 
-    d = ensure_min_partitions(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     big = (
         d.select(tokens(F.lower(F.col("text"))).alias("__t"))
         .where(F.size("__t") >= 2)
@@ -2207,7 +2218,7 @@ def pq_adc_rank(
     Arrow kernel (`pq_encode_adc_arrow`, bit-identical by the
     argmin_euclidean_arrow argument) instead of 4×k interpreted
     `aggregate(zip_with(...))` folds per row, and the scan side is
-    spread via `ensure_min_partitions` (single small parquet files scan
+    spread via `session.spread` (single small parquet files scan
     as ONE partition; no-op at scale). Measured 2.06 → 0.5 s class at
     sf0.1; the oracle hash pins bit-equality."""
     probe = [float(x) for x in PROBE_VEC]
@@ -2226,10 +2237,10 @@ def pq_adc_rank(
         lut.append(row)
 
     from ..functions.vector import pq_encode_adc_arrow
-    from ..session import ensure_min_partitions
+    from ..session import spread
 
     kernel = pq_encode_adc_arrow(codebook, lut)
-    r = ensure_min_partitions(e.select("vec_id", "embedding")).select(
+    r = spread(e.select("vec_id", "embedding")).select(
         "vec_id", kernel(F.col("embedding")).alias("__pq")
     )
     return (

@@ -5,16 +5,15 @@ ORDER BY (reference backend/models.py:189) and the text-literal vector codec
 (reference backend/models.py:104-107, which disappears entirely — Spark
 arrays are native).
 
-Two implementation tiers, both exact (the reference has NO ANN index —
-SURVEY.md §4.1 — so brute-force is semantic parity, not a shortcut):
-
-1. **Native higher-order functions** (``zip_with`` + ``aggregate``): stays
-   entirely JVM-side inside whole-stage codegen; no Python boundary; this is
-   the default because at 100 TB the Arrow serialization of a pandas UDF is
-   pure overhead for a 64–1024-wide fused multiply-add.
-2. **numpy pandas UDF**: one BLAS matrix-vector product per Arrow batch.
-   Wins when dim is large and the distance is the dominant cost of the scan;
-   kept as an opt-in (`impl="pandas"`).
+Distances are exact (the reference has NO ANN index — SURVEY.md §4.1 —
+so brute-force is semantic parity, not a shortcut) and come in one tier:
+**native higher-order functions** (``zip_with`` + ``aggregate``), which stay
+entirely JVM-side inside whole-stage codegen with no Python boundary; at
+100 TB the Arrow serialization of a pandas UDF is pure overhead for a
+64–1024-wide fused multiply-add. The Arrow kernels below
+(``argmin_euclidean_arrow``, ``pq_encode_adc_arrow``) are not a second
+distance tier: each replaces a many-fold-per-row native form inside one
+catalog entry and is pinned bit-identical to it.
 
 All fold orders are sequential left-to-right, so results are deterministic
 and oracle-comparable.
@@ -93,33 +92,6 @@ def euclidean_distance(a: Column | str, b: Column | str | Iterable[float]) -> Co
     return F.sqrt(
         F.aggregate(diff, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
     )
-
-
-def make_dot_pandas_udf(query_vec: list[float]):
-    """Arrow-batched dot product against a fixed query vector.
-
-    The query vector is closed over (broadcast with the serialized UDF);
-    each batch is one ``np.dot`` — BLAS does dim×batch fused multiply-adds
-    JVM→Arrow→numpy without per-row Python. Use when dim ≥ ~256 makes the
-    HOF fold the scan bottleneck.
-    """
-    q = np.asarray(query_vec, dtype=np.float64)
-
-    @pandas_udf(DoubleType())
-    def _dot(batch: pd.Series) -> pd.Series:
-        if len(batch) == 0:
-            return pd.Series([], dtype=np.float64)
-        mat = np.stack(batch.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        return pd.Series(mat @ q)
-
-    return _dot
-
-
-def cosine_distance_pandas(emb_col: Column | str, query_vec: list[float]) -> Column:
-    """Distance column via the numpy path; assumes normalized inputs."""
-    udf = make_dot_pandas_udf(query_vec)
-    c = emb_col if isinstance(emb_col, Column) else F.col(emb_col)
-    return F.lit(1.0) - udf(c)
 
 
 def quantize_int8(emb_col: Column | str) -> Column:
@@ -231,44 +203,6 @@ def argmin_euclidean_arrow(cents: list[tuple[int, list[float]]]):
         )
 
     return _assign
-
-
-def pair_dot_arrow():
-    """Arrow-vectorized PAIR dot product: a pandas UDF over two embedding
-    columns, BIT-IDENTICAL to ``dot(a, b)`` (the interpreted
-    ``aggregate(zip_with(a, b, x·y), 0.0, acc + x)`` fold) — by the
-    `argmin_euclidean_arrow` argument:
-
-    - float32 → float64 widening is exact (and float64 input passes
-      through lossless); each product is ONE binary64 multiply on
-      identical inputs, exactly ``x.cast('double') * y.cast('double')``;
-    - the HOF's sequential left fold (init 0.0, then acc + prod[i] in
-      index order) is replicated by ``np.cumsum`` along the dim axis
-      (cumsum adds strictly left-to-right — NOT ``np.sum``, whose
-      pairwise summation reassociates and drifts in the last ulp);
-      0.0 + prod[0] == prod[0] exactly, so dropping the explicit init
-      changes nothing.
-
-    Why it exists (guide §4.1 — the pq_adc/kmeans lesson applied to the
-    dedup pair stage, VERDICT r15 #3): the label-blocked cosine
-    self-join evaluates one interpreted 64-element fold PER CANDIDATE
-    PAIR (~199k pairs × 64 lambda steps at sf0.1); the kernel is one
-    fused numpy pass per Arrow batch. Returned non-deterministic so the
-    threshold filter over the result cannot duplicate the evaluation
-    (guide §4.4, the r13 clip-kernel convention — the function is pure,
-    the marking only pins ONE ArrowEvalPython). Batch temporaries are
-    batch × 2 × dim float64 (~10 MB at the default 10k Arrow batch),
-    constant in corpus size."""
-
-    @pandas_udf(DoubleType())
-    def _pdot(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype=np.float64)
-        xa = np.array(list(a), dtype=np.float64)
-        xb = np.array(list(b), dtype=np.float64)
-        return pd.Series(np.cumsum(xa * xb, axis=1)[:, -1])
-
-    return _pdot.asNondeterministic()
 
 
 def pq_encode_adc_arrow(codebook: list[list[float]], lut: list[list[float]]):

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import coalesce_materialized
+from ..session import checkpoint
 
 
 def connected_components(
@@ -42,12 +42,11 @@ def connected_components(
     # dedup entries: the label-blocked cosine self-join — measured 8-9 s
     # per entry at sf0.1, ~3x the materialized-edge cost). The
     # checkpointed rows are two 8-byte ids per edge.
-    sym = sym.localCheckpoint(eager=True)
-    # Right-size the per-iteration map stages (r16, guide §2.2/§6):
-    # every hash-min iteration otherwise schedules the pair join's full
-    # shuffle width of near-empty tasks — see
-    # session.coalesce_materialized (profiled ~0.7 s/iteration here).
-    sym = coalesce_materialized(sym)
+    # Right-size the per-iteration map stages in the same job (r16,
+    # guide §2.2/§6): every hash-min iteration otherwise schedules the
+    # pair join's full shuffle width of near-empty tasks — see
+    # session.checkpoint (profiled ~0.7 s/iteration here).
+    sym = checkpoint(sym)
     nodes = sym.select(F.col("src").alias("id")).distinct()
     labels = nodes.select("id", F.col("id").alias("comp")).localCheckpoint(eager=True)
 

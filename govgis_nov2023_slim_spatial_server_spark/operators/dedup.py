@@ -26,7 +26,7 @@ from ..functions.hashes import (
 )
 from ..functions.text import fingerprint_udf
 from ..functions.vector import cosine_similarity
-from ..session import coalesce_materialized, ensure_min_partitions
+from ..session import checkpoint, spread
 
 
 def exact_dedup(df: DataFrame, subset: list[str]) -> DataFrame:
@@ -88,7 +88,7 @@ def minhash_lsh_candidates(
     and joining that.
     """
     rows = num_perm // bands
-    sigs = ensure_min_partitions(df).select(
+    sigs = spread(df).select(
         F.col(id_col).alias("id"),
         minhash_signature(
             word_shingles(text_col, shingle_k), num_perm=num_perm, seed=seed
@@ -146,8 +146,13 @@ def minhash_near_duplicates(
     from ..functions.hashes import base_hash_array, minhash_signature_arrow
 
     sig_udf = minhash_signature_arrow(num_perm=num_perm, seed=seed)
-    sigs = (
-        ensure_min_partitions(df)
+    # narrow the materialized signature table by row count (r16,
+    # session.checkpoint): it feeds four downstream branches (banding
+    # explode, both verification joins) that otherwise each schedule the
+    # spread's full 64-task width over ~5k rows; the CPU-heavy
+    # shingle+signature work already ran wide inside the checkpoint job.
+    sigs = checkpoint(
+        spread(df)
         .select(
             F.col(id_col).alias("id"),
             _let(
@@ -158,15 +163,7 @@ def minhash_near_duplicates(
             ).alias("__x"),
         )
         .select("id", "__x.sh", sig_udf(F.col("__x.bh")).alias("sig"))
-        .localCheckpoint(eager=True)
     )
-    # narrow the materialized signature table (r16,
-    # session.coalesce_materialized): it feeds four downstream branches
-    # (banding explode, both verification joins) that otherwise each
-    # schedule the spread's full 64-task width over ~5k rows; the
-    # CPU-heavy shingle+signature work already ran wide inside the
-    # checkpoint job.
-    sigs = coalesce_materialized(sigs)
     buckets = sigs.select(
         "id", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
@@ -215,7 +212,7 @@ def minhash_near_duplicates_exactband(
     from ..functions.hashes import minhash_signature as _sig
 
     rows = num_perm // bands
-    sigs = ensure_min_partitions(df).select(
+    sigs = spread(df).select(
         F.col(id_col).alias("id"),
         _let(
             word_shingles(text_col, shingle_k),
@@ -224,8 +221,8 @@ def minhash_near_duplicates_exactband(
                 _sig(s, num_perm=num_perm, seed=seed, base_hash="poly").alias("sig"),
             ),
         ).alias("__x"),
-    ).select("id", "__x.sh", "__x.sig").localCheckpoint(eager=True)
-    sigs = coalesce_materialized(sigs)  # r16: see minhash_near_duplicates
+    ).select("id", "__x.sh", "__x.sig")
+    sigs = checkpoint(sigs)  # r16: see minhash_near_duplicates
     banded = sigs.select(
         "id",
         F.explode(
@@ -309,7 +306,7 @@ def simhash_near_duplicates(
     least one 16-bit band → join per band key, verify with bit_count (native)
     — never a full O(N²) comparison.
     """
-    hashed = ensure_min_partitions(df).select(
+    hashed = spread(df).select(
         F.col(id_col).alias("id"), simhash_udf()(F.col(text_col)).alias("sh")
     )
     banded = hashed.select(
@@ -348,7 +345,6 @@ def embedding_near_duplicates(
     emb_col: str = "embedding",
     threshold: float = 0.95,
     block_col: str | None = None,
-    dot_impl: str = "native",
 ) -> DataFrame:
     """Near-dups by embedding cosine similarity ≥ threshold (exact).
 
@@ -356,22 +352,16 @@ def embedding_near_duplicates(
     per-block join — the required move at scale; None means full N²/2 and is
     only for small corpora / oracle checks.
 
-    ``dot_impl``: "native" (default) evaluates the per-pair dot as the JVM
-    HOF fold; "arrow" routes it through the vectorized `pair_dot_arrow`
-    kernel (bit-identical — see its docstring; pinned by test_vector.py).
-    The arrow path was MEASURED AND REJECTED as the default in r16
-    (VERDICT r15 #3): at sf0.1 the label-blocked pair stage is ~200k
-    candidate pairs, and the kernel read 0.715 s vs 0.466 s native
-    (same-session min-of-4) — the Arrow boundary's 2×64-double-per-pair
-    transfer costs more than the 64 interpreted fold steps it replaces,
-    and the consumer entries' wall time is dominated by the CC iteration
-    loop, not this stage. The kernel stays available (and exactness-
-    pinned) for genuinely dot-bound shapes: wider embeddings or a pair
-    stage that survives blocking at much higher multiplicity.
+    The per-pair dot is the JVM HOF fold. An Arrow pair-dot kernel was
+    measured and removed in its favour (r16, VERDICT r15 #3): at sf0.1 the
+    label-blocked pair stage is ~200k candidate pairs, and the kernel read
+    0.715 s vs 0.466 s native (same-session min-of-4) — the Arrow
+    boundary's 2×64-double-per-pair transfer costs more than the 64
+    interpreted fold steps it replaces.
     """
-    from ..functions.vector import dot, l2_norm, pair_dot_arrow
+    from ..functions.vector import dot, l2_norm
 
-    df = ensure_min_partitions(df)
+    df = spread(df)
     # Per-ROW norm, hoisted out of the pair join (r15, guide §2.3):
     # cosine_similarity evaluates THREE interpreted folds per pair
     # (dot + both norms) — precomputing each row's norm once leaves one
@@ -390,11 +380,7 @@ def embedding_near_duplicates(
     if block_col is not None:
         cond = cond & (F.col("a.blk") == F.col("b.blk"))
     denom = F.col("a.nrm") * F.col("b.nrm")
-    pdot = (
-        pair_dot_arrow()(F.col("a.emb"), F.col("b.emb"))
-        if dot_impl == "arrow"
-        else dot(F.col("a.emb"), F.col("b.emb"))
-    )
+    pdot = dot(F.col("a.emb"), F.col("b.emb"))
     cos = F.when(denom > 0, pdot / denom).otherwise(
         F.lit(None).cast("double")
     )

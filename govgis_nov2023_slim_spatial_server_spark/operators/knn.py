@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_distance, cosine_distance_pandas
+from ..functions.vector import cosine_distance
 
 
 def knn(
@@ -29,17 +29,11 @@ def knn(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     normalized: bool = False,
-    impl: str = "native",
     dist_name: str = "dist",
 ) -> DataFrame:
     """Top-k rows by cosine distance to ``query_vec``; deterministic via the
     ``id_col`` tie-break (SURVEY.md §7 hard part (b))."""
-    if impl == "pandas":
-        dist = cosine_distance_pandas(emb_col, query_vec) if normalized else None
-        if dist is None:
-            raise ValueError("pandas impl requires normalized=True")
-    else:
-        dist = cosine_distance(emb_col, query_vec, normalized=normalized)
+    dist = cosine_distance(emb_col, query_vec, normalized=normalized)
     return (
         df.withColumn(dist_name, dist)
         .orderBy(F.col(dist_name).asc(), F.col(id_col).asc())

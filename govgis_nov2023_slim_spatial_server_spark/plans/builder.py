@@ -27,7 +27,7 @@ from ..functions.spatial import (
     reproject_point,
     validate_lonlat,
 )
-from ..functions.vector import cosine_distance, cosine_distance_pandas
+from ..functions.vector import cosine_distance
 from ..operators.topk import top_k
 from ..schemas import TEXT_FIELDS
 
@@ -68,7 +68,6 @@ def build_search_plan(
     request: SearchRequest,
     *,
     normalized: bool = True,
-    dist_impl: str = "native",
     include_dist: bool = True,
 ) -> DataFrame:
     """Compose O14–O19 into the flagship plan (SURVEY.md §2.2)."""
@@ -86,10 +85,7 @@ def build_search_plan(
         df = df.where(make_point_intersects_udf(lon, lat)(F.col("geom_wkb")))
 
     # O17: exact cosine distance ranking
-    if dist_impl == "pandas":
-        dist = cosine_distance_pandas("embeddings", request.query_vec)
-    else:
-        dist = cosine_distance("embeddings", request.query_vec, normalized=normalized)
+    dist = cosine_distance("embeddings", request.query_vec, normalized=normalized)
     df = df.withColumn("dist", dist)
     for pred in request.extra_predicates:
         df = df.where(pred)

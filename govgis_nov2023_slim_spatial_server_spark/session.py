@@ -89,42 +89,52 @@ def local_rows_df(spark, rows, schema):
     )
 
 
-def ensure_min_partitions(df, min_partitions: int | None = None):
-    """Parallelism guard for CPU-heavy per-row stages (shingling, hashing,
-    vector math) fed by SMALL scans.
+# Width cost classes for `checkpoint`: (rows per task, minimum width).
+# Driver-loop iteration frames (hash-min CC, BFS levels) re-scan their
+# checkpoint once per step, so per-task scheduling dominates and ~64k rows
+# per task is right (profiled ~0.7 s/iteration of near-empty tasks on a
+# 92k-edge graph at the inherited shuffle width). Geometry stores feed
+# heavy per-row kernels (WKB parse, rasterize): ~1k rows per task keeps
+# every kernel busy, and the floor of 4 keeps tiny gate stores parallel
+# (measured at the 15k-row sf0.1 store: width 32 cost spatial_point_filter
+# 0.45-0.54 s against ~0.29 s at width 14-16, with union_area no worse).
+ITERATION = (65_536, 1)
+GEOMETRY_STORE = (1_024, 4)
+
+
+def spread(df):
+    """Round-robin ``df`` to ``defaultParallelism`` when the input cannot
+    already fill one split per core; otherwise return it unchanged.
 
     A single parquet file with one row group scans as ONE partition, and
-    everything narrow downstream inherits that — a 32-core box runs the
-    whole MinHash pipeline single-threaded (measured: signatures 3.0s → 1.2s
-    at sf0.1 after spreading). At 100 TB scans carry thousands of splits and
-    this is a no-op; the round-robin shuffle it inserts on small inputs
-    costs far less than the serial execution it prevents.
+    everything narrow downstream inherits that: a 32-core box ran the
+    whole MinHash pipeline single-threaded (signatures 3.0 s -> 1.2 s at
+    sf0.1 after spreading). The test is the optimizer's size estimate,
+    read without planning an RDD or running a job: below
+    ``defaultParallelism x spark.sql.files.maxPartitionBytes`` the scan
+    cannot produce a split per core. At 100 TB the estimate is far above
+    the threshold and this is a no-op; on small inputs the round-robin
+    shuffle costs far less than the serial execution it prevents.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    # NOTE (VERDICT r15): df.rdd forces a plan-to-RDD conversion per call
-    # — cheap at catalog sizes and the honest way to read the actual scan
-    # width, but it can plan-split AQE stages; revisit with a
-    # conf-derived shortcut only if it ever shows in profiles.
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    par = spark.sparkContext.defaultParallelism
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return df.repartition(par) if size < par * split_bytes else df
 
 
-def coalesce_materialized(df, target_rows: int = 65536):
-    """Size-derived coalesce of a MATERIALIZED (eager-checkpointed) frame
-    that feeds a driver-side iteration (hash-min CC, BFS levels).
+def checkpoint(df, cost=ITERATION):
+    """Materialize ``df`` (``localCheckpoint``) and narrow it to about
+    ``rows / rows_per_task`` partitions, never below the floor; ``cost``
+    is one of the classes above.
 
-    Checkpointed frames inherit their producing shuffle's width (64 at
-    local[32]), so every iteration's map stage schedules that many
-    near-empty tasks — profiled at ~0.7 s/iteration for a 92k-edge CC
-    graph where the actual work is milliseconds (r16, guide §2.2/§6 —
-    the scheduling analogue of the r10 store_width row-sizing). Narrow
-    (no shuffle) to ~``target_rows`` rows per task, floored at 1 and
-    capped at the existing width, so a genuinely large frame keeps its
-    layout — row-count-derived, never a local-mode constant. The count()
-    is a cheap scan of already-materialized partitions."""
-    n = df.count()
-    width = df.rdd.getNumPartitions()
-    target = max(1, min(width, int(n // target_rows) + 1))
-    return df.coalesce(target) if target < width else df
+    One job both materializes the checkpoint and counts its rows: the
+    count runs over the checkpointed plan's RDD directly, because a
+    DataFrame ``count()`` adds its own exchange (a second job under AQE).
+    ``coalesce`` is narrow and never widens, so a frame already at or
+    below the target keeps its layout and no width read is needed. The
+    width is row-count-derived, never a local-mode constant."""
+    rows_per_task, floor = cost
+    cp = df.localCheckpoint(eager=False)
+    n = cp._jdf.queryExecution().toRdd().count()
+    return cp.coalesce(max(floor, -(-n // rows_per_task)))

@@ -241,7 +241,7 @@ class TestWinnowingFingerprints:
         """The selection chain is one projection over the scan — the
         only Exchanges in the plan are the output ORDER BY's range
         partitioning and the parallelism spread's round-robin
-        (ensure_min_partitions, r15 optimization; no aggregation/join
+        (session.spread, r15 optimization; no aggregation/join
         shuffle anywhere)."""
         df = QUERIES["winnowing_fingerprints"](spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()

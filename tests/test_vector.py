@@ -3,8 +3,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from govgis_nov2023_slim_spatial_server_spark.functions.vector import (
-    cosine_distance,
-    cosine_distance_pandas,
     cosine_similarity,
     dot,
     euclidean_distance,
@@ -53,19 +51,6 @@ def test_l2_normalize(spark, vec_df):
     df, _ = vec_df
     norms = df.select(l2_norm(l2_normalize("embedding")).alias("n")).collect()
     assert all(abs(r["n"] - 1.0) < 1e-12 for r in norms)
-
-
-def test_pandas_impl_matches_native(spark, vec_df):
-    df, _ = vec_df
-    q = list(np.random.RandomState(3).randn(8))
-    qn = (np.asarray(q) / np.linalg.norm(q)).tolist()
-    ndf = df.withColumn("emb_n", l2_normalize("embedding"))
-    native = ndf.select("vec_id", cosine_distance("emb_n", qn, normalized=True).alias("d"))
-    pand = ndf.select("vec_id", cosine_distance_pandas("emb_n", qn).alias("d"))
-    nrows = {r["vec_id"]: r["d"] for r in native.collect()}
-    prows = {r["vec_id"]: r["d"] for r in pand.collect()}
-    for k in nrows:
-        assert nrows[k] == pytest.approx(prows[k], abs=1e-9)
 
 
 def test_knn_matches_bruteforce(spark, vec_df):
@@ -289,43 +274,3 @@ def test_argmin_euclidean_arrow_bit_identical_to_native(spark):
     assert arrow == native  # exact: cids and raw doubles
     # the duplicate-centroid tie resolved to the LOWER cid somewhere
     assert all(c != 6 for c, _ in arrow.values())
-
-
-def test_pair_dot_arrow_bit_identical_to_native(spark):
-    """The r16 Arrow pair-dot kernel must be BIT-identical (raw doubles)
-    to the native sequential aggregate(zip_with) fold it can replace in
-    `embedding_near_duplicates` (dot_impl='arrow') — 500 random float32
-    pairs incl. zero vectors and denormal-ish magnitudes, where any fold
-    reassociation would drift in the last ulp."""
-    import random
-
-    from govgis_nov2023_slim_spatial_server_spark.functions.vector import (
-        dot,
-        pair_dot_arrow,
-    )
-
-    rng = random.Random(20260818)
-    dim = 64
-    rows = []
-    for i in range(500):
-        scale = 10.0 ** rng.randint(-6, 3)
-        a = [rng.uniform(-scale, scale) for _ in range(dim)]
-        b = [rng.uniform(-scale, scale) for _ in range(dim)]
-        if i % 97 == 0:
-            a = [0.0] * dim
-        rows.append((i, a, b))
-    df = (
-        spark.createDataFrame(rows, ["pid", "ea", "eb"])
-        .withColumn("ea", F.col("ea").cast("array<float>"))
-        .withColumn("eb", F.col("eb").cast("array<float>"))
-    )
-    native = {
-        r["pid"]: r["d"]
-        for r in df.select("pid", dot("ea", "eb").alias("d")).collect()
-    }
-    kern = pair_dot_arrow()
-    arrow = {
-        r["pid"]: r["d"]
-        for r in df.select("pid", kern("ea", "eb").alias("d")).collect()
-    }
-    assert arrow == native  # exact raw doubles, no tolerance
