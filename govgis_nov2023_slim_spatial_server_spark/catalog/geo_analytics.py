@@ -48,7 +48,7 @@ from ..functions.spatial import (
 from ..operators.spatial_join import grid_blocked_overlap_join
 from ..schemas import load_table
 from ..session import GEOMETRY_STORE, checkpoint, local_rows_df, spread
-from ..sources.ingest import derive_bbox
+from ..sources.ingest import derive_geometry
 from ._registry import query
 from ._store_cache import MaterializedStoreCache
 
@@ -193,7 +193,7 @@ def _geo_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session (r9 rehearsal find: the union-area rasterize at 1× ran
         # on 2 cores). The shuffle moves a few MB once at ingest time;
         # width sized by store rows (see session.GEOMETRY_STORE).
-        return checkpoint(spread(derive_bbox(wkb)), GEOMETRY_STORE)
+        return checkpoint(spread(derive_geometry(wkb)), GEOMETRY_STORE)
 
     return _geo_store_cache.get_or_build(spark, sf_dir, _build)
 

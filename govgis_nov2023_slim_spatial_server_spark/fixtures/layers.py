@@ -16,7 +16,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..fixtures.embedder import FakeEmbedder
-from ..functions.spatial import wkb_box
+from ..functions.spatial import wkb_box, wkb_geometry
 from ..schemas import LAYERS_SCHEMA
 
 _TYPES = ["Feature Layer", "Table", "Raster Layer", "Map Service"]
@@ -43,7 +43,7 @@ def make_layer_rows(n: int = 500, seed: int = 42, dim: int = 64) -> list[tuple]:
         url = f"https://example.test/arcgis/rest/services/svc{i}/FeatureServer/0"
         meta = f"url: {url}\nname: {name}\ntype: {typ}\ndescription: {desc}"
         if rng.rand() < 0.02:
-            geom, bbox = None, None
+            geom, bbox, rings = None, None, None
         else:
             cx = rng.uniform(-125.0, -66.0)
             cy = rng.uniform(24.0, 49.0)
@@ -53,9 +53,10 @@ def make_layer_rows(n: int = 500, seed: int = 42, dim: int = 64) -> list[tuple]:
             ymin, ymax = cy - h / 2, cy + h / 2
             geom = wkb_box(xmin, ymin, xmax, ymax)
             bbox = (xmin, ymin, xmax, ymax)
+            rings = wkb_geometry(geom)[1]  # as ingest derives it
         vec = [float(np.float32(x)) for x in emb.embed_query(meta)]
         rows.append(
-            (f"layer-{i:06d}", name, typ, desc, url, meta, vec, geom, bbox)
+            (f"layer-{i:06d}", name, typ, desc, url, meta, vec, geom, bbox, rings)
         )
     # ~5% duplicated (id, metadata_text) pairs
     n_dup = max(1, n // 20)

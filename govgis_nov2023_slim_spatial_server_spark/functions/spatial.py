@@ -11,14 +11,17 @@ shapely/pyproj are not available in this environment, so the WKB codec,
 ray-casting point-in-polygon, and EPSG:3857 web-mercator math are
 implemented directly from their public specifications (OGC SFA WKB layout;
 even-odd ray casting; EPSG spherical-mercator formulas). All Python
-boundaries are Arrow-batched pandas UDFs.
+boundaries are Arrow-batched (pandas or Arrow) UDFs.
 
 Scale design (SURVEY.md §4.3.1): Spark has no secondary indexes, so the
 R-tree's coarse-filter role is played by a derived ``bbox`` struct column —
 a cheap native ``xmin≤lon≤xmax AND ymin≤lat≤ymax`` predicate that (a) is
-evaluated JVM-side before any Python, and (b) generates Parquet row-group
-min/max stats so file/row-group skipping prunes the scan itself. The exact
-ray-casting UDF then refines only the survivors (filter-and-refine).
+evaluated JVM-side, and (b) generates Parquet row-group min/max stats so
+file/row-group skipping prunes the scan itself. The exact even-odd ray cast
+then refines only the survivors (filter-and-refine), also natively:
+``point_in_rings`` runs over the ``geom_rings`` column that ingest derives
+from the WKB in the same Python pass as ``bbox`` (``wkb_geometry``), so a
+point query never crosses into Python.
 """
 
 from __future__ import annotations
@@ -29,12 +32,14 @@ from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import BooleanType
 
-from ..schemas import BBOX_SCHEMA
+from ..schemas import BBOX_SCHEMA, GEOMETRY_SCHEMA
 
 # ---------------------------------------------------------------------------
 # WKB codec (OGC Simple Features; EWKB SRID flag tolerated on read)
@@ -266,6 +271,12 @@ def wkb_bounds(wkb: bytes | None) -> tuple[float, float, float, float] | None:
         polys = parse_wkb_polygons(bytes(wkb))
     except (ValueError, struct.error):
         return None
+    return _polys_bounds(polys)
+
+
+def _polys_bounds(
+    polys: list[list[np.ndarray]],
+) -> tuple[float, float, float, float] | None:
     rings = [r for poly in polys for r in poly if r.shape[0] > 0]
     if not rings:  # parseable but empty (0-ring polygon, empty collection)
         return None
@@ -276,6 +287,51 @@ def wkb_bounds(wkb: bytes | None) -> tuple[float, float, float, float] | None:
         float(pts[:, 0].max()),
         float(pts[:, 1].max()),
     )
+
+
+def polys_rings(polys: list[list[np.ndarray]]) -> list[dict]:
+    """PARSED polygons → the ``geom_rings`` value (schemas.GEOM_RINGS_TYPE):
+    one ``{degenerate, rings}`` entry per polygon, each ring a flat
+    ``[x0, y0, x1, y1, …]`` list, holding exactly what
+    ``_polys_contain_point`` reads. A degenerate entry (Point/LineString,
+    or an unclosed exterior) keeps only its exterior vertices, the only
+    ones vertex hits test. Entries and rings that can add no hit are
+    dropped — polygons without rings, degenerate entries without vertices,
+    rings of fewer than two points (no edge) — so every kept ring holds at
+    least one vertex, and at least one edge when not degenerate, which is
+    what ``point_in_rings`` indexes."""
+    out = []
+    for rings in polys:
+        if not rings:
+            continue
+        ex = rings[0]
+        degenerate = ex.shape[0] < 4 or not (
+            ex[0, 0] == ex[-1, 0] and ex[0, 1] == ex[-1, 1]
+        )
+        if degenerate:
+            if ex.shape[0]:
+                out.append({"degenerate": True, "rings": [ex.ravel().tolist()]})
+            continue
+        out.append({
+            "degenerate": False,
+            "rings": [r.ravel().tolist() for r in rings if r.shape[0] >= 2],
+        })
+    return out
+
+
+def wkb_geometry(
+    wkb: bytes | None,
+) -> tuple[tuple[float, float, float, float] | None, list[dict] | None]:
+    """One parse → (``bbox``, ``geom_rings``): the two columns ingest
+    derives from a WKB value. NULL or malformed WKB → (None, None), which
+    prunes at the bbox and refines to False."""
+    if wkb is None:
+        return None, None
+    try:
+        polys = parse_wkb_polygons(bytes(wkb))
+    except (ValueError, struct.error):
+        return None, None
+    return _polys_bounds(polys), polys_rings(polys)
 
 
 def point_in_polygon_wkb(wkb: bytes | None, lon: float, lat: float) -> bool:
@@ -608,22 +664,25 @@ def polygons_intersect_wkb(wa: bytes | None, wb: bytes | None) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def wkb_bbox_udf():
-    """pandas UDF: WKB binary → bbox struct (ingest-time derivation)."""
+def wkb_geometry_udf():
+    """Arrow UDF: WKB binary → struct<bbox, geom_rings> (ingest-time
+    derivation of both the pruning and the refine column, one parse per
+    row, ``wkb_geometry``). An Arrow rather than a pandas UDF because the
+    pandas conversion turns every NaN into NULL: a NaN ring coordinate
+    must reach ``point_in_rings`` as NaN. The bbox keeps that NaN → NULL
+    rule explicitly."""
+    out_type = to_arrow_type(GEOMETRY_SCHEMA)
 
-    @pandas_udf(BBOX_SCHEMA)
-    def _bbox(wkbs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for w in wkbs:
-            b = wkb_bounds(w)
-            rows.append(
-                {"xmin": None, "ymin": None, "xmax": None, "ymax": None}
-                if b is None
-                else {"xmin": b[0], "ymin": b[1], "xmax": b[2], "ymax": b[3]}
-            )
-        return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
+    @arrow_udf(GEOMETRY_SCHEMA)
+    def _geometry(wkbs: pa.Array) -> pa.Array:
+        out = []
+        for w in wkbs.to_pylist():
+            b, rings = wkb_geometry(w)
+            bounds = [None if v is None or math.isnan(v) else v for v in b or (None,) * 4]
+            out.append({"bbox": dict(zip(BBOX_SCHEMA.names, bounds)), "geom_rings": rings})
+        return pa.array(out, type=out_type)
 
-    return _bbox
+    return _geometry
 
 
 def make_box_wkb_udf():
@@ -708,26 +767,64 @@ def make_area_centroid_udf():
     return _area_centroid
 
 
-def bbox_contains_point(bbox: Column | str, lon: float, lat: float) -> Column:
-    """Native coarse filter — the GiST-index replacement. Evaluated in
-    whole-stage codegen and eligible for Parquet min/max row-group skipping."""
-    b = F.col(bbox) if isinstance(bbox, str) else bbox
-    return (
-        (b["xmin"] <= F.lit(lon))
-        & (F.lit(lon) <= b["xmax"])
-        & (b["ymin"] <= F.lit(lat))
-        & (F.lit(lat) <= b["ymax"])
+def _sql_double(x: float) -> str:
+    """A double as Spark SQL text that parses back to the same bits:
+    ``repr`` is the shortest round-tripping decimal and the ``D`` suffix
+    parses it as a double (correctly rounded), not a decimal."""
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def bbox_contains_point(bbox: str, lon: float, lat: float) -> Column:
+    """Native coarse filter — the GiST-index replacement: four double
+    comparisons, pushed down to the Parquet scan for min/max row-group
+    skipping. One SQL text, like ``point_in_rings``: one Py4J call to
+    build."""
+    x, y = _sql_double(float(lon)), _sql_double(float(lat))
+    b = f"`{bbox}`"
+    return F.expr(
+        f"{b}.xmin <= {x} AND {x} <= {b}.xmax AND {b}.ymin <= {y} AND {y} <= {b}.ymax"
     )
 
 
-def make_point_intersects_udf(lon: float, lat: float):
-    """Exact refinement: ST_Intersects(geom, point) as an Arrow-batched UDF."""
+def point_in_rings(rings: str, lon: float, lat: float) -> Column:
+    """Exact refinement ST_Intersects(geom, point) as native higher-order
+    functions over a ``geom_rings`` column (``polys_rings``): the
+    decisions of ``_polys_contain_point``, bit for bit.
 
-    @pandas_udf(BooleanType())
-    def _intersects(wkbs: pd.Series) -> pd.Series:
-        return wkbs.apply(lambda w: point_in_polygon_wkb(w, lon, lat))
+    Per polygon entry: a degenerate one hits on an exact vertex match; any
+    other is inside when its edge crossings, summed over all its rings,
+    are odd (the per-ring parity toggles of the numpy form, added up).
+    Each edge (x1, y1) → (x2, y2) repeats the numpy float operations in
+    the same order — ``(y1 > lat) != (y2 > lat)``, then
+    ``lon < x1 + (lat − y1)·(x2 − x1) / (y2 − y1)`` — with two guards:
 
-    return _intersects
+    - the division runs only on a crossing edge, where y1 ≠ y2, so a
+      horizontal edge cannot raise DIVIDE_BY_ZERO under ANSI mode;
+    - the result keeps numpy's NaN semantics. Spark orders NaN above every
+      double and treats NaN = NaN as true, where numpy compares False. So
+      ``lon < xint`` is ``lon < nanvl(xint, lon)`` (False on a NaN xint),
+      and a vertex match also requires a non-NaN point. The crossing test
+      needs no guard: a NaN y1 or y2 makes xint NaN, so such an edge never
+      hits whichever way its crossing test goes.
+
+    NULL rings (NULL or malformed WKB) refine to False. The expression is
+    one SQL text, so building it is one Py4J call per request."""
+    x, y = _sql_double(float(lon)), _sql_double(float(lat))
+    vertex_hit = (
+        f"exists(sequence(0, size(p.rings[0]) - 2, 2), i -> "
+        f"p.rings[0][i] = {x} AND p.rings[0][i + 1] = {y} "
+        f"AND NOT isnan({x}) AND NOT isnan({y}))"
+    )
+    xint = f"r[i] + ({y} - r[i + 1]) * (r[i + 2] - r[i]) / (r[i + 3] - r[i + 1])"
+    crosses = f"(r[i + 1] > {y}) != (r[i + 3] > {y})"
+    crossings = (
+        f"size(filter(sequence(0, size(r) - 4, 2), i -> "
+        f"CASE WHEN {crosses} THEN {x} < nanvl({xint}, {x}) ELSE false END))"
+    )
+    return F.expr(
+        f"coalesce(exists(`{rings}`, p -> CASE WHEN p.degenerate THEN {vertex_hit} "
+        f"ELSE aggregate(p.rings, 0, (n, r) -> n + {crossings}) % 2 = 1 END), false)"
+    )
 
 
 def make_polys_intersect_udf():

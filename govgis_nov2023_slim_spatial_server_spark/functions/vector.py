@@ -21,10 +21,12 @@ and oracle-comparable.
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -32,12 +34,25 @@ from pyspark.sql.types import DoubleType
 
 
 def _as_col(v: Column | str | Iterable[float]) -> Column:
-    """Lift a Python vector literal into an array<double> Column."""
+    """Lift a Python vector literal into an array<double> Column.
+
+    The vector crosses to the JVM as one byte string and becomes ONE
+    array literal, so a query's plan costs the same at any embedding
+    width: a constant number of Py4J calls, and one literal node rather
+    than one child per element for the analyzer to revisit on every later
+    DataFrame step. The doubles travel as their IEEE-754 bytes, so the
+    array holds exactly the values given."""
     if isinstance(v, Column):
         return v
     if isinstance(v, str):
         return F.col(v)
-    return F.array(*[F.lit(float(x)) for x in v])
+    xs = [float(x) for x in v]
+    sc = SparkContext._active_spark_context
+    jvm = sc._jvm
+    arr = sc._gateway.new_array(jvm.double, len(xs))
+    raw = bytearray(struct.pack(f">{len(xs)}d", *xs))  # ByteBuffer's byte order
+    jvm.java.nio.ByteBuffer.wrap(raw).asDoubleBuffer().get(arr)
+    return Column(jvm.org.apache.spark.sql.functions.lit(arr))
 
 
 def dot(a: Column | str, b: Column | str | Iterable[float]) -> Column:

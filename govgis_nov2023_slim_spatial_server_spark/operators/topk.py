@@ -4,15 +4,15 @@ pgvector's ``LIMIT $n OFFSET $m`` (reference backend/models.py:181-191) has
 arbitrary tie order; the engine adds an explicit unique-key tie-break so
 results are stable across partitionings (SURVEY.md §7 hard part (b)).
 
-``orderBy().limit(n)`` compiles to ``TakeOrderedAndProject`` — per-partition
-k-heaps merged at the driver, no global sort — so offset+limit ≤ a few
+``orderBy().limit(n).offset(m)`` compiles to one
+``TakeOrderedAndProject(limit=n, offset=m)`` — per-partition n-heaps merged
+at the driver, no global sort, no Exchange — so offset+limit ≤ a few
 thousand is O(P·(skip+limit)) driver memory regardless of corpus size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 
 
 def top_k(
@@ -21,19 +21,6 @@ def top_k(
     k: int,
     skip: int = 0,
 ) -> DataFrame:
-    """Top-k with offset, fully in-plan (no driver collect).
-
-    For skip=0 this is a bare limit (TakeOrderedAndProject). With skip>0 a
-    row_number over the same total order drops the first ``skip`` rows; the
-    window input is already cut to skip+k rows, so the single-partition
-    window is bounded, not a global sort.
-    """
-    ordered = df.orderBy(*order).limit(skip + k)
-    if skip == 0:
-        return ordered
-    w = Window.orderBy(*order)
-    return (
-        ordered.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") > skip)
-        .drop("__rn")
-    )
+    """Top-k with offset, fully in-plan (no driver collect): the first
+    ``skip + k`` rows of the total order, less the first ``skip``."""
+    return df.orderBy(*order).limit(skip + k).offset(skip)

@@ -9,9 +9,12 @@ backend/models.py:114-193, shape at :186-191):
 
 Here the same logical plan is declared on a DataFrame and Catalyst picks
 the physical strategy. Filter ordering is the engine's one hand-written
-physical convention (SURVEY.md §4.3.1): the native bbox prune runs BEFORE
-the exact ray-casting UDF, so the Python boundary sees only bbox survivors
-and Parquet row-group stats can skip whole files.
+physical convention (SURVEY.md §4.3.1): the bbox prune runs BEFORE the
+exact ray cast, so the ray cast sees only bbox survivors and Parquet
+row-group stats can skip whole files. Both are native expressions (the ray
+cast reads the ingest-derived ``geom_rings``), the query vector is one
+literal, and paging is ``limit + offset``, so a request is one JVM-only job
+with one stage whose build cost does not depend on the embedding width.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.spatial import (
     bbox_contains_point,
-    make_point_intersects_udf,
+    point_in_rings,
     reproject_point,
     validate_lonlat,
 )
@@ -78,11 +81,12 @@ def build_search_plan(
         lowered = [t.lower() for t in request.type_filter]
         df = df.where(F.lower(F.col("type")).isin(lowered))
 
-    # O15: spatial filter — coarse native bbox prune, then exact UDF refine
+    # O15: spatial filter — coarse bbox prune, then exact ray-cast refine
     if request.point is not None:
         lon, lat = request.point
-        df = df.where(bbox_contains_point("bbox", lon, lat))
-        df = df.where(make_point_intersects_udf(lon, lat)(F.col("geom_wkb")))
+        df = df.where(
+            bbox_contains_point("bbox", lon, lat) & point_in_rings("geom_rings", lon, lat)
+        )
 
     # O17: exact cosine distance ranking
     dist = cosine_distance("embeddings", request.query_vec, normalized=normalized)

@@ -6,7 +6,8 @@ backend/load_data.py:67-81).  Spark-native mapping (SURVEY.md §1.3):
 vectors are ``array<float>`` (no codec layer needed — reference
 backend/load_data.py:149 disappears), geometry is WKB ``binary`` plus an
 engine-derived ``bbox`` struct used for pruning in place of the reference's
-GiST index (reference backend/load_data.py:89-99).
+GiST index (reference backend/load_data.py:89-99), plus engine-derived
+``geom_rings`` that the exact point refine reads natively.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    BooleanType,
     DoubleType,
     FloatType,
     StringType,
@@ -49,6 +51,29 @@ BBOX_SCHEMA = StructType(
     ]
 )
 
+# One entry per polygon, each ring a flat [x0, y0, x1, y1, ...] list: what
+# the native point refine reads (functions/spatial.py::polys_rings,
+# point_in_rings). Derived at ingest from geom_wkb, beside bbox.
+GEOM_RINGS_TYPE = ArrayType(
+    StructType(
+        [
+            StructField("degenerate", BooleanType(), False),
+            StructField(
+                "rings", ArrayType(ArrayType(DoubleType(), False), False), False
+            ),
+        ]
+    ),
+    False,
+)
+
+# The ingest derivation's output: both engine-added columns in one struct.
+GEOMETRY_SCHEMA = StructType(
+    [
+        StructField("bbox", BBOX_SCHEMA, True),
+        StructField("geom_rings", GEOM_RINGS_TYPE, True),
+    ]
+)
+
 LAYERS_SCHEMA = StructType(
     [
         StructField("id", StringType(), False),
@@ -59,8 +84,9 @@ LAYERS_SCHEMA = StructType(
         StructField("metadata_text", StringType(), True),
         StructField("embeddings", ArrayType(FloatType(), False), True),
         StructField("geom_wkb", BinaryType(), True),
-        # engine-added pruning column (SURVEY.md §4.3.1)
+        # engine-added pruning and refine columns (SURVEY.md §4.3.1)
         StructField("bbox", BBOX_SCHEMA, True),
+        StructField("geom_rings", GEOM_RINGS_TYPE, True),
     ]
 )
 

@@ -1,4 +1,4 @@
-"""Ingest pipeline: GeoParquet → deduped, bbox-augmented layers store.
+"""Ingest pipeline: GeoParquet → deduped, bbox- and ring-augmented layers store.
 
 Distributed re-expression of the reference loader's dataflow
 ``gpd.read_parquet → drop_duplicates(["id","metadata_text"]) →
@@ -13,7 +13,9 @@ needs no codec (the reference's shapely asyncpg codec, backend/
 load_data.py:152-168, disappears). The GiST index build (backend/
 load_data.py:89-99) is replaced by the derived ``bbox`` struct + an optional
 spatial sort at write time that tightens Parquet row-group min/max stats —
-the coarse-filter role of the R-tree (SURVEY.md §4.3.1).
+the coarse-filter role of the R-tree (SURVEY.md §4.3.1). The same Python
+pass derives ``geom_rings``, the parsed rings the native point refine
+reads, so no query decodes WKB.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.spatial import wkb_bbox_udf
+from ..functions.spatial import wkb_geometry_udf
 from ..schemas import TABLE_COLUMNS
 
 
@@ -30,24 +32,33 @@ def ingest_layers(
     path: str,
     geometry_col: str = "geometry",
 ) -> DataFrame:
-    """Read + dedup + rename + project + derive bbox (reference O1–O4 +
-    O7-equivalent)."""
+    """Read + dedup + rename + project + derive bbox and rings (reference
+    O1–O4 + O7-equivalent)."""
     df = spark.read.parquet(path)
     if geometry_col in df.columns and geometry_col != "geom_wkb":
         df = df.withColumnRenamed(geometry_col, "geom_wkb")
     df = df.dropDuplicates(["id", "metadata_text"])
     cols = [c for c in TABLE_COLUMNS if c in df.columns]
     df = df.select(*cols)
-    return derive_bbox(df)
+    return derive_geometry(df)
 
 
-def derive_bbox(df: DataFrame, geom_col: str = "geom_wkb") -> DataFrame:
-    """Attach the pruning bbox struct (engine convention — every ingest path
-    MUST run this or spatial pruning silently degrades to full scans,
-    SURVEY.md §7 hard part (a))."""
-    if "bbox" in df.columns:
+def derive_geometry(df: DataFrame, geom_col: str = "geom_wkb") -> DataFrame:
+    """Attach the pruning ``bbox`` struct and the refine ``geom_rings``
+    column, both from ONE Python pass over the WKB (engine convention —
+    every ingest path MUST run this or spatial pruning silently degrades
+    to full scans, SURVEY.md §7 hard part (a)). Derives only the columns
+    the frame lacks, so it is a no-op on a derived frame."""
+    missing = [c for c in ("bbox", "geom_rings") if c not in df.columns]
+    if not missing:
         return df
-    return df.withColumn("bbox", wkb_bbox_udf()(F.col(geom_col)))
+    # one UDF column holding both, split into the missing fields
+    g = "__geometry"
+    return (
+        df.withColumn(g, wkb_geometry_udf()(F.col(geom_col)))
+        .withColumns({c: F.col(f"{g}.{c}") for c in missing})
+        .drop(g)
+    )
 
 
 def write_layers(
@@ -88,4 +99,6 @@ def write_layers(
 
 
 def load_layers(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Open a layers store; a store written without a derived column
+    (before ``geom_rings`` existed) gets it derived on read."""
+    return derive_geometry(spark.read.parquet(path))

@@ -21,8 +21,13 @@ def test_top_k_offset(spark):
     df = spark.createDataFrame([(i, i % 3) for i in range(20)], "id: long, grp: long")
     order = [F.col("grp").asc(), F.col("id").asc()]
     full = [(r["grp"], r["id"]) for r in df.orderBy(*order).collect()]
-    got = [(r["grp"], r["id"]) for r in top_k(df, order, k=5, skip=3).collect()]
+    paged = top_k(df, order, k=5, skip=3)
+    got = [(r["grp"], r["id"]) for r in paged.collect()]
     assert got == full[3:8]
+    # one TakeOrderedAndProject carries the offset: no row_number Window
+    plan = paged._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject(limit=8, offset=3" in plan, plan
+    assert "Window" not in plan and "Exchange" not in plan, plan
     got0 = [(r["grp"], r["id"]) for r in top_k(df, order, k=5).collect()]
     assert got0 == full[:5]
 

@@ -1,12 +1,18 @@
+import gc
+
 import pytest
 
 from govgis_nov2023_slim_spatial_server_spark.api.models import Point, SemanticSearchRequest
 from govgis_nov2023_slim_spatial_server_spark.api.search import SearchService
 from govgis_nov2023_slim_spatial_server_spark.fixtures.embedder import FakeEmbedder
-from govgis_nov2023_slim_spatial_server_spark.fixtures.layers import make_layers_df
-from govgis_nov2023_slim_spatial_server_spark.functions.spatial import lonlat_to_mercator
+from govgis_nov2023_slim_spatial_server_spark.fixtures.layers import make_layer_rows, make_layers_df
+from govgis_nov2023_slim_spatial_server_spark.functions.spatial import (
+    lonlat_to_mercator,
+    point_in_polygon_wkb,
+)
 from govgis_nov2023_slim_spatial_server_spark.plans.builder import SearchRequest, build_search_plan
 from govgis_nov2023_slim_spatial_server_spark.schemas import TEXT_FIELDS
+from govgis_nov2023_slim_spatial_server_spark.sources.ingest import load_layers, write_layers
 
 
 @pytest.fixture(scope="module")
@@ -53,18 +59,103 @@ def test_limit_validation():
         SearchRequest(query_vec=[1.0], skip=-1)
 
 
-def test_bbox_prune_before_udf(spark, layers, embedder):
-    """The physical plan must evaluate the native bbox filter ahead of the
-    Python UDF refine (SURVEY.md §4.3.1) — assert via explain output."""
-    req = SearchRequest(query_vec=embedder.embed_query("x"), point=(-100.0, 35.0))
-    plan = build_search_plan(layers, req)._jdf.queryExecution().executedPlan().toString()
-    # the arrow-eval (pandas UDF) node must appear above a filter that
-    # already includes the bbox comparisons
-    assert "ArrowEvalPython" in plan or "BatchEvalPython" in plan
-    udf_pos = plan.find("EvalPython")
-    bbox_cond_pos = plan.find("xmin")
-    assert bbox_cond_pos != -1
-    assert udf_pos < bbox_cond_pos  # executed-plan trees print top-down: later string pos = earlier execution
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    """The layers fixture as a written store, read back as a request sees it."""
+    path = str(tmp_path_factory.mktemp("layers") / "store")
+    write_layers(make_layers_df(spark, n=120, seed=42), path)
+    return load_layers(spark, path)
+
+
+def _expected_ids(rows, qv, type_filter, point, skip, limit):
+    """Brute force over the fixture rows: the same sequential double fold
+    for the distance, the numpy ray cast for the point."""
+    seen, scored = set(), []
+    for r in rows:
+        rid, typ, vec, geom, bbox = r[0], r[2], r[6], r[7], r[8]
+        if rid in seen:
+            continue
+        seen.add(rid)
+        if type_filter and (typ or "").lower() not in [t.lower() for t in type_filter]:
+            continue
+        if point is not None and not (
+            bbox is not None
+            and bbox[0] <= point[0] <= bbox[2]
+            and bbox[1] <= point[1] <= bbox[3]
+            and point_in_polygon_wkb(geom, *point)
+        ):
+            continue
+        acc = 0.0
+        for x, y in zip(vec, qv):
+            acc += float(x) * float(y)
+        scored.append((1.0 - acc, rid))
+    return [rid for _, rid in sorted(scored)[skip : skip + limit]]
+
+
+@pytest.mark.parametrize("skip", [0, 5])
+@pytest.mark.parametrize("type_filter", [None, ["feature layer", "TABLE"]])
+@pytest.mark.parametrize("with_point", [False, True])
+def test_search_plan_jvm_only(spark, store, embedder, with_point, type_filter, skip):
+    """A search request is one JVM-only stage: no Python evaluation, no
+    Exchange, no Window — one TakeOrderedAndProject (with ``offset=`` when
+    paging) over a filtered scan — and the bbox prune is still pushed into
+    the Parquet scan. The answer equals a brute force."""
+    rows = make_layer_rows(n=120, seed=42)
+    hit = next(r for r in rows if r[8] is not None and (
+        type_filter is None or r[2].lower() in ("feature layer", "table")))
+    point = ((hit[8][0] + hit[8][2]) / 2, (hit[8][1] + hit[8][3]) / 2) if with_point else None
+    qv = embedder.embed_query("soil survey")
+    req = SearchRequest(query_vec=qv, type_filter=type_filter, point=point, skip=skip, limit=5)
+    out = build_search_plan(store, req)
+    width = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")  # full PushedFilters
+    try:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", width)
+    for node in ("EvalPython", "Exchange", "Window"):
+        assert node not in plan, plan
+    assert plan.count("TakeOrderedAndProject") == 1
+    assert ("offset=5" in plan) == (skip == 5), plan
+    if with_point:
+        pushed = plan[plan.index("PushedFilters: ["):]
+        pushed = pushed[: pushed.index("]")]
+        for f in ("LessThanOrEqual(bbox.xmin", "GreaterThanOrEqual(bbox.xmax",
+                  "LessThanOrEqual(bbox.ymin", "GreaterThanOrEqual(bbox.ymax"):
+            assert f in pushed, pushed
+    want = _expected_ids(rows, qv, type_filter, point, skip, 5)
+    assert [r["id"] for r in out.collect()] == want
+    if with_point and not skip:
+        assert hit[0] in want
+
+
+def test_plan_build_calls_independent_of_dim(spark, store):
+    """Building a request's plan makes the same number of Py4J calls at
+    embedding width 64 and 1024: the query vector is one literal."""
+    from py4j.clientserver import ClientServerConnection
+
+    def calls(dim):
+        qv = FakeEmbedder(dim=dim, seed=1).embed_query("roads")
+        req = SearchRequest(query_vec=qv, type_filter=["Table"], point=(-100.0, 35.0), skip=5)
+        n = 0
+        original = ClientServerConnection.send_command
+
+        def counted(self, command):
+            nonlocal n
+            n += not command.startswith("m\n")  # not a garbage-collector release
+            return original(self, command)
+
+        gc.collect()
+        ClientServerConnection.send_command = counted
+        try:
+            build_search_plan(store, req)
+        finally:
+            ClientServerConnection.send_command = original
+        return n
+
+    calls(64)  # first build resolves JVM classes once
+    at64, at1024 = calls(64), calls(1024)
+    assert 0 < at64 == at1024 == calls(64)
 
 
 def test_mercator_point_equals_4326(spark, layers, embedder):

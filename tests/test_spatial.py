@@ -1,5 +1,6 @@
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -7,20 +8,21 @@ from govgis_nov2023_slim_spatial_server_spark.functions.spatial import (
     bbox_contains_point,
     lonlat_to_mercator,
     make_box_wkb_udf,
-    make_point_intersects_udf,
     make_reproject_udf,
     mercator_to_lonlat,
     parse_wkb_polygons,
     point_in_polygon_wkb,
+    point_in_rings,
     reproject_point,
     validate_lonlat,
     wkb_bounds,
     wkb_box,
-    wkb_bbox_udf,
+    wkb_geometry,
+    wkb_linestring,
     wkb_point,
     wkb_polygon,
 )
-from govgis_nov2023_slim_spatial_server_spark.sources.ingest import derive_bbox
+from govgis_nov2023_slim_spatial_server_spark.sources.ingest import derive_geometry
 
 
 def test_wkb_roundtrip_box():
@@ -66,7 +68,7 @@ def test_wkb_point_and_none():
 def test_bbox_udf_and_prune(spark):
     rows = [(1, wkb_box(0, 0, 2, 2)), (2, wkb_box(5, 5, 9, 9)), (3, None)]
     df = spark.createDataFrame(rows, "id: long, geom_wkb: binary")
-    out = derive_bbox(df)
+    out = derive_geometry(df)
     got = {r["id"]: r["bbox"] for r in out.collect()}
     assert got[1]["xmin"] == 0.0 and got[1]["ymax"] == 2.0
     assert got[3]["xmin"] is None
@@ -74,11 +76,140 @@ def test_bbox_udf_and_prune(spark):
     assert [r["id"] for r in hits] == [1]
 
 
-def test_exact_intersects_udf(spark):
+def test_point_in_rings_refine(spark):
     rows = [(1, wkb_box(0, 0, 2, 2)), (2, wkb_box(5, 5, 9, 9)), (3, None)]
-    df = spark.createDataFrame(rows, "id: long, geom_wkb: binary")
-    out = df.where(make_point_intersects_udf(6.0, 6.0)(F.col("geom_wkb")))
+    df = derive_geometry(spark.createDataFrame(rows, "id: long, geom_wkb: binary"))
+    out = df.where(point_in_rings("geom_rings", 6.0, 6.0))
     assert [r["id"] for r in out.collect()] == [2]
+    # the refine is native: no Python evaluation node in its plan
+    refine = df.select("id", "geom_rings").localCheckpoint()
+    plan = refine.where(point_in_rings("geom_rings", 6.0, 6.0))._jdf.queryExecution()
+    assert "EvalPython" not in plan.executedPlan().toString()
+
+
+def _geometry_cases(rng):
+    """Seeded WKB values for the point_in_rings bit-identity test, on a
+    half-unit grid so query points land on vertices and edges."""
+    import struct as _struct
+
+    def grid(lo, hi):
+        return float(rng.randint(2 * lo, 2 * hi + 1)) / 2
+
+    def rand_box():
+        x0, y0 = grid(-6, 4), grid(-6, 4)
+        return x0, y0, x0 + grid(1, 5), y0 + grid(1, 5)
+
+    def star(cx, cy, n):
+        ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+        rad = rng.uniform(0.5, 4.0, n)
+        pts = [(float(np.round(2 * (cx + r * np.cos(a)))) / 2,
+                float(np.round(2 * (cy + r * np.sin(a)))) / 2)
+               for a, r in zip(ang, rad)]
+        return pts + [pts[0]]
+
+    def holed():
+        x0, y0, x1, y1 = rand_box()
+        x1, y1 = x1 + 2, y1 + 2
+        hole = [(x0 + 1, y0 + 1), (x1 - 1, y0 + 1), (x1 - 1, y1 - 1),
+                (x0 + 1, y1 - 1), (x0 + 1, y0 + 1)]
+        outer = [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
+        return [outer, hole]
+
+    def multi(polys):
+        return b"".join([_struct.pack("<BII", 1, 6, len(polys))]
+                        + [wkb_polygon(p) for p in polys])
+
+    def multipoint(pts):
+        return b"".join([_struct.pack("<BII", 1, 4, len(pts))]
+                        + [wkb_point(x, y) for x, y in pts])
+
+    def raw_polygon(rings):  # no ring closing, empty rings allowed
+        out = [_struct.pack("<BII", 1, 3, len(rings))]
+        for ring in rings:
+            out.append(_struct.pack("<I", len(ring)))
+            out += [_struct.pack("<dd", x, y) for x, y in ring]
+        return b"".join(out)
+
+    nan = float("nan")
+    cases = [None, b"", b"\x01\x03", b"\x01\x63\x00\x00\x00",
+             raw_polygon([]), raw_polygon([[]]),
+             raw_polygon([[(0, 0), (4, 0), (4, 4), (0, 4), (0, 0)], [], [(1, 1)]]),
+             raw_polygon([[(0, 0), (4, 0), (4, 4), (0, 4)]]),  # unclosed
+             wkb_linestring([]),
+             wkb_polygon([[(0, 0), (nan, 0), (4, 4), (0, 4), (0, 0)]]),
+             wkb_polygon([[(nan, nan), (4, 0), (4, 4), (nan, nan)]]),
+             wkb_polygon([[(0, nan), (4, 0), (4, 4), (0, 4), (0, nan)]]),
+             wkb_point(nan, nan), wkb_point(1.0, nan),
+             _struct.pack(">BIdd", 0, 1, 1.5, 2.0),  # big-endian point
+             ]
+    for _ in range(60):
+        cases.append(wkb_box(*rand_box()))
+    for _ in range(40):
+        cases.append(wkb_polygon([star(grid(-3, 3), grid(-3, 3), int(rng.randint(3, 12)))]))
+    for _ in range(40):
+        cases.append(wkb_polygon(holed()))
+    for _ in range(40):
+        parts = [holed() if rng.rand() < 0.5 else [star(grid(-3, 3), grid(-3, 3), 6)]
+                 for _ in range(int(rng.randint(2, 4)))]
+        cases.append(multi(parts))
+    for _ in range(30):
+        cases.append(wkb_point(grid(-6, 6), grid(-6, 6)))
+        cases.append(wkb_linestring([(grid(-6, 6), grid(-6, 6)) for _ in range(int(rng.randint(1, 5)))]))
+        cases.append(multipoint([(grid(-6, 6), grid(-6, 6)) for _ in range(3)]))
+    for _ in range(20):
+        cases.append(rng.bytes(int(rng.randint(1, 80))))
+    for _ in range(10):  # horizontal edges with NaN ordinates mixed in
+        x0, y0, x1, y1 = rand_box()
+        cases.append(wkb_polygon([[(x0, y0), (x1, y0), (x1, nan), (x1, y1),
+                                   (x0, y1), (x0, y0)]]))
+    return cases
+
+
+def test_point_in_rings_bit_identical_to_wkb_ray_cast(spark):
+    """point_in_rings over ingest-derived rings decides exactly what the
+    numpy ray cast decides over the WKB, for every (geometry, point) pair:
+    holes, multipolygons, degenerate Point/LineString geometries, NULL and
+    malformed WKB, points on vertices and edges, horizontal edges under
+    ANSI mode, and NaN coordinates on either side."""
+    rng = np.random.RandomState(20231117)
+    geoms = _geometry_cases(rng)
+    nan = float("nan")
+    points = [(float(x) / 2, float(y) / 2) for x in range(-12, 13, 3) for y in range(-12, 13, 3)]
+    points += [(float(rng.uniform(-7, 7)), float(rng.uniform(-7, 7))) for _ in range(20)]
+    points += [(nan, 0.0), (0.0, nan), (nan, nan), (1.5, 2.0), (-0.0, 0.0), (4.0, 4.0)]
+    assert len(geoms) >= 300 and len(points) >= 80
+
+    gdf = derive_geometry(spark.createDataFrame(
+        [(i, g) for i, g in enumerate(geoms)], "gid: long, geom_wkb: binary"))
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = gdf.select("gid", *[
+            point_in_rings("geom_rings", x, y).alias(f"p{j}") for j, (x, y) in enumerate(points)
+        ]).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    got = {(r["gid"], j): r[f"p{j}"] for r in rows for j in range(len(points))}
+    want = {
+        (i, j): bool(point_in_polygon_wkb(g, x, y))
+        for i, g in enumerate(geoms) for j, (x, y) in enumerate(points)
+    }
+    assert sum(want.values()) > 500  # the cases hit, not only miss
+    mismatches = [k for k in want if got[k] is not want[k]]
+    assert not mismatches, [(geoms[i], points[j], want[(i, j)]) for i, j in mismatches[:5]]
+
+
+def test_wkb_geometry_one_parse():
+    """wkb_geometry returns wkb_bounds' box and the rings the refine reads."""
+    w = wkb_polygon([[(0, 0), (4, 0), (4, 4), (0, 4), (0, 0)], [(1, 1), (2, 1), (2, 2), (1, 1)]])
+    bbox, rings = wkb_geometry(w)
+    assert bbox == wkb_bounds(w)
+    assert rings == [{"degenerate": False, "rings": [
+        [0.0, 0.0, 4.0, 0.0, 4.0, 4.0, 0.0, 4.0, 0.0, 0.0],
+        [1.0, 1.0, 2.0, 1.0, 2.0, 2.0, 1.0, 1.0]]}]
+    assert wkb_geometry(wkb_point(3.0, 4.0))[1] == [{"degenerate": True, "rings": [[3.0, 4.0]]}]
+    assert wkb_geometry(None) == (None, None)
+    assert wkb_geometry(b"\x01\x99\x00\x00\x00") == (None, None)
 
 
 def test_box_wkb_udf_matches_python(spark):

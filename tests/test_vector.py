@@ -3,6 +3,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from govgis_nov2023_slim_spatial_server_spark.functions.vector import (
+    _as_col,
     cosine_similarity,
     dot,
     euclidean_distance,
@@ -26,6 +27,33 @@ def test_dot_matches_numpy(spark, vec_df):
     for i, emb in rows[:10]:
         expect = float(np.float64(np.asarray(emb, dtype=np.float64)) @ np.asarray(q))
         assert got[i] == pytest.approx(expect, rel=1e-12)
+
+
+def test_vector_literal_is_one_literal_of_the_same_doubles(spark, vec_df):
+    """A Python query vector becomes ONE array literal holding exactly the
+    doubles of the per-element ``lit`` form, and the dot fold over it is
+    bit-identical to the fold over that form."""
+    import struct
+
+    rng = np.random.RandomState(3)
+    specials = [0.0, -0.0, 5e-324, -1.7976931348623157e308, 1e-05, 123456789.125,
+                float("inf"), float("-inf"), float("nan")]
+    q = [float(x) for x in rng.randn(1024).astype("float32")] + specials
+    lit = _as_col(q)
+    per_element = F.array(*[F.lit(x) for x in q])
+    row = spark.range(1).select(lit.alias("a"), per_element.alias("b")).first()
+    assert [struct.pack("<d", x) for x in row["a"]] == [struct.pack("<d", x) for x in row["b"]]
+    assert spark.range(1).select(lit).schema[0].dataType.simpleString() == "array<double>"
+    plan = spark.range(1).select(lit.alias("a"))._jdf.queryExecution().analyzed().toString()
+    assert "array(" not in plan  # a literal, not an array(...) of 1033 children
+
+    df, _ = vec_df
+    q8 = q[:8]
+    got = df.select("vec_id", dot("embedding", q8).alias("d")).orderBy("vec_id").collect()
+    want = df.select(
+        "vec_id", dot("embedding", F.array(*[F.lit(x) for x in q8])).alias("d")
+    ).orderBy("vec_id").collect()
+    assert [struct.pack("<d", r["d"]) for r in got] == [struct.pack("<d", r["d"]) for r in want]
 
 
 def test_cosine_and_norms(spark, vec_df):

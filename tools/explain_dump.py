@@ -17,7 +17,7 @@ NOTES = {
     "q3_top_revenue_orders": "segment filter pushed; broadcast joins; TakeOrderedAndProject.",
     "q5_nation_revenue": "star join: every dim broadcast, zero sort-merge joins.",
     "tumbling_window_1h": "window bucketing is map-side projection; one hash-agg shuffle.",
-    "spatial_point_filter": "native bbox filter evaluated before the ArrowEval (exact ray-cast) node — filter-and-refine.",
+    "spatial_point_filter": "native bbox comparisons ahead of the native exact ray cast over geom_rings in one filter — filter-and-refine with no Python node.",
     "repetition_filter": "zero-shuffle: all Gopher ratios are array expressions in one project over the scan (no Exchange).",
     "decontaminate_benchmark": "benchmark shingle set broadcast (BroadcastExchange → BroadcastHashJoin); corpus side never shuffles before the final agg.",
     "chunk_dedup_summary": "keep-first window partitions by xxhash64(chunk_text) — the Exchange carries an 8-byte key, not passage text.",
