@@ -2,8 +2,9 @@
 
 The Spark translation of the reference lifecycle (SURVEY.md §3.1): resident
 SparkSession instead of per-request asyncpg connections (reference
-backend/app.py:19-25), DataFrame plan instead of a SQL string, ``collect()``
-(bounded by limit ≤ 10) instead of ``conn.fetch``; exceptions → in-band
+backend/app.py:19-25), one parameterized SQL statement as the
+reference's one parameterized SQL string, ``collect()`` (bounded by
+limit ≤ 10) instead of ``conn.fetch``; exceptions → in-band
 error (reference backend/app.py:49-53). The MCP markdownify pass (reference
 backend/mcp.py:12-20) is applied post-collect when requested.
 """

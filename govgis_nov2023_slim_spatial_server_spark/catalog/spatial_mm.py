@@ -731,6 +731,14 @@ def spatial_nn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Most facility keys `_ring_bottomk_map` may close over. The table is
+# collected to the driver and pickled into the kernel, so it ships with
+# every task; a larger table belongs in a cell-bucketed join
+# (operators.spatial_join.cell_bucketed_ring_join). The ring entries' key
+# lattice has <= 700 positions x k <= 5 keys each.
+RING_TABLE_MAX_KEYS = 1 << 16
+
+
 def _ring_bottomk_map(
     fac_pos: list, k: int = 5, cell: int = 32, guarantee: int = 1088
 ):
@@ -778,6 +786,10 @@ def _ring_bottomk_map(
 
     from collections import defaultdict
 
+    n_keys = sum(len(keys) for _, _, keys in fac_pos)
+    assert n_keys <= RING_TABLE_MAX_KEYS, (
+        f"facility table of {n_keys} keys exceeds RING_TABLE_MAX_KEYS"
+    )
     by_cell: dict = defaultdict(list)
     fkx: list = []
     fky: list = []

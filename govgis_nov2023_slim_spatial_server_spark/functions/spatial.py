@@ -774,19 +774,21 @@ def _sql_double(x: float) -> str:
     return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
 
 
-def bbox_contains_point(bbox: str, lon: float, lat: float) -> Column:
-    """Native coarse filter — the GiST-index replacement: four double
-    comparisons, pushed down to the Parquet scan for min/max row-group
-    skipping. One SQL text, like ``point_in_rings``: one Py4J call to
-    build."""
+def bbox_contains_point_sql(bbox: str, lon: float, lat: float) -> str:
+    """Native coarse filter — the GiST-index replacement — as SQL text:
+    four double comparisons, pushed down to the Parquet scan for min/max
+    row-group skipping."""
     x, y = _sql_double(float(lon)), _sql_double(float(lat))
     b = f"`{bbox}`"
-    return F.expr(
-        f"{b}.xmin <= {x} AND {x} <= {b}.xmax AND {b}.ymin <= {y} AND {y} <= {b}.ymax"
-    )
+    return f"{b}.xmin <= {x} AND {x} <= {b}.xmax AND {b}.ymin <= {y} AND {y} <= {b}.ymax"
 
 
-def point_in_rings(rings: str, lon: float, lat: float) -> Column:
+def bbox_contains_point(bbox: str, lon: float, lat: float) -> Column:
+    """``bbox_contains_point_sql`` as a Column: one Py4J call to build."""
+    return F.expr(bbox_contains_point_sql(bbox, lon, lat))
+
+
+def point_in_rings_sql(rings: str, lon: float, lat: float) -> str:
     """Exact refinement ST_Intersects(geom, point) as native higher-order
     functions over a ``geom_rings`` column (``polys_rings``): the
     decisions of ``_polys_contain_point``, bit for bit.
@@ -807,8 +809,7 @@ def point_in_rings(rings: str, lon: float, lat: float) -> Column:
       needs no guard: a NaN y1 or y2 makes xint NaN, so such an edge never
       hits whichever way its crossing test goes.
 
-    NULL rings (NULL or malformed WKB) refine to False. The expression is
-    one SQL text, so building it is one Py4J call per request."""
+    NULL rings (NULL or malformed WKB) refine to False."""
     x, y = _sql_double(float(lon)), _sql_double(float(lat))
     vertex_hit = (
         f"exists(sequence(0, size(p.rings[0]) - 2, 2), i -> "
@@ -821,10 +822,15 @@ def point_in_rings(rings: str, lon: float, lat: float) -> Column:
         f"size(filter(sequence(0, size(r) - 4, 2), i -> "
         f"CASE WHEN {crosses} THEN {x} < nanvl({xint}, {x}) ELSE false END))"
     )
-    return F.expr(
+    return (
         f"coalesce(exists(`{rings}`, p -> CASE WHEN p.degenerate THEN {vertex_hit} "
         f"ELSE aggregate(p.rings, 0, (n, r) -> n + {crossings}) % 2 = 1 END), false)"
     )
+
+
+def point_in_rings(rings: str, lon: float, lat: float) -> Column:
+    """``point_in_rings_sql`` as a Column: one Py4J call to build."""
+    return F.expr(point_in_rings_sql(rings, lon, lat))
 
 
 def make_polys_intersect_udf():

@@ -21,6 +21,7 @@ and oracle-comparable.
 
 from __future__ import annotations
 
+import functools
 import struct
 from collections.abc import Iterable
 
@@ -31,6 +32,14 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
+
+
+@functools.lru_cache(maxsize=1)
+def _jvm_classes(gateway):
+    """The JVM classes ``_as_col`` calls, resolved once per gateway: every
+    package level of a dotted lookup is a Py4J round trip of its own."""
+    jvm = gateway.jvm
+    return jvm.double, jvm.java.nio.ByteBuffer, jvm.org.apache.spark.sql.functions
 
 
 def _as_col(v: Column | str | Iterable[float]) -> Column:
@@ -47,12 +56,12 @@ def _as_col(v: Column | str | Iterable[float]) -> Column:
     if isinstance(v, str):
         return F.col(v)
     xs = [float(x) for x in v]
-    sc = SparkContext._active_spark_context
-    jvm = sc._jvm
-    arr = sc._gateway.new_array(jvm.double, len(xs))
+    gateway = SparkContext._active_spark_context._gateway
+    double, byte_buffer, functions = _jvm_classes(gateway)
+    arr = gateway.new_array(double, len(xs))
     raw = bytearray(struct.pack(f">{len(xs)}d", *xs))  # ByteBuffer's byte order
-    jvm.java.nio.ByteBuffer.wrap(raw).asDoubleBuffer().get(arr)
-    return Column(jvm.org.apache.spark.sql.functions.lit(arr))
+    byte_buffer.wrap(raw).asDoubleBuffer().get(arr)
+    return Column(functions.lit(arr))
 
 
 def dot(a: Column | str, b: Column | str | Iterable[float]) -> Column:
@@ -63,6 +72,15 @@ def dot(a: Column | str, b: Column | str | Iterable[float]) -> Column:
         lambda x, y: x.cast("double") * y.cast("double"),
     )
     return F.aggregate(prod, F.lit(0.0).cast("double"), lambda acc, x: acc + x)
+
+
+def dot_sql(a: str, b: str) -> str:
+    """``dot`` as SQL text over two array expressions: the same
+    sequential double fold, for plans built as one SQL statement."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
 
 
 def l2_norm(a: Column | str) -> Column:

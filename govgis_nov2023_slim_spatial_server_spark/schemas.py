@@ -12,6 +12,9 @@ GiST index (reference backend/load_data.py:89-99), plus engine-derived
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -125,9 +128,69 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change how parquet types map to Spark types: part of
+# the key of every memoized schema.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+# (path, confs) -> (footer digest, inferred schema). Module-level, so it
+# outlives session restarts; a rewrite replaces its path's entry.
+_PARQUET_SCHEMAS: dict[tuple, tuple[bytes, StructType]] = {}
+
+
+def _is_local(path: str) -> bool:
+    """A scheme-less local path (not an hdfs:// / s3:// / file: URI)."""
+    return "://" not in path and not path.startswith("file:")
+
+
+def _parquet_footer(path: str) -> bytes | None:
+    """The footer of a local parquet file (metadata, its length, the
+    magic), read from the tail; None when the path is not a local file
+    that ends like parquet."""
+    if not _is_local(path):
+        return None
+    try:
+        with open(path, "rb") as f:
+            f.seek(-8, os.SEEK_END)
+            tail = f.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            f.seek(-8 - int.from_bytes(tail[:4], "little"), os.SEEK_END)
+            return f.read()
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema job on a repeat read.
+
+    Inferring a parquet schema runs a one-task Spark job on every read.
+    The inferred schema is memoized under what decides it: the path, the
+    file's footer (not its mtime: a rewrite in place can keep the mtime
+    and the size) and the type-mapping confs. URIs and paths that cannot
+    be opened as a parquet file take the plain read, so Spark reports
+    its own errors."""
+    footer = _parquet_footer(path)
+    if footer is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(k) for k in _PARQUET_SCHEMA_CONFS))
+    digest = hashlib.sha256(footer).digest()
+    memo = _PARQUET_SCHEMAS.get(key)
+    if memo is not None and memo[0] == digest:
+        return spark.read.schema(memo[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _PARQUET_SCHEMAS[key] = (digest, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table. Plain parquet scan → Catalyst gets pushdown,
-    pruning, and the vectorized reader for free.
+    pruning, and the vectorized reader for free; the schema is inferred
+    once per file content (``read_parquet``).
 
     `events.ts` arrives as long-ns or µs TIMESTAMP_NTZ depending on the
     testdata generation; `normalize_events_ts` collapses both to a µs
@@ -143,7 +206,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # agnostic, just like nanosAsLong (verified: an America/
         # Los_Angeles session shifts epochs by 28800 s without this)
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
     return df
@@ -163,14 +226,12 @@ def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     lack optional tables) can still serve SQL over what it has, and a
     query touching a missing table fails at analysis with TABLE_NOT_FOUND
     either way."""
-    import os
-
     from pyspark.errors import AnalysisException
 
     # the os.path.exists probe is only meaningful for plain local paths;
     # an hdfs:// / s3:// / file:-URI sf_dir must go through spark.read
     # (where PATH_NOT_FOUND surfaces as AnalysisException)
-    local_fs = "://" not in sf_dir and not sf_dir.startswith("file:")
+    local_fs = _is_local(sf_dir)
     for name in DRIVER_TABLES:
         if local_fs and not os.path.exists(
             os.path.join(sf_dir, f"{name}.parquet")

@@ -7,6 +7,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from govgis_nov2023_slim_spatial_server_spark.catalog.spatial_mm import (
+    RING_TABLE_MAX_KEYS,
     _ring_bottomk_map,
 )
 from govgis_nov2023_slim_spatial_server_spark.catalog.vector_text import (
@@ -27,6 +28,15 @@ def test_ring_bottomk_rejects_custkey_past_the_encoding():
 
 def test_ring_bottomk_accepts_the_valid_key_range():
     _ring_bottomk_map([(0, 0, [1]), (3, 4, [(1 << 44) - 1])], k=1)
+
+
+def test_ring_bottomk_rejects_a_facility_table_past_the_ceiling():
+    """The driver-collected table ships with every task: its key count is
+    bounded, counting every key of a multi-key position."""
+    at_limit = [(i % 401, i % 161, [i + 1]) for i in range(RING_TABLE_MAX_KEYS)]
+    _ring_bottomk_map(at_limit, k=1)
+    with pytest.raises(AssertionError, match="exceeds RING_TABLE_MAX_KEYS"):
+        _ring_bottomk_map([*at_limit[:-1], (0, 0, [RING_TABLE_MAX_KEYS, 1 << 40])], k=5)
 
 
 def test_keep_best_treats_nan_quality_like_null(spark):

@@ -1,6 +1,7 @@
 import gc
 
 import pytest
+from pyspark.sql import functions as F
 
 from govgis_nov2023_slim_spatial_server_spark.api.models import Point, SemanticSearchRequest
 from govgis_nov2023_slim_spatial_server_spark.api.search import SearchService
@@ -10,8 +11,9 @@ from govgis_nov2023_slim_spatial_server_spark.functions.spatial import (
     lonlat_to_mercator,
     point_in_polygon_wkb,
 )
+from govgis_nov2023_slim_spatial_server_spark.functions.vector import cosine_distance
 from govgis_nov2023_slim_spatial_server_spark.plans.builder import SearchRequest, build_search_plan
-from govgis_nov2023_slim_spatial_server_spark.schemas import TEXT_FIELDS
+from govgis_nov2023_slim_spatial_server_spark.schemas import LAYERS_SCHEMA, TEXT_FIELDS
 from govgis_nov2023_slim_spatial_server_spark.sources.ingest import load_layers, write_layers
 
 
@@ -156,6 +158,45 @@ def test_plan_build_calls_independent_of_dim(spark, store):
     calls(64)  # first build resolves JVM classes once
     at64, at1024 = calls(64), calls(1024)
     assert 0 < at64 == at1024 == calls(64)
+    # one statement: a chain of DataFrame steps needed ~250-300 calls
+    assert at64 <= 20, at64
+
+
+HOSTILE_TYPES = ["x') OR (1=1", "a\\'b\" \\\\ \\n'", "{layers}"]
+
+
+@pytest.mark.parametrize("hostile", HOSTILE_TYPES)
+def test_type_filter_strings_are_bound_not_spliced(spark, embedder, hostile):
+    """Type strings reach the statement as bound parameters: a string
+    that would close a quote, escape, or name a format field in the SQL
+    text filters exactly like a Python filter over the same rows."""
+    rows, seen = [], set()
+    for i, r in enumerate(make_layer_rows(n=60, seed=42)):
+        if r[0] in seen:
+            continue
+        seen.add(r[0])
+        rows.append((r[0], r[1], HOSTILE_TYPES[i % 3] if i % 2 else r[2], *r[3:]))
+    df = spark.createDataFrame(rows, LAYERS_SCHEMA)
+    qv = embedder.embed_query("hostile")
+    for type_filter in ([hostile], [hostile.upper(), "table"], ["map service"]):
+        req = SearchRequest(query_vec=qv, type_filter=type_filter, limit=10)
+        got = [r["id"] for r in build_search_plan(df, req).collect()]
+        assert got == _expected_ids(rows, qv, type_filter, None, 0, 10)
+        assert got, type_filter
+
+
+def test_include_dist_equals_cosine_distance(spark, store, embedder):
+    """The statement's distance is the Column form's, bit for bit."""
+    qv = embedder.embed_query("broadband utility")
+    req = SearchRequest(query_vec=qv, type_filter=["Table", "Raster Layer"], limit=10)
+    got = {r["id"]: r["dist"] for r in build_search_plan(store, req).collect()}
+    want = {
+        r["id"]: r["d"]
+        for r in store.where(F.col("id").isin(list(got)))
+        .select("id", cosine_distance("embeddings", qv, normalized=True).alias("d"))
+        .collect()
+    }
+    assert len(got) == 10 and got == want
 
 
 def test_mercator_point_equals_4326(spark, layers, embedder):
