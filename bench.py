@@ -3,39 +3,36 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query runs in ≥3 round-robin passes; per-query MEDIAN wall-clock
-seconds are reported (count() drives the full plan; results are not
-collected to the driver beyond the aggregate). Total = sum of medians;
-"queries_spread" carries [min, max] per query so noise is visible.
+    python bench.py [--queries a,b,c]      # default: the HEADLINE set
 
-Self-calibration: a fixed-cost in-memory canary (range → sum, pure
-whole-stage codegen, no I/O, no data dependence) runs before the suite,
-between every round-robin pass, and after — load that comes and goes
-mid-run is visible, not just endpoint load. "load_factor" =
-median(canaries) / recorded idle reference; a factor > 1.2 sets
-"load_degraded" and means the HOST was busy during grading — compare
-"value_load_normalized" (value / load_factor) across rounds in that
-case. Added after BENCH_r04 recorded a uniform 1.2-2.0x inflation across
-all 17 queries (including ones untouched since r1) that an idle
-same-commit re-run fully reversed.
+Each query runs in $SPARK_GRAFT_BENCH_REPS (default 3) round-robin passes;
+per-query MEDIAN wall-clock seconds are reported and "value" is their sum.
+The timed action is the catalog builder call, then count() (FORCE_EVAL
+entries: a forced column-hash aggregate); results are not collected.
+
+Wall time drifts with host load. The regression signal that does not is
+on the stderr "# detail:" line: per query, the jobs and tasks each pass
+ran (one job group per query, read back through sc.statusTracker()),
+beside the [min, max] spread and the median build and action seconds.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # CORE_SET = the original r1–r5 headline set, FROZEN as an explicit
-# named list (not a positional slice of HEADLINE — r7 ADVICE: an
-# insertion before a positional boundary would silently change the
-# published value_core_set membership and break round-over-round
-# comparability). Its total is published as "value_core_set" every round
-# for like-for-like comparison even as HEADLINE grows.
+# named list (not a positional slice of HEADLINE: an insertion before a
+# positional boundary would silently change its membership). Its total is
+# published as "value_core_set" for like-for-like comparison as HEADLINE
+# grows.
 CORE_SET = [
     "flagship_hybrid_search",
     "knn_topk",
@@ -57,464 +54,206 @@ CORE_SET = [
 ]
 
 HEADLINE = CORE_SET + [
-    # r6 additions (VERDICT r5 #6): the heaviest post-r5 entries — the
-    # graded perf number should cover the operators most likely to
-    # regress, not just the r1 set
+    # r6: the heaviest post-r5 entries, so the number covers the
+    # operators most likely to regress
     "ann_recall_at_10",
     "kmeans_two_iterations",
     "bigram_lm_cross_entropy",
     "ngram_containment_topk",
     "ngram_containment_capped",
-    # r9 additions: the HOF-heaviest new entry (PQ encode = 32 folds/row)
-    # and the two-phase skyline sweep
+    # r9: the HOF-heaviest entry (PQ encode) and the two-phase skyline
     "pq_adc_topk",
     "pareto_frontier_parts",
-    # r10 additions: the recursive-skyline mitigation rounds (driver loop
-    # + re-hash shuffles — the entry most sensitive to per-round
-    # overhead) and the scan-line-run buffer dilation (two interval-merge
-    # windows — the geo layer's heaviest window consumer after union_area)
+    # r10: recursive-skyline driver rounds and the scan-line buffer windows
     "skyline_recursive_parts",
     "spatial_buffer_union_area",
-    # r11 additions: the dissolve-key ring reconstruction (raster front +
-    # grouped-map python chaining — the geometry-producing path) and the
-    # positional-gram diagonal chains (the dedup family's widest
-    # self-join after containment)
+    # r11: dissolve-key ring reconstruction and positional-gram chains
     "spatial_union_rings",
     "substring_dup_chains",
-    # r12 additions: the boolean sweep (two rasterize passes + the
-    # two-counter window before the dissolve) and the grid-snapped
-    # general-polygon union (inline jittered store build + pad-4
-    # rasterize — the heaviest per-call geometry path)
+    # r12: the boolean sweep, the grid-snapped union and the NN join
     "spatial_intersection_rings",
     "spatial_union_snap_rings",
-    # r12 third wave: the NN spatial join (ring candidate join +
-    # checkpoint barrier + residual broadcast argmin — the catalog's
-    # only localCheckpoint-in-plan headliner, so per-call barrier cost
-    # stays measured)
     "spatial_nn_join_ring",
-    # r13 additions: the k=5 NN join (bounded k-list aggregate — the
-    # collect_list candidate reduction the k=1 entry avoids) and the
-    # exact convex clip (blocked bbox join + rational S-H Arrow kernel
-    # — the snap-free geometry path's per-pair Python cost)
+    # r13: the k=5 NN join and the exact convex clip
     "spatial_knn_join_ring",
     "spatial_clip_convex_pairs",
-    # r14 additions: the NON-convex clip (trapezoid decompose UDF +
-    # per-piece kernel + per-pair sum) and the general x general
-    # completion (BOTH stores decomposed — three ArrowEval passes, the
-    # heaviest snap-free geometry path)
+    # r14: the non-convex and general x general clips
     "spatial_clip_concave_pairs",
     "spatial_clip_general_pairs",
-    # r15 additions: interior rings on BOTH sides (holed trapezoid
-    # decomposition, nine-term oracle), geometry OUTPUT (the
-    # intersection ring's ordered exact vertices — 1.1M vertex rows at
-    # sf0.1), and the BPE encode loop (fourteen chained HOF rewrites)
+    # r15: holed clips, geometry output and the BPE encode loop
     "spatial_clip_holed_pairs",
     "spatial_clip_convex_rings",
     "bpe_encode_merges",
-    # r15 wave 2: the full geometry-output closure — exact boundary of
-    # non-convex holed intersections (multi-ring + hole-ring outputs)
     "spatial_clip_holed_boundary",
-    # r15 wave 3: the driver-loop BFS (edge-set checkpoint + 3 frontier
-    # joins — the iterative-graph representative), the interpreted-HOF
-    # winnowing chain (the regression-prone expression class), and the
-    # double-Python-stage hull (mapInPandas pre-reduce + applyInPandas
-    # chain — the Arrow round-trip class)
+    # r15 wave 3: driver-loop BFS, interpreted-HOF winnowing, and the
+    # double-Python-stage hull
     "graph_bfs_levels",
     "winnowing_fingerprints",
     "spatial_convex_hull_edges",
 ]
 
-# The r11 headline set (28 names), FROZEN at the r12 boundary the same
-# way CORE_SET froze the r1–r5 set: published as "value_r11_set" so the
-# r11→r12→… totals stay comparable as HEADLINE keeps growing. Explicit
-# snapshot since r13 — the original derived-from-HEADLINE comprehension
-# silently grew to 30 names when r13 added headliners (the exact
-# r7-ADVICE hazard; caught comparing floor sums, r13): the r13 session's
-# bench passes B/C published value_r11_set over 30 names — subtract the
-# two r13 entries' timings to compare those two readings against r11/r12.
-R11_SET = CORE_SET + [
-    "ann_recall_at_10", "kmeans_two_iterations", "bigram_lm_cross_entropy",
-    "ngram_containment_topk", "ngram_containment_capped", "pq_adc_topk",
-    "pareto_frontier_parts", "skyline_recursive_parts",
-    "spatial_buffer_union_area", "spatial_union_rings",
-    "substring_dup_chains",
-]
-
-# The r12 headline set (31 names), FROZEN at the r13 boundary
-# (VERDICT r12 #7): published as "value_r12_set". An explicit snapshot,
-# not a slice/comprehension of HEADLINE (the r7-ADVICE convention — a
-# membership change in HEADLINE must not silently flow in here).
-R12_SET = CORE_SET + [
-    "ann_recall_at_10", "kmeans_two_iterations", "bigram_lm_cross_entropy",
-    "ngram_containment_topk", "ngram_containment_capped", "pq_adc_topk",
-    "pareto_frontier_parts", "skyline_recursive_parts",
-    "spatial_buffer_union_area", "spatial_union_rings",
-    "substring_dup_chains", "spatial_intersection_rings",
-    "spatial_union_snap_rings", "spatial_nn_join_ring",
-]
-
-# The r13 headline set (33 names), FROZEN at the r14 boundary: published
-# as "value_r13_set". Explicit snapshot per the r7-ADVICE convention.
-R13_SET = R12_SET + [
-    "spatial_knn_join_ring", "spatial_clip_convex_pairs",
-]
-
-# The r14 headline set (35 names), FROZEN at the r15 boundary: published
-# as "value_r14_set". Explicit snapshot per the r7-ADVICE convention.
-R14_SET = R13_SET + [
-    "spatial_clip_concave_pairs", "spatial_clip_general_pairs",
-]
+# Entries whose output is a pure projection of the scan: count() lets
+# Catalyst prune the whole computation (a deterministic UDF projection
+# nobody consumes never runs), so they are timed through a forced hash of
+# every output column instead. Every other entry ends in an aggregate,
+# join or top-k that consumes its computed values, so count() drives the
+# full plan.
+FORCE_EVAL = {"winnowing_fingerprints", "spatial_area_centroid"}
 
 
-# Canary: 4G-row range-sum on 32 partitions — large enough that runtime
-# scales with available CPU (smaller ranges are scheduling-overhead-bound
-# and blind to load), small enough to cost ~1.5 s per bench run total.
-CANARY_ROWS = 4_000_000_000
-# median canary seconds measured on an IDLE local[32] sandbox (r5). If
-# the hardware profile changes, re-record: run bench.py on a quiet
-# machine and copy the reported canary median here.
-CANARY_REF_SEC = 0.50
-
-
-def _canary_sec(spark, n: int = 3) -> float:
-    """Median of n fixed-cost runs (first run after warm-up, so JIT is
-    already paid by the suite warm-up that precedes any call)."""
-    import statistics as _st
-
-    ts = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        spark.range(CANARY_ROWS, numPartitions=32).selectExpr(
-            "sum(id % 7) AS s"
-        ).collect()
-        ts.append(time.perf_counter() - t0)
-    return round(_st.median(ts), 3)
-
-
-# Second canary (VERDICT r12 #2): the CPU range-sum canary has now
-# MISSED a uniform ~12-15% suite drift twice (r7, r12) — a pure
-# whole-stage-codegen integer sum senses CPU contention only, while the
-# drift mode that actually shifts Arrow/shuffle-heavy queries is memory
-# bandwidth / page cache / thermal. This canary exercises exactly those:
-# a frozen 2M-row double column through an Arrow pandas-UDF round-trip
-# (JVM->Python->JVM serialization, bandwidth-bound elementwise work)
-# into a 997-key shuffle. Fixed data (range-derived), no I/O, ~0.5 s.
-ARROW_CANARY_ROWS = 2_000_000
-# MEDIAN of the r13 recording session's quietest samples
-# (0.629/0.708/0.76 with the CPU canary at 1.06-1.08) — the idle
-# reference for load_factor_arrow. ADVICE r13: the previous ref (0.60,
-# the session MIN) sat below every observed sample, so the factor read
-# ≥1.05 even idle and load_degraded tripped at the session's own
-# quietest level (0.76/0.60 = 1.27) — a near-permanent flag dilutes the
-# signal. Median-of-idle as the ref (the CANARY_REF_SEC convention)
-# centers the idle reading on 1.0; the min is kept separately as the
-# floor-of-record. Re-record both if the hardware profile changes.
-ARROW_CANARY_REF_SEC = 0.708
-ARROW_CANARY_FLOOR_SEC = 0.60  # session min, for cross-round reference
-
-
-def _canary_arrow_sec(spark, n: int = 3) -> float:
-    import statistics as _st
-
-    import pandas as pd  # noqa: F401 (postponed-annotation resolution)
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    def _bw_impl(v):
-        # elementwise float math over the full batch: memory-bandwidth
-        # bound in numpy, nothing cacheable between runs
-        return v * 1.0000001 + v * v
-
-    # no type hints: under `from __future__ import annotations` a hinted
-    # local closure stringifies to 'pd.Series' which pyspark cannot
-    # resolve from bench's globals — pass the eval type explicitly
-    from pyspark.sql.functions import PandasUDFType
-
-    _bw = pandas_udf("double", PandasUDFType.SCALAR)(_bw_impl)
-
-    ts = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        (
-            spark.range(ARROW_CANARY_ROWS, numPartitions=32)
-            .select(
-                (F.col("id") % 997).alias("k"),
-                F.col("id").cast("double").alias("v"),
-            )
-            .select("k", _bw("v").alias("v2"))
-            .groupBy("k")
-            .agg(F.sum("v2").alias("s"))
-            .agg(F.sum("s").alias("t"))
-            .collect()
-        )
-        ts.append(time.perf_counter() - t0)
-    return round(_st.median(ts), 3)
-
-
-# Per-query reference FLOORS (min-of-reps on a near-idle host, CPU
-# canary 0.98 / arrow canary at its ref): the denominator for
-# "drift_ratio_median" — median(current_median / floor) over every
-# headline query whose code is UNCHANGED since the floors were recorded.
-# A uniform host drift moves this ratio but not the code; a real
-# regression moves one query far outside the band. Recorded r13;
-# update a query's floor only when its code/plan changes (and list it in
-# FLOORS_CHANGED that round so it drops out of the drift statistic).
-# Recorded r13: per-query min over two 3-rep passes (CPU canary 1.06-1.08,
-# arrow canary flagging intermittent contention both passes — these are
-# floors, not medians, by design).
-REF_FLOORS: dict[str, float] = {
-    "flagship_hybrid_search": 0.383, "knn_topk": 0.34,
-    "similarity_join_topk": 0.662, "embedding_near_dup": 0.853,
-    "q1_pricing_summary": 0.4, "q3_top_revenue_orders": 0.956,
-    "q5_nation_revenue": 1.05, "window_rank_orders_per_customer": 0.425,
-    "tumbling_window_1h": 0.325, "session_windows_30m": 0.544,
-    "minhash_lsh_neardup": 1.247, "ngram_jaccard_topk": 0.815,
-    "spatial_point_filter": 0.283, "multimodal_byte_stats": 0.291,
-    "q6_revenue_forecast": 0.252, "vector_centroids_by_label": 0.255,
-    "grouping_sets_status_priority": 0.27,
-    # r15 OPTIMIZATION round: floors re-recorded for every code-changed
-    # headline entry (min over the round's quiet-window 3-rep profiles +
-    # the three final bench passes' per-query spread minima; the
-    # cleanest pass ran at cpu canary 1.215 / arrow canary 1.001 /
-    # drift 1.112). Entries changed mid-session use the post-change
-    # measured minimum, not the earlier quiet-profile one.
-    "ann_recall_at_10": 1.368,          # was 1.519 (r13)
-    "kmeans_two_iterations": 1.114,     # untouched; quiet min (was 1.441)
-    "bigram_lm_cross_entropy": 0.993,   # was 1.019
-    "ngram_containment_topk": 1.743,   # r16 token-hash shingles (was 1.773)
-    "ngram_containment_capped": 2.02,  # r16 kept: token-hash min read 2.236 under load; r15 floor stands
-    "pq_adc_topk": 0.515,               # was 1.674 (Arrow kernel swap)
-    "pareto_frontier_parts": 0.404,     # untouched; quiet min (was 0.479)
-    "skyline_recursive_parts": 1.589,   # untouched; quiet min (was 1.994)
-    "spatial_buffer_union_area": 1.565, # untouched; quiet min (was 1.927)
-    "spatial_union_rings": 1.265,       # was 2.929
-    "substring_dup_chains": 1.574,     # r16 kept: positional token-hash min read 1.968 under load; r15 floor stands
-    "spatial_intersection_rings": 1.537,  # was 2.961
-    "spatial_union_snap_rings": 1.691,  # was 3.311
-    "spatial_nn_join_ring": 0.622,     # r16 two-tier kernel (was 0.93)
-    "spatial_knn_join_ring": 0.712,    # r16 two-tier kernel (was 2.337)
-    "spatial_clip_convex_pairs": 0.823,   # was 2.872
-    "spatial_clip_concave_pairs": 1.354,  # was 2.947
-    "spatial_clip_general_pairs": 1.915,  # was 3.705
-    "spatial_clip_holed_pairs": 2.005,  # was 4.521
-    "spatial_clip_convex_rings": 0.793, # was 6.254
-    "bpe_encode_merges": 1.072,         # was 1.376
-    # r15 first floors for the wave-3 entries (post-optimization code)
-    "spatial_clip_holed_boundary": 0.82,
-    "graph_bfs_levels": 1.822,          # r16 pair-ckpt + coalesce (was 2.241)
-    "winnowing_fingerprints": 0.458,
-    "spatial_convex_hull_edges": 0.561,
-}
-# queries whose code changed since their floor was recorded (excluded
-# from drift_ratio_median until the floor is re-recorded).
-FLOORS_CHANGED: list[str] = [
-    # r16 OPTIMIZATION round 2: ONLY the entries whose code changed this
-    # round (VERDICT r15 #8 — every r15 member re-admitted to the drift
-    # statistic; their r15 floors stand unrevised). Floors above updated
-    # from this round's same-session quiet minima; two entries whose r16
-    # minima read ABOVE their r15 floors (host load) keep the r15 floor
-    # — floors only ratchet down.
-    "graph_bfs_levels",
-    "minhash_lsh_neardup",
-    "ngram_containment_topk",
-    "ngram_containment_capped",
-    "substring_dup_chains",
-    "spatial_nn_join_ring",
-    "spatial_knn_join_ring",
-]
-
-
-def _scan_partition_bytes(sf_dir: str) -> str:
-    """Size ``spark.sql.files.maxPartitionBytes`` so every core participates
-    in the scan: total_input / (3 x cores), clamped to [4 MB, 128 MB].
-
-    The default 128 MB is right for large multi-file datasets (at 100 TB the
-    clamp keeps it there) but serializes the scan of a small single parquet
-    file onto one core — measured 0.45s -> 0.27s on q1 at sf0.1. The same
-    rule scales both directions, so this is cluster sizing, not a
-    small-data special case."""
-    total = sum(
-        os.path.getsize(os.path.join(sf_dir, f))
-        for f in os.listdir(sf_dir)
-        if f.endswith(".parquet")
-    )
-    cores = os.cpu_count() or 8
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "")
-    if cpus_env.isdigit():
-        cores = int(cpus_env)
-    mpb = max(4 * 1024 * 1024, min(128 * 1024 * 1024, total // (3 * cores)))
-    return str(mpb)
-
-
-# headline entries whose plan is a pure projection over the scan (no
-# join/agg between scan and output): df.count() would let Catalyst prune
-# the entire computation, so these are timed through a forced column hash
-_MAP_ONLY = {"winnowing_fingerprints"}
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def time_query(spark, name: str, sf_dir: str) -> dict:
+    """Build catalog entry ``name`` over ``sf_dir`` and run its timed action
+    under a job group of its own. Returns ``build_s`` (the builder call,
+    eager driver work included), ``action_s``, ``rows``, and the ``jobs``
+    and ``tasks`` the two ran; the counters are read after the clock
+    stops."""
     from pyspark.sql import functions as F
 
     from govgis_nov2023_slim_spatial_server_spark.catalog import QUERIES
-    from govgis_nov2023_slim_spatial_server_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="govgis-bench",
-        extra_conf={"spark.sql.files.maxPartitionBytes": _scan_partition_bytes(sf_dir)},
+    sc = spark.sparkContext
+    group = f"bench-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        t0 = time.perf_counter()
+        df = QUERIES[name](spark, sf_dir)
+        t1 = time.perf_counter()
+        if name in FORCE_EVAL:
+            rows = df.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.expr(f"bit_xor(xxhash64({', '.join(df.columns)}))").alias("h"),
+            ).collect()[0]["n"]
+        else:
+            rows = df.count()
+        t2 = time.perf_counter()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed by it
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs if (info := tracker.getJobInfo(j)) for s in info.stageIds}
+    tasks = sum(
+        info.numCompletedTasks for s in stages if (info := tracker.getStageInfo(s))
     )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # absorb JVM/codegen/parquet-reader warm-up outside the timings by
-    # running the flagship once at the smallest SF (not the measured one)
-    spark.range(1).count()
-    try:
-        QUERIES["flagship_hybrid_search"](spark, "/root/testdata/sf0.001").count()
-    except Exception:
-        pass
-    # the synthetic spatial store (WKB encode + bbox + checkpoint) is
-    # one-time INGEST work, not query work: build it in warm-up so
-    # spatial_point_filter times the filter (VERDICT r1 "What's wrong" #4);
-    # its build cost is reported separately below
-    t0 = time.perf_counter()
-    try:
-        from govgis_nov2023_slim_spatial_server_spark.catalog.spatial_mm import (
-            _spatial_layers,
-        )
-
-        _spatial_layers(spark, sf_dir)
-    except Exception:
-        pass
-    ingest_sec = round(time.perf_counter() - t0, 3)
-
-    canaries = [_canary_sec(spark)]
-    canaries_arrow = [_canary_arrow_sec(spark)]
-
-    # ≥3 round-robin passes, report per-query MEDIAN + spread: single-run
-    # numbers drifted 15-30% uniformly between r1 and r2 on untouched
-    # queries, so one sample cannot separate noise from regression
-    # (VERDICT r2 "Next round" #5). Round-robin (pass 1 all queries, then
-    # pass 2, ...) spaces repeats apart so adjacent-run cache adjacency
-    # doesn't flatter the medians.
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for rep in range(reps):
-        for name in HEADLINE:
-            fn = QUERIES[name]
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            if name in _MAP_ONLY:
-                # count() lets Catalyst PRUNE a pure projection (the
-                # SCALING run-10 / run-20 measurement trap): force the
-                # output columns through a hash so the timed work is the
-                # query's actual work
-                row = df.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.expr(
-                        f"bit_xor(xxhash64({', '.join(df.columns)}))"
-                    ).alias("h"),
-                ).collect()[0]
-                n = row["n"]
-            else:
-                n = df.count()
-            dt = round(time.perf_counter() - t0, 3)
-            samples[name].append(dt)
-            print(f"# pass {rep + 1}: {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
-        # one canary sample per pass boundary: load that comes and goes
-        # mid-suite shows up here, not just at the endpoints
-        canaries.append(_canary_sec(spark, n=1 if rep < reps - 1 else 3))
-        canaries_arrow.append(
-            _canary_arrow_sec(spark, n=1 if rep < reps - 1 else 3)
-        )
-
-    timings = {
-        name: round(statistics.median(ts), 3) for name, ts in samples.items()
+    return {
+        "build_s": round(t1 - t0, 3),
+        "action_s": round(t2 - t1, 3),
+        "rows": rows,
+        "jobs": len(jobs),
+        "tasks": tasks,
     }
-    spread = {name: [min(ts), max(ts)] for name, ts in samples.items()}
 
-    # median over (before, per-pass, after) samples: robust to a single
-    # quiet or busy moment in either direction.
-    load_factor = round(statistics.median(canaries) / CANARY_REF_SEC, 3)
-    load_factor_arrow = round(
-        statistics.median(canaries_arrow) / ARROW_CANARY_REF_SEC, 3
-    )
-    # drift vs the frozen per-query floors, over UNCHANGED queries only:
-    # the direct measurement of the uniform-shift mode both canaries are
-    # proxies for (VERDICT r12 #1 — decided by instrument, not argument)
-    drift_names = [
-        n for n in timings
-        if n in REF_FLOORS and REF_FLOORS[n] > 0 and n not in FLOORS_CHANGED
-    ]
-    drift_ratio_median = (
-        round(
-            statistics.median(timings[n] / REF_FLOORS[n] for n in drift_names),
-            3,
-        )
-        if drift_names
-        else None
-    )
-    total = round(sum(timings.values()), 3)
-    # the headline set has GROWN since r5 — "value" totals the full set,
-    # so publish the original-set total too for round-over-round
-    # like-for-like comparison
-    total_core_set = round(sum(timings[n] for n in CORE_SET), 3)
-    total_r11_set = round(sum(timings[n] for n in R11_SET), 3)
-    total_r12_set = round(sum(timings[n] for n in R12_SET), 3)
-    total_r13_set = round(sum(timings[n] for n in R13_SET), 3)
-    total_r14_set = round(sum(timings[n] for n in R14_SET), 3)
-    # value_best = sum of per-query MIN-of-reps: the drift-resistant
-    # statistic. r6→r7 the driver host ran ~15% slower uniformly across
-    # touched AND untouched queries while the CPU canary read dead idle
-    # (whatever degraded the session — page cache / memory bandwidth —
-    # was invisible to a pure-codegen range-sum); min-of-reps discards
-    # per-rep interference, so compare value_best round-over-round when
-    # medians drift uniformly without a code or plan change.
-    total_best = round(sum(min(ts) for ts in samples.values()), 3)
 
+def wall(r: dict) -> float:
+    """A ``time_query`` result's timed seconds: build plus action."""
+    return r["build_s"] + r["action_s"]
+
+
+def warm_up(spark, sf_dir: str) -> float:
+    """Absorb JVM, codegen and parquet-reader warm-up outside the timings
+    by running the flagship once at sf0.001 (beside ``sf_dir``, not the
+    measured data), then build the synthetic spatial store. The store
+    (WKB encode, bbox, checkpoint) is one-time ingest work, not query
+    work, so spatial_point_filter times the filter; returns its build
+    seconds."""
+    from govgis_nov2023_slim_spatial_server_spark.catalog import QUERIES
+    from govgis_nov2023_slim_spatial_server_spark.catalog.spatial_mm import (
+        _spatial_layers,
+    )
+
+    spark.range(1).count()
+    small = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001")
+    if os.path.isdir(small):
+        QUERIES["flagship_hybrid_search"](spark, small).count()
+    t0 = time.perf_counter()
+    _spatial_layers(spark, sf_dir)
+    return round(time.perf_counter() - t0, 3)
+
+
+def summarize(
+    samples: dict[str, list[dict]], store_s: float, sf_dir: str
+) -> tuple[str, dict]:
+    """The stdout JSON line and the stderr detail for per-query, per-pass
+    ``time_query`` results."""
+
+    def med(rs, key):
+        return round(statistics.median(key(r) for r in rs), 3)
+
+    timings = {n: med(rs, wall) for n, rs in samples.items()}
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    # Detail (per-query spread, canary samples, set membership) goes to
-    # STDERR beside the per-pass lines: the driver tails only the last
-    # ~2000 chars of stdout, and a detail-laden final line outgrew that in
-    # r6 (BENCH_r06 "parsed": null). The stdout line must stay < ~1.9 KB.
-    detail = {
-        "queries_spread": spread,
-        "headline_added": [n for n in HEADLINE if n not in CORE_SET],
-        "canary_sec": {"samples": canaries, "ref_idle": CANARY_REF_SEC},
-        "canary_arrow_sec": {
-            "samples": canaries_arrow,
-            "ref_idle": ARROW_CANARY_REF_SEC,
-        },
-        "drift_floor_names": drift_names,
-    }
-    print("# detail: " + json.dumps(detail), file=sys.stderr)
     result = {
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "value_core_set": total_core_set,
-        "value_r11_set": total_r11_set,
-        "value_r12_set": total_r12_set,
-        "value_r13_set": total_r13_set,
-        "value_r14_set": total_r14_set,
-        "value_best": total_best,
+        "value_core_set": (
+            round(sum(timings[n] for n in CORE_SET), 3)
+            if set(CORE_SET) <= set(timings) else None
+        ),
+        # sum of per-query MIN-of-reps: discards per-pass interference
+        "value_best": round(sum(min(map(wall, rs)) for rs in samples.values()), 3),
         "queries": timings,
-        "reps": reps,
-        "spatial_store_build_sec": ingest_sec,
-        "load_factor": load_factor,
-        "load_factor_arrow": load_factor_arrow,
-        "drift_ratio_median": drift_ratio_median,
-        "load_degraded": load_factor > 1.2 or load_factor_arrow > 1.2,
-        "value_load_normalized": round(total / max(1.0, load_factor), 3),
+        "reps": len(next(iter(samples.values()), [])),
+        "spatial_store_build_sec": store_s,
         "sf": sf_val,
     }
+    # harnesses that parse this line keep only the last ~2000 chars of
+    # stdout: it must stay < 1.9 KB, so per-query detail lives on stderr
     line = json.dumps(result)
-    if len(line) > 1900:  # belt-and-braces: never outgrow the tail again
+    if len(line) > 1900:
         result.pop("queries")
         line = json.dumps(result)
+    detail = {
+        n: {
+            "spread": [round(min(map(wall, rs)), 3), round(max(map(wall, rs)), 3)],
+            "build_s": med(rs, lambda r: r["build_s"]),
+            "action_s": med(rs, lambda r: r["action_s"]),
+            "jobs": [r["jobs"] for r in rs],
+            "tasks": [r["tasks"] for r in rs],
+        }
+        for n, rs in samples.items()
+    }
+    return line, detail
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--queries", default=",".join(HEADLINE),
+        help="comma-separated catalog entries to time (default: HEADLINE)",
+    )
+    names = [n for n in ap.parse_args(argv).queries.split(",") if n]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+    from govgis_nov2023_slim_spatial_server_spark.catalog import QUERIES
+    from govgis_nov2023_slim_spatial_server_spark.session import get_spark
+
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        ap.error(f"unknown catalog entries: {', '.join(unknown)}")
+    spark = get_spark(app_name="govgis-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    store_s = warm_up(spark, sf_dir)
+
+    # round-robin passes (pass 1 all queries, then pass 2, ...) space the
+    # repeats of one query apart, so cache adjacency does not flatter the
+    # medians; one sample cannot separate noise from a regression
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    samples: dict[str, list[dict]] = {n: [] for n in names}
+    for rep in range(reps):
+        for name in names:
+            r = time_query(spark, name, sf_dir)
+            samples[name].append(r)
+            print(
+                f"# pass {rep + 1}: {name}: {wall(r):.3f}s "
+                f"({r['rows']} rows, {r['jobs']} jobs, {r['tasks']} tasks)",
+                file=sys.stderr,
+            )
+    line, detail = summarize(samples, store_s, sf_dir)
+    print("# detail: " + json.dumps(detail), file=sys.stderr)
     print(line)
     spark.stop()
 

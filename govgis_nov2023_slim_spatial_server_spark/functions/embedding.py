@@ -49,10 +49,3 @@ def embed_column(
 ) -> DataFrame:
     factory = embedder_factory or (lambda: FakeEmbedder(dim=64, seed=42))
     return df.withColumn(out_col, make_embed_udf(factory)(F.col(text_col)))
-
-
-def embed_metadata_text(df: DataFrame, **kw) -> DataFrame:
-    """Embed the reference's canonical `metadata_text` column — the column
-    analogue of the ingest-time embedding the reference's dataset ships
-    pre-computed."""
-    return embed_column(df, "metadata_text", **kw)

@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -988,13 +987,6 @@ def validate_lonlat(lon: float, lat: float) -> None:
         raise ValueError(f"longitude {lon} out of range [-180, 180]")
     if not (-90.0 <= lat <= 90.0):
         raise ValueError(f"latitude {lat} out of range [-90, 90]")
-
-
-Point = tuple[float, float]
-
-
-def iter_flat(points: Iterable[Point]) -> list[float]:
-    return [c for p in points for c in p]
 
 
 # ---------------------------------------------------------------------------

@@ -48,11 +48,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.size(F.filter(pieces, lambda p: F.trim(p) != "")).cast("long")
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c).cast("long")
-
-
 # ---------------------------------------------------------------------------
 # Quality scoring (native)
 # ---------------------------------------------------------------------------

@@ -276,13 +276,6 @@ def similarity_join_lsh(
     )
 
 
-def brute_force_ann_baseline(
-    corpus: DataFrame, query_vec: list[float], k: int, **kw
-) -> DataFrame:
-    """Alias making the 'baseline' role explicit for the ANN surface."""
-    return knn(corpus, query_vec, k, **kw)
-
-
 def lsh_bucketed_knn(
     df: DataFrame,
     query_vec: list[float],

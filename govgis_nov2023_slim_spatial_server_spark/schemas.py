@@ -212,12 +212,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or DRIVER_TABLES)}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every driver table PRESENT in ``sf_dir`` as a temp view
     for the spark.sql path. Tables whose parquet file is absent are

@@ -21,7 +21,6 @@ def get_spark(
     app_name: str = "govgis-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -31,13 +30,13 @@ def get_spark(
     - Arrow on: pandas UDFs (vector math, spatial refinement) move data in
       columnar batches instead of pickled rows.
     - ``spark.sql.files.maxPartitionBytes`` left at default 128 MB — right
-      for large parquet scans; tests override nothing because the inputs are
-      tiny.
+      for large parquet scans; on small files Spark's split size
+      ``max(openCostInBytes, bytes / cores)`` already takes over.
     - broadcast threshold default (10 MB) is fine: dims (region/nation/
       supplier) are far below it, so star joins auto-broadcast.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config(
@@ -67,10 +66,8 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/govgis-spark-warehouse"),
         )
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
 
 
 def local_rows_df(spark, rows, schema):

@@ -3,10 +3,9 @@
 The sandbox's memory subsystem degrades in BURSTS (measured this round:
 a 1 GB steady-state copy read 7.9 GB/s in a quiet window and ~0.035 GB/s
 minutes earlier — ~200x; pure ALU work scales perfectly throughout, so
-CPU canaries are blind to it, exactly the drift mode bench.py's second
-ARROW canary was added for). Every timing batch this round is bracketed
-by this probe; a batch whose bracket shows >1.5 GB/s spread between
-probes (or <4 GB/s absolute) is discarded and re-run.
+a CPU-bound reference loop is blind to it). Every timing batch this
+round is bracketed by this probe; a batch whose bracket shows >1.5 GB/s
+spread between probes (or <4 GB/s absolute) is discarded and re-run.
 
 Prints one line: `bw=<GB/s> loop=<sec>` — bandwidth (10x 1 GB copyto
 over pre-faulted buffers) and a fixed single-core ALU loop.

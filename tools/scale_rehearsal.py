@@ -36,6 +36,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query, wall  # noqa: E402
+
 BASE = "/root/testdata/sf0.1"
 WORK = "/tmp/govgis-scale-rehearsal"
 
@@ -304,34 +306,6 @@ def _replicate(
     for p in parts[1:]:
         out = out.unionByName(p)
     out.write.mode("overwrite").parquet(os.path.join(out_dir, f"{table}.parquet"))
-
-
-# Map-only outputs need forced evaluation: count() lets Catalyst prune a
-# deterministic UDF projection nobody consumes, so the kernel under test
-# never runs (caught on the first spatial_area_centroid rehearsal: 300k
-# geometries "parsed" in 0.07s marginal — the ArrowEval had been pruned).
-# Every other entry ends in an aggregate/top-k that consumes the computed
-# values, so count() drives the full plan there (same contract bench.py
-# documents).
-_FORCE_EVAL = {"spatial_area_centroid", "winnowing_fingerprints"}
-
-
-def _time_query(spark, name: str, sf_dir: str) -> tuple[float, int]:
-    from pyspark.sql import functions as F
-
-    from govgis_nov2023_slim_spatial_server_spark.catalog import QUERIES
-
-    t0 = time.perf_counter()
-    df = QUERIES[name](spark, sf_dir)
-    if name in _FORCE_EVAL:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(f"bit_xor(xxhash64({', '.join(df.columns)}))").alias("h"),
-        ).collect()[0]
-        n = row["n"]
-    else:
-        n = df.count()
-    return time.perf_counter() - t0, n
 
 
 def _rect_store(spark, n: int, id_name: str, seed: int, hot: bool, out: str):
@@ -827,13 +801,11 @@ def main() -> None:
     for name, (tabs, kind) in QUERIES_UNDER_TEST.items():
         reps = args.docs_reps if kind == "docs" else args.fact_reps
         d_big = dirs[(kind, reps)]
-        t1 = min(
-            _time_query(spark, name, dirs[1])[0] for _ in range(args.repeats)
-        )
+        t1 = min(wall(time_query(spark, name, dirs[1])) for _ in range(args.repeats))
         tn, rows = math.inf, 0
         for _ in range(args.repeats):
-            t, rows = _time_query(spark, name, d_big)
-            tn = min(tn, t)
+            r = time_query(spark, name, d_big)
+            tn, rows = min(tn, wall(r)), r["rows"]
         alpha = math.log(tn / t1) / math.log(reps)
         results.append((name, reps, t1, tn, alpha, rows))
         print(
