@@ -152,21 +152,31 @@ def wall(r: dict) -> float:
 def warm_up(spark, sf_dir: str) -> float:
     """Absorb JVM, codegen and parquet-reader warm-up outside the timings
     by running the flagship once at sf0.001 (beside ``sf_dir``, not the
-    measured data), then build the synthetic spatial store. The store
-    (WKB encode, bbox, checkpoint) is one-time ingest work, not query
-    work, so spatial_point_filter times the filter; returns its build
-    seconds."""
+    measured data), read every table of ``sf_dir`` once (the first read
+    of a file infers its parquet schema in a job of its own, which
+    ``load_table`` then memoizes), then build the two synthetic spatial
+    stores. A store (WKB encode, bbox, checkpoint) is one-time ingest
+    work, not query work, so spatial_point_filter and the geo-store
+    entries time their queries; returns the stores' build seconds."""
     from govgis_nov2023_slim_spatial_server_spark.catalog import QUERIES
+    from govgis_nov2023_slim_spatial_server_spark.catalog.geo_analytics import (
+        _geo_store,
+    )
     from govgis_nov2023_slim_spatial_server_spark.catalog.spatial_mm import (
         _spatial_layers,
     )
+    from govgis_nov2023_slim_spatial_server_spark.schemas import load_table
 
     spark.range(1).count()
     small = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001")
     if os.path.isdir(small):
         QUERIES["flagship_hybrid_search"](spark, small).count()
+    for f in sorted(os.listdir(sf_dir)):
+        if f.endswith(".parquet"):
+            load_table(spark, sf_dir, f.removesuffix(".parquet"))
     t0 = time.perf_counter()
     _spatial_layers(spark, sf_dir)
+    _geo_store(spark, sf_dir)
     return round(time.perf_counter() - t0, 3)
 
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,6 +45,14 @@ from ..functions.spatial import (
     wkb_linestring,
     wkb_multilinestring,
     wkb_polygon,
+)
+from ..operators.overlay import (
+    PIECES,
+    decompose,
+    overlay_area,
+    overlay_pairs,
+    overlay_rows,
+    with_area,
 )
 from ..operators.spatial_join import grid_blocked_overlap_join
 from ..schemas import load_table
@@ -1905,56 +1914,63 @@ def spatial_intersection_snap_rings(spark: SparkSession, sf_dir: str) -> DataFra
 # ---------------------------------------------------------------------------
 
 
-def _convex_store_mats(ax, ay, r, bx, by, s):
-    """Rebuild the convex store's vertex matrices from its generating
-    scalars — (n, 8) octagon and (n, 4) diamond int64 coordinate
-    arrays, identical element-for-element to the `F.array(...)` forms
-    the r13 entries shipped through the join (r15 optimization, guide
-    §2.3: the candidate join now moves 6 scalars per pair instead of
-    24 array elements, and the Arrow boundary crosses flat int64
-    columns instead of per-row list objects)."""
-    import numpy as np
+def _octagon_mats(x, y, r):
+    """(n, 8) CCW vertex matrices of the convex store's octagons: the
+    square [x ± r] × [y ± r] with its corners cut by 4."""
+    rx = np.array([-1, 1, 1, 1, 1, -1, -1, -1], dtype=np.int64)
+    kx = np.array([4, -4, 0, 0, -4, 4, 0, 0], dtype=np.int64)
+    ry = np.array([-1, -1, -1, 1, 1, 1, 1, -1], dtype=np.int64)
+    ky = np.array([0, 0, 4, -4, 0, 0, -4, 4], dtype=np.int64)
+    return x[:, None] + r[:, None] * rx + kx, y[:, None] + r[:, None] * ry + ky
 
-    oct_rx = np.array([-1, 1, 1, 1, 1, -1, -1, -1], dtype=np.int64)
-    oct_kx = np.array([4, -4, 0, 0, -4, 4, 0, 0], dtype=np.int64)
-    oct_ry = np.array([-1, -1, -1, 1, 1, 1, 1, -1], dtype=np.int64)
-    oct_ky = np.array([0, 0, 4, -4, 0, 0, -4, 4], dtype=np.int64)
-    dia_sx = np.array([1, 0, -1, 0], dtype=np.int64)
-    dia_sy = np.array([0, 1, 0, -1], dtype=np.int64)
-    axm = ax[:, None] + r[:, None] * oct_rx + oct_kx
-    aym = ay[:, None] + r[:, None] * oct_ry + oct_ky
-    bxm = bx[:, None] + s[:, None] * dia_sx
-    bym = by[:, None] + s[:, None] * dia_sy
-    return axm, aym, bxm, bym
+
+def _diamond_mats(x, y, s):
+    """(n, 4) CCW vertex matrices of the diamonds centred at (x, y) with
+    radius s."""
+    sx = np.array([1, 0, -1, 0], dtype=np.int64)
+    sy = np.array([0, 1, 0, -1], dtype=np.int64)
+    return x[:, None] + s[:, None] * sx, y[:, None] + s[:, None] * sy
+
+
+_OCTAGON = (("ax", "ay", "ar"), _octagon_mats)
+_DIAMOND = (("bx", "by", "bs"), _diamond_mats)
+
+
+def _bbox(x, y, r):
+    """The ``xmin/ymin/xmax/ymax`` columns of the square [x ± r] × [y ± r]
+    that the candidate join blocks on."""
+    return [
+        (x - r).cast("double").alias("xmin"),
+        (y - r).cast("double").alias("ymin"),
+        (x + r).cast("double").alias("xmax"),
+        (y + r).cast("double").alias("ymax"),
+    ]
+
+
+def _diamond_side(c, mx, my):
+    """The even-key diamonds ``(bkey, bx, by, bs)``: centre
+    (4·(key mod mx) + 2, 4·(key mod my) + 2), radius 4·(key mod 3) + 1."""
+    ck = F.col("c_custkey")
+    x = (4 * (ck % mx) + 2).cast("long")
+    y = (4 * (ck % my) + 2).cast("long")
+    s = (4 * (ck % 3) + 1).cast("long")
+    return c.where(ck % 2 == 0).select(
+        ck.alias("bkey"), x.alias("bx"), y.alias("by"), s.alias("bs"),
+        *_bbox(x, y, s),
+    )
 
 
 def _convex_store_sides(c):
-    """The two convex-store side frames with SCALAR shape parameters
-    (plus the bbox columns the grid join blocks on) — shared by the
-    pair-stats and ring-output entries."""
+    """The convex store: odd-key octagons ``(akey, ax, ay, ar)`` and the
+    even-key diamonds, as scalar shape parameters."""
     ck = F.col("c_custkey")
     r = (8 + 4 * (F.expr("c_custkey DIV 2") % 2)).cast("long")
-    ax, ay = (4 * (ck % 101)).cast("long"), (4 * (ck % 89)).cast("long")
+    x, y = (4 * (ck % 101)).cast("long"), (4 * (ck % 89)).cast("long")
     a = c.where(ck % 2 == 1).select(
-        ck.alias("akey"),
-        ax.alias("ax"), ay.alias("ay"), r.alias("ar"),
-        (ax - r).cast("double").alias("xmin"),
-        (ay - r).cast("double").alias("ymin"),
-        (ax + r).cast("double").alias("xmax"),
-        (ay + r).cast("double").alias("ymax"),
+        ck.alias("akey"), x.alias("ax"), y.alias("ay"), r.alias("ar"),
+        *_bbox(x, y, r),
     )
-    bx = (4 * (ck % 97) + 2).cast("long")
-    by = (4 * (ck % 103) + 2).cast("long")
-    s = (4 * (ck % 3) + 1).cast("long")
-    b = c.where(ck % 2 == 0).select(
-        ck.alias("bkey"),
-        bx.alias("bx"), by.alias("by"), s.alias("bs"),
-        (bx - s).cast("double").alias("xmin"),
-        (by - s).cast("double").alias("ymin"),
-        (bx + s).cast("double").alias("xmax"),
-        (by + s).cast("double").alias("ymax"),
-    )
-    return a, b
+    return a, _diamond_side(c, 97, 103)
 
 
 _CLIP_SQL = """
@@ -2062,17 +2078,15 @@ def spatial_clip_convex_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator | 8 | 10⁴ ⇒ area_e4 is exact, the established
     contract; tests/test_r13_catalog.py asserts the congruence sweep).
 
-    Engine: grid-blocked bbox equi-join (the repo's standard candidate
-    generator — complete for overlap, never all-pairs) → ONE
-    Arrow-batched kernel per candidate pair running Sutherland–Hodgman
-    in exact rational arithmetic (functions/spatial.convex_clip —
-    integer cross-product side tests, Fraction crossing points), keep
-    pairs with positive area. The oracle computes the same answer by a
-    DIFFERENT exact algorithm (per-edge Green's-theorem decomposition:
-    each polygon edge clipped to a parameter interval against the other
-    polygon's half-planes via integer cross-multiplied fraction
-    max/min, summing sub-segment cross products — 2·4·area in scaled
-    ints), so agreement proves the geometry, not the implementation. In
+    Engine: `operators.overlay.overlay_pairs` — grid-blocked bbox
+    equi-join (complete for overlap, never all-pairs), then the int64
+    pair kernel once per candidate pair over octagon and diamond
+    matrices rebuilt from three scalars per side, keeping pairs with
+    positive area. The rational Sutherland–Hodgman `convex_clip` is the
+    reference the kernel is test-pinned against. The oracle clips each
+    edge to a parameter interval against the other polygon's
+    half-planes in SQL (integer cross-multiplied fraction max/min,
+    summing sub-segment cross products — 2·4·area in scaled ints). In
     general position boundary pieces biject with intersection-polygon
     vertices, so n_vertices grades the SHAPE, area_e4 the measure.
 
@@ -2085,57 +2099,8 @@ def spatial_clip_convex_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01, the density-quadratic regime this lattice avoids). Overflow
     audit: coords ≤ ~422, side values < 10⁵, cross-multiplied
     comparisons < 2·10⁹, scaled crosses < 2·10⁶, all << 2⁶³."""
-    c = load_table(spark, sf_dir, "customer")
-    from ..functions.spatial import _clip_pieces_int64
-
-    a, b = _convex_store_sides(c)
-    # spread: the scalar-join change made this a
-    # broadcast join over the single-file customer scan, so the join +
-    # Arrow kernel inherited ONE partition and serialized on one core
-    # (r15 optimization, guide §2.5); spreading the probe side keeps
-    # join and kernel map-side parallel. No-op at scale.
-    pairs = grid_blocked_overlap_join(spread(a), b, cell=32.0)
-    sel = pairs.select(
-        "akey", F.col("bkey_r").alias("bkey"),
-        "ax", "ay", "ar", "bx_r", "by_r", "bs_r",
-    )
-
-    # mapInPandas over the generating SCALARS (r15 optimization, guide
-    # §2.3/§4.1): the join and the Arrow boundary used to carry 24-long
-    # vertex arrays per candidate that derive from 3 scalars per side;
-    # the kernel now rebuilds the matrices by broadcasting and emits
-    # only the positive pairs — one Python node, no struct extraction.
-    def _pair_stats(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            axm, aym, bxm, bym = _convex_store_mats(
-                pdf["ax"].to_numpy(), pdf["ay"].to_numpy(),
-                pdf["ar"].to_numpy(), pdf["bx_r"].to_numpy(),
-                pdf["by_r"].to_numpy(), pdf["bs_r"].to_numpy(),
-            )
-            va, ca = _clip_pieces_int64(axm, aym, bxm, bym)
-            vb, cb = _clip_pieces_int64(bxm, bym, axm, aym)
-            total = ca.sum(axis=1) + cb.sum(axis=1)  # = 8 · area
-            pos = total > 0
-            if not pos.any():
-                continue
-            yield pd.DataFrame(
-                {
-                    "akey": pdf["akey"].to_numpy()[pos],
-                    "bkey": pdf["bkey"].to_numpy()[pos],
-                    "n_vertices": (va.sum(axis=1) + vb.sum(axis=1))[
-                        pos
-                    ].astype(np.int32),
-                    "area_e4": total[pos] * 1250,
-                }
-            )
-
-    return sel.mapInPandas(
-        _pair_stats, "akey long, bkey long, n_vertices int, area_e4 long"
-    ).withColumn("area", F.col("area_e4").cast("double") / F.lit(10000.0))
+    a, b = _convex_store_sides(load_table(spark, sf_dir, "customer"))
+    return with_area(overlay_pairs(a, b, 32.0, _OCTAGON, _DIAMOND))
 
 
 # ---------------------------------------------------------------------------
@@ -2264,15 +2229,15 @@ def spatial_clip_concave_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lattice (the `_clip_pieces_int64` exactness contract, still
     assert-enforced in the kernel).
 
-    Engine: `trapezoid_decompose` (functions/spatial.py — exact-int64
-    vertical sweep; ear-clip triangulation was REJECTED because its
-    arbitrary-slope diagonals leave the lattice family and the kernel
-    would rightly refuse) runs ONCE per subject row via an
-    Arrow-batched UDF (store-sized, never pair-sized) and asserts the
+    Engine: `operators.overlay` — `decompose` runs
+    `trapezoid_decompose` (exact-int64 vertical sweep; ear-clip
+    triangulation was REJECTED because its arbitrary-slope diagonals
+    leave the lattice family and the kernel would rightly refuse) ONCE
+    per subject row (store-sized, never pair-sized) and asserts the
     partition (piece areas sum to the subject's shoelace) on every
-    polygon; pieces explode into rows, grid-blocked bbox equi-join
-    against the diamonds, ONE vectorized kernel evaluation per
-    (piece, diamond) candidate, map-combinable SUM per (akey, bkey).
+    polygon; `overlay_area` joins the pieces grid-blocked against the
+    diamonds, runs the int64 pair kernel ONE time per (piece, diamond)
+    candidate, and sums per (akey, bkey) map-side.
     `subj_area_e4` re-grades the partition cross-engine: the engine
     reports the decomposition's piece-sum shoelace while the oracle
     computes the closed-form key arithmetic (4r² − 32 − 8d)·10⁴.
@@ -2296,96 +2261,10 @@ def spatial_clip_concave_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry has at its own moduli). Overflow: coords ≤ ~860, side values
     < 10⁵, cross-multiplied comparisons < 10¹⁰, all << 2⁶³."""
     c = load_table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-    r = (12 + 4 * (F.expr("c_custkey DIV 2") % 2)).cast("long")
-    d = (4 + 4 * (F.expr("c_custkey DIV 4") % 2)).cast("long")
-    ax, ay = (4 * (ck % 211)).cast("long"), (4 * (ck % 179)).cast("long")
-    bottom_xs = F.array(
-        ax - r + 4, ax - 4, ax - 4, ax + 4, ax + 4, ax + r - 4,
-        ax + r, ax + r, ax + r - 4, ax - r + 4, ax - r, ax - r,
-    )
-    bottom_ys = F.array(
-        ay - r, ay - r, ay - r + d, ay - r + d, ay - r, ay - r,
-        ay - r + 4, ay + r - 4, ay + r, ay + r, ay + r - 4, ay - r + 4,
-    )
-    left_xs = F.array(
-        ax - r + 4, ax + r - 4, ax + r, ax + r, ax + r - 4, ax - r + 4,
-        ax - r, ax - r, ax - r + d, ax - r + d, ax - r, ax - r,
-    )
-    left_ys = F.array(
-        ay - r, ay - r, ay - r + 4, ay + r - 4, ay + r, ay + r,
-        ay + r - 4, ay + 4, ay + 4, ay - 4, ay - 4, ay - r + 4,
-    )
-    is_bottom = ck % 4 == 1
-    # spread the store before the decompose UDF: the single-file
-    # customer scan is ONE partition at bench scale, which serialized
-    # the store-sized Python decomposition onto one core (r15
-    # optimization round measurement; the downstream kernel was always
-    # parallel because the grid join shuffles first). At 100 TB the
-    # scan carries thousands of splits and this is a no-op.
-    a = spread(
-        c.where(ck % 2 == 1).select(
-            ck.alias("akey"),
-            F.when(is_bottom, bottom_xs).otherwise(left_xs).alias("sxs"),
-            F.when(is_bottom, bottom_ys).otherwise(left_ys).alias("sys"),
-        )
-    )
-    from ..functions.spatial import (
-        make_convex_clip_stats_udf,
-        make_trapezoid_pieces_udf,
-    )
-
-    dec = make_trapezoid_pieces_udf()(F.col("sxs"), F.col("sys"))
-    pieces = (
-        a.select("akey", dec.alias("dc"))
-        .select(
-            "akey",
-            F.col("dc.a2").alias("subj2a"),
-            F.explode("dc.pieces").alias("p"),
-        )
-        .select(
-            "akey", "subj2a",
-            F.col("p.xs").alias("axs"), F.col("p.ys").alias("ays"),
-            F.array_min("p.xs").cast("double").alias("xmin"),
-            F.array_min("p.ys").cast("double").alias("ymin"),
-            F.array_max("p.xs").cast("double").alias("xmax"),
-            F.array_max("p.ys").cast("double").alias("ymax"),
-        )
-    )
-    bx = (4 * (ck % 193) + 2).cast("long")
-    by = (4 * (ck % 199) + 2).cast("long")
-    s = (4 * (ck % 3) + 1).cast("long")
-    b = c.where(ck % 2 == 0).select(
-        ck.alias("bkey"),
-        F.array(bx + s, bx, bx - s, bx).alias("bxs"),
-        F.array(by, by + s, by, by - s).alias("bys"),
-        (bx - s).cast("double").alias("xmin"),
-        (by - s).cast("double").alias("ymin"),
-        (bx + s).cast("double").alias("xmax"),
-        (by + s).cast("double").alias("ymax"),
-    )
-    pairs = grid_blocked_overlap_join(pieces, b, cell=32.0)
-    st = make_convex_clip_stats_udf()(
-        F.col("axs"), F.col("ays"), F.col("bxs_r"), F.col("bys_r")
-    )
-    return (
-        pairs.select(
-            "akey", "subj2a",
-            F.col("bkey_r").alias("bkey"),
-            st.getField("area_e4").alias("pa"),
-        )
-        .groupBy("akey", "bkey")
-        .agg(
-            F.max("subj2a").alias("subj2a"),
-            F.sum("pa").alias("area_e4"),
-        )
-        .where(F.col("area_e4") > 0)
-        .select(
-            "akey", "bkey",
-            (F.col("subj2a") * 5000).alias("subj_area_e4"),
-            "area_e4",
-            (F.col("area_e4").cast("double") / 10000.0).alias("area"),
-        )
+    a = decompose(_notched_store(c, 1, 4, 12, 211, 179), "akey", "subj_area_e4")
+    return overlay_area(
+        a, _diamond_side(c, 193, 199), 32.0, PIECES, _DIAMOND,
+        carry=("subj_area_e4",),
     )
 
 
@@ -2512,29 +2391,67 @@ _CLIP_GENERAL_SQL = (
 )
 
 
-def _notched_octagon_arrays(cx, cy, r, d, is_bottom):
-    """Spark array columns for the ×8-scaled notched octagon (corner cut
-    8, notch half-width 8) used by the general×general clip stores."""
+def _notched_octagon_arrays(cx, cy, r, d, is_bottom, k):
+    """Spark array columns (xs, ys) of the notched octagon, CCW: the square
+    [cx ± r] × [cy ± r] with corners cut by ``k`` and a ``k``-half-wide,
+    ``d``-deep notch out of the bottom edge where ``is_bottom``, else out of
+    the left edge."""
     bottom_xs = F.array(
-        cx - r + 8, cx - 8, cx - 8, cx + 8, cx + 8, cx + r - 8,
-        cx + r, cx + r, cx + r - 8, cx - r + 8, cx - r, cx - r,
+        cx - r + k, cx - k, cx - k, cx + k, cx + k, cx + r - k,
+        cx + r, cx + r, cx + r - k, cx - r + k, cx - r, cx - r,
     )
     bottom_ys = F.array(
         cy - r, cy - r, cy - r + d, cy - r + d, cy - r, cy - r,
-        cy - r + 8, cy + r - 8, cy + r, cy + r, cy + r - 8, cy - r + 8,
+        cy - r + k, cy + r - k, cy + r, cy + r, cy + r - k, cy - r + k,
     )
     left_xs = F.array(
-        cx - r + 8, cx + r - 8, cx + r, cx + r, cx + r - 8, cx - r + 8,
+        cx - r + k, cx + r - k, cx + r, cx + r, cx + r - k, cx - r + k,
         cx - r, cx - r, cx - r + d, cx - r + d, cx - r, cx - r,
     )
     left_ys = F.array(
-        cy - r, cy - r, cy - r + 8, cy + r - 8, cy + r, cy + r,
-        cy + r - 8, cy + 8, cy + 8, cy - 8, cy - 8, cy - r + 8,
+        cy - r, cy - r, cy - r + k, cy + r - k, cy + r, cy + r,
+        cy + r - k, cy + k, cy + k, cy - k, cy - k, cy - r + k,
     )
     return (
         F.when(is_bottom, bottom_xs).otherwise(left_xs),
         F.when(is_bottom, bottom_ys).otherwise(left_ys),
     )
+
+
+def _notched_side(c, parity, unit, r0, mx, my, ox=0, oy=0):
+    """One side of a notched-octagon clip store, as scalar parameters:
+    the customers with key ≡ ``parity`` (mod 2), keyed ``akey`` (odd) or
+    ``bkey`` (even), with centre (unit·(key mod mx) + ox,
+    unit·(key mod my) + oy), radius ``r`` = r0 + unit·((key DIV 2) mod 2),
+    notch depth ``d`` = unit·(1 + (key DIV 4) mod 2) and notch side ``s``
+    = 1 (bottom, key ≡ parity mod 4) or 3 (left), plus the bbox."""
+    ck = F.col("c_custkey")
+    x = (unit * (ck % mx) + ox).cast("long")
+    y = (unit * (ck % my) + oy).cast("long")
+    r = (r0 + unit * (F.expr("c_custkey DIV 2") % 2)).cast("long")
+    d = (unit + unit * (F.expr("c_custkey DIV 4") % 2)).cast("long")
+    s = F.when(ck % 4 == parity, F.lit(1)).otherwise(F.lit(3)).cast("long")
+    return c.where(ck % 2 == parity).select(
+        ck.alias("akey" if parity else "bkey"),
+        x.alias("x"), y.alias("y"), r.alias("r"), d.alias("d"), s.alias("s"),
+        *_bbox(x, y, r),
+    )
+
+
+def _notched_store(c, parity, unit, r0, mx, my, ox=0, oy=0, hole=False):
+    """:func:`_notched_side` as polygon rings for ``decompose``: the shell
+    (corner cut and notch half-width ``unit``) and, with ``hole``, the
+    16×16 interior ring."""
+    side = _notched_side(c, parity, unit, r0, mx, my, ox, oy)
+    x, y = F.col("x"), F.col("y")
+    xs, ys = _notched_octagon_arrays(
+        x, y, F.col("r"), F.col("d"), F.col("s") == 1, unit
+    )
+    rings = [xs.alias("sxs"), ys.alias("sys")]
+    if hole:
+        hx, hy = _hole_arrays(x, y)
+        rings += [hx.alias("hxs"), hy.alias("hys")]
+    return side.select(side.columns[0], *rings)
 
 
 # ---------------------------------------------------------------------------
@@ -2607,64 +2524,20 @@ def spatial_clip_convex_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the identical direction-class ORDER in SQL (ROW_NUMBER per
     pair) — same spec, disjoint execution paths.
 
-    100 TB shape: identical to spatial_clip_convex_pairs (store-sized
-    arrays, cell-blocked candidates, one Arrow kernel pass; output is
-    ≤ 8 vertex rows per positive pair). Vectorized area gates the
-    Python ring assembly to positive pairs only."""
-    c = load_table(spark, sf_dir, "customer")
+    100 TB shape: identical to spatial_clip_convex_pairs (the same
+    `operators.overlay.overlay_rows` candidate join, one Arrow kernel
+    pass; output is ≤ 8 vertex rows per positive pair)."""
     from ..functions.spatial import clip_ring_rows_batch
 
-    a, b = _convex_store_sides(c)
-    # spread: the scalar-join change made this a
-    # broadcast join over the single-file customer scan, so the join +
-    # Arrow kernel inherited ONE partition and serialized on one core
-    # (r15 optimization, guide §2.5); spreading the probe side keeps
-    # join and kernel map-side parallel. No-op at scale.
-    pairs = grid_blocked_overlap_join(spread(a), b, cell=32.0)
-    sel = pairs.select(
-        "akey", F.col("bkey_r").alias("bkey"),
-        "ax", "ay", "ar", "bx_r", "by_r", "bs_r",
-    )
+    def _ring_rows(ax, ay, ar, bx, by, bs):
+        return clip_ring_rows_batch(
+            *_octagon_mats(ax, ay, ar), *_diamond_mats(bx, by, bs)
+        )
 
-    # mapInPandas instead of a struct-returning pandas UDF (r15
-    # optimization): ~90% of candidate pairs are positive at bench
-    # scale (251k of 279k), so the original per-positive Python ring
-    # assembly + object-list Arrow serialization dominated the entry;
-    # the vectorized kernel emits the exploded vertex rows directly as
-    # flat int64 columns — no Python loop, no posexplode stage. Like
-    # the pair-stats sibling, the join ships the generating SCALARS
-    # and the kernel rebuilds the vertex matrices by broadcasting.
-    def _ring_rows(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            axm, aym, bxm, bym = _convex_store_mats(
-                pdf["ax"].to_numpy(), pdf["ay"].to_numpy(),
-                pdf["ar"].to_numpy(), pdf["bx_r"].to_numpy(),
-                pdf["by_r"].to_numpy(), pdf["bs_r"].to_numpy(),
-            )
-            pos, ae4, ri, vidx, vx, vy = clip_ring_rows_batch(
-                axm, aym, bxm, bym
-            )
-            if not len(ri):
-                continue
-            yield pd.DataFrame(
-                {
-                    "akey": pdf["akey"].to_numpy()[pos][ri],
-                    "bkey": pdf["bkey"].to_numpy()[pos][ri],
-                    "v_idx": vidx.astype(np.int64),
-                    "vx2": vx,
-                    "vy2": vy,
-                    "area_e4": ae4[ri],
-                }
-            )
-
-    return sel.mapInPandas(
-        _ring_rows,
-        "akey long, bkey long, v_idx long, vx2 long, vy2 long, "
-        "area_e4 long",
+    a, b = _convex_store_sides(load_table(spark, sf_dir, "customer"))
+    return overlay_rows(
+        a, b, 32.0, ("ax", "ay", "ar", "bx_r", "by_r", "bs_r"), _ring_rows,
+        "v_idx long, vx2 long, vy2 long, area_e4 long",
     )
 
 
@@ -3060,80 +2933,23 @@ def spatial_clip_holed_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
       general position) and asserts closure and ±8 turning per ring.
 
     100 TB shape: subject-level cell-blocked candidates (NO
-    decomposition explode — candidate rows are pairs, not piece
-    pairs), ten scalar param columns through ONE Arrow pass, output
+    decomposition — candidate rows are pairs, not piece pairs), ten
+    scalar param columns through ONE Arrow pass
+    (`operators.overlay.overlay_rows`), output
     proportional to the boundary. Overflow: coords ≤ ~5300 ⇒ every
     cross-multiplied comparison ≤ ~10¹¹ ≪ 2⁶³."""
-    c = load_table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-    r = (32 + 8 * (F.expr("c_custkey DIV 2") % 2)).cast("long")
-    d = (8 + 8 * (F.expr("c_custkey DIV 4") % 2)).cast("long")
-    ax, ay = (8 * (ck % 641)).cast("long"), (8 * (ck % 677)).cast("long")
-    a = c.where(ck % 2 == 1).select(
-        ck.alias("akey"),
-        ax.alias("pax"), ay.alias("pay"), r.alias("par"), d.alias("pad"),
-        F.when(ck % 4 == 1, F.lit(1)).otherwise(F.lit(3)).cast("long").alias("pas"),
-        (ax - r).cast("double").alias("xmin"),
-        (ay - r).cast("double").alias("ymin"),
-        (ax + r).cast("double").alias("xmax"),
-        (ay + r).cast("double").alias("ymax"),
-    )
-    bx = (8 * (ck % 653) + 2).cast("long")
-    by = (8 * (ck % 691) + 4).cast("long")
-    b = c.where(ck % 2 == 0).select(
-        ck.alias("bkey"),
-        bx.alias("pbx"), by.alias("pby"), r.alias("pbr"), d.alias("pbd"),
-        F.when(ck % 4 == 0, F.lit(1)).otherwise(F.lit(3)).cast("long").alias("pbs"),
-        (bx - r).cast("double").alias("xmin"),
-        (by - r).cast("double").alias("ymin"),
-        (bx + r).cast("double").alias("xmax"),
-        (by + r).cast("double").alias("ymax"),
-    )
     from ..functions.spatial import holed_boundary_rows_batch
 
-    # spread: the broadcast grid join inherits the
-    # single-file customer scan's ONE partition, serializing the
-    # boundary kernel on one core (r15 optimization, guide §2.5).
-    pairs = grid_blocked_overlap_join(spread(a), b, cell=64.0)
-    sel = pairs.select(
-        "akey", F.col("bkey_r").alias("bkey"),
-        "pax", "pay", "par", "pad", "pas",
-        "pbx_r", "pby_r", "pbr_r", "pbd_r", "pbs_r",
-    )
-
-    # mapInPandas instead of a struct-returning pandas UDF (r15
-    # optimization): the per-positive-pair Python chaining loop and the
-    # object-list segs serialization dominated the entry; the
-    # vectorized kernel (successor matching + pointer-doubling ring
-    # labeling, same loud Umlaufsatz asserts) emits the boundary
-    # segment rows directly as flat int64 columns — no explode stage.
-    def _boundary_rows(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cols = [
-                pdf[c].to_numpy().astype(np.int64)
-                for c in ("pax", "pay", "par", "pad", "pas",
-                          "pbx_r", "pby_r", "pbr_r", "pbd_r", "pbs_r")
-            ]
-            ri, x1, y1, x2, y2, a4, t8 = holed_boundary_rows_batch(*cols)
-            if not len(ri):
-                continue
-            yield pd.DataFrame(
-                {
-                    "akey": pdf["akey"].to_numpy()[ri],
-                    "bkey": pdf["bkey"].to_numpy()[ri],
-                    "x1_2": x1, "y1_2": y1, "x2_2": x2, "y2_2": y2,
-                    "area_e4": a4, "turning8": t8,
-                }
-            )
-
-    return sel.mapInPandas(
-        _boundary_rows,
-        "akey long, bkey long, x1_2 long, y1_2 long, x2_2 long, "
-        "y2_2 long, area_e4 long, turning8 long",
+    c = load_table(spark, sf_dir, "customer")
+    params = ("x", "y", "r", "d", "s")
+    return overlay_rows(
+        _notched_side(c, 1, 8, 32, 641, 677),
+        _notched_side(c, 0, 8, 32, 653, 691, 2, 4),
+        64.0,
+        (*params, *(p + "_r" for p in params)),
+        holed_boundary_rows_batch,
+        "x1_2 long, y1_2 long, x2_2 long, y2_2 long, area_e4 long, "
+        "turning8 long",
     )
 
 
@@ -3165,12 +2981,12 @@ def spatial_clip_holed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r15 holes extension of `trapezoid_decompose` (CW hole edges join
     the slab span sets; even-odd parity over the combined edge set IS
     shell-minus-hole; the pieces-tile-the-polygon partition check now
-    asserts against the NET shoelace) via `make_holed_trapezoid_pieces_udf`
-    — store-sized, never pair-sized. Pieces explode on both sides,
-    grid-blocked bbox equi-join over piece bboxes, ONE vectorized int64
-    kernel evaluation per (pieceA, pieceB) candidate, map-combined SUM
-    per (akey, bkey). Both subjects' NET piece-sum shoelaces ride along
-    and are graded against the oracle's closed-form key arithmetic
+    asserts against the NET shoelace) via `operators.overlay.decompose`
+    — store-sized, never pair-sized. `overlay_area` joins the piece
+    bboxes grid-blocked, runs the int64 pair kernel ONE time per
+    (pieceA, pieceB) candidate and sums per (akey, bkey) map-side.
+    Both subjects' NET piece-sum shoelaces ride along and are graded
+    against the oracle's closed-form key arithmetic
     (4r² − 384 − 16d)·10⁴ — the partition check on BOTH holed
     decompositions, cross-engine.
 
@@ -3200,90 +3016,13 @@ def spatial_clip_holed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Overflow: coords ≤ ~5300, c0 ≤ ~5·10⁵, cross-multiplied
     comparisons ≤ ~2.5·10¹¹, scaled crosses ≤ ~5·10⁷ — all ≪ 2⁶³."""
     c = load_table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-
-    from ..functions.spatial import (
-        make_convex_clip_stats_udf,
-        make_holed_trapezoid_pieces_udf,
-    )
-
-    def _pieces(df, key_alias, a2_alias, xs_alias, ys_alias):
-        dec = make_holed_trapezoid_pieces_udf()(
-            F.col("sxs"), F.col("sys"), F.col("hxs"), F.col("hys")
-        )
-        return (
-            df.select(key_alias, dec.alias("dc"))
-            .select(
-                key_alias,
-                F.col("dc.a2").alias(a2_alias),
-                F.explode("dc.pieces").alias("p"),
-            )
-            .select(
-                key_alias, a2_alias,
-                F.col("p.xs").alias(xs_alias), F.col("p.ys").alias(ys_alias),
-                F.array_min("p.xs").cast("double").alias("xmin"),
-                F.array_min("p.ys").cast("double").alias("ymin"),
-                F.array_max("p.xs").cast("double").alias("xmax"),
-                F.array_max("p.ys").cast("double").alias("ymax"),
-            )
-        )
-
-    r = (32 + 8 * (F.expr("c_custkey DIV 2") % 2)).cast("long")
-    d = (8 + 8 * (F.expr("c_custkey DIV 4") % 2)).cast("long")
-    ax, ay = (8 * (ck % 641)).cast("long"), (8 * (ck % 677)).cast("long")
-    axs, ays = _notched_octagon_arrays(ax, ay, r, d, ck % 4 == 1)
-    ahx, ahy = _hole_arrays(ax, ay)
-    # spread: the single-file customer scan is ONE
-    # partition at bench scale, serializing both store-sized Python
-    # decompositions onto one core each (r15 optimization measurement);
-    # no-op at 100 TB where the scan carries thousands of splits.
-    a = _pieces(
-        spread(
-            c.where(ck % 2 == 1).select(
-                ck.alias("akey"), axs.alias("sxs"), ays.alias("sys"),
-                ahx.alias("hxs"), ahy.alias("hys"),
-            )
-        ),
-        "akey", "subj2a", "axs", "ays",
-    )
-    bx = (8 * (ck % 653) + 2).cast("long")
-    by = (8 * (ck % 691) + 4).cast("long")
-    bxs, bys = _notched_octagon_arrays(bx, by, r, d, ck % 4 == 0)
-    bhx, bhy = _hole_arrays(bx, by)
-    b = _pieces(
-        spread(
-            c.where(ck % 2 == 0).select(
-                ck.alias("bkey"), bxs.alias("sxs"), bys.alias("sys"),
-                bhx.alias("hxs"), bhy.alias("hys"),
-            )
-        ),
-        "bkey", "subj2b", "bxs", "bys",
-    )
-    pairs = grid_blocked_overlap_join(a, b, cell=64.0)
-    st = make_convex_clip_stats_udf()(
-        F.col("axs"), F.col("ays"), F.col("bxs_r"), F.col("bys_r")
-    )
-    return (
-        pairs.select(
-            "akey", "subj2a",
-            F.col("bkey_r").alias("bkey"),
-            F.col("subj2b_r").alias("subj2b"),
-            st.getField("area_e4").alias("pa"),
-        )
-        .groupBy("akey", "bkey")
-        .agg(
-            F.max("subj2a").alias("subj2a"),
-            F.max("subj2b").alias("subj2b"),
-            F.sum("pa").alias("area_e4"),
-        )
-        .where(F.col("area_e4") > 0)
-        .select(
-            "akey", "bkey",
-            (F.col("subj2a") * 5000).alias("subj_a_area_e4"),
-            (F.col("subj2b") * 5000).alias("subj_b_area_e4"),
-            "area_e4",
-            (F.col("area_e4").cast("double") / 10000.0).alias("area"),
-        )
+    a = _notched_store(c, 1, 8, 32, 641, 677, hole=True)
+    b = _notched_store(c, 0, 8, 32, 653, 691, 2, 4, hole=True)
+    return overlay_area(
+        decompose(a, "akey", "subj_a_area_e4"),
+        decompose(b, "bkey", "subj_b_area_e4"),
+        64.0, PIECES, PIECES,
+        carry=("subj_a_area_e4", "subj_b_area_e4"),
     )
 
 
@@ -3311,10 +3050,10 @@ def spatial_clip_general_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the scheme empirically too).
 
     Engine: both stores decompose ONCE per subject row
-    (`trapezoid_decompose` Arrow UDF — store-sized), pieces explode on
-    both sides, grid-blocked bbox equi-join (cell 64) over piece
-    bboxes, ONE vectorized int64 kernel evaluation per (pieceA, pieceB)
-    candidate, map-combined SUM per (akey, bkey). Both subjects'
+    (`operators.overlay.decompose` over `trapezoid_decompose` —
+    store-sized); `overlay_area` joins the piece bboxes grid-blocked
+    (cell 64), runs the int64 pair kernel ONE time per (pieceA, pieceB)
+    candidate and sums per (akey, bkey) map-side. Both subjects'
     piece-sum shoelaces ride along and are graded against the oracle's
     closed-form key arithmetic (4r² − 128 − 16d)·10⁴ — the partition
     check on BOTH decompositions.
@@ -3332,84 +3071,13 @@ def spatial_clip_general_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     coords ≤ ~4800, c0 ≤ ~4·10⁵, cross-multiplied comparisons
     ≤ ~1.6·10¹¹, scaled crosses ≤ ~3·10⁷ — all ≪ 2⁶³."""
     c = load_table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-
-    from ..functions.spatial import (
-        make_convex_clip_stats_udf,
-        make_trapezoid_pieces_udf,
-    )
-
-    def _pieces(df, key_alias, a2_alias, xs_alias, ys_alias):
-        dec = make_trapezoid_pieces_udf()(F.col("sxs"), F.col("sys"))
-        return (
-            df.select(key_alias, dec.alias("dc"))
-            .select(
-                key_alias,
-                F.col("dc.a2").alias(a2_alias),
-                F.explode("dc.pieces").alias("p"),
-            )
-            .select(
-                key_alias, a2_alias,
-                F.col("p.xs").alias(xs_alias), F.col("p.ys").alias(ys_alias),
-                F.array_min("p.xs").cast("double").alias("xmin"),
-                F.array_min("p.ys").cast("double").alias("ymin"),
-                F.array_max("p.xs").cast("double").alias("xmax"),
-                F.array_max("p.ys").cast("double").alias("ymax"),
-            )
-        )
-
-    r = (24 + 8 * (F.expr("c_custkey DIV 2") % 2)).cast("long")
-    d = (8 + 8 * (F.expr("c_custkey DIV 4") % 2)).cast("long")
-    ax, ay = (8 * (ck % 569)).cast("long"), (8 * (ck % 587)).cast("long")
-    axs, ays = _notched_octagon_arrays(ax, ay, r, d, ck % 4 == 1)
-    # spread: the single-file customer scan is ONE
-    # partition at bench scale, serializing both store-sized Python
-    # decompositions onto one core each (r15 optimization measurement);
-    # no-op at 100 TB where the scan carries thousands of splits.
-    a = _pieces(
-        spread(
-            c.where(ck % 2 == 1).select(
-                ck.alias("akey"), axs.alias("sxs"), ays.alias("sys")
-            )
-        ),
-        "akey", "subj2a", "axs", "ays",
-    )
-    bx = (8 * (ck % 593) + 2).cast("long")
-    by = (8 * (ck % 599) + 4).cast("long")
-    bxs, bys = _notched_octagon_arrays(bx, by, r, d, ck % 4 == 0)
-    b = _pieces(
-        spread(
-            c.where(ck % 2 == 0).select(
-                ck.alias("bkey"), bxs.alias("sxs"), bys.alias("sys")
-            )
-        ),
-        "bkey", "subj2b", "bxs", "bys",
-    )
-    pairs = grid_blocked_overlap_join(a, b, cell=64.0)
-    st = make_convex_clip_stats_udf()(
-        F.col("axs"), F.col("ays"), F.col("bxs_r"), F.col("bys_r")
-    )
-    return (
-        pairs.select(
-            "akey", "subj2a",
-            F.col("bkey_r").alias("bkey"),
-            F.col("subj2b_r").alias("subj2b"),
-            st.getField("area_e4").alias("pa"),
-        )
-        .groupBy("akey", "bkey")
-        .agg(
-            F.max("subj2a").alias("subj2a"),
-            F.max("subj2b").alias("subj2b"),
-            F.sum("pa").alias("area_e4"),
-        )
-        .where(F.col("area_e4") > 0)
-        .select(
-            "akey", "bkey",
-            (F.col("subj2a") * 5000).alias("subj_a_area_e4"),
-            (F.col("subj2b") * 5000).alias("subj_b_area_e4"),
-            "area_e4",
-            (F.col("area_e4").cast("double") / 10000.0).alias("area"),
-        )
+    a = _notched_store(c, 1, 8, 24, 569, 587)
+    b = _notched_store(c, 0, 8, 24, 593, 599, 2, 4)
+    return overlay_area(
+        decompose(a, "akey", "subj_a_area_e4"),
+        decompose(b, "bkey", "subj_b_area_e4"),
+        64.0, PIECES, PIECES,
+        carry=("subj_a_area_e4", "subj_b_area_e4"),
     )
 
 

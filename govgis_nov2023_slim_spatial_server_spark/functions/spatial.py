@@ -1254,185 +1254,6 @@ def trapezoid_decompose(xs, ys, holes=()):
     return a2, pieces
 
 
-def make_trapezoid_pieces_udf():
-    """Arrow-batched wrapper over :func:`trapezoid_decompose` for the
-    non-convex clip entry: two array<long> vertex-coordinate columns in,
-    ``struct(a2, pieces: array<struct<xs, ys>>)`` out. Runs once per
-    SUBJECT row (store-sized, not pair-sized — decomposition cost never
-    scales with the join), pure Python per ≤12-vertex ring. Marked
-    nondeterministic for the same reason as the clip kernel: projecting
-    two fields of one UDF result must not re-run the UDF per field."""
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("a2", LongType(), True),
-            StructField(
-                "pieces",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("xs", ArrayType(LongType()), True),
-                            StructField("ys", ArrayType(LongType()), True),
-                        ]
-                    )
-                ),
-                True,
-            ),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _decomp(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        if not len(xs):
-            return pd.DataFrame(
-                {
-                    "a2": pd.Series([], dtype="int64"),
-                    "pieces": pd.Series([], dtype="object"),
-                }
-            )
-        a2s, pss = [], []
-        for xa, ya in zip(xs, ys):
-            a2, pieces = trapezoid_decompose(
-                [int(v) for v in xa], [int(v) for v in ya]
-            )
-            a2s.append(a2)
-            pss.append(
-                [{"xs": list(px), "ys": list(py)} for px, py in pieces]
-            )
-        return pd.DataFrame({"a2": a2s, "pieces": pss})
-
-    return _decomp.asNondeterministic()
-
-
-def make_holed_trapezoid_pieces_udf():
-    """Arrow-batched wrapper over :func:`trapezoid_decompose` WITH one
-    interior ring, for the holed clip entry: four array<long> columns in
-    (shell xs/ys CCW, hole xs/ys CW), ``struct(a2, pieces)`` out with
-    ``a2`` the NET doubled area (shell minus hole). Runs once per
-    SUBJECT row (store-sized, not pair-sized); the partition check
-    (pieces tile shell-minus-hole) asserts on every call. Marked
-    nondeterministic for the same one-evaluation reason as the sibling
-    factories."""
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("a2", LongType(), True),
-            StructField(
-                "pieces",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("xs", ArrayType(LongType()), True),
-                            StructField("ys", ArrayType(LongType()), True),
-                        ]
-                    )
-                ),
-                True,
-            ),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _decomp(
-        xs: pd.Series, ys: pd.Series, hxs: pd.Series, hys: pd.Series
-    ) -> pd.DataFrame:
-        if not len(xs):
-            return pd.DataFrame(
-                {
-                    "a2": pd.Series([], dtype="int64"),
-                    "pieces": pd.Series([], dtype="object"),
-                }
-            )
-        a2s, pss = [], []
-        for xa, ya, hx, hy in zip(xs, ys, hxs, hys):
-            a2, pieces = trapezoid_decompose(
-                [int(v) for v in xa],
-                [int(v) for v in ya],
-                holes=[([int(v) for v in hx], [int(v) for v in hy])],
-            )
-            a2s.append(a2)
-            pss.append(
-                [{"xs": list(px), "ys": list(py)} for px, py in pieces]
-            )
-        return pd.DataFrame({"a2": a2s, "pieces": pss})
-
-    return _decomp.asNondeterministic()
-
-
-def make_convex_clip_stats_udf():
-    """Arrow-batched kernel for the convex×convex clip entry: four
-    array<long> vertex-coordinate columns in (subject xs/ys, clip
-    xs/ys, both CCW, FIXED arities), struct(n_vertices, area_e4) out.
-    area_e4 = area · 10⁴ of the EXACT intersection area (half-integer
-    crossings ⇒ denominator | 8 | 10⁴, no truncation). Implementation
-    is the fully numpy-vectorized int64 per-edge Green decomposition
-    (`_clip_pieces_int64` both directions; pieces biject with
-    intersection vertices in general position) — the rational
-    Sutherland–Hodgman `convex_clip` is the general-slope reference it
-    is test-pinned against; the first per-pair Fraction cut of this
-    kernel measured 40 s on 251k pairs at sf0.1 vs milliseconds
-    vectorized."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("n_vertices", IntegerType(), True),
-            StructField("area_e4", LongType(), True),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _clip_stats(
-        axs: pd.Series, ays: pd.Series, bxs: pd.Series, bys: pd.Series
-    ) -> pd.DataFrame:
-        if not len(axs):
-            return pd.DataFrame(
-                {
-                    "n_vertices": np.zeros(0, dtype=np.int32),
-                    "area_e4": np.zeros(0, dtype=np.int64),
-                }
-            )
-        def _mat(col: pd.Series) -> np.ndarray:
-            # fixed-arity list column → (n, arity) int64 without a
-            # per-row Python loop (np.concatenate iterates in C)
-            flat = np.concatenate(col.to_numpy()).astype(np.int64, copy=False)
-            return flat.reshape(len(col), -1)
-
-        ax, ay, bx, by = _mat(axs), _mat(ays), _mat(bxs), _mat(bys)
-        va, ca = _clip_pieces_int64(ax, ay, bx, by)
-        vb, cb = _clip_pieces_int64(bx, by, ax, ay)
-        total = ca.sum(axis=1) + cb.sum(axis=1)  # = 8 · area
-        pos = total > 0
-        nv = np.where(pos, va.sum(axis=1) + vb.sum(axis=1), 0).astype(
-            np.int32
-        )
-        ae4 = np.where(pos, total * 1250, 0)
-        return pd.DataFrame({"n_vertices": nv, "area_e4": ae4})
-
-    # The kernel is PURE; the marker exists only to pin ONE evaluation:
-    # filtering on one struct field while projecting the others makes
-    # Catalyst extract TWO ArrowEvalPython nodes for a deterministic UDF
-    # (measured: the whole 279k-candidate batch ran the kernel twice).
-    return _clip_stats.asNondeterministic()
-
-
 def _seg_clip_interval(p1, p2, poly):
     """Exact Liang–Barsky: the parameter interval of directed segment
     p1→p2 inside CCW convex ``poly`` (integer coordinates), as fraction
@@ -1576,8 +1397,8 @@ def _dir_class(dx: int, dy: int) -> int:
 
 
 def donut_notched_polys(cx, cy, r, d, bottom):
-    """The holed clip store's geometry from its key parameters, one
-    source of truth for the boundary UDF and the tests: returns
+    """The holed clip store's geometry from its key parameters, the
+    scalar reference the tests hold :func:`_donut_geom_np` to: returns
     ``(ring12, hole_ccw, oct8, ntc4)`` — the notched 12-gon shell
     (CCW), the 16×16 interior ring (CCW point list; reverse for ∂A
     orientation), and the octagon/notch convex components whose signed
@@ -1714,17 +1535,14 @@ def boundary_fragments_batch(edges, comps):
 
 def holed_boundary_rows_batch(axv, ayv, rav, dav, sav, bxv, byv, rbv,
                               dbv, sbv):
-    """Fully VECTORIZED form of the holed-boundary kernel (r15
-    optimization round): ten int64 parameter vectors in, the positive
-    pairs' complete exact boundaries out as flat COO arrays —
+    """The holed-boundary kernel: ten int64 store-parameter vectors in
+    (centre x, y, radius, notch depth, notch side, for A then B), the
+    positive pairs' complete exact boundaries out as flat COO arrays —
     ``(ri, fx1, fy1, fx2, fy2, a4, t8)`` where ``ri`` indexes the batch
     and ``a4``/``t8`` are per-FRAGMENT copies of the pair's area_e4 and
     turning8 (ready to emit as rows).
 
-    Replaces the per-positive-pair Python chaining loop of
-    ``make_holed_boundary_udf`` (dict-based successor walks over tuple
-    lists ran per pair ≈ the entry's dominant cost at bench scale).
-    The loud structural asserts carry over, vectorized:
+    Loud structural asserts, vectorized:
     - every fragment start is UNIQUE per pair (vertex degree ≤ 2) and
       every fragment end matches exactly one start (degree ≥ 2) — so
       the successor map is a permutation and every chain closes;
@@ -1800,133 +1618,22 @@ def holed_boundary_rows_batch(axv, ayv, rav, dav, sav, bxv, byv, rbv,
     return ri, fx1, fy1, fx2, fy2, area8[ri] * 1250, t8[ri]
 
 
-def make_holed_boundary_udf():
-    """Boundary-reconstruction kernel for the holed clip family: store
-    PARAMS in (ten scalar int64 columns — the polygons never cross
-    Arrow), ``struct(area_e4, turning8, segs)`` out, where ``segs`` is
-    the complete exact ×2-scaled directed boundary of A∩B
-    (interior-left; fragments of ∂A inside B plus ∂B inside A via the
-    1D coverage sweep) and
-
-    - ``area_e4`` derives from the BOUNDARY's shoelace sum — the graded
-      cross-check against the oracle's nine-term Green area, two
-      genuinely different exact algorithms;
-    - ``turning8`` is the total exterior turning in 45° units (Hopf
-      Umlaufsatz): 8·(#CCW rings − #CW hole rings), the topological
-      invariant that grades ring structure without shipping ring ids.
-
-    Ring chaining itself runs here too (successor following — general
-    position makes every boundary vertex degree 2) purely as a loud
-    per-pair ASSERT: every chain closes, every ring turns ±8, and the
-    per-ring turning sum equals ``turning8``."""
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("area_e4", LongType(), True),
-            StructField("turning8", LongType(), True),
-            StructField(
-                "segs",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("x1_2", LongType(), True),
-                            StructField("y1_2", LongType(), True),
-                            StructField("x2_2", LongType(), True),
-                            StructField("y2_2", LongType(), True),
-                        ]
-                    )
-                ),
-                True,
-            ),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _boundary(
-        ax: pd.Series, ay: pd.Series, ra: pd.Series, da: pd.Series,
-        sa: pd.Series, bx: pd.Series, by: pd.Series, rb: pd.Series,
-        db: pd.Series, sb: pd.Series,
-    ) -> pd.DataFrame:
-        n = len(ax)
-        if not n:
-            return pd.DataFrame(
-                {
-                    "area_e4": np.zeros(0, dtype=np.int64),
-                    "turning8": np.zeros(0, dtype=np.int64),
-                    "segs": pd.Series([], dtype="object"),
-                }
-            )
-        a4 = np.zeros(n, dtype=np.int64)
-        t8 = np.zeros(n, dtype=np.int64)
-        segs_out: list = [[] for _ in range(n)]
-        cols = [
-            c.to_numpy().astype(np.int64)
-            for c in (ax, ay, ra, da, sa, bx, by, rb, db, sb)
-        ]
-        axv, ayv, rav, dav, sav, bxv, byv, rbv, dbv, sbv = cols
-        edges_a, comps_a = _donut_geom_np(axv, ayv, rav, dav, sav == 1)
-        edges_b, comps_b = _donut_geom_np(bxv, byv, rbv, dbv, sbv == 1)
-        ri_a, x1a, y1a, x2a, y2a = boundary_fragments_batch(edges_a, comps_b)
-        ri_b, x1b, y1b, x2b, y2b = boundary_fragments_batch(edges_b, comps_a)
-        ri = np.concatenate([ri_a, ri_b])
-        fx1 = np.concatenate([x1a, x1b])
-        fy1 = np.concatenate([y1a, y1b])
-        fx2 = np.concatenate([x2a, x2b])
-        fy2 = np.concatenate([y2a, y2b])
-        area8 = np.zeros(n, dtype=np.int64)
-        np.add.at(area8, ri, fx1 * fy2 - fy1 * fx2)
-        order = np.argsort(ri, kind="stable")
-        ri_s = ri[order]
-        fx1, fy1 = fx1[order], fy1[order]
-        fx2, fy2 = fx2[order], fy2[order]
-        for i in np.nonzero(area8 > 0)[0]:
-            lo = np.searchsorted(ri_s, i, "left")
-            hi = np.searchsorted(ri_s, i, "right")
-            frags = [
-                (int(fx1[k]), int(fy1[k]), int(fx2[k]), int(fy2[k]))
-                for k in range(lo, hi)
-            ]
-            # chaining as a loud per-pair ASSERT of general position +
-            # the Umlaufsatz (each ring turns exactly +-8)
-            _, a8, turning8 = chain_boundary_rings(frags)
-            if a8 != area8[i]:
-                raise ValueError("fragment area bookkeeping diverged")
-            a4[i] = a8 * 1250
-            t8[i] = turning8
-            segs_out[i] = [
-                {"x1_2": f[0], "y1_2": f[1], "x2_2": f[2], "y2_2": f[3]}
-                for f in frags
-            ]
-        return pd.DataFrame({"area_e4": a4, "turning8": t8, "segs": segs_out})
-
-    return _boundary.asNondeterministic()
-
-
 def clip_ring_rows_batch(ax, ay, bx, by):
-    """Fully VECTORIZED ring assembly for the convex clip geometry-output
-    entry (r15 optimization round): subject/clip vertex matrices in
-    ((n, 8) / (n, 4) int64), the intersection rings out as flat COO
-    arrays — ``(pos, ae4, ri, v_idx, vx, vy)`` where ``pos`` masks the
-    positive pairs of the batch, ``ae4`` is area·10⁴ per positive pair,
-    and ``ri`` indexes the positive subset in order.
+    """Ring assembly for the convex clip geometry-output entry: subject
+    and clip vertex matrices in ((n, 8) / (n, 4) int64), the intersection
+    rings of the positive pairs out as flat COO arrays
+    ``(ri, v_idx, vx, vy, ae4)`` — per ring vertex, its batch row, its
+    1-based index on the ring, its ×2-scaled coordinates and the pair's
+    area·10⁴.
 
-    Replaces the per-positive-pair Python loop of the original
-    ``make_convex_clip_ring_udf`` (sort + tuple building + list
-    comprehensions ran 251k times per sf0.1 call ≈ the whole entry's
-    cost): the direction-class sort is one argsort over the 12 piece
-    slots per row (invalid pieces keyed 8 > any valid class, so valid
-    pieces land at the front in class order), and BOTH loud self-checks
-    carry over vectorized — strict class increase (two pieces sharing a
-    class would be collinear, excluded by the store congruence scheme)
-    and full chain closure including the wrap-around. Output values are
-    bit-identical to the loop (pinned by the entry's oracle and the
-    cyclic-equality property test)."""
+    The pieces (each polygon's edges clipped to the other) are the
+    boundary of A∩B, and a CCW convex ring's edge directions strictly
+    increase, so one argsort of the piece slots by direction class
+    (invalid pieces keyed 8, past every class) orders the ring. Two loud
+    self-checks run on every positive pair: strict class increase (two
+    pieces sharing a class would be collinear, excluded by the store
+    congruence scheme) and full chain closure including the
+    wrap-around."""
     va, ax1, ay1, ax2, ay2 = _clip_param_core(ax, ay, bx, by)
     vb, bx1, by1, bx2, by2 = _clip_param_core(bx, by, ax, ay)
     V = np.concatenate([va, vb], axis=1)
@@ -1939,7 +1646,7 @@ def clip_ring_rows_batch(ax, ay, bx, by):
     ae4 = tot[pos] * 1250
     z = np.zeros(0, dtype=np.int64)
     if not pos.any():
-        return pos, ae4, z, z, z, z
+        return z, z, z, z, z
     V, X1, Y1, X2, Y2 = (m[pos] for m in (V, X1, Y1, X2, Y2))
     dx, dy = X2 - X1, Y2 - Y1
     dcls = np.where(
@@ -1979,96 +1686,4 @@ def clip_ring_rows_batch(ax, ay, bx, by):
     if np.any((lx != X1s[:, 0]) | (ly != Y1s[:, 0])):
         raise ValueError("clip ring does not close")
     ri, ci = np.nonzero(Vs)
-    return pos, ae4, ri, ci + 1, X1s[Vs], Y1s[Vs]
-
-
-def make_convex_clip_ring_udf():
-    """Geometry-OUTPUT form of the snap-free convex clip: per candidate
-    pair, reconstruct THE intersection ring from the exact boundary
-    pieces — ``struct(area_e4, vxs, vys)`` with the ×2-scaled CCW ring
-    vertices in canonical order. The pieces (each subject's edges
-    clipped to the other polygon, `_clip_param_core` both directions)
-    ARE the boundary of A∩B for convex×convex; ordering them needs no
-    chaining search: a CCW convex ring's directed edge directions are
-    strictly increasing, so two distinct edges can never share a
-    direction class (they would be collinear — excluded by the store's
-    congruence scheme), and SORTING the segments by direction class,
-    rotated to start at the lowest class present, IS the ring. The
-    assembly asserts chain closure (every sorted segment ends exactly
-    where the next begins) on every positive pair — a loud self-check
-    of both the convexity argument and the kernel, per row. Area is
-    computed vectorized first so only positive pairs pay the Python
-    list assembly."""
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("area_e4", LongType(), True),
-            StructField("vxs", ArrayType(LongType()), True),
-            StructField("vys", ArrayType(LongType()), True),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _ring(
-        axs: pd.Series, ays: pd.Series, bxs: pd.Series, bys: pd.Series
-    ) -> pd.DataFrame:
-        if not len(axs):
-            return pd.DataFrame(
-                {
-                    "area_e4": np.zeros(0, dtype=np.int64),
-                    "vxs": pd.Series([], dtype="object"),
-                    "vys": pd.Series([], dtype="object"),
-                }
-            )
-
-        def _mat(col: pd.Series) -> np.ndarray:
-            flat = np.concatenate(col.to_numpy()).astype(np.int64, copy=False)
-            return flat.reshape(len(col), -1)
-
-        ax, ay, bx, by = _mat(axs), _mat(ays), _mat(bxs), _mat(bys)
-        va, ax1, ay1, ax2, ay2 = _clip_param_core(ax, ay, bx, by)
-        vb, bx1, by1, bx2, by2 = _clip_param_core(bx, by, ax, ay)
-        tot = (
-            np.where(va, ax1 * ay2 - ay1 * ax2, 0).sum(axis=1)
-            + np.where(vb, bx1 * by2 - by1 * bx2, 0).sum(axis=1)
-        )  # = 8 · area
-        pos = tot > 0
-        ae4 = np.where(pos, tot * 1250, 0)
-        vxs_out: list = [None] * len(ax)
-        vys_out: list = [None] * len(ax)
-        for i in np.nonzero(pos)[0]:
-            segs = [
-                (int(ax1[i, j]), int(ay1[i, j]), int(ax2[i, j]), int(ay2[i, j]))
-                for j in np.nonzero(va[i])[0]
-            ] + [
-                (int(bx1[i, j]), int(by1[i, j]), int(bx2[i, j]), int(by2[i, j]))
-                for j in np.nonzero(vb[i])[0]
-            ]
-            segs.sort(
-                key=lambda s: _dir_class(s[2] - s[0], s[3] - s[1])
-            )
-            for k in range(len(segs)):
-                nxt = segs[(k + 1) % len(segs)]
-                if (segs[k][2], segs[k][3]) != (nxt[0], nxt[1]):
-                    raise ValueError(
-                        "clip ring does not chain — convexity/general-"
-                        f"position violated at row {i}: {segs}"
-                    )
-            vxs_out[i] = [s[0] for s in segs]
-            vys_out[i] = [s[1] for s in segs]
-        rows = ~pos
-        for i in np.nonzero(rows)[0]:
-            vxs_out[i] = []
-            vys_out[i] = []
-        return pd.DataFrame(
-            {"area_e4": ae4, "vxs": vxs_out, "vys": vys_out}
-        )
-
-    # same one-evaluation pin as the stats kernel
-    return _ring.asNondeterministic()
+    return np.nonzero(pos)[0][ri], ci + 1, X1s[Vs], Y1s[Vs], ae4[ri]

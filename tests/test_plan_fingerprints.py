@@ -60,9 +60,9 @@ FINGERPRINTS = {
     "spatial_nn_join_ring": (1, 0, 0, 1, 0, 0, 0),
     "spatial_knn_join_ring": (1, 0, 0, 1, 0, 0, 0),
     "spatial_clip_convex_pairs": (2, 0, 0, 1, 0, 0, 0),
-    "spatial_clip_concave_pairs": (3, 0, 0, 0, 0, 2, 0),
-    "spatial_clip_general_pairs": (4, 0, 0, 0, 0, 3, 0),
-    "spatial_clip_holed_pairs": (4, 0, 0, 0, 0, 3, 0),
+    "spatial_clip_concave_pairs": (3, 0, 0, 2, 0, 0, 0),
+    "spatial_clip_general_pairs": (4, 0, 0, 3, 0, 0, 0),
+    "spatial_clip_holed_pairs": (4, 0, 0, 3, 0, 0, 0),
     "spatial_clip_convex_rings": (2, 0, 0, 1, 0, 0, 0),
     "bpe_encode_merges": (5, 0, 0, 0, 0, 0, 0),
     "spatial_clip_holed_boundary": (2, 0, 0, 1, 0, 0, 0),

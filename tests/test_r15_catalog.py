@@ -14,8 +14,10 @@ Proof structure mirrors the r13/r14 clip-family tests:
   the NINE-term rational inclusion-exclusion — two independent exact
   algorithms, and the kernel's half-integer assert doubles as the mod-8
   scheme's empirical proof for the holed family;
-- the entry's physical plan (exactly three ArrowEvalPython nodes: two
-  store-sized decompositions + one kernel pass) and sf0.001 oracle parity.
+- the entry's physical plan (exactly three Python passes: two
+  store-sized decompositions + one kernel pass) and sf0.001 oracle parity;
+- the overlay operator on shape pairs no entry generates, against the
+  Fraction reference.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from fractions import Fraction
 
 import duckdb
 import numpy as np
+import pytest
 
 from govgis_nov2023_slim_spatial_server_spark.catalog import ORACLES, QUERIES
 from govgis_nov2023_slim_spatial_server_spark.functions.spatial import (
@@ -765,13 +768,14 @@ class TestBpeEncodeMerges:
 
 class TestHoledClipEntry:
     def test_plan_three_arrow_nodes(self, spark):
-        """Exactly THREE ArrowEvalPython passes by design: two
+        """Exactly THREE Arrow (mapInPandas) passes by design: two
         store-sized holed decompositions + one kernel pass per
         (pieceA, pieceB) candidate — decomposition never runs
         pair-sized."""
         df = QUERIES["spatial_clip_holed_pairs"](spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") == 3, plan
+        assert plan.count("MapInPandas") == 3, plan
+        assert "ArrowEvalPython" not in plan, plan
 
     def test_sf0001_oracle_parity(self, spark):
         con = duckdb.connect()
@@ -792,3 +796,91 @@ class TestHoledClipEntry:
         )
         assert len(got) > 50
         assert got == want
+
+
+def _diamond(cx, cy, s):
+    return [cx + s, cx, cx - s, cx], [cy, cy + s, cy, cy - s]
+
+
+def _area_e4_reference(a, b):
+    """Per-side net area and the intersection area, each ×10⁴, summed in
+    Fractions over the `trapezoid_decompose` pieces: rational
+    Sutherland–Hodgman (`convex_clip`) on every piece pair."""
+    pieces = []
+    for xs, ys, *hole in (a, b):
+        _, ps = trapezoid_decompose(xs, ys, holes=[tuple(hole)] if hole else ())
+        pieces.append([list(zip(px, py)) for px, py in ps])
+    pa, pb = pieces
+    inter = sum(
+        convex_poly_area2(convex_clip(p, q)) for p in pa for q in pb
+    )
+    return tuple(
+        5000 * v
+        for v in (
+            sum(map(convex_poly_area2, pa)),
+            sum(map(convex_poly_area2, pb)),
+            inter,
+        )
+    )
+
+
+class TestOverlayOperator:
+    """`operators.overlay` on shape pairs no catalog entry generates:
+    holed donuts (A) against diamonds and hole-free notched octagons (B),
+    on the holed store's mod-8 lattice (A lines ≡ 0, B centres ≡ (2, 4))."""
+
+    A = {
+        1: (*_notched8(0, 0, 32, 8, 1), *_hole8_cw(0, 0)),
+        2: (*_notched8(96, 0, 40, 16, 3), *_hole8_cw(96, 0)),
+    }
+    B = {
+        10: _diamond(2, 12, 16),  # covers part of donut 1's hole
+        11: _notched8(18, 20, 24, 8, 1),
+        12: _notched8(98, 36, 32, 16, 3),
+        13: _diamond(90, -36, 8),  # crosses donut 2's bottom edge
+    }
+
+    @staticmethod
+    def _overlay(spark, a_rows, b_rows):
+        from govgis_nov2023_slim_spatial_server_spark.operators.overlay import (
+            PIECES,
+            decompose,
+            overlay_area,
+        )
+
+        ring = "array<long>"
+        a = spark.createDataFrame(
+            a_rows, f"akey long, sxs {ring}, sys {ring}, hxs {ring}, hys {ring}"
+        )
+        b = spark.createDataFrame(b_rows, f"bkey long, sxs {ring}, sys {ring}")
+        return overlay_area(
+            decompose(a, "akey", "a_e4"), decompose(b, "bkey", "b_e4"),
+            64.0, PIECES, PIECES, carry=("a_e4", "b_e4"),
+        )
+
+    def test_mixed_pairs_match_fraction_reference(self, spark):
+        got = {
+            (r.akey, r.bkey): (r.a_e4, r.b_e4, r.area_e4, r.area)
+            for r in self._overlay(
+                spark,
+                [(k, *rings) for k, rings in self.A.items()],
+                [(k, *rings) for k, rings in self.B.items()],
+            ).collect()
+        }
+        want = {}
+        for ak, a in self.A.items():
+            for bk, b in self.B.items():
+                a_e4, b_e4, inter = _area_e4_reference(a, b)
+                if inter > 0:
+                    want[(ak, bk)] = (a_e4, b_e4, inter, float(inter) / 10000)
+        assert set(want) == {(1, 10), (1, 11), (2, 12), (2, 13)}
+        assert got == want
+
+    def test_off_lattice_input_raises(self, spark):
+        """A slope-3 edge crosses donut 1's bottom edge y = -32 at
+        x = 13 + 8/3: off the half-integer lattice, so the kernel must
+        raise rather than round."""
+        tri = ([13, 16, 13], [-40, -31, -31])
+        df = self._overlay(spark, [(1, *self.A[1])], [(20, *tri)])
+        with pytest.raises(Exception, match="half-integer lattice"):
+            df.collect()
