@@ -1225,7 +1225,7 @@ def pagerank_power_iters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: edges and degrees are localCheckpointed ONCE (four
     consumers — recomputing the self-join per iteration is the plan-branch
-    rescan trap, the _tagged_parity_runs lesson); each iteration is one
+    rescan trap, the tagged-layer rasterize lesson); each iteration is one
     broadcast of the node-sized message table into the edge scan plus a
     map-combined groupBy(dst) sum. At 100 TB the ranks outgrow broadcast:
     the production swap is edges bucketed by s reused across iterations

@@ -30,6 +30,7 @@ sits ≥1e-6 away from the cut, far beyond any cross-engine libm ulp drift.
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pandas as pd
@@ -41,10 +42,18 @@ from pyspark.sql.types import BinaryType
 from ..functions.spatial import (
     make_area_centroid_udf,
     make_points_in_polys_udf,
+    parse_wkb_polygons,
+    points_in_polys,
     wkb_length_npoints,
     wkb_linestring,
     wkb_multilinestring,
     wkb_polygon,
+)
+from ..operators.dissolve import (
+    boolean_runs,
+    dilate_runs,
+    merge_runs,
+    union_rings_by_key,
 )
 from ..operators.overlay import (
     PIECES,
@@ -164,23 +173,24 @@ def make_shape_wkb_udf():
     return _shape
 
 
-_geo_store_cache = MaterializedStoreCache()
-
-
-def _geo_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon store (c_custkey, c_nationkey, geom_wkb, bbox), built once
-    per session and materialized — the ingest-once / query-many split of
-    sources/ingest.py (same pattern as spatial_mm._spatial_layers).
-    Cached via MaterializedStoreCache (LRU + session-finalizer eviction)."""
-
-    def _build() -> DataFrame:
-        c = load_table(spark, sf_dir, "customer")
-        k = F.col("c_custkey")
-        x0 = F.lit(-125.0) + (k % 40).cast("double") * 1.5
-        y0 = F.lit(24.0) + (k % 16).cast("double") * 1.25
-        w = F.lit(1.0) + (k % 7).cast("double") * 0.25
-        h = F.lit(1.0) + (k % 5).cast("double") * 0.25
-        params = c.select(
+def _shape_store(spark: SparkSession, sf_dir: str, jitter: bool) -> DataFrame:
+    """(c_custkey, c_nationkey, geom_wkb) with one shape per customer: the
+    `_GEO_PARAM_SQL` lattice placement, or with ``jitter`` every vertex
+    moved off the cell lattice by odd 1/64° multiples (the snap store,
+    `_SNAP_PAR_OCC_SQL`'s ``p``)."""
+    k = F.col("c_custkey")
+    x0 = F.lit(-125.0) + (k % 40).cast("double") * 1.5
+    y0 = F.lit(24.0) + (k % 16).cast("double") * 1.25
+    if jitter:
+        x0 = x0 + (F.lit(1.0) + (k % 8).cast("double") * 2.0) * F.lit(0.015625)
+        y0 = y0 + (F.lit(3.0) + (k % 7).cast("double") * 2.0) * F.lit(0.015625)
+    w = F.lit(1.0) + (k % 7).cast("double") * 0.25
+    h = F.lit(1.0) + (k % 5).cast("double") * 0.25
+    # spread before the WKB encode: the customer table is a single parquet
+    # file (1-2 scan partitions), and every map-only geo kernel downstream
+    # inherits that layout (the union-area rasterize once ran on 2 cores).
+    params = spread(
+        load_table(spark, sf_dir, "customer").select(
             "c_custkey",
             "c_nationkey",
             x0.alias("x0"),
@@ -188,23 +198,33 @@ def _geo_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             w.alias("w"),
             h.alias("h"),
         )
-        wkb = params.select(
-            "c_custkey",
-            "c_nationkey",
-            make_shape_wkb_udf()(
-                F.col("c_custkey"), F.col("x0"), F.col("y0"), F.col("w"), F.col("h")
-            ).alias("geom_wkb"),
-        )
-        # spread the store across the cluster BEFORE pinning it: the
-        # driver testdata is a single parquet file (1-2 scan partitions),
-        # and a localCheckpoint freezes that layout — every downstream
-        # map-only geo kernel would run near-serially on a 32-core local
-        # session (r9 rehearsal find: the union-area rasterize at 1× ran
-        # on 2 cores). The shuffle moves a few MB once at ingest time;
-        # width sized by store rows (see session.GEOMETRY_STORE).
-        return checkpoint(spread(derive_geometry(wkb)), GEOMETRY_STORE)
+    )
+    return params.select(
+        "c_custkey",
+        "c_nationkey",
+        make_shape_wkb_udf()(
+            F.col("c_custkey"), F.col("x0"), F.col("y0"), F.col("w"), F.col("h")
+        ).alias("geom_wkb"),
+    )
 
-    return _geo_store_cache.get_or_build(spark, sf_dir, _build)
+
+_geo_store_cache = MaterializedStoreCache()
+
+
+def _geo_store(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lattice polygon store (c_custkey, c_nationkey, geom_wkb, bbox,
+    geom_rings), built once per session and materialized — the
+    ingest-once / query-many split of sources/ingest.py (same pattern as
+    spatial_mm._spatial_layers). Cached via MaterializedStoreCache (LRU +
+    session-finalizer eviction); width sized by store rows (see
+    session.GEOMETRY_STORE)."""
+    return _geo_store_cache.get_or_build(
+        spark,
+        sf_dir,
+        lambda: checkpoint(
+            derive_geometry(_shape_store(spark, sf_dir, jitter=False)), GEOMETRY_STORE
+        ),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -669,80 +689,64 @@ def spatial_linestring_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _occupied_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT occupied (nation, cell) ids of the polygon store on the
-    1/16° lattice — the shared rasterize pass of `spatial_union_area`
-    (full provenance in that entry's docstring) and the dilation base of
-    `spatial_buffer_union_area`. ONE mapInPandas pass: per polygon the
-    WKB parses once, the center grid builds in numpy, and the vectorized
-    even-odd kernel keeps occupied integer cell ids only."""
-    import struct as _struct
+# The snap store's jittered shapes reach up to 15/64° ≈ 3.75 cells past the
+# lattice store's rasterize window, so its window grows by 4 cells.
+_SNAP_PAD = 4
 
-    import numpy as np
 
-    from ..functions.spatial import parse_wkb_polygons, points_in_polys
+def _occupied_runs(
+    spark: SparkSession, sf_dir: str, jitter: bool = False, tagged: bool = False
+) -> DataFrame:
+    """Scan-line RUNS (c_nationkey, iy, x0, x1) of a polygon store's
+    occupied 1/16° cells, from the one rasterize pass `_runs_from`. The
+    store is the cached lattice store `_geo_store`, or with ``jitter``
+    the snap store, built inline (only the two snap entries read it).
+    Runs from different polygons may overlap: consumers union them with
+    `merge_runs` or `boolean_runs` (no DISTINCT here by design).
 
-    store = _geo_store(spark, sf_dir)
-    k = F.col("c_custkey")
-    enriched = store.select(
-        F.col("c_nationkey").cast("long").alias("c_nationkey"),
-        "geom_wkb",
-        ((k % 40) * 24 - 2000).cast("long").alias("ix0"),
-        (F.lit(384) + (k % 16) * 20).cast("long").alias("iy0"),
-        (F.lit(16) + (k % 7) * 4).cast("int").alias("nx"),
-        (F.lit(16) + (k % 5) * 4).cast("int").alias("ny"),
+    ``tagged`` adds the boolean entries' ``layer`` column, c_custkey % 2
+    (1 = the odd-key L-shapes, layer A; 0 = the even-key donuts, B). The
+    layer rides the run key as 2·nation + parity through the same single
+    rasterize, so each polygon's WKB parses once; two filtered branches
+    would each rescan the store (measured ~1 s of the intersection
+    entry's wall at sf0.1)."""
+    if jitter:
+        store, pad = _shape_store(spark, sf_dir, jitter=True), _SNAP_PAD
+    else:
+        store, pad = _geo_store(spark, sf_dir), 0
+    if not tagged:
+        return _runs_from(store, pad)
+    nk = F.col("c_nationkey")
+    runs = _runs_from(
+        store.withColumn("c_nationkey", nk.cast("long") * 2 + F.col("c_custkey") % 2),
+        pad,
+    )
+    return runs.select(
+        F.floor(nk / 2).alias("c_nationkey"),
+        (nk % 2).cast("int").alias("layer"),
+        "iy",
+        "x0",
+        "x1",
     )
 
-    def rasterize(batches):
-        for pdf in batches:
-            nks, ixs, iys = [], [], []
-            for nk, wkb, ix0, iy0, nx, ny in zip(
-                pdf["c_nationkey"], pdf["geom_wkb"], pdf["ix0"], pdf["iy0"],
-                pdf["nx"], pdf["ny"],
-            ):
-                if wkb is None:
-                    continue
-                try:
-                    polys = parse_wkb_polygons(bytes(wkb))
-                except (ValueError, _struct.error):
-                    continue
-                ix0, iy0, nx, ny = int(ix0), int(iy0), int(nx), int(ny)
-                gi = ix0 + np.arange(nx, dtype=np.int64)
-                gj = iy0 + np.arange(ny, dtype=np.int64)
-                # same dyadic-exact center formula as the oracle:
-                # (integer cell id) · 2⁻⁴ + 2⁻⁵ — every step exact
-                gx = gi.astype(np.float64) * 0.0625 + 0.03125
-                gy = gj.astype(np.float64) * 0.0625 + 0.03125
-                ii, jj = np.meshgrid(gi, gj)
-                cx, cy = np.meshgrid(gx, gy)
-                mask = points_in_polys(polys, cx.ravel(), cy.ravel())
-                nks.append(np.full(int(mask.sum()), nk, dtype=np.int64))
-                ixs.append(ii.ravel()[mask])
-                iys.append(jj.ravel()[mask])
-            if nks:
-                yield pd.DataFrame(
-                    {
-                        "c_nationkey": np.concatenate(nks),
-                        "ix": np.concatenate(ixs),
-                        "iy": np.concatenate(iys),
-                    }
-                )
 
-    return enriched.mapInPandas(
-        rasterize, "c_nationkey long, ix long, iy long"
-    ).distinct()
+def _runs_from(store: DataFrame, pad: int) -> DataFrame:
+    """The rasterize pass: one mapInPandas over a polygon store
+    (c_custkey, c_nationkey, geom_wkb) emitting each polygon's occupied
+    cells as scan-line runs (c_nationkey, iy, x0, x1), x1 inclusive. Per
+    polygon the WKB parses once, the cell-centre grid builds in numpy,
+    the vectorized even-odd kernel of `spatial_points_in_polygons` keeps
+    the centres inside (donut holes excluded by parity, not
+    special-casing), and one diff over the mask finds each scan line's
+    runs. Rows ∝ polygon boundary length, not covered area.
 
-
-def _store_enriched(store: DataFrame, pad: int = 0) -> DataFrame:
-    """Attach the rasterize window (ix0, iy0, nx, ny) to a polygon store
-    frame. The window is derived from the store's key-modulo lattice
-    placement; `pad` widens it by that many cells on the +x/+y sides
-    (the snap entry's jittered polygons extend up to 15/64° ≈ 3.75
-    cells past the lattice origin, so it passes pad=4 — the rasterize
-    only keeps centers the ray cast proves inside, a too-wide window
-    costs a few extra point tests, never correctness)."""
+    The window (ix0, iy0, nx, ny) is the store's key-modulo lattice
+    placement; ``pad`` widens it by that many cells on the +x/+y sides
+    (0 on the lattice store; `_SNAP_PAD` on the jittered one). Only
+    centres the ray cast proves inside are kept, so a too-wide window
+    costs point tests, never correctness."""
     k = F.col("c_custkey")
-    return store.select(
+    enriched = store.select(
         F.col("c_nationkey").cast("long").alias("c_nationkey"),
         "geom_wkb",
         ((k % 40) * 24 - 2000).cast("long").alias("ix0"),
@@ -750,31 +754,6 @@ def _store_enriched(store: DataFrame, pad: int = 0) -> DataFrame:
         (F.lit(16 + pad) + (k % 7) * 4).cast("int").alias("nx"),
         (F.lit(16 + pad) + (k % 5) * 4).cast("int").alias("ny"),
     )
-
-
-def _occupied_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan-line RUNS (nation, iy, x0, x1) of the polygon store's occupied
-    cells — the boundary-proportional form of `_occupied_cells`: the same
-    one-parse-per-polygon rasterize, but each scan line emits its
-    contiguous runs (found with one vectorized diff over the mask) instead
-    of one row per cell. Rows ∝ polygon boundary length, not covered
-    area — ~8× fewer at this store's shapes, and the gap widens with
-    polygon size. Runs from different polygons may overlap: consumers
-    union them with interval merging (no DISTINCT here by design)."""
-    return _runs_from(_store_enriched(_geo_store(spark, sf_dir)))
-
-
-def _runs_from(enriched: DataFrame) -> DataFrame:
-    """The rasterize-to-runs mapInPandas pass over an enriched store
-    frame (c_nationkey, geom_wkb, ix0, iy0, nx, ny) — shared by
-    `_occupied_runs` (the cached lattice store) and the boolean/snap
-    entries (filtered or jittered store variants). Identical plan for
-    existing consumers: `_occupied_runs` composes this unchanged."""
-    import struct as _struct
-
-    import numpy as np
-
-    from ..functions.spatial import parse_wkb_polygons, points_in_polys
 
     def rasterize_runs(batches):
         for pdf in batches:
@@ -787,9 +766,11 @@ def _runs_from(enriched: DataFrame) -> DataFrame:
                     continue
                 try:
                     polys = parse_wkb_polygons(bytes(wkb))
-                except (ValueError, _struct.error):
+                except (ValueError, struct.error):
                     continue
                 ix0, iy0, nx, ny = int(ix0), int(iy0), int(nx), int(ny)
+                # same dyadic-exact centre formula as the oracles:
+                # (integer cell id) · 2⁻⁴ + 2⁻⁵ — every step exact
                 gx = (ix0 + np.arange(nx, dtype=np.int64)).astype(
                     np.float64
                 ) * 0.0625 + 0.03125
@@ -824,6 +805,22 @@ def _runs_from(enriched: DataFrame) -> DataFrame:
 
     return enriched.mapInPandas(
         rasterize_runs, "c_nationkey long, iy long, x0 long, x1 long"
+    )
+
+
+def _area_result(runs: DataFrame, nation: DataFrame, area_alias: str) -> DataFrame:
+    """The area tail: per nation name, the covered cell count
+    Σ(x1 − x0 + 1) over MAXIMAL runs (no two overlap, so the sum counts
+    each cell once) and its area, count × 2⁻⁸ — one exact dyadic
+    multiply of an exact integer."""
+    n_cells = F.sum(F.col("x1") - F.col("x0") + 1)
+    return (
+        runs.join(F.broadcast(nation), runs["c_nationkey"] == nation["n_nationkey"])
+        .groupBy("n_name")
+        .agg(
+            n_cells.cast("long").alias("n_cells"),
+            (n_cells.cast("double") * F.lit(0.00390625)).alias(area_alias),
+        )
     )
 
 
@@ -869,48 +866,32 @@ def spatial_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     a sweep-line union; the Spark-first equivalent for lattice-aligned
     geometries is exact cell decomposition: every polygon edge in the
     store lies on the 1/16° lattice, so a polygon is exactly a set of
-    1/16°×1/16° cells, union = DISTINCT occupied cells, and area =
+    1/16°×1/16° cells, union = the set union of those cells, and area =
     cell count × 2⁻⁸. That turns a geometry problem into the engine's
-    bread and butter — rasterize + distinct + count, fully distributed,
-    no geometry ever compared against another geometry.
+    bread and butter, with no geometry ever compared against another.
 
-    Rasterization is ONE `mapInPandas` pass over the polygon store: per
-    polygon the WKB is parsed ONCE, the full center grid is built in
-    numpy, and every center is ray-cast by the same vectorized even-odd
-    kernel as `spatial_points_in_polygons` (donut holes excluded by
-    even-odd parity, not by special-casing); only the OCCUPIED integer
-    cell ids are emitted. The first cut of this entry exploded a row per
-    cell and filtered with the scalar-UDF form — correct, but it pushed
-    the polygon's WKB through Arrow once PER CELL (≈800× amplification),
-    which dominated at scale (SCALING run 11: 45 s → ~15 s at the 20×
-    point for the mapInPandas form; what remains is the DISTINCT shuffle
-    of ~180 M occupied-cell rows — the union's real cost, partial-
-    combined and key-parallel). The oracle instead decides
-    membership from the closed-form shape predicates; the two agree on
-    EVERY cell because centers sit on odd 1/32° multiples and every edge
-    on even 1/32° multiples (the same data-independent lattice-
-    disjointness argument tests/test_geo_analytics.py enumerates for the
-    points entry): no decision is ever within 1/32° of a boundary. Cell
-    ids stay INTEGER end-to-end (ix = x/2⁻⁴ is integral by
-    construction), so the distinct key is exact, and the final area is
-    count × 2⁻⁸ — one exact dyadic multiply. At 100 TB: emitted rows are
-    bounded by covered-area/cell-area, the distinct and the count both
-    key on (nation, cell) — partial-combined, skew-bounded by the
-    densest nation; finer lattices trade row count for resolution
-    exactly like raster zonal statistics (which is what this IS).
+    Plan: the raster-run pipeline of operators/dissolve.py. The one
+    rasterize pass (`_occupied_runs`) emits per-scan-line runs; rows ∝
+    polygon boundary, not covered area (a cell-row form pushed ~180 M
+    occupied-cell rows through a DISTINCT shuffle at the 20× point,
+    SCALING run 11). `merge_runs` unions overlapping runs per
+    (nation, scan line), and the covered cell count is Σ(x1 − x0 + 1)
+    over the maximal runs. The oracle instead decides membership from
+    the closed-form shape predicates and counts DISTINCT cells; the two
+    agree on EVERY cell because centers sit on odd 1/32° multiples and
+    every edge on even 1/32° multiples (the same data-independent
+    lattice-disjointness argument tests/test_geo_analytics.py enumerates
+    for the points entry): no decision is ever within 1/32° of a
+    boundary. Cell ids stay INTEGER end-to-end, so the merge is exact,
+    and the final area is count × 2⁻⁸ — one exact dyadic multiply. At
+    100 TB: rows are boundary-proportional at every stage, the merge
+    keys on (nation, scan line) — thousands of partitionable keys,
+    skew-bounded by the longest scan line; finer lattices trade row count
+    for resolution exactly like raster zonal statistics (which is what
+    this IS).
     """
-    occ = _occupied_cells(spark, sf_dir)
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        occ.join(nation, occ["c_nationkey"] == nation["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            (F.count(F.lit(1)).cast("double") * F.lit(0.00390625)).alias(
-                "union_area"
-            ),
-        )
-    )
+    runs = merge_runs(_occupied_runs(spark, sf_dir))
+    return _area_result(runs, load_table(spark, sf_dir, "nation"), "union_area")
 
 
 @query(
@@ -973,79 +954,25 @@ def spatial_buffer_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     `spatial_union_area` covers the rasterize; the dilation is pure
     int64 arithmetic).
 
-    Plan — SCAN-LINE RUNS end-to-end, never a cell row (two naive forms
-    were measured and rejected this round: explode(±R)+DISTINCT twice
-    moved 9·+81· the occupied-cell count through hash shuffles — 16-24 s
-    at sf0.1, the round's own scale-killer find — and cell-rows into the
-    first interval merge still windowed over covered-AREA rows, ~8 s):
+    Plan — SCAN-LINE RUNS end-to-end, never a cell row (explode(±R) +
+    DISTINCT twice over cells moves 9·+81· the occupied-cell count
+    through hash shuffles — 16-24 s at sf0.1):
 
     1. `_occupied_runs` rasterizes straight to per-scan-line runs
        (nation, iy, x0, x1) — rows ∝ polygon BOUNDARY length, not area;
        overlapping polygons just emit overlapping runs (no DISTINCT);
-    2. x-dilation is free on runs ([x0−R, x1+R]); one interval merge per
-       (nation, iy) — the running-max island break of
-       `interval_union_seconds` on integer cells — unions them;
-    3. y-dilation: explode each merged segment over dy ∈ [−R, R] (9×
-       SEGMENTS — the square element's separability applied to runs);
-    4. merge once more and sum exact integer lengths —
-       Σ(x1 − x0 + 1) of the merged runs IS the dilated cell count.
+    2. `dilate_runs` dilates the runs (x on the run ends, one merge,
+       y as a ±R explode of the merged SEGMENTS — the square element's
+       separability — one more merge), returning maximal runs;
+    3. the area tail sums exact integer lengths — Σ(x1 − x0 + 1) of the
+       maximal runs IS the dilated cell count.
 
     Both merge passes are one window + one aggregate on the (nation, iy)
     key — partial-combined, skew-bounded by the longest scan line; at
     100 TB the shuffled bytes are boundary-proportional at EVERY stage,
     which is the whole point of run-length morphology."""
-    runs = _occupied_runs(spark, sf_dir)
-    nation = load_table(spark, sf_dir, "nation")
-    R = 4
-
-    def merge_lengths(iv: DataFrame) -> DataFrame:
-        """Merge [x0, x1] intervals per (nation, iy); emit per-island
-        segments (nation, iy, x0, x1) of the union."""
-        w = (
-            Window.partitionBy("c_nationkey", "iy")
-            .orderBy("x0", "x1")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        wi = Window.partitionBy("c_nationkey", "iy").orderBy("x0", "x1")
-        marked = iv.withColumn(
-            "new_island",
-            F.when(
-                F.col("x0") > F.max("x1").over(w) + 1, F.lit(1)
-            ).otherwise(F.lit(0)),
-        ).withColumn("island", F.sum("new_island").over(wi))
-        return marked.groupBy("c_nationkey", "iy", "island").agg(
-            F.min("x0").alias("x0"), F.max("x1").alias("x1")
-        )
-
-    iv0 = runs.select(
-        "c_nationkey",
-        "iy",
-        (F.col("x0") - R).alias("x0"),
-        (F.col("x1") + R).alias("x1"),
-    )
-    segs_x = merge_lengths(iv0)
-    segs_xy = segs_x.select(
-        "c_nationkey",
-        F.explode(F.sequence(F.col("iy") - R, F.col("iy") + R)).alias("iy"),
-        "x0",
-        "x1",
-    )
-    merged = merge_lengths(segs_xy)
-    per_nation = merged.groupBy("c_nationkey").agg(
-        F.sum(F.col("x1") - F.col("x0") + 1).alias("n_cells")
-    )
-    return (
-        per_nation.join(
-            nation, per_nation["c_nationkey"] == nation["n_nationkey"]
-        )
-        .groupBy("n_name")
-        .agg(
-            F.sum("n_cells").cast("long").alias("n_cells"),
-            (F.sum("n_cells").cast("double") * F.lit(0.00390625)).alias(
-                "buffer_area"
-            ),
-        )
-    )
+    runs = dilate_runs(_occupied_runs(spark, sf_dir))
+    return _area_result(runs, load_table(spark, sf_dir, "nation"), "buffer_area")
 
 
 @query(
@@ -1114,37 +1041,8 @@ def spatial_buffer_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: identical stage structure to the buffer-area entry (boundary-
     proportional bytes at every merge) plus the dissolve-key Exchange;
     the 100 TB notes of both parents apply unchanged."""
-    from ..operators.dissolve import merge_runs, union_rings_by_key
-
-    R = 4
-    runs = _occupied_runs(spark, sf_dir)
-    iv0 = runs.select(
-        "c_nationkey",
-        "iy",
-        (F.col("x0") - R).alias("x0"),
-        (F.col("x1") + R).alias("x1"),
-    )
-    segs_x = merge_runs(iv0, key="c_nationkey")
-    segs_xy = segs_x.select(
-        "c_nationkey",
-        F.explode(F.sequence(F.col("iy") - R, F.col("iy") + R)).alias("iy"),
-        "x0",
-        "x1",
-    )
-    merged = merge_runs(segs_xy, key="c_nationkey")
-    geo = union_rings_by_key(merged, key="c_nationkey", cell=0.0625)
-    nation = load_table(spark, sf_dir, "nation")
-    return geo.join(
-        F.broadcast(nation), geo["c_nationkey"] == nation["n_nationkey"]
-    ).select(
-        "n_name",
-        F.col("n_cells").cast("long").alias("n_cells"),
-        (F.col("n_cells").cast("double") * F.lit(0.00390625)).alias("buffer_area"),
-        (F.col("min_vx").cast("double") * F.lit(0.0625)).alias("x_min"),
-        (F.col("min_vy").cast("double") * F.lit(0.0625)).alias("y_min"),
-        (F.col("max_vx").cast("double") * F.lit(0.0625)).alias("x_max"),
-        (F.col("max_vy").cast("double") * F.lit(0.0625)).alias("y_max"),
-    )
+    runs = dilate_runs(_occupied_runs(spark, sf_dir))
+    return _rings_result(runs, load_table(spark, sf_dir, "nation"), "buffer_area")
 
 
 @query(
@@ -1218,22 +1116,8 @@ def spatial_union_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose single output geometry exceeds task memory needs hierarchical
     tile-dissolve + seam stitching — the documented floor, since the
     output geometry itself is the irreducible size."""
-    from ..operators.dissolve import merge_runs, union_rings_by_key
-
-    runs = merge_runs(_occupied_runs(spark, sf_dir), key="c_nationkey")
-    geo = union_rings_by_key(runs, key="c_nationkey", cell=0.0625)
-    nation = load_table(spark, sf_dir, "nation")
-    return geo.join(
-        F.broadcast(nation), geo["c_nationkey"] == nation["n_nationkey"]
-    ).select(
-        "n_name",
-        F.col("n_cells").cast("long").alias("n_cells"),
-        (F.col("n_cells").cast("double") * F.lit(0.00390625)).alias("union_area"),
-        (F.col("min_vx").cast("double") * F.lit(0.0625)).alias("x_min"),
-        (F.col("min_vy").cast("double") * F.lit(0.0625)).alias("y_min"),
-        (F.col("max_vx").cast("double") * F.lit(0.0625)).alias("x_max"),
-        (F.col("max_vy").cast("double") * F.lit(0.0625)).alias("y_max"),
-    )
+    runs = merge_runs(_occupied_runs(spark, sf_dir))
+    return _rings_result(runs, load_table(spark, sf_dir, "nation"), "union_area")
 
 
 
@@ -1241,50 +1125,6 @@ def spatial_union_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ST_Union on GENERAL (non-lattice) polygons: grid-snap at a declared
 # tolerance; ST_Intersection / ST_Difference geometry (boolean sweep)
 # --------------------------------------------------------------------------
-
-
-def _parity_runs(spark: SparkSession, sf_dir: str, parity: int) -> DataFrame:
-    """Scan-line runs of one parity half of the polygon store (odd keys =
-    L-shapes, even keys = donuts) — the two input LAYERS of the boolean
-    entries, rasterized by the same shared `_runs_from` pass."""
-    store = _geo_store(spark, sf_dir).where(F.col("c_custkey") % 2 == parity)
-    return _runs_from(_store_enriched(store))
-
-
-def _tagged_parity_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both parity layers in ONE rasterize pass: the layer tag is encoded
-    into the run key (2·nation + parity) before the shared rasterize, so
-    the store's WKB parses once per polygon total — two `_parity_runs`
-    branches would each rescan the store (Spark computes plan branches
-    independently; measured ~1 s of the intersection entry's wall at
-    sf0.1). Output: per-layer RAW (unmerged) runs with the layer decoded
-    back out, ready for `boolean_runs_tagged` — the sweep's coverage
-    counters are additive, so overlapping runs need no pre-merge
-    (`boolean_runs` docstring step 2), and the post-sweep `merge_runs`
-    restores maximal segments; the pre-merge here was a redundant
-    (key, iy) exchange + two windows (r15 optimization, guide §2.4 —
-    measured 1.41 → 0.82 s for this subtree at sf0.1)."""
-    raw = _runs_from(_store_enriched(
-        _geo_store(spark, sf_dir).withColumn(
-            "c_nationkey",
-            F.col("c_nationkey").cast("long") * 2 + F.col("c_custkey") % 2,
-        )
-    ))
-    return raw.select(
-        (F.col("c_nationkey") - F.col("c_nationkey") % 2)
-        .cast("long")
-        .alias("ck2"),
-        (F.col("c_nationkey") % 2).cast("int").alias("layer"),
-        "iy",
-        "x0",
-        "x1",
-    ).select(
-        (F.col("ck2") / 2).cast("long").alias("c_nationkey"),
-        "layer",
-        "iy",
-        "x0",
-        "x1",
-    )
 
 
 _RINGS_TAIL_SQL = """
@@ -1300,11 +1140,13 @@ _RINGS_TAIL_SQL = """
 """
 
 
-def _rings_result(geo: DataFrame, nation: DataFrame, area_alias: str) -> DataFrame:
-    """Shared scorecard projection of a `union_rings_by_key` output: the
-    graded columns all derive from the RECONSTRUCTED rings (shoelace cell
-    count, vertex extent) — the same proof contract as
+def _rings_result(runs: DataFrame, nation: DataFrame, area_alias: str) -> DataFrame:
+    """The rings tail: each nation's dissolved MULTIPOLYGON from its
+    MAXIMAL runs (`union_rings_by_key`) and the scorecard the oracle
+    grades. Every graded column derives from the RECONSTRUCTED rings
+    (shoelace cell count, vertex extent) — the proof contract of
     `spatial_union_rings`."""
+    geo = union_rings_by_key(runs)
     return geo.join(
         F.broadcast(nation), geo["c_nationkey"] == nation["n_nationkey"]
     ).select(
@@ -1316,6 +1158,20 @@ def _rings_result(geo: DataFrame, nation: DataFrame, area_alias: str) -> DataFra
         (F.col("max_vx").cast("double") * F.lit(0.0625)).alias("x_max"),
         (F.col("max_vy").cast("double") * F.lit(0.0625)).alias("y_max"),
     )
+
+
+def _boolean_rings(
+    spark: SparkSession,
+    sf_dir: str,
+    mode: str,
+    area_alias: str,
+    jitter: bool = False,
+) -> DataFrame:
+    """The four boolean entries: the rings of `boolean_runs` ``mode``
+    over the two parity layers of the lattice store, or with ``jitter``
+    of the snap store."""
+    runs = boolean_runs(_occupied_runs(spark, sf_dir, jitter, tagged=True), mode)
+    return _rings_result(runs, load_table(spark, sf_dir, "nation"), area_alias)
 
 
 _BOOL_OCC_SQL = f"""
@@ -1376,23 +1232,11 @@ def spatial_intersection_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     cA>0 ∧ cB>0. The sweep is one aggregate + one (key, iy) window, so
     it parallelizes over scan lines exactly like `merge_runs` — the
     dissolve-key Exchange still sees only the RESULT's runs. Both layers
-    come from ONE rasterize pass (`_tagged_parity_runs` — the layer tag
-    rides the run key, so the store's WKB parses once per polygon; two
-    plan branches would each rescan the store). Nations whose
-    intersection is empty emit no row on either engine."""
-    from ..operators.dissolve import (
-        boolean_runs_tagged,
-        merge_runs,
-        union_rings_by_key,
-    )
-
-    runs = merge_runs(
-        boolean_runs_tagged(_tagged_parity_runs(spark, sf_dir), "intersection"),
-        pre_partitioned=True,
-    )
-    geo = union_rings_by_key(runs, key="c_nationkey", cell=0.0625)
-    nation = load_table(spark, sf_dir, "nation")
-    return _rings_result(geo, nation, "inter_area")
+    come from ONE rasterize pass (`_occupied_runs(..., tagged=True)` —
+    the layer tag rides the run key, so the store's WKB parses once per
+    polygon). Nations whose intersection is empty emit no row on either
+    engine."""
+    return _boolean_rings(spark, sf_dir, "intersection", "inter_area")
 
 
 @query(
@@ -1415,19 +1259,7 @@ def spatial_difference_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     L-shape punches a NEW hole (plus its island where the donut's own
     hole re-exposes A), so this entry exercises the hole-assignment and
     figure-eight-repair paths on shapes the union never produces."""
-    from ..operators.dissolve import (
-        boolean_runs_tagged,
-        merge_runs,
-        union_rings_by_key,
-    )
-
-    runs = merge_runs(
-        boolean_runs_tagged(_tagged_parity_runs(spark, sf_dir), "difference"),
-        pre_partitioned=True,
-    )
-    geo = union_rings_by_key(runs, key="c_nationkey", cell=0.0625)
-    nation = load_table(spark, sf_dir, "nation")
-    return _rings_result(geo, nation, "diff_area")
+    return _boolean_rings(spark, sf_dir, "difference", "diff_area")
 
 
 @query(
@@ -1451,19 +1283,7 @@ def spatial_symdiff_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY cell HAVING COUNT(DISTINCT par) = 1, vs the INTERSECT / EXCEPT set
     ops of the siblings — so the three entries triangulate the sweep
     against independent SQL semantics. Same single tagged rasterize."""
-    from ..operators.dissolve import (
-        boolean_runs_tagged,
-        merge_runs,
-        union_rings_by_key,
-    )
-
-    runs = merge_runs(
-        boolean_runs_tagged(_tagged_parity_runs(spark, sf_dir), "symdiff"),
-        pre_partitioned=True,
-    )
-    geo = union_rings_by_key(runs, key="c_nationkey", cell=0.0625)
-    nation = load_table(spark, sf_dir, "nation")
-    return _rings_result(geo, nation, "symdiff_area")
+    return _boolean_rings(spark, sf_dir, "symdiff", "symdiff_area")
 
 
 @query(
@@ -1539,48 +1359,14 @@ def spatial_union_snap_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: identical to `spatial_union_rings` (rasterize → engine
     pre-merge → ONE dissolve-key Exchange → 25-row broadcast) except the
-    jittered store builds inline (no cache — single consumer), spread by
-    `session.spread` before the WKB UDF so the encode and the rasterize
-    parallelize. At 100 TB the snap tolerance is the declared
-    contract: finer lattices trade rasterize rows for fidelity; the
-    runs stay boundary-proportional at any cell size."""
-    from ..operators.dissolve import merge_runs, union_rings_by_key
-
-    c = load_table(spark, sf_dir, "customer")
-    k = F.col("c_custkey")
-    x0 = (
-        F.lit(-125.0)
-        + (k % 40).cast("double") * 1.5
-        + (F.lit(1.0) + (k % 8).cast("double") * 2.0) * F.lit(0.015625)
-    )
-    y0 = (
-        F.lit(24.0)
-        + (k % 16).cast("double") * 1.25
-        + (F.lit(3.0) + (k % 7).cast("double") * 2.0) * F.lit(0.015625)
-    )
-    w = F.lit(1.0) + (k % 7).cast("double") * 0.25
-    h = F.lit(1.0) + (k % 5).cast("double") * 0.25
-    params = spread(
-        c.select(
-            "c_custkey",
-            "c_nationkey",
-            x0.alias("x0"),
-            y0.alias("y0"),
-            w.alias("w"),
-            h.alias("h"),
-        )
-    )
-    wkb = params.select(
-        "c_custkey",
-        "c_nationkey",
-        make_shape_wkb_udf()(
-            F.col("c_custkey"), F.col("x0"), F.col("y0"), F.col("w"), F.col("h")
-        ).alias("geom_wkb"),
-    )
-    runs = merge_runs(_runs_from(_store_enriched(wkb, pad=4)))
-    geo = union_rings_by_key(runs, key="c_nationkey", cell=0.0625)
-    nation = load_table(spark, sf_dir, "nation")
-    return _rings_result(geo, nation, "union_area")
+    jittered store builds inline (`_shape_store`, no cache — only the two
+    snap entries read it), spread by `session.spread` before the WKB UDF
+    so the encode and the rasterize parallelize. At 100 TB the snap
+    tolerance is the declared contract: finer lattices trade rasterize
+    rows for fidelity; the runs stay boundary-proportional at any cell
+    size."""
+    runs = merge_runs(_occupied_runs(spark, sf_dir, jitter=True))
+    return _rings_result(runs, load_table(spark, sf_dir, "nation"), "union_area")
 
 
 # --------------------------------------------------------------------------
@@ -1796,57 +1582,6 @@ _SNAP_PAR_OCC_SQL = """
 """
 
 
-def _snap_tagged_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The jittered NON-lattice store of `spatial_union_snap_rings`, but
-    rasterized ONCE with the parity layer encoded into the run key
-    (2·nation + custkey%2) — the `_tagged_parity_runs` lever applied at
-    the snap seam, so the general-polygon boolean entries parse each
-    polygon's WKB exactly once."""
-    from ..operators.dissolve import merge_runs
-
-    c = load_table(spark, sf_dir, "customer")
-    k = F.col("c_custkey")
-    x0 = (
-        F.lit(-125.0)
-        + (k % 40).cast("double") * 1.5
-        + (F.lit(1.0) + (k % 8).cast("double") * 2.0) * F.lit(0.015625)
-    )
-    y0 = (
-        F.lit(24.0)
-        + (k % 16).cast("double") * 1.25
-        + (F.lit(3.0) + (k % 7).cast("double") * 2.0) * F.lit(0.015625)
-    )
-    w = F.lit(1.0) + (k % 7).cast("double") * 0.25
-    h = F.lit(1.0) + (k % 5).cast("double") * 0.25
-    params = spread(
-        c.select(
-            "c_custkey",
-            "c_nationkey",
-            x0.alias("x0"),
-            y0.alias("y0"),
-            w.alias("w"),
-            h.alias("h"),
-        )
-    )
-    wkb = params.select(
-        "c_custkey",
-        (F.col("c_nationkey").cast("long") * 2 + (k % 2)).alias("c_nationkey"),
-        make_shape_wkb_udf()(
-            F.col("c_custkey"), F.col("x0"), F.col("y0"), F.col("w"), F.col("h")
-        ).alias("geom_wkb"),
-    )
-    merged = merge_runs(_runs_from(_store_enriched(wkb, pad=4)))
-    return merged.select(
-        ((F.col("c_nationkey") - F.col("c_nationkey") % 2) / 2)
-        .cast("long")
-        .alias("c_nationkey"),
-        (F.col("c_nationkey") % 2).cast("int").alias("layer"),
-        "iy",
-        "x0",
-        "x1",
-    )
-
-
 @query(
     "spatial_intersection_snap_rings",
     _SNAP_PAR_OCC_SQL
@@ -1870,7 +1605,7 @@ def spatial_intersection_snap_rings(spark: SparkSession, sf_dir: str) -> DataFra
     disjointness proof carries over verbatim), split into parity layers
     (odd keys = A, even = B) and rasterized ONCE with the layer tag
     encoded in the run key; the two-counter boundary sweep
-    (`boolean_runs_tagged`) and leftmost-turn ring reconstruction are the
+    (`boolean_runs`) and leftmost-turn ring reconstruction are the
     lattice entries' operators UNCHANGED — the snap front composes, it
     does not fork the geometry stack.
 
@@ -1882,31 +1617,7 @@ def spatial_intersection_snap_rings(spark: SparkSession, sf_dir: str) -> DataFra
     parallelizes over (key, scan-line); ONE dissolve-key Exchange carries
     only the result's runs) plus the inline jittered store build, the
     honest uncached cost of general-polygon input."""
-    from ..operators.dissolve import boolean_runs_tagged, union_rings_by_key
-
-    # No merge_runs pass here, deliberately (ADVICE r12): boolean_runs'
-    # "expects maximal runs" precondition applies to its INPUT layers
-    # (satisfied — _snap_tagged_runs rasterizes each pre-merged parity
-    # layer, so per (key, iy, layer) coverage is 0/1 and input runs are
-    # maximal), and its OUTPUT is provably maximal for INTERSECTION over
-    # 0/1 layers: every sweep event flips exactly one layer's counter
-    # between 0 and 1, so two emitted segments could abut only at an
-    # event where (a∧b) held on BOTH sides — impossible, since the
-    # flipped counter is 1 on one side and 0 on the other. This proof
-    # extends to difference (a∧¬b) and symdiff (a⊕b) — flipping either
-    # counter flips those predicates wherever they were true — but NOT
-    # to union over tagged layers (a∨b survives an event that flips one
-    # counter while the other is 1) and NOT to unmerged (>1-coverage)
-    # input, where an event can move a counter 1→2. The lattice boolean
-    # siblings keep a merge_runs wrap anyway (belt-and-braces on a
-    # result-sized input).
-    geo = union_rings_by_key(
-        boolean_runs_tagged(_snap_tagged_runs(spark, sf_dir), "intersection"),
-        key="c_nationkey",
-        cell=0.0625,
-    )
-    nation = load_table(spark, sf_dir, "nation")
-    return _rings_result(geo, nation, "inter_area")
+    return _boolean_rings(spark, sf_dir, "intersection", "inter_area", jitter=True)
 
 
 # ---------------------------------------------------------------------------

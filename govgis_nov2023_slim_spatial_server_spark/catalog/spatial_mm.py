@@ -689,15 +689,33 @@ def spatial_nn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual crossJoin) is gone: points stream through map-only, the
     position table ships once per executor — the same broadcast-dim
     size class as before."""
+    kout = _ring_knn(spark, sf_dir, 1)
+    return kout.where(F.col("d0") >= 0).select(
+        "p_partkey",
+        F.col("k0").alias("nearest_custkey"),
+        F.col("d0").alias("dsq"),
+        (F.sqrt(F.col("d0").cast("double")) / 8.0).alias("dist_deg"),
+    )
+
+
+def _ring_knn(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The ring-kNN reduction both ring entries share: per part point,
+    its exact bottom-``k`` (dsq, custkey) pairs over the facilities as
+    flat columns (p_partkey, d0, k0, …, d{k-1}, k{k-1}), -1 where fewer
+    than ``k`` facilities exist. One `_ring_bottomk_map` mapInPandas
+    pass over the point side, closing over the driver-collected facility
+    position table."""
     ck = F.col("c_custkey")
-    # Position-dedup is a LOSSLESS pre-aggregation for argmin semantics:
-    # co-located facilities all tie on dsq, so keeping the min custkey per
-    # position preserves the global (dsq, custkey) tie-break exactly (the
-    # global min over keys equals the min over per-position minima). The
-    # key lattice has <= lcm(50,7,20,5) = 700 distinct positions, so this
-    # bounds BOTH the broadcast ring table and the per-point candidate
-    # count by the position vocabulary, not the facility row count — the
-    # same pre-merge lever as dissolve's merge_runs.
+    # Per-position bottom-k custkeys kept AS AN ARRAY: a LOSSLESS
+    # pre-aggregation for top-k by (dsq, custkey). Co-located facilities
+    # all tie on dsq, so the global top-k holds at most k keys of any one
+    # position, and the tie-break forces them to be that position's k
+    # smallest custkeys (k = 1: the per-position min custkey). The key
+    # lattice has <= lcm(50,7,20,5) = 700 distinct positions, so this
+    # bounds the position table and the kernel's candidate columns by
+    # k × the position vocabulary, not the facility row count — the same
+    # pre-merge lever as dissolve's merge_runs (SCALING run 17's
+    # co-located-replica argument).
     f = (
         _t(spark, sf_dir, "customer")
         .where(ck % 10 == 1)
@@ -707,28 +725,30 @@ def spatial_nn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((ck % 20) * 8 + (ck % 5)).cast("long").alias("fy"),
         )
         .groupBy("fx", "fy")
-        .agg(F.min("c_custkey").alias("c_custkey"))
+        .agg(
+            F.slice(F.array_sort(F.collect_list("c_custkey")), 1, k).alias(
+                "keys"
+            )
+        )
     )
     pk = F.col("p_partkey")
-    # spread (r15 optimization, guide §2.5): keeps the kernel pass
-    # parallel over the single-file part scan. No-op at scale where the
-    # point table carries many splits.
+    # spread (guide §2.5): keeps the kernel pass parallel over the
+    # single-file part scan. No-op at scale where the point table carries
+    # many splits.
     p = spread(_t(spark, sf_dir, "part")).select(
         "p_partkey",
         ((pk * 13) % 401).cast("long").alias("px"),
         ((pk * 29) % 161).cast("long").alias("py"),
     )
-    # r16: the shared two-tier kernel with k = 1 (see the k = 5 sibling
-    # and _ring_bottomk_map for the mechanism and measurements).
-    fac_pos = [(r["fx"], r["fy"], [r["c_custkey"]]) for r in f.collect()]
-    kern = _ring_bottomk_map(fac_pos, k=1, cell=32, guarantee=1088)
-    kout = p.mapInPandas(kern, "p_partkey long, d0 long, k0 long")
-    return kout.where(F.col("d0") >= 0).select(
-        "p_partkey",
-        F.col("k0").alias("nearest_custkey"),
-        F.col("d0").alias("dsq"),
-        (F.sqrt(F.col("d0").cast("double")) / 8.0).alias("dist_deg"),
-    )
+    # The WHOLE per-point reduction is ONE vectorized mapInPandas pass
+    # closing over the driver-collected position table (the same
+    # k-row-collect pattern as the IVF seeds; the table is the entry's
+    # broadcast-dim size class). Ring tier + full-scan tier: see
+    # _ring_bottomk_map.
+    fac_pos = [(r["fx"], r["fy"], list(r["keys"])) for r in f.collect()]
+    kern = _ring_bottomk_map(fac_pos, k=k, cell=32, guarantee=1088)
+    kcols = ", ".join(f"d{j} long, k{j} long" for j in range(k))
+    return p.mapInPandas(kern, f"p_partkey long, {kcols}")
 
 
 # Most facility keys `_ring_bottomk_map` may close over. The table is
@@ -963,58 +983,7 @@ def spatial_knn_join_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     facility dims that outgrow the closure —
     `operators.spatial_join.cell_bucketed_ring_join`, code since
     r14)."""
-    ck = F.col("c_custkey")
-    # per-position bottom-5 custkeys kept AS AN ARRAY (lossless for
-    # top-5 by (dsq, key)) — bounds the kernel's candidate columns by
-    # 5 × the position vocabulary (SCALING run 17's co-located-replica
-    # argument, unchanged).
-    f5 = (
-        _t(spark, sf_dir, "customer")
-        .where(ck % 10 == 1)
-        .select(
-            "c_custkey",
-            ((ck % 50) * 8 + (ck % 7)).cast("long").alias("fx"),
-            ((ck % 20) * 8 + (ck % 5)).cast("long").alias("fy"),
-        )
-        .groupBy("fx", "fy")
-        .agg(
-            F.slice(F.array_sort(F.collect_list("c_custkey")), 1, 5).alias(
-                "keys"
-            )
-        )
-    )
-    pk = F.col("p_partkey")
-    # same probe-side spread as the k=1 sibling (r15 optimization,
-    # guide §2.5): keeps the kernel pass parallel over the single-file
-    # part scan
-    p = spread(_t(spark, sf_dir, "part")).select(
-        "p_partkey",
-        ((pk * 13) % 401).cast("long").alias("px"),
-        ((pk * 29) % 161).cast("long").alias("py"),
-    )
-    # r16 (guide §4.1/§2.4): the WHOLE per-point reduction is ONE
-    # vectorized mapInPandas pass closing over the driver-collected
-    # position table (the same k-row-collect pattern as the IVF seeds —
-    # the table was already a broadcast relation, so its size class is
-    # unchanged). The former shape — broadcast 3×3-ring join fanning
-    # every point out to ~160 candidate rows, groupBy(p_partkey)
-    # re-collecting them through an exchange (~3.2M structs at sf0.1;
-    # p_partkey is unique — the rows were never apart) into interpreted
-    # array_sort k-lists, then a guarantee split whose residual
-    # crossJoin re-ranked 54% of sf0.1 points (the measured dominant
-    # cost) — is all inside the kernel now, ring tier + full-scan tier
-    # (see _ring_bottomk_map). Per-point result = the exact bottom-5
-    # (dsq, custkey) pairs: the direct form of what
-    # top-5-positions-then-flatten-then-re-sort recovered (the position
-    # top-5 provably CONTAINS the global 5 — keys are unique, so a
-    # holder position's min key precedes every non-holder under the
-    # (dsq, keys) sort — and bottom-5 over the full multiset needs no
-    # flatten-order repair at all: the r13 interleaving class cannot
-    # arise).
-    fac_pos = [(r["fx"], r["fy"], list(r["keys"])) for r in f5.collect()]
-    kern = _ring_bottomk_map(fac_pos, k=5, cell=32, guarantee=1088)
-    kcols = ", ".join(f"d{j} long, k{j} long" for j in range(5))
-    kout = p.mapInPandas(kern, f"p_partkey long, {kcols}")
+    kout = _ring_knn(spark, sf_dir, 5)
     # rebuild the bounded k-list from the kernel's flat columns (-1
     # sentinels = missing candidates with fewer facilities than k,
     # filtered out before the rank explode).

@@ -1,15 +1,27 @@
-"""Dissolved-union GEOMETRY reconstruction from scan-line runs.
+"""The raster-run pipeline: dissolve, buffer and boolean geometry from
+scan-line runs, and the dissolved union GEOMETRY reconstructed from them.
 
-`spatial_union_area` proved the union's AREA by exact lattice-cell
-decomposition; this module closes the remaining gap (r10 verdict,
-What's-missing #6) by emitting the union's actual rectilinear BOUNDARY —
-outer rings and holes — from the same merged scan-line runs, as WKB
-MULTIPOLYGON per group key. Reference parity: PostGIS ST_Union returns
-geometry (reference delegates to PostGIS; /root/reference/backend has no
-geometry engine of its own) — this is the Spark-first equivalent for
-lattice-aligned geometry.
+Every raster entry of catalog/geo_analytics.py runs the same stages: its
+store is rasterized once to per-scan-line runs (key, iy, x0, x1), x1
+inclusive, runs of different polygons free to overlap; then
 
-Algorithm (pure integer arithmetic end-to-end):
+* `merge_runs` unions them into maximal runs per (key, iy);
+* `dilate_runs` is the square buffer (x-dilate → merge → y-dilate →
+  merge);
+* `boolean_runs` is the two-layer sweep (intersection, difference,
+  union, symdiff). Its input runs may overlap; its OUTPUT is maximal —
+  no two runs of one (key, iy) overlap or abut — so it feeds the ring
+  reconstruction directly, with no merge of its own;
+
+and the tail is either a cell count, Σ(x1 − x0 + 1) over maximal runs,
+or `union_rings_by_key`, which emits the union's actual rectilinear
+BOUNDARY — outer rings and holes — as WKB MULTIPOLYGON per group key.
+Reference parity: PostGIS ST_Union / ST_Buffer / ST_Intersection /
+ST_Difference return geometry (the reference delegates to PostGIS and
+has no geometry engine of its own) — this is the Spark-first equivalent
+for lattice-aligned geometry.
+
+Ring reconstruction (pure integer arithmetic end-to-end):
 
 1. Runs (iy, x0, x1) are the row-decomposition of the union region.
    Boundary edges are derived per scan-line LEVEL: at level y, the
@@ -233,41 +245,39 @@ def runs_to_rings(
     return polys, n_cells, (min(vxs), min(vys), max(vxs), max(vys))
 
 
-def merge_runs(
-    iv: DataFrame, key: str = "c_nationkey", pre_partitioned: bool = False
-) -> DataFrame:
-    """Union overlapping [x0, x1] runs per (key, iy) in-engine — the
-    running-max island break of `interval_union_seconds` on integer
-    cells (same mechanism as the buffer entry's merge_lengths). This is
-    the pre-merge the dissolve needs at scale: overlapping polygons emit
-    overlapping runs, and merging on the (key, iy) axis — thousands of
-    partitionable keys — means the dissolve-key Exchange (25 reducers)
-    and the per-group Python chaining both see only the UNION's runs,
-    not every polygon's. Measured at the 20× rehearsal: 9 M raw runs
-    merge to a fraction engine-side and the entry wall drops (SCALING.md
-    run 13).
+# The buffer entries' square reach: 4 cells = 0.25° on the 1/16° lattice.
+DILATE_R = 4
 
-    The (key, iy) shuffle is pinned to ≥ 2× cluster parallelism (r15
-    optimization, guide §2.5): the runs frame is MB-scale at bench SFs,
-    so AQE's byte-based coalescing (64m advisory,
-    parallelismFirst=false) collapsed the exchange to ONE partition and
-    serialized the sort + windows + aggregate on one core — measured
-    1.92 s → 1.15 s on the union entry's 450k-run merge. The pin is
-    parallelism-derived, not a constant, and (key, iy) has thousands of
-    distinct values at any SF; at shuffle sizes where AQE would split
-    anyway (GB-scale runs), 2× cores is still the right order for a
-    window whose per-row work dominates its bytes.
 
-    ``pre_partitioned=True`` skips that repartition: callers whose input
-    is ALREADY hash-partitioned on (key, iy) at pinned width — the
-    `boolean_runs_tagged` sweep, whose windows/filter/project preserve
-    its own (key, iy) pin — would otherwise pay a second full Exchange
-    of the same rows for the same clustering (r15 optimization, guide
-    §2.1: the merge windows' ClusteredDistribution(key, iy) is satisfied
-    by the sweep's partitioning, so EnsureRequirements adds nothing)."""
-    if not pre_partitioned:
-        n_part = iv.sparkSession.sparkContext.defaultParallelism * 2
-        iv = iv.repartition(n_part, key, "iy")
+def merge_runs(iv: DataFrame, key: str = "c_nationkey") -> DataFrame:
+    """Union overlapping or abutting [x0, x1] runs per (key, iy) into
+    maximal runs, in-engine. This is the pre-merge the dissolve needs at
+    scale: overlapping polygons emit overlapping runs, and merging on the
+    (key, iy) axis — thousands of partitionable keys — means the
+    dissolve-key Exchange (25 reducers) and the per-group Python chaining
+    both see only the UNION's runs, not every polygon's. Measured at the
+    20× rehearsal: 9 M raw runs merge to a fraction engine-side and the
+    entry wall drops (SCALING.md run 13).
+
+    The (key, iy) shuffle is pinned to ≥ 2× cluster parallelism (guide
+    §2.5): the runs frame is MB-scale at bench SFs, so AQE's byte-based
+    coalescing (64m advisory, parallelismFirst=false) collapsed the
+    exchange to ONE partition and serialized the sort + windows +
+    aggregate on one core — measured 1.92 s → 1.15 s on the union
+    entry's 450k-run merge. The pin is parallelism-derived, not a
+    constant, and (key, iy) has thousands of distinct values at any SF;
+    at shuffle sizes where AQE would split anyway (GB-scale runs), 2×
+    cores is still the right order for a window whose per-row work
+    dominates its bytes."""
+    n_part = iv.sparkSession.sparkContext.defaultParallelism * 2
+    return _islands(iv.repartition(n_part, key, "iy"), key)
+
+
+def _islands(iv: DataFrame, key: str) -> DataFrame:
+    """The merge of `merge_runs` over a frame already hash-partitioned on
+    (key, iy), so its windows and aggregate add no Exchange: a run that
+    starts past every earlier run's x1 + 1 opens a new island (running
+    max), and each island's min x0 / max x1 is one maximal run."""
     w = (
         Window.partitionBy(key, "iy")
         .orderBy("x0", "x1")
@@ -283,6 +293,33 @@ def merge_runs(
     return marked.groupBy(key, "iy", "island").agg(
         F.min("x0").alias("x0"), F.max("x1").alias("x1")
     ).select(key, "iy", "x0", "x1")
+
+
+def dilate_runs(runs: DataFrame) -> DataFrame:
+    """Maximal runs of each nation's cell set dilated by the square of
+    radius DILATE_R cells (the Minkowski sum with [−R, R]², i.e. the
+    union of every cell shifted by (di, dj) ∈ [−R, R]²). The square
+    element is separable, so it runs on runs, never on cells: x-dilation
+    moves the run ends ([x0 − R, x1 + R]), one merge, y-dilation copies
+    each merged run to rows iy − R … iy + R (2R + 1 rows per SEGMENT),
+    one merge. Pure int64 arithmetic; rows stay boundary-proportional."""
+    r = DILATE_R
+    segs = merge_runs(
+        runs.select(
+            "c_nationkey",
+            "iy",
+            (F.col("x0") - r).alias("x0"),
+            (F.col("x1") + r).alias("x1"),
+        )
+    )
+    return merge_runs(
+        segs.select(
+            "c_nationkey",
+            F.explode(F.sequence(F.col("iy") - r, F.col("iy") + r)).alias("iy"),
+            "x0",
+            "x1",
+        )
+    )
 
 
 _OUT_SCHEMA = (
@@ -340,58 +377,38 @@ def union_rings_by_key(runs, key: str = "c_nationkey", cell: float = 0.0625):
 
 
 def boolean_runs(
-    a: DataFrame, b: DataFrame, mode: str, key: str = "c_nationkey"
+    runs: DataFrame, mode: str, key: str = "c_nationkey"
 ) -> DataFrame:
-    """Set operation on two scan-line run layers per (key, iy) — the
+    """Set operation on two scan-line run layers per (key, iy): ``runs``
+    is one LAYER-TAGGED frame (key, iy, x0, x1, layer ∈ {1 = A, 0 = B}),
+    so a caller can produce both layers in ONE upstream pass (one
+    rasterize of the whole store, the layer riding the key) instead of
+    two plan branches Spark would compute independently. The
     boundary-sweep generalization of `merge_runs` to TWO coverage
-    counters, giving the remaining PostGIS boolean ops (ST_Intersection,
+    counters gives the PostGIS boolean ops (ST_Intersection,
     ST_Difference; union and symmetric difference fall out of the same
     sweep) on the runs representation, fully in-engine:
 
     1. every run [x0, x1] emits two boundary events (+1 at x0, −1 at
-       x1+1) on its layer's counter;
+       x1+1) on its layer's counter, via one explode (map-only);
     2. events at equal x collapse (one aggregate), then per (key, iy) a
        running sum yields the coverage counters (cA, cB) on the segment
-       [x, next_x) — inputs need NOT be pre-merged, overlap just raises
-       the counter;
+       [x, next_x) — inputs need NOT be merged, overlap just raises the
+       counter;
     3. the mode predicate selects active segments:
        ``intersection`` cA>0 ∧ cB>0, ``difference`` cA>0 ∧ cB=0,
-       ``union`` cA>0 ∨ cB>0, ``symdiff`` exactly one side covered.
-
-    Adjacent active segments split at interior boundaries (e.g. a B-run
-    starting inside an A-run) — pass the result through `merge_runs`
-    before ring reconstruction, which expects maximal runs. All
-    arithmetic is integer; the sweep is two unions + one aggregate + one
-    (key, iy)-partitioned window, so it parallelizes over scan lines
-    exactly like the merge (thousands of keys), never over the dissolve
-    key alone."""
-    return boolean_runs_tagged(
-        a.withColumn("layer", F.lit(1)).unionAll(
-            b.withColumn("layer", F.lit(0))
-        ),
-        mode,
-        key=key,
-    )
-
-
-def boolean_runs_tagged(
-    runs: DataFrame, mode: str, key: str = "c_nationkey"
-) -> DataFrame:
-    """`boolean_runs` over a single LAYER-TAGGED run frame
-    (key, iy, x0, x1, layer ∈ {1 = A, 0 = B}) — the form that lets a
-    caller produce both layers in ONE upstream pass (e.g. one rasterize
-    of the whole polygon store with the layer encoded in the key)
-    instead of two branches that Spark would compute independently.
-    Each run emits its two boundary events via one explode (map-only),
-    so the whole sweep reads the input exactly once.
+       ``union`` cA>0 ∨ cB>0, ``symdiff`` exactly one side covered;
+    4. `merge_runs`' island windows join abutting active segments (a
+       segment boundary where a counter moves 1 → 2 splits a run), so
+       the output is MAXIMAL runs, ready for `union_rings_by_key`.
 
     The event frame is repartitioned ONCE on (key, iy) before the
-    aggregate (r15 optimization, guide §2.4/§2.5): hash(key, iy)
-    satisfies the (key, iy, x) aggregate's clustering requirement (key
-    subset) AND the windows' — so the sweep runs on ONE exchange
-    instead of two, and the pin keeps AQE's byte-based coalescing from
-    collapsing the MB-scale shuffle to one core (the merge_runs
-    lesson)."""
+    aggregate (guide §2.4/§2.5): hash(key, iy) satisfies the (key, iy,
+    x) aggregate's clustering requirement AND every window's, the
+    merge's included — so the sweep and its merge run on ONE exchange,
+    and the pin keeps AQE's byte-based coalescing from collapsing the
+    MB-scale shuffle to one core (the `merge_runs` lesson). All
+    arithmetic is integer."""
     one = F.lit(1).cast("long")
     n_part = runs.sparkSession.sparkContext.defaultParallelism * 2
     ev = (
@@ -448,6 +465,7 @@ def boolean_runs_tagged(
     }
     if mode not in preds:
         raise ValueError(f"unknown boolean_runs mode: {mode!r}")
-    return st.where(preds[mode] & F.col("nx").isNotNull()).select(
+    active = st.where(preds[mode] & F.col("nx").isNotNull()).select(
         key, "iy", F.col("x").alias("x0"), (F.col("nx") - 1).alias("x1")
     )
+    return _islands(active, key)

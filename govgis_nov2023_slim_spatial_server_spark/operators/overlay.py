@@ -110,11 +110,12 @@ def overlay_rows(
     """Run ``kernel`` over every candidate pair of ``a`` (keyed ``akey``)
     and ``b`` (keyed ``bkey``), both carrying ``xmin/ymin/xmax/ymax``.
 
-    Candidates come from the grid-blocked bbox join at ``cell``. A side is
-    spread once, before its first Python step, because a single-file scan
-    would otherwise run that step on one partition: ``decompose`` spreads
-    the polygons it cuts, so its pieces join as they are, and any other
-    ``a`` is spread here, before the kernel.
+    Candidates come from the grid-blocked bbox join at ``cell``. Each side
+    is spread once, before its first Python step, because a single-file
+    scan would otherwise run that step on one partition: ``decompose``
+    spreads the polygons it cuts, so its pieces join as they are, and any
+    other side is spread here. Both sides, because the planner may
+    broadcast either one, and the streamed side sets the kernel's width.
 
     ``kernel(*arrays)`` gets the joined columns ``args`` (``b``'s suffixed
     ``_r``) as numpy arrays, one batch at a time, and returns
@@ -122,8 +123,10 @@ def overlay_rows(
     ``schema`` names in order. The result is ``akey, bkey, *carry``
     gathered at ``ri`` (``carry`` are long columns of either side), then
     the kernel's columns."""
-    if not set(PIECE_COLS) <= set(a.columns):
-        a = spread(a)
+    a, b = (
+        side if set(PIECE_COLS) <= set(side.columns) else spread(side)
+        for side in (a, b)
+    )
     pairs = grid_blocked_overlap_join(a, b, cell=cell)
     keys = ["akey", "bkey", *carry]
     names = [f.split()[0] for f in schema.split(",")]

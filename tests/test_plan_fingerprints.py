@@ -52,20 +52,20 @@ FINGERPRINTS = {
     "pq_adc_topk": (1, 0, 0, 0, 0, 1, 0),
     "pareto_frontier_parts": (1, 0, 0, 1, 0, 0, 0),
     "skyline_recursive_parts": (1, 0, 0, 0, 0, 0, 1),
-    "spatial_buffer_union_area": (5, 0, 0, 1, 0, 0, 1),
+    "spatial_buffer_union_area": (4, 0, 0, 1, 0, 0, 1),
     "spatial_union_rings": (3, 0, 0, 1, 1, 0, 1),
     "substring_dup_chains": (3, 0, 0, 0, 0, 0, 4),
     "spatial_intersection_rings": (3, 0, 0, 1, 1, 0, 1),
     "spatial_union_snap_rings": (4, 0, 0, 1, 1, 1, 0),
     "spatial_nn_join_ring": (1, 0, 0, 1, 0, 0, 0),
     "spatial_knn_join_ring": (1, 0, 0, 1, 0, 0, 0),
-    "spatial_clip_convex_pairs": (2, 0, 0, 1, 0, 0, 0),
-    "spatial_clip_concave_pairs": (3, 0, 0, 2, 0, 0, 0),
+    "spatial_clip_convex_pairs": (3, 0, 0, 1, 0, 0, 0),
+    "spatial_clip_concave_pairs": (4, 0, 0, 2, 0, 0, 0),
     "spatial_clip_general_pairs": (4, 0, 0, 3, 0, 0, 0),
     "spatial_clip_holed_pairs": (4, 0, 0, 3, 0, 0, 0),
-    "spatial_clip_convex_rings": (2, 0, 0, 1, 0, 0, 0),
+    "spatial_clip_convex_rings": (3, 0, 0, 1, 0, 0, 0),
     "bpe_encode_merges": (5, 0, 0, 0, 0, 0, 0),
-    "spatial_clip_holed_boundary": (2, 0, 0, 1, 0, 0, 0),
+    "spatial_clip_holed_boundary": (3, 0, 0, 1, 0, 0, 0),
     "graph_bfs_levels": (1, 0, 0, 0, 0, 0, 4),
     "winnowing_fingerprints": (2, 0, 0, 0, 0, 0, 0),
     "spatial_convex_hull_edges": (3, 0, 0, 1, 1, 0, 0),

@@ -162,9 +162,12 @@ def test_union_rings_store_integration(spark):
     """On the real sf0.001 polygon store: every nation's emitted WKB
     parses, holes exist (donut polygons live in the store), and the
     ring-shoelace cell count per nation equals the independent
-    DISTINCT-occupied-cell count from `_occupied_cells`."""
+    DISTINCT-occupied-cell count of `spatial_union_area`'s DuckDB oracle,
+    which decides every cell from the closed-form shape predicates."""
+    import duckdb
+
+    from govgis_nov2023_slim_spatial_server_spark.catalog import ORACLES
     from govgis_nov2023_slim_spatial_server_spark.catalog.geo_analytics import (
-        _occupied_cells,
         _occupied_runs,
     )
     from govgis_nov2023_slim_spatial_server_spark.functions.spatial import (
@@ -176,17 +179,22 @@ def test_union_rings_store_integration(spark):
 
     sf = "/root/testdata/sf0.001"
     geo = union_rings_by_key(_occupied_runs(spark, sf)).collect()
-    want = {
-        r["c_nationkey"]: r["n"]
-        for r in _occupied_cells(spark, sf)
-        .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    con = duckdb.connect()
+    for t in ("customer", "nation"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+        )
+    names = dict(con.execute("SELECT n_nationkey, n_name FROM nation").fetchall())
+    want = dict(
+        con.execute(
+            f"SELECT n_name, n_cells FROM ({ORACLES['spatial_union_area']})"
+        ).fetchall()
+    )
+    con.close()
     assert len(geo) == len(want)
     saw_hole = False
     for row in geo:
-        assert row["n_cells"] == want[row["c_nationkey"]]
+        assert row["n_cells"] == want[names[row["c_nationkey"]]]
         polys = parse_wkb_polygons(bytes(row["geom_wkb"]))
         assert len(polys) == row["n_polys"]
         assert sum(len(p) for p in polys) == row["n_rings"]

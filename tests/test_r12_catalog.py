@@ -40,10 +40,15 @@ def _cells_to_runs(cells):
     return runs
 
 
-def _runs_df(spark, cells, key=0):
-    rows = [(key, y, x0, x1) for y, x0, x1 in _cells_to_runs(cells)]
+def _tagged_df(spark, a_cells, b_cells, key=0):
+    """Layer-tagged maximal runs of two cell sets: A = layer 1, B = 0."""
+    rows = [
+        (key, y, x0, x1, layer)
+        for layer, cells in ((1, a_cells), (0, b_cells))
+        for y, x0, x1 in _cells_to_runs(cells)
+    ]
     return spark.createDataFrame(
-        rows, "c_nationkey long, iy long, x0 long, x1 long"
+        rows, "c_nationkey long, iy long, x0 long, x1 long, layer int"
     )
 
 
@@ -51,14 +56,15 @@ def test_boolean_runs_random_exact(spark):
     """40 random two-layer cell sets (one per key, all in one frame):
     every boolean_runs mode reproduces the brute-force cell-set
     operation exactly — including layers with overlapping (unmerged)
-    runs, which the counter sweep must handle without pre-merging."""
+    runs, which the counter sweep must handle without pre-merging — and
+    returns MAXIMAL runs: no two runs of one (key, iy) overlap or abut."""
     from govgis_nov2023_slim_spatial_server_spark.operators.dissolve import (
         boolean_runs,
     )
 
     rng = random.Random(20260815)
     layers = {}
-    rows_a, rows_b = [], []
+    rows = []
     for key in range(40):
         w_, h_ = rng.randint(1, 8), rng.randint(1, 8)
         a = {
@@ -74,13 +80,13 @@ def test_boolean_runs_random_exact(spark):
             if rng.random() < rng.choice([0.3, 0.6])
         }
         layers[key] = (a, b)
-        rows_a += [(key, y, x0, x1) for y, x0, x1 in (_cells_to_runs(a) if a else [])]
+        rows += [(key, y, x0, x1, 1) for y, x0, x1 in (_cells_to_runs(a) if a else [])]
         # duplicate some B runs verbatim: counters must tolerate overlap
         br = _cells_to_runs(b) if b else []
-        rows_b += [(key, y, x0, x1) for y, x0, x1 in br + br[:2]]
-    schema = "c_nationkey long, iy long, x0 long, x1 long"
-    da = spark.createDataFrame(rows_a or [(99, 0, 0, 0)], schema)
-    db = spark.createDataFrame(rows_b or [(99, 0, 0, 0)], schema)
+        rows += [(key, y, x0, x1, 0) for y, x0, x1 in br + br[:2]]
+    tagged = spark.createDataFrame(
+        rows, "c_nationkey long, iy long, x0 long, x1 long, layer int"
+    )
     ops = {
         "intersection": lambda a, b: a & b,
         "difference": lambda a, b: a - b,
@@ -88,13 +94,20 @@ def test_boolean_runs_random_exact(spark):
         "symdiff": lambda a, b: a ^ b,
     }
     for mode, op in ops.items():
-        got = {}
-        for r in boolean_runs(da, db, mode).collect():
+        got, lines = {}, {}
+        for r in boolean_runs(tagged, mode).collect():
             got.setdefault(r["c_nationkey"], set()).update(
                 (x, r["iy"]) for x in range(r["x0"], r["x1"] + 1)
             )
+            lines.setdefault((r["c_nationkey"], r["iy"]), []).append(
+                (r["x0"], r["x1"])
+            )
         for key, (a, b) in layers.items():
             assert got.get(key, set()) == op(a, b), (mode, key)
+        for line, runs in lines.items():
+            runs.sort()
+            for (_, x1), (x0, _) in zip(runs, runs[1:]):
+                assert x0 > x1 + 1, (mode, line, runs)
 
 
 def test_difference_punches_holes_and_reexposes_islands(spark):
@@ -104,7 +117,6 @@ def test_difference_punches_holes_and_reexposes_islands(spark):
     itself. The ring-derived cell counts prove the topology."""
     from govgis_nov2023_slim_spatial_server_spark.operators.dissolve import (
         boolean_runs,
-        merge_runs,
         union_rings_by_key,
     )
 
@@ -115,28 +127,22 @@ def test_difference_punches_holes_and_reexposes_islands(spark):
         for y in range(1, 6)
         if not (2 <= x <= 4 and 2 <= y <= 4)
     }
-    da, db = _runs_df(spark, a_cells), _runs_df(spark, b_cells)
+    tagged = _tagged_df(spark, a_cells, b_cells)
 
-    diff = union_rings_by_key(
-        merge_runs(boolean_runs(da, db, "difference")), cell=1.0
-    ).collect()
+    diff = union_rings_by_key(boolean_runs(tagged, "difference"), cell=1.0).collect()
     assert len(diff) == 1
     r = diff[0]
     assert r["n_cells"] == len(a_cells - b_cells) == 33
     assert r["n_polys"] == 2  # frame + re-exposed island
     assert r["n_rings"] == 3  # frame shell, frame hole, island shell
 
-    inter = union_rings_by_key(
-        merge_runs(boolean_runs(da, db, "intersection")), cell=1.0
-    ).collect()
+    inter = union_rings_by_key(boolean_runs(tagged, "intersection"), cell=1.0).collect()
     r = inter[0]
     assert r["n_cells"] == len(b_cells) == 16
     assert r["n_polys"] == 1 and r["n_rings"] == 2  # the donut back
 
     # B ⊂ A, so the symmetric difference equals A \ B exactly
-    sym = union_rings_by_key(
-        merge_runs(boolean_runs(da, db, "symdiff")), cell=1.0
-    ).collect()
+    sym = union_rings_by_key(boolean_runs(tagged, "symdiff"), cell=1.0).collect()
     r = sym[0]
     assert r["n_cells"] == 33 and r["n_polys"] == 2 and r["n_rings"] == 3
 
@@ -266,22 +272,29 @@ def test_intersection_rings_store_nonvacuous(spark):
         for r in QUERIES["spatial_difference_rings"](spark, sf).collect()
     }
     assert inter and sum(inter.values()) > 0
-    # |A| per nation from the odd-key half of the lattice store
+    # |A| and |B| per nation from the tagged runs of the lattice store
     from govgis_nov2023_slim_spatial_server_spark.catalog.geo_analytics import (
-        _parity_runs,
+        _occupied_runs,
     )
     from govgis_nov2023_slim_spatial_server_spark.operators.dissolve import (
         merge_runs,
     )
     from govgis_nov2023_slim_spatial_server_spark.schemas import load_table
 
-    a_sizes = {
-        r["c_nationkey"]: r["n"]
-        for r in merge_runs(_parity_runs(spark, sf, 1))
-        .groupBy("c_nationkey")
-        .agg(F.sum(F.col("x1") - F.col("x0") + 1).alias("n"))
-        .collect()
-    }
+    tagged = _occupied_runs(spark, sf, tagged=True)
+
+    def layer_sizes(layer):
+        return {
+            r["c_nationkey"]: r["n"]
+            for r in merge_runs(
+                tagged.where(F.col("layer") == layer).drop("layer")
+            )
+            .groupBy("c_nationkey")
+            .agg(F.sum(F.col("x1") - F.col("x0") + 1).alias("n"))
+            .collect()
+        }
+
+    a_sizes = layer_sizes(1)
     names = {
         r["n_nationkey"]: r["n_name"]
         for r in load_table(spark, sf, "nation").collect()
@@ -294,13 +307,7 @@ def test_intersection_rings_store_nonvacuous(spark):
         r["n_name"]: r["n_cells"]
         for r in QUERIES["spatial_symdiff_rings"](spark, sf).collect()
     }
-    b_sizes = {
-        r["c_nationkey"]: r["n"]
-        for r in merge_runs(_parity_runs(spark, sf, 0))
-        .groupBy("c_nationkey")
-        .agg(F.sum(F.col("x1") - F.col("x0") + 1).alias("n"))
-        .collect()
-    }
+    b_sizes = layer_sizes(0)
     for nk, a_n in a_sizes.items():
         nm = names[nk]
         assert (
