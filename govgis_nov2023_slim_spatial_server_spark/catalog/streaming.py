@@ -1,40 +1,41 @@
-"""Structured Streaming catalog entry.
+"""Structured Streaming catalog entries.
 
-Streaming was pytest-only in r1 (stream-vs-batch parity tests). This entry
-puts a REAL streaming execution behind the driver's correctness gate: a
-file-source stream over the events parquet, watermarked tumbling windows,
-``availableNow`` trigger draining to a memory sink. availableNow processes
-every available file then stops, so the run is finite and deterministic —
-which is exactly why this one streaming shape CAN carry a SQL oracle (the
-complete-mode result equals the batch GROUP BY over the same input).
+Each entry is a REAL streaming execution behind the driver's correctness
+gate: a file-source stream over the events data, drained with an
+``availableNow`` trigger to a memory sink. availableNow processes every
+available file then stops, so the run is finite and deterministic — which
+is why these streams CAN carry a SQL oracle (e.g. the complete-mode
+windowed result equals the batch GROUP BY over the same input).
+
+All of them run through the one harness in streaming/facade.py:
+``drain`` is the sink, and the entries that need a fixed micro-batch
+order stage their input with ``staged_stream``; the rest stream the events
+file itself (``_events_stream``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime
+import os
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.sketches import hll_registers_by_group, hll_registers_to_estimate
 from ..operators.windows import floor_round
 from ..schemas import load_table as _t
 from ..schemas import normalize_events_ts
-from ..streaming.facade import streaming_tumbling_counts
 from ..session import local_rows_df
+from ..streaming.facade import (
+    drain,
+    staged_stream,
+    streaming_dedup,
+    streaming_interval_join,
+    streaming_session_counts,
+    streaming_tumbling_counts,
+)
+from ..streaming.stateful import running_totals_per_user
 from ._registry import query
-
-_SINK_SEQ = [0]
-
-
-def _stop_quietly(q) -> None:
-    """Stop a possibly-still-active streaming query before checkpoint
-    cleanup. On the happy path ``awaitTermination`` already returned and
-    this is a no-op; on the error path it prevents the still-running query
-    thread from racing the ``rmtree`` of its own checkpoint dir (the
-    secondary-FileNotFound confusion r11's advice flagged)."""
-    if q is not None:
-        try:
-            q.stop()
-        except Exception:
-            pass
 
 
 @query(
@@ -58,17 +59,7 @@ def stream_tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = streaming_tumbling_counts(
         ev, duration="1 hour", watermark="2 hours", keys=["event_type"]
     )
-    _SINK_SEQ[0] += 1
-    name = f"__stream_tumbling_counts_{_SINK_SEQ[0]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.col("window_start").cast("long").alias("window_start_s"),
         "event_type",
         "n_events",
@@ -93,8 +84,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session every window_start_s would shift by the zone offset vs the
     # UTC DuckDB oracle (the verified 28800 s failure mode)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    import os
-
     path = f"{sf_dir}/events.parquet"
     raw_schema = spark.read.parquet(path).schema
     # Layout-aware source: the file-source stream requires a DIRECTORY
@@ -132,25 +121,13 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream joins emit pairs as they match (the watermark only bounds
     join state), so the drained availableNow result equals the batch join —
     which is exactly what the oracle states."""
-    from ..streaming.facade import streaming_interval_join
-
     ev = _events_stream(spark, sf_dir)
     purchases = ev.where(F.col("event_type") == "purchase")
     clicks = ev.where(F.col("event_type") == "click")
     joined = streaming_interval_join(
         purchases, clicks, lookback="40 minutes", watermark="48 hours"
     )
-    _SINK_SEQ[0] += 1
-    name = f"__stream_ij_{_SINK_SEQ[0]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 @query(
@@ -164,33 +141,9 @@ def stream_dedup_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHICH row survives per key is arrival-order-dependent, so the entry
     emits only the key columns; the surviving KEY SET is deterministic and
     equals batch SELECT DISTINCT."""
-    import shutil
-    import tempfile
-
-    from ..streaming.facade import streaming_dedup
-
     ev = _events_stream(spark, sf_dir)
     deduped = streaming_dedup(ev, ["user_id", "event_type"], watermark="48 hours")
-    _SINK_SEQ[0] += 1
-    name = f"__stream_dedup_{_SINK_SEQ[0]}"
-    ckpt = tempfile.mkdtemp(prefix="sdedup_ckpt_")
-    q = None
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # memory-sink rows live on the driver; the checkpoint is dead
-        # weight once the availableNow drain terminates
-        _stop_quietly(q)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name).select("user_id", "event_type")
+    return drain(deduped, "append").select("user_id", "event_type")
 
 
 @query(
@@ -207,55 +160,28 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     """Arbitrary per-key state run BY THE STREAMING ENGINE:
     ``applyInPandasWithState`` running (count, sum) totals per user, state
     checkpointed across micro-batches (streaming/stateful.py). The events
-    table is re-written as four ts-ranged files streamed one per trigger,
+    table is re-written as four ts-quartile files streamed one per trigger,
     so the final emission per key really is state carried across four
     micro-batches — and equals the batch GROUP BY, which is the oracle.
     Sums accumulate exact integer cents (events.value is 2-decimal data),
     making the total independent of batching order; the oracle applies the
     identical per-value floor."""
-    import shutil
-    import tempfile
-
-    from ..streaming.facade import read_events_stream
-    from ..streaming.stateful import running_totals_per_user
-
-    ev_batch = _t(spark, sf_dir, "events")
-    src_dir = tempfile.mkdtemp(prefix="sstate_src_")
-    ckpt = tempfile.mkdtemp(prefix="sstate_ckpt_")
-    q = None
-    try:
-        ev_batch.repartitionByRange(4, "ts").write.mode("overwrite").parquet(src_dir)
-
-        stream = read_events_stream(
-            spark, src_dir, ev_batch.schema, max_files_per_trigger=1
-        )
-        out = running_totals_per_user(stream)
-        _SINK_SEQ[0] += 1
-        name = f"__stream_state_{_SINK_SEQ[0]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # memory-sink rows live on the driver; staged source files and the
-        # checkpoint are dead weight once the availableNow drain terminates
-        _stop_quietly(q)
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # four ts-quartile frames, one micro-batch each (ntile over the same
+    # total order the other staged entries use; the checkpoint feeds the
+    # four writes)
+    ranked = (
+        _t(spark, sf_dir, "events")
+        .withColumn("q", F.ntile(4).over(Window.orderBy("ts", "event_id")))
+        .localCheckpoint(eager=True)
+    )
+    frames = [ranked.where(F.col("q") == i).drop("q") for i in range(1, 5)]
+    with staged_stream(spark, frames) as src:
+        rows = drain(running_totals_per_user(src), "update")
     # update mode re-emits a key's row each batch it changes; n_events is
     # strictly increasing per key, so max_by picks the final state
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("sum_value", "n_events").alias("sum_value"),
-        )
+    return rows.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max_by("sum_value", "n_events").alias("sum_value"),
     )
 
 
@@ -279,23 +205,11 @@ def stream_sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENGINE (each event fans out to two windows), availableNow drain in
     complete mode; the oracle is the batch double-assignment SQL — same
     contract as the tumbling entry, proving the sliding state shape too."""
-    from ..streaming.facade import streaming_tumbling_counts
-
     ev = _events_stream(spark, sf_dir)
     agg = streaming_tumbling_counts(
-        ev, duration="1 hour", watermark="2 hours", keys=None, slide="30 minutes"
+        ev, duration="1 hour", watermark="2 hours", slide="30 minutes"
     )
-    _SINK_SEQ[0] += 1
-    name = f"__stream_sliding_{_SINK_SEQ[0]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.col("window_start").cast("long").alias("window_start_s"),
         "n_events",
         floor_round(F.col("sum_value"), 4).alias("sum_value"),
@@ -337,23 +251,9 @@ def stream_session_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap-and-islands form. Sessions are identified by their start time
     rather than an ordinal so no cross-engine session-numbering is
     needed."""
-    from ..streaming.facade import streaming_session_counts
-
     ev = _events_stream(spark, sf_dir)
-    agg = streaming_session_counts(
-        ev, gap="30 minutes", watermark="48 hours"
-    )
-    _SINK_SEQ[0] += 1
-    name = f"__stream_sess_{_SINK_SEQ[0]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    agg = streaming_session_counts(ev, gap="30 minutes", watermark="48 hours")
+    return drain(agg, "complete").select(
         "user_id",
         F.col("session_start").cast("long").alias("session_start_s"),
         "n_events",
@@ -390,24 +290,12 @@ def stream_topk_types_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = streaming_tumbling_counts(
         ev, duration="1 hour", watermark="2 hours", keys=["event_type"]
     )
-    _SINK_SEQ[0] += 1
-    name = f"__stream_topk_{_SINK_SEQ[0]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    res = spark.table(name)
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), F.col("event_type").asc()
     )
     return (
-        res.withColumn("rk", F.row_number().over(w).cast("long"))
+        drain(agg, "complete")
+        .withColumn("rk", F.row_number().over(w).cast("long"))
         .where(F.col("rk") <= 2)
         .select(
             F.col("window_start").cast("long").alias("window_start_s"),
@@ -450,22 +338,15 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), and only windows whose end ≤ final watermark appear. This is
     the one streaming behavior the other six entries can't show — they
     all process a single availableNow batch where nothing is ever late.
-    Input files are staged under /tmp with forced mtimes (file order =
-    processing order) and removed after the drain; the result lives in
-    the memory sink, not the files. Staging is Spark-side: a global
+    Input files are staged by `staged_stream` (file order = processing
+    order) and removed after the drain; the result lives in the memory
+    sink, not the files. Staging is Spark-side: a global
     row_number rank (one window task — same total order the oracle's
     ROW_NUMBER uses; this is harness staging, not a scale path) feeds
     three filtered single-file writes, so no table ever materializes on
     the driver. Split sizes are guarded: fewer than 150 events would
     make the late/tail slices overlap, so that fails loudly instead of
     silently double-counting rows the oracle counts once."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     ev = _t(spark, sf_dir, "events")
     n = ev.count()
     # strictly > 150: at exactly 150 the a_bulk split (100 < rn <= n-50)
@@ -486,54 +367,16 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch 0 establishes the watermark, a small recent tail in batch 1
     # activates it for filtering, the stragglers in batch 2 hit it.
     splits = [
-        ("a_bulk", (F.col("rn") > 100) & (F.col("rn") <= n - 50)),
-        ("b_tail", F.col("rn") > n - 50),
-        ("c_late", F.col("rn") <= 100),
+        (F.col("rn") > 100) & (F.col("rn") <= n - 50),  # bulk
+        F.col("rn") > n - 50,  # recent tail
+        F.col("rn") <= 100,  # stragglers
     ]
-    d = tempfile.mkdtemp(prefix="stream_late_")
-    q = None
-    try:
-        now = 1_700_000_000
-        for i, (fname, pred) in enumerate(splits):
-            stage = os.path.join(d, f"_stage_{fname}")
-            ranked.where(pred).drop("rn").coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"{fname}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(stage, ignore_errors=True)
-            os.utime(dst, (now + 100 * i, now + 100 * i))
-        schema = spark.read.parquet(os.path.join(d, "a_bulk.parquet")).schema
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(d)
-        )
-        agg = streaming_tumbling_counts(
-            normalize_events_ts(src), duration="1 hour", watermark="2 hours"
-        )
-        _SINK_SEQ[0] += 1
-        name = f"__stream_late_{_SINK_SEQ[0]}"
-        q = (
-            agg.select("window_start", "n_events")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        res = (
-            spark.table(name)
-            .groupBy(F.col("window_start").cast("long").alias("window_start_s"))
-            .agg(F.sum("n_events").alias("n_events"))
-        )
-        # materialize before the temp inputs disappear
-        out = res.localCheckpoint(eager=True)
-    finally:
-        _stop_quietly(q)
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    with staged_stream(spark, [ranked.where(p).drop("rn") for p in splits]) as src:
+        agg = streaming_tumbling_counts(src, duration="1 hour", watermark="2 hours")
+        rows = drain(agg.select("window_start", "n_events"), "append")
+    return rows.groupBy(
+        F.col("window_start").cast("long").alias("window_start_s")
+    ).agg(F.sum("n_events").alias("n_events"))
 
 
 @query(
@@ -567,17 +410,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("sum_value"),
     )
-    _SINK_SEQ[0] += 1
-    name = f"__stream_enrich_{_SINK_SEQ[0]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         "n_name",
         "event_type",
         "n_events",
@@ -630,13 +463,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     count + last-value sum) is the reconciliation row an apply job
     publishes after each drain.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     ev = _t(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
@@ -658,10 +484,12 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     b1, b2 = n // 3, (2 * n) // 3
     slices = [
-        ("a_early", F.col("rn") <= b1, b1),
-        ("b_mid", (F.col("rn") > b1) & (F.col("rn") <= b2), b2 - b1),
-        ("c_late", F.col("rn") > b2, n - b2),
+        (F.col("rn") <= b1, b1),
+        ((F.col("rn") > b1) & (F.col("rn") <= b2), b2 - b1),
+        (F.col("rn") > b2, n - b2),
     ]
+    # tiny corpora: skip empty slices
+    frames = [ranked.where(p).drop("rn") for p, size in slices if size > 0]
     state: dict = {"df": None, "batches": 0}
 
     def apply_batch(bdf, batch_id):
@@ -707,49 +535,101 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         state["df"] = merged.localCheckpoint(eager=True)
 
-    d = tempfile.mkdtemp(prefix="stream_cdc_")
-    q = None
-    try:
-        now = 1_700_000_000
-        n_files = 0
-        for fname, pred, size in slices:
-            if size == 0:  # tiny corpora: skip empty slices
-                continue
-            stage = os.path.join(d, f"_stage_{fname}")
-            ranked.where(pred).drop("rn").coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"{fname}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(stage, ignore_errors=True)
-            os.utime(dst, (now + 100 * n_files,) * 2)
-            n_files += 1
-        schema = ranked.drop("rn").schema
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(d)
-        )
+    with staged_stream(spark, frames) as src:
         q = src.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-        q.awaitTermination()
-        if state["batches"] < n_files:
-            raise AssertionError(
-                f"CDC apply ran {state['batches']} batches for {n_files} staged "
-                f"files — maxFilesPerTrigger did not produce an incremental run"
-            )
-        out = (
-            state["df"]
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_users"),
-                F.sum("v_e4").alias("sum_last_value_e4"),
-            )
-            .localCheckpoint(eager=True)  # outlive the staged inputs
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+    if state["batches"] < len(frames):
+        raise AssertionError(
+            f"CDC apply ran {state['batches']} batches for {len(frames)} staged "
+            f"files — maxFilesPerTrigger did not produce an incremental run"
         )
-    finally:
-        _stop_quietly(q)
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    return state["df"].groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_users"),
+        F.sum("v_e4").alias("sum_last_value_e4"),
+    )
+
+
+def _outer_interval_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Purchases × same-user clicks in the 40 min before them, as a
+    watermarked stream-stream ``how`` ("left_outer" or "full_outer") join,
+    staged so a finite availableNow drain emits every null-side row (the
+    three staged facts are in `stream_left_outer_join`'s docstring).
+
+    The sentinel filter runs after the sink on the COALESCED user key: it
+    drops both sentinel emission shapes (each carries a negative user id)
+    and keeps rows whose key is NULL — a NULL-user event never
+    equi-joins, so it emits as its own null-side row, as the oracle's
+    LEFT or FULL JOIN does."""
+    ev = _t(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+    # one map-combined aggregate for all three staging scalars
+    st = ev.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("user_id").alias("lo"),
+        F.max("ts").alias("mx"),
+    ).collect()[0]
+    n, lo, max_ts = st["n"], st["lo"], st["mx"]
+    if lo is not None and lo < 0:
+        raise AssertionError(
+            f"stream_{how}_join reserves negative user_ids for its "
+            f"watermark-advancer sentinels; data has user_id {lo}"
+        )
+    if max_ts is None:  # empty stream ⇒ empty join result
+        return spark.createDataFrame(
+            [], "purchase_id long, click_id long, user_id long"
+        )
+    ranked = ev.withColumn(
+        "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
+    ).localCheckpoint(eager=True)
+    half = n // 2
+    frames = [
+        ranked.where(p).drop("rn")
+        for p, size in ((F.col("rn") <= half, half), (F.col("rn") > half, n - half))
+        if size > 0
+    ]
+    # two trailing watermark advancers, each one purchase and one click
+    for offset_h in (4, 8):
+        t = max_ts + datetime.timedelta(hours=offset_h)
+        frames.append(
+            local_rows_df(
+                spark,
+                [(-10 - offset_h, t, -1, "purchase"), (-20 - offset_h, t, -2, "click")],
+                ev.schema,
+            )
+        )
+    with staged_stream(spark, frames) as src:
+
+        def side(etype: str, id_col: str, tag: str) -> DataFrame:
+            return (
+                src.where(F.col("event_type") == etype)
+                .withWatermark("ts", "2 hours")
+                .select(
+                    F.col("event_id").alias(id_col),
+                    F.col("user_id").alias(f"{tag}_user"),
+                    F.col("ts").alias(f"{tag}_ts"),
+                )
+            )
+
+        j = side("purchase", "purchase_id", "l").join(
+            side("click", "click_id", "r"),
+            (F.col("l_user") == F.col("r_user"))
+            & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 40 MINUTES"))
+            & (F.col("r_ts") <= F.col("l_ts")),
+            how,
+        )
+        rows = drain(
+            j.select(
+                "purchase_id",
+                "click_id",
+                F.coalesce(F.col("l_user"), F.col("r_user")).alias("user_id"),
+            ),
+            "append",
+        )
+    return rows.where((F.col("user_id") >= 0) | F.col("user_id").isNull())
 
 
 @query(
@@ -792,8 +672,9 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst below the EventTimeWatermark node into both scans, the
     advancers die before the watermark collector ever sees them, and the
     watermark silently pins at the real data's max (verified: the
-    symptom is a clean run with the null rows missing — nothing errors).
-    Advancers must also pass BOTH event-type filters (one per side),
+    symptom is a clean run with the null rows missing — nothing errors);
+    the sink-side filter keeps NULL user keys, because a NULL-user
+    purchase is a real row the oracle's LEFT JOIN emits. Advancers must also pass BOTH event-type filters (one per side),
     because the global watermark is the MIN across the two sides'
     watermark nodes.
 
@@ -804,129 +685,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     real traffic — the staging here exists only to make a finite
     availableNow drain reach the steady state.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    # one map-combined aggregate for all three staging scalars (r16,
-    # guide §2.4 — was three separate driver actions/scans)
-    _st = ev.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("user_id").alias("lo"),
-        F.max("ts").alias("mx"),
-    ).collect()[0]
-    n, lo, max_ts = _st["n"], _st["lo"], _st["mx"]
-    if lo is not None and lo < 0:
-        raise AssertionError(
-            "stream_left_outer_join reserves negative user_ids for its "
-            f"watermark-advancer sentinels; data has user_id {lo}"
-        )
-    if max_ts is None:  # empty stream ⇒ empty join result
-        return spark.createDataFrame(
-            [], "purchase_id long, click_id long, user_id long"
-        )
-    ranked = ev.withColumn(
-        "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-    ).localCheckpoint(eager=True)
-    half = n // 2
-    real_slices = [
-        ("a_first", F.col("rn") <= half, half),
-        ("b_second", F.col("rn") > half, n - half),
-    ]
-    import datetime as _dt
-
-    def _sentinels(offset_h: int):
-        t = max_ts + _dt.timedelta(hours=offset_h)
-        return local_rows_df(
-            spark,
-            [(-10 - offset_h, t, -1, "purchase"), (-20 - offset_h, t, -2, "click")],
-            ranked.drop("rn").schema,
-        )
-
-    d = tempfile.mkdtemp(prefix="stream_louter_")
-    q = None
-    try:
-        now = 1_700_000_000
-        n_files = 0
-
-        def _stage(df, fname):
-            nonlocal n_files
-            stage = os.path.join(d, f"_stage_{fname}")
-            df.coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"{fname}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(stage, ignore_errors=True)
-            os.utime(dst, (now + 100 * n_files,) * 2)
-            n_files += 1
-
-        for fname, pred, size in real_slices:
-            if size > 0:
-                _stage(ranked.where(pred).drop("rn"), fname)
-        _stage(_sentinels(4), "c_advance1")
-        _stage(_sentinels(8), "d_advance2")
-
-        schema = ranked.drop("rn").schema
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(d)
-        )
-        left = (
-            src.where(F.col("event_type") == "purchase")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("l_user"),
-                F.col("ts").alias("l_ts"),
-            )
-        )
-        right = (
-            src.where(F.col("event_type") == "click")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("r_user"),
-                F.col("ts").alias("r_ts"),
-            )
-        )
-        j = left.join(
-            right,
-            (F.col("l_user") == F.col("r_user"))
-            & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 40 MINUTES"))
-            & (F.col("r_ts") <= F.col("l_ts")),
-            "left_outer",
-        )
-        _SINK_SEQ[0] += 1
-        name = f"__stream_louter_{_SINK_SEQ[0]}"
-        q = (
-            j.select("purchase_id", "click_id", "l_user")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = (
-            spark.table(name)
-            .where(F.col("l_user") >= 0)  # sink-side: see docstring (3)
-            .select(
-                "purchase_id", "click_id", F.col("l_user").alias("user_id")
-            )
-            .localCheckpoint(eager=True)  # outlive the staged inputs
-        )
-    finally:
-        _stop_quietly(q)
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    return _outer_interval_join(spark, sf_dir, "left_outer")
 
 
 @query(
@@ -963,18 +722,10 @@ def stream_dedup_reemit_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     rider-only files between islands (unique negative keys, filtered
     after the sink — the watermark-advancer convention) push the
     operative watermark to island_base+28 h even when it lags a full
-    batch. Five staged files with forced mtimes (the
-    `stream_late_data_drop` precedent), ``maxFilesPerTrigger=1`` ⇒ one
+    batch. Five `staged_stream` files, ``maxFilesPerTrigger=1`` ⇒ one
     micro-batch per file, append-mode memory sink; emissions counted per
     key AFTER the drain."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    users = (
-        _t(spark, sf_dir, "events").select("user_id").distinct()
-    )
+    users = _t(spark, sf_dir, "events").select("user_id").distinct()
     t0 = 1_709_251_200  # 2024-03-01 00:00:00 UTC, fixed epoch seconds
     u = F.col("user_id")
 
@@ -1010,50 +761,16 @@ def stream_dedup_reemit_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         rider(-4, 138 * 3600),
         islands[2].unionAll(rider(-5, 184 * 3600)),
     ]
-    d = tempfile.mkdtemp(prefix="stream_reemit_")
-    q = None
-    try:
-        now = 1_700_000_000
-        for i, fdf in enumerate(files):
-            stage = os.path.join(d, f"_stage_{i}")
-            fdf.coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"f{i}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(stage, ignore_errors=True)
-            os.utime(dst, (now + 100 * i, now + 100 * i))
-        schema = spark.read.parquet(os.path.join(d, "f0.parquet")).schema
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(d)
-        )
+    with staged_stream(spark, files) as src:
         deduped = src.withWatermark("ts", "12 hours").dropDuplicatesWithinWatermark(
             ["user_id"]
         )
-        _SINK_SEQ[0] += 1
-        name = f"__stream_reemit_{_SINK_SEQ[0]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(d, "_ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        out = (
-            spark.table(name)
-            .where(F.col("user_id") >= 0)  # drop the rider sentinels
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_emitted"))
-            .localCheckpoint(eager=True)  # outlive the staged inputs
-        )
-    finally:
-        _stop_quietly(q)
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        rows = drain(deduped, "append")
+    return (
+        rows.where(F.col("user_id") >= 0)  # drop the rider sentinels
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_emitted"))
+    )
 
 
 # The win-keyed sibling of catalog/sketches._HLL_REGS_CTES (same pinned
@@ -1135,51 +852,27 @@ def stream_hll_distinct_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode suits the bounded drain; a continuous deployment would use
     update mode + watermark and MERGE emitted register deltas downstream
     (register MAX-merge is `sketch_hll_merge_union`'s graded algebra)."""
-    from ..operators.sketches import (
-        hll_registers_by_group,
-        hll_registers_to_estimate,
-    )
-
     ev = _events_stream(spark, sf_dir).where(F.col("user_id").isNotNull())
     win = (F.col("ts").cast("long") - F.pmod(F.col("ts").cast("long"), F.lit(3600))).alias(
         "win"
     )
-    regs_stream = hll_registers_by_group(
-        ev.select(win, "user_id"), "win", "user_id"
+    regs = drain(
+        hll_registers_by_group(ev.select(win, "user_id"), "win", "user_id"),
+        "complete",
     )
-    _SINK_SEQ[0] += 1
-    name = f"__stream_hll_windows_{_SINK_SEQ[0]}"
-    q = None
-    try:
-        q = (
-            regs_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        snapshot = spark.table(name)
-        est = hll_registers_to_estimate(snapshot, ["win"])
-        exact = (
-            _t(spark, sf_dir, "events")
-            .where(F.col("user_id").isNotNull())
-            .select(win, "user_id")
-            .groupBy("win")
-            .agg(F.countDistinct("user_id").alias("exact_distinct"))
-        )
-        out = est.join(exact, "win").select(
-            F.col("win").alias("window_start_s"),
-            "register_sum",
-            "hll_estimate",
-            "exact_distinct",
-        )
-        # materialize before the memory sink's table goes stale for the
-        # next caller (same-session reruns recreate the sink name)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        _stop_quietly(q)
-    return out
+    exact = (
+        _t(spark, sf_dir, "events")
+        .where(F.col("user_id").isNotNull())
+        .select(win, "user_id")
+        .groupBy("win")
+        .agg(F.countDistinct("user_id").alias("exact_distinct"))
+    )
+    return hll_registers_to_estimate(regs, ["win"]).join(exact, "win").select(
+        F.col("win").alias("window_start_s"),
+        "register_sum",
+        "hll_estimate",
+        "exact_distinct",
+    )
 
 
 @query(
@@ -1205,158 +898,24 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive. The batch oracle is the plain FULL JOIN of the two
     type-filtered sides.
 
-    Staging facts carried verbatim from the left-outer entry (each
-    earned empirically there, see its docstring): event-time-ordered
-    file split so partners are never evicted early; TWO trailing
-    watermark-advancer files whose sentinel rows pass BOTH sides'
-    type filters (the global watermark is the min across both watermark
-    nodes) and match nothing (negative user_ids); sentinels removed
-    only AFTER the sink on the COALESCED user key — an in-stream filter
-    would be pushed below the EventTimeWatermark node and pin the
-    watermark silently. The full-outer-specific check: sentinel rows
-    themselves emit as null-side rows (a sentinel purchase has no
-    click, a sentinel click no purchase), which is exactly why the
-    sink-side filter uses the coalesced key — it must drop BOTH
+    Runs the same `_outer_interval_join` as the left-outer entry, with
+    the same staging facts (each earned empirically, see that entry's
+    docstring): event-time-ordered file split so partners are never
+    evicted early; TWO trailing watermark-advancer files whose sentinel
+    rows pass BOTH sides' type filters (the global watermark is the min
+    across both watermark nodes) and match nothing (negative user_ids);
+    sentinels removed only AFTER the sink on the COALESCED user key — an
+    in-stream filter would be pushed below the EventTimeWatermark node
+    and pin the watermark silently. The full-outer-specific check:
+    sentinel rows themselves emit as null-side rows (a sentinel purchase
+    has no click, a sentinel click no purchase), which is exactly why
+    the sink-side filter uses the coalesced key — it must drop BOTH
     sentinel emission shapes.
 
     At 100 TB this is reconciliation-with-absence in both directions
     (unattributed conversions AND orphaned touchpoints in one pass):
     state watermark-bounded per side, one user_id shuffle of each
     stream, advancers played by real traffic."""
-    import datetime as _dt
-    import glob
-    import os
-    import shutil
-    import tempfile
+    return _outer_interval_join(spark, sf_dir, "full_outer")
 
-    from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    # one map-combined aggregate for all three staging scalars (r16,
-    # guide §2.4 — was three separate driver actions/scans)
-    _st = ev.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("user_id").alias("lo"),
-        F.max("ts").alias("mx"),
-    ).collect()[0]
-    n, lo, max_ts = _st["n"], _st["lo"], _st["mx"]
-    if lo is not None and lo < 0:
-        raise AssertionError(
-            "stream_full_outer_join reserves negative user_ids for its "
-            f"watermark-advancer sentinels; data has user_id {lo}"
-        )
-    if max_ts is None:  # empty stream ⇒ empty join result
-        return spark.createDataFrame(
-            [], "purchase_id long, click_id long, user_id long"
-        )
-    ranked = ev.withColumn(
-        "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-    ).localCheckpoint(eager=True)
-    half = n // 2
-    real_slices = [
-        ("a_first", F.col("rn") <= half, half),
-        ("b_second", F.col("rn") > half, n - half),
-    ]
-
-    def _sentinels(offset_h: int):
-        t = max_ts + _dt.timedelta(hours=offset_h)
-        return local_rows_df(
-            spark,
-            [
-                (-10 - offset_h, t, -1, "purchase"),
-                (-20 - offset_h, t, -2, "click"),
-            ],
-            ranked.drop("rn").schema,
-        )
-
-    d = tempfile.mkdtemp(prefix="stream_fouter_")
-    q = None
-    try:
-        now = 1_700_000_000
-        n_files = 0
-
-        def _stage(df, fname):
-            nonlocal n_files
-            stage = os.path.join(d, f"_stage_{fname}")
-            df.coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"{fname}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(stage, ignore_errors=True)
-            os.utime(dst, (now + 100 * n_files,) * 2)
-            n_files += 1
-
-        for fname, pred, size in real_slices:
-            if size > 0:
-                _stage(ranked.where(pred).drop("rn"), fname)
-        _stage(_sentinels(4), "c_advance1")
-        _stage(_sentinels(8), "d_advance2")
-
-        schema = ranked.drop("rn").schema
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(d)
-        )
-        left = (
-            src.where(F.col("event_type") == "purchase")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("l_user"),
-                F.col("ts").alias("l_ts"),
-            )
-        )
-        right = (
-            src.where(F.col("event_type") == "click")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("r_user"),
-                F.col("ts").alias("r_ts"),
-            )
-        )
-        j = left.join(
-            right,
-            (F.col("l_user") == F.col("r_user"))
-            & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 40 MINUTES"))
-            & (F.col("r_ts") <= F.col("l_ts")),
-            "full_outer",
-        )
-        _SINK_SEQ[0] += 1
-        name = f"__stream_fouter_{_SINK_SEQ[0]}"
-        q = (
-            j.select(
-                "purchase_id",
-                "click_id",
-                F.coalesce(F.col("l_user"), F.col("r_user")).alias("user_id"),
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = (
-            spark.table(name)
-            # drops BOTH sentinel emission shapes (a sentinel purchase
-            # emits left-null-side, a sentinel click right-null-side —
-            # each with its own NEGATIVE coalesced user_id). NULL
-            # coalesced user_ids are REAL rows, not sentinels: a
-            # NULL-user event never equi-joins, so it emits as its own
-            # null-side row exactly as the oracle's FULL JOIN does —
-            # keep it (ADVICE r13; the negative-id guard above ignores
-            # NULLs by SQL semantics, and current testdata has no NULL
-            # user_ids, so this is latent-proofing, not a live fix).
-            .where((F.col("user_id") >= 0) | F.col("user_id").isNull())
-            .select("purchase_id", "click_id", "user_id")
-            .localCheckpoint(eager=True)  # outlive the staged inputs
-        )
-    finally:
-        _stop_quietly(q)
-        shutil.rmtree(d, ignore_errors=True)
-    return out

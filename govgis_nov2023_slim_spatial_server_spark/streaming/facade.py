@@ -3,31 +3,90 @@
 The reference is pure request/response batch (SURVEY.md §2.3 — no streaming
 surface); the driver's `events` table motivates this optional facade. The
 same windowing expressions as operators/windows.py run under ``readStream``
-with watermarks for late data. Not oracle-checkable (DuckDB has no
-streaming); validated in tests by comparing a stream-over-files run against
-the batch operator on the same input.
+with watermarks for late data.
+
+``drain`` is the one sink every stream in the package runs to: an
+availableNow run to a memory sink whose rows come back as a DataFrame.
+``staged_stream`` is the one source for streams that need a fixed
+micro-batch order: one parquet file per micro-batch. Both clean up after
+themselves, so a session that runs many streams keeps no sink views,
+queries or temp dirs behind.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
-def read_events_stream(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """File-source stream over a parquet directory (the test harness feeds
-    files incrementally; in production this would be Kafka/queue-backed)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+@contextmanager
+def staged_stream(spark: SparkSession, frames: list[DataFrame]) -> Iterator[DataFrame]:
+    """File-source stream over ``frames``, one micro-batch per frame, in
+    list order.
+
+    Each frame is written as ONE parquet file, and the files get strictly
+    increasing mtimes: the file source orders by mtime
+    (``latestFirst=false``) and ``maxFilesPerTrigger=1`` makes one
+    micro-batch per file, so list order is processing order. The stream's
+    schema is the first frame's. The staging dir is removed on exit, also
+    on error; a DataFrame returned by ``drain`` inside the block reads the
+    sink's rows, not these files, so it outlives the block."""
+    d = tempfile.mkdtemp(prefix="stream_stage_")
+    try:
+        for i, frame in enumerate(frames):
+            stage = os.path.join(d, f"_stage_{i}")
+            frame.coalesce(1).write.parquet(stage)
+            dst = os.path.join(d, f"f{i:03d}.parquet")
+            shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
+            shutil.rmtree(stage, ignore_errors=True)
+            os.utime(dst, (1_700_000_000 + 100 * i,) * 2)
+        yield (
+            spark.readStream.schema(frames[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(d)
+        )
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def drain(df: DataFrame, mode: str) -> DataFrame:
+    """Run the streaming ``df`` to completion and return its output rows.
+
+    One availableNow run to a memory sink under a fresh query name, in
+    ``mode`` ("complete", "append" or "update"), with a checkpoint dir of
+    its own. The query is stopped and the checkpoint dir removed in
+    ``finally``. The returned DataFrame reads the sink's rows, which live on
+    the driver; the sink's temp view is dropped before returning, so the
+    rows go away with the last reference to the result."""
+    spark = df.sparkSession
+    name = f"__stream_{uuid.uuid4().hex}"
+    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+    q = None
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        if q is not None:
+            q.stop()
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def streaming_tumbling_counts(
@@ -140,17 +199,3 @@ def streaming_interval_join(
         F.col("r.event_id").alias("right_id"),
         F.col(f"l.{user_col}").alias("user_id"),
     )
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, timeout_s: int = 60
-) -> None:
-    """Drive a stream to completion against a finite file source (tests)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)

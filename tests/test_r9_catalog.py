@@ -320,7 +320,10 @@ def test_stream_left_outer_join_null_emission(spark, tmp_path):
     """The streaming-specific contract: a purchase with NO qualifying
     click emits exactly one NULL-click row once the watermark proves no
     match can arrive; matched purchases emit one row per match and no
-    null row; clicks AFTER the purchase never match."""
+    null row; clicks AFTER the purchase never match. A purchase with a
+    NULL user is a real row too: it never equi-joins, so it emits its
+    NULL-click row with a NULL user, as the oracle's LEFT JOIN does (the
+    sink-side sentinel filter must not drop it)."""
     base = pd.Timestamp("2024-03-01 00:00:00")
     rows = [  # (event_id, user_id, seconds, type)
         (1, 1, 1000, "click"),
@@ -331,11 +334,12 @@ def test_stream_left_outer_join_null_emission(spark, tmp_path):
         (6, 4, 9000, "click"),
         (7, 4, 9100, "click"),
         (8, 4, 9200, "purchase"),  # two matches -> two rows
+        (9, None, 9300, "purchase"),  # NULL user -> NULL row, NULL user
     ]
     df = pd.DataFrame(
         {
             "event_id": [r[0] for r in rows],
-            "user_id": [r[1] for r in rows],
+            "user_id": pd.array([r[1] for r in rows], dtype="Int64"),
             "ts": [base + pd.Timedelta(seconds=r[2]) for r in rows],
             "event_type": [r[3] for r in rows],
             "value": 1.0,
@@ -344,11 +348,10 @@ def test_stream_left_outer_join_null_emission(spark, tmp_path):
     )
     df["ts"] = df["ts"].astype("datetime64[us]")
     df.to_parquet(f"{tmp_path}/events.parquet", index=False)
-    got = sorted(
-        (r["purchase_id"], r["click_id"])
-        for r in QUERIES["stream_left_outer_join"](spark, str(tmp_path)).collect()
-    )
-    assert got == [(2, 1), (3, None), (4, None), (8, 6), (8, 7)]
+    out = QUERIES["stream_left_outer_join"](spark, str(tmp_path)).collect()
+    got = sorted((r["purchase_id"], r["click_id"]) for r in out)
+    assert got == [(2, 1), (3, None), (4, None), (8, 6), (8, 7), (9, None)]
+    assert [r["user_id"] for r in out if r["purchase_id"] == 9] == [None]
 
 
 def test_spatial_union_area_dedups_overlap(spark, tmp_path):

@@ -1,12 +1,13 @@
 import datetime
 
 import pytest
+from pyspark.sql import functions as F
 
-from govgis_nov2023_slim_spatial_server_spark.streaming.facade import read_events_stream
+from govgis_nov2023_slim_spatial_server_spark.streaming.facade import drain, staged_stream
 from govgis_nov2023_slim_spatial_server_spark.streaming.stateful import running_totals_per_user
 
 
-def test_stateful_running_totals_match_batch(spark, tmp_path):
+def test_stateful_running_totals_match_batch(spark):
     base = datetime.datetime(2024, 1, 1)
     rows = [
         (i, base + datetime.timedelta(minutes=i), i % 3, "t", float(i)) for i in range(90)
@@ -14,21 +15,12 @@ def test_stateful_running_totals_match_batch(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "event_id: long, ts: timestamp, user_id: long, event_type: string, value: double"
     )
-    path = str(tmp_path / "ev")
     # several files → several micro-batches → state must carry across
-    df.repartition(6).write.mode("overwrite").parquet(path)
-
-    stream = read_events_stream(spark, path, df.schema, max_files_per_trigger=2)
-    out = running_totals_per_user(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
+    frames = [df.where(F.floor(F.col("event_id") / 15) == i) for i in range(6)]
+    with staged_stream(spark, frames) as stream:
+        drain(running_totals_per_user(stream), "update").createOrReplaceTempView(
+            "running_totals"
+        )
 
     # in update mode the LAST row per user is the final running total
     final = spark.sql(

@@ -1,23 +1,31 @@
 """Streaming facade: stream-over-files must agree with the batch operator
 on the same finite input (the only way to grade streaming without an
-oracle, SURVEY.md §5.2)."""
+oracle, SURVEY.md §5.2); and the one harness (`staged_stream` as source,
+`drain` as sink) leaves nothing behind in the session or on disk."""
 
 import datetime
+import re
+import tempfile
+from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from govgis_nov2023_slim_spatial_server_spark.operators.windows import tumbling_window_agg
 from govgis_nov2023_slim_spatial_server_spark.streaming.facade import (
-    read_events_stream,
-    run_stream_to_memory,
+    drain,
+    staged_stream,
+    streaming_dedup,
+    streaming_interval_join,
     streaming_session_counts,
     streaming_tumbling_counts,
 )
 
+PACKAGE = Path(__file__).resolve().parents[1] / "govgis_nov2023_slim_spatial_server_spark"
+
 
 @pytest.fixture(scope="module")
-def event_files(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("events_stream"))
+def events(spark):
     rows = []
     base = datetime.datetime(2024, 1, 1)
     for i in range(200):
@@ -30,23 +38,24 @@ def event_files(spark, tmp_path_factory):
                 float(i),
             )
         )
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "event_id: long, ts: timestamp, user_id: long, event_type: string, value: double"
     )
-    df.repartition(4).write.mode("overwrite").parquet(path)
-    return path, df
 
 
-def test_streaming_tumbling_matches_batch(spark, event_files):
-    path, df = event_files
-    stream = read_events_stream(spark, path, df.schema, max_files_per_trigger=2)
-    agg = streaming_tumbling_counts(stream, "1 hour", watermark="2 hours")
-    run_stream_to_memory(agg, "t_counts", timeout_s=120)
+def _quarters(df):
+    """Four frames in event-id (= event-time) order: four micro-batches."""
+    return [df.where(F.floor(F.col("event_id") / 50) == i) for i in range(4)]
+
+
+def test_streaming_tumbling_matches_batch(spark, events):
+    with staged_stream(spark, _quarters(events)) as stream:
+        agg = streaming_tumbling_counts(stream, "1 hour", watermark="2 hours")
+        out = drain(agg, "complete")
     got = {
-        r["window_start"]: (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM t_counts").collect()
+        r["window_start"]: (r["n_events"], r["sum_value"]) for r in out.collect()
     }
-    batch = tumbling_window_agg(df, "1 hour")
+    batch = tumbling_window_agg(events, "1 hour")
     expect = {
         r["window_start"]: (r["n_events"], float(r["sum_value"]))
         for r in batch.collect()
@@ -57,39 +66,26 @@ def test_streaming_tumbling_matches_batch(spark, event_files):
         assert got[k][1] == pytest.approx(expect[k][1])
 
 
-def test_streaming_session_counts_runs(spark, event_files):
-    path, df = event_files
-    stream = read_events_stream(spark, path, df.schema, max_files_per_trigger=2)
-    agg = streaming_session_counts(stream, gap="30 minutes", watermark="2 hours")
-    run_stream_to_memory(agg, "s_counts", timeout_s=120)
-    rows = spark.sql("SELECT * FROM s_counts").collect()
+def test_streaming_session_counts_runs(spark, events):
+    with staged_stream(spark, _quarters(events)) as stream:
+        agg = streaming_session_counts(stream, gap="30 minutes", watermark="2 hours")
+        rows = drain(agg, "complete").collect()
     assert len(rows) > 0
     assert sum(r["n_events"] for r in rows) == 200
 
 
-def test_stream_stream_join_matches_batch(spark, event_files):
-    from pyspark.sql import functions as F
+def test_stream_stream_join_matches_batch(spark, events):
+    with staged_stream(spark, _quarters(events)) as stream:
+        purchases = stream.where(F.col("event_id") % 2 == 0)
+        clicks = stream.where(F.col("event_id") % 2 == 1)
+        joined = streaming_interval_join(
+            purchases, clicks, lookback="40 minutes", watermark="48 hours"
+        )
+        out = drain(joined, "append")
+    got = {(r["left_id"], r["right_id"]) for r in out.collect()}
 
-    from govgis_nov2023_slim_spatial_server_spark.streaming.facade import (
-        streaming_interval_join,
-    )
-
-    path, df = event_files
-    purchases = read_events_stream(spark, path, df.schema).where(F.col("event_id") % 2 == 0)
-    clicks = read_events_stream(spark, path, df.schema).where(F.col("event_id") % 2 == 1)
-    joined = streaming_interval_join(purchases, clicks, lookback="40 minutes", watermark="48 hours")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["left_id"], r["right_id"]) for r in spark.sql("SELECT * FROM ssj").collect()}
-
-    lb = df.where(F.col("event_id") % 2 == 0).alias("l")
-    rb = df.where(F.col("event_id") % 2 == 1).alias("r")
+    lb = events.where(F.col("event_id") % 2 == 0).alias("l")
+    rb = events.where(F.col("event_id") % 2 == 1).alias("r")
     expect = {
         (r["left_id"], r["right_id"])
         for r in lb.join(
@@ -104,27 +100,78 @@ def test_stream_stream_join_matches_batch(spark, event_files):
     assert got == expect and len(got) > 0
 
 
-def test_streaming_dedup(spark, event_files, tmp_path):
-    from pyspark.sql import functions as F
-
-    from govgis_nov2023_slim_spatial_server_spark.streaming.facade import streaming_dedup
-
-    path, df = event_files
-    stream = read_events_stream(spark, path, df.schema, max_files_per_trigger=2)
-    deduped = streaming_dedup(stream, ["user_id"], watermark="48 hours")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("sdedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT user_id, count(*) AS n FROM sdedup GROUP BY user_id").collect()
+def test_streaming_dedup(spark, events):
+    with staged_stream(spark, _quarters(events)) as stream:
+        deduped = streaming_dedup(stream, ["user_id"], watermark="48 hours")
+        out = drain(deduped, "append")
+    rows = out.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
     # exactly one surviving row per user key
     assert {r["user_id"] for r in rows} == {0, 1, 2, 3, 4}
     assert all(r["n"] == 1 for r in rows)
+
+
+def _leftovers(spark, tmp):
+    """Sink views, active queries and files left in the temp dir ``tmp``."""
+    return (
+        [t.name for t in spark.catalog.listTables() if t.name.startswith("__stream_")],
+        len(spark.streams.active),
+        sorted(p.name for p in Path(tmp).iterdir()),
+    )
+
+
+@pytest.fixture
+def own_tmp(tmp_path, monkeypatch):
+    """Point `tempfile` at an empty dir of the test's own, so the harness's
+    checkpoint and staging dirs land there and nothing else does."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path
+
+
+def test_drain_result_outlives_staged_stream(spark, events, own_tmp):
+    """The sink's rows live on the driver: the drained frame still collects
+    after the staged files, the checkpoint dir and the sink view are gone."""
+    with staged_stream(spark, _quarters(events)) as stream:
+        out = drain(stream.select("event_id"), "append")
+    assert _leftovers(spark, own_tmp) == ([], 0, [])
+    assert sorted(r["event_id"] for r in out.collect()) == list(range(200))
+    assert out.count() == 200
+
+
+def test_harness_leaves_nothing_behind(spark, events, sf_dir, own_tmp):
+    """No `__stream_*` view, active query, checkpoint dir or staging dir
+    survives a drain, nor a whole catalog entry that stages and drains."""
+    from govgis_nov2023_slim_spatial_server_spark.catalog import QUERIES
+
+    with staged_stream(spark, _quarters(events)) as stream:
+        drain(streaming_tumbling_counts(stream, "1 hour"), "complete").collect()
+    assert _leftovers(spark, own_tmp) == ([], 0, [])
+    QUERIES["stream_late_data_drop"](spark, sf_dir).collect()
+    assert _leftovers(spark, own_tmp) == ([], 0, [])
+
+
+def test_staged_stream_removes_its_dir_on_error(spark, events, own_tmp):
+    with pytest.raises(RuntimeError):
+        with staged_stream(spark, _quarters(events)):
+            assert len(list(own_tmp.iterdir())) == 1
+            raise RuntimeError("boom")
+    assert _leftovers(spark, own_tmp) == ([], 0, [])
+
+
+def test_one_sink_and_one_staging_site():
+    """The memory sink and the forced file mtimes each live in exactly one
+    place, streaming/facade.py: every stream in the package goes through
+    `drain` and `staged_stream`."""
+    hits = {
+        pat: [
+            f"{path.relative_to(PACKAGE)}:{i}"
+            for path in sorted(PACKAGE.rglob("*.py"))
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if re.search(pat, line)
+        ]
+        for pat in (r'format\("memory"\)', r"os\.utime\(")
+    }
+    for pat, where in hits.items():
+        assert len(where) == 1 and where[0].startswith("streaming/facade.py:"), (pat, where)
 
 
 def test_session_window_gap_boundary_merges(spark):
