@@ -13,7 +13,7 @@ from ..functions.hashes import char_shingles
 from ..functions.text import tokens
 from ..functions.vector import dot, euclidean_distance, l2_norm
 from ..schemas import load_table
-from ..session import checkpoint, local_rows_df
+from ..session import local_rows_df
 from ._registry import fmt_vec_sql, query, rnd_nz
 from .vector_text import PROBE_SQL, PROBE_VEC
 
@@ -1291,6 +1291,36 @@ _BFS_LEVEL_SQL = """
       WHERE {excl})"""
 
 
+# One round of min-label propagation over the order-part rows: each
+# order's minimum label, then each part's minimum of its own label and its
+# orders' minimum + 1. A NULL order links nothing; its rows keep their own
+# labels. Round 1 labels the seed rows in place; later rounds read the
+# previous round's part labels, node-sized and broadcast onto the rows.
+_BFS_ROUND = """
+    l{i} AS (
+      SELECT p, MIN(lvl) AS lvl FROM (
+        SELECT p, LEAST(lvl, CASE WHEN o IS NOT NULL
+                             THEN MIN(lvl) OVER (PARTITION BY o) + 1 END) AS lvl
+        FROM ({rows}))
+      WHERE lvl IS NOT NULL GROUP BY p)"""
+_BFS_SQL = (
+    "WITH lio AS (SELECT /*+ REPARTITION({n}, o) */ l_orderkey AS o,"
+    " l_partkey AS p FROM {li} WHERE l_partkey IS NOT NULL),"
+    + _BFS_ROUND.format(
+        i=1, rows="SELECT o, p, CASE WHEN p % 97 = 1 THEN 0 END AS lvl FROM lio"
+    )
+    + "".join(
+        "," + _BFS_ROUND.format(
+            i=i,
+            rows=f"SELECT /*+ BROADCAST(l{i - 1}) */ o, lio.p, l{i - 1}.lvl"
+            f" FROM lio LEFT JOIN l{i - 1} ON lio.p = l{i - 1}.p",
+        )
+        for i in (2, 3)
+    )
+    + " SELECT p AS l_partkey, lvl FROM l3 ORDER BY l_partkey"
+)
+
+
 @query(
     "graph_bfs_levels",
     """
@@ -1330,121 +1360,31 @@ _BFS_LEVEL_SQL = """
     """,
 )
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS levels — the multi-hop DISTANCE primitive the
-    graph family lacked (components = dedup_components, triangles =
-    graph_triangle_count, centrality = pagerank_*; nothing measured
-    HOPS until now). Seeds are parts with ``l_partkey % 97 == 1``;
-    every node of the co-order part graph reachable within 3 hops gets
-    its exact hop count (level 0..3), one row per reached node —
-    all-integer, so the whole frontier trajectory hash-compares
-    bit-exactly.
+    """Multi-source BFS levels over the co-order part graph (the
+    pagerank_power_iters graph: two parts are adjacent when they share
+    an order). Seeds are parts with ``l_partkey % 97 == 1``; every part
+    within 3 hops gets its exact hop count (level 0..3), one row per
+    reached part, all-integer so the whole result hash-compares exactly.
 
-    Graph: the pagerank_power_iters co-order part graph (per-order
-    fan-out bounded by order size, so the self-join never goes
-    quadratic in the table) — kept as MULTI-edges engine-side: BFS
-    needs only reachability and each level DISTINCTs its targets, so
-    the pair-level dedup shuffle is dropped (r15 optimization; the
-    oracle's DISTINCT pp is set-equivalent for levels). Isolated
-    seed nodes (single-line orders) are level 0 — the node set is
-    DISTINCT l_partkey, not just edge endpoints.
+    Engine: three rounds of min-label propagation (``_BFS_ROUND``) over
+    lineitem's order-part rows, not a BFS over the materialized pair
+    graph. Each round advances every label by one hop and is linear in
+    lineitem, where the pair self-join grows with the square of each
+    order's size. The whole query is one lazy SQL statement: one keyed
+    exchange on the order serves all three rounds' windows, and nothing
+    runs until the caller's action. The exchange is pinned to
+    ``defaultParallelism``: at local[4], sf0.1, widths 2 and 8 took 1.92
+    and 1.81 s against 1.49 s at 4 (median of 5). NULLs follow the
+    oracle: a NULL part is never a node, a NULL order links no parts,
+    and a seed is level 0 on any row.
 
-    Engine: textbook frontier iteration, driver-bounded like
-    pagerank/kmeans. UNDIRECTED pairs are localCheckpointed ONCE (r16:
-    half the rows of the doubled edge table the r15 form materialized;
-    the per-level explode to both directions is a pure map over the
-    checkpointed rows — three frontier joins would otherwise each
-    rescan the co-order self-join: the plan-branch rescan trap), then
-    per level ONE broadcast of the node-sized frontier into the pair
-    scan, the visited anti-join applied BEFORE the target DISTINCT
-    (r16, guide §2.3 — the broadcast anti is a map-side filter, so
-    pruning first shrinks the distinct's exchange instead of shuffling
-    already-visited targets), and a localCheckpoint so the
-    visited/frontier lineage never chains across levels. The
-    VISITED-PRUNED loop is kept deliberately: an anti-join-free
-    candidate-min-level variant (union C_k = N(C_{k-1}) per level,
-    groupBy(id).min(lvl) at the end — one job fewer per level) was
-    MEASURED SLOWER at sf0.1 (3.39 vs 2.88 s median — this co-order
-    graph is dense, so unpruned frontiers saturate to ~the whole node
-    set by level 2 and the level joins re-emit nearly every edge; the
-    anti-join's broadcast build costs less than the fan-in it
-    removes). At 100 TB the frontier outgrows broadcast: the
-    production swap is pairs bucketed by key (shuffle-free frontier
-    join, the cell_bucketed_ring_join layout argument) with the
-    anti-join keyed on the 8-byte node id — the loop shape is
-    unchanged, one bounded pass per level.
-
-    Oracle: the same levels unrolled into chained CTEs (NOT IN
-    exclusions over the prior levels — ids are non-null by
-    construction, so NOT IN is the plain set difference)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # Pin the self-join shuffle to cluster parallelism (r15, guide §2.5,
-    # the dissolve-family class): AQE's byte-based coalescing sees the
-    # MB-scale key columns and runs the SMJ on ~3 partitions with one
-    # straggler — the entry's hottest stage. An explicit key repartition
-    # is exempt from coalescing, satisfies the join's clustering on both
-    # sides (one exchange, reused), and is parallelism-derived.
-    lij = li.repartition(
-        2 * spark.sparkContext.defaultParallelism, "l_orderkey"
-    )
-    a, b2 = lij.alias("a"), lij.alias("b")
-    pp = (
-        a.join(b2, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-    )
-    # NO pair-level DISTINCT here (r15 optimization): BFS needs only
-    # reachability and every level DISTINCTs its target set, so a
-    # multi-edge changes nothing — the dedup bought ~10% fewer edges
-    # (1.35M -> 1.2M pairs at sf0.1) for a full shuffle + two-sided
-    # hash-agg of the self-join output. The pagerank sibling KEEPS its
-    # DISTINCT because degrees and messages there count edges.
-    # Checkpoint the UNDIRECTED pairs, not the doubled edge table (r16):
-    # the materialization job writes half the rows, and the per-level
-    # explode to both directions is a pure map over the checkpointed
-    # frame — no shuffle, re-run per level on already-materialized rows.
-    # Then right-size the per-level map stages (r16, guide §2.2/§6):
-    # the pairs inherit the self-join's 64-partition width, so every
-    # level's join+distinct otherwise schedules 64 near-empty tasks —
-    # see session.checkpoint.
-    pp = checkpoint(pp)
-    e = pp.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("pa").alias("s"), F.col("pb").alias("d")),
-                F.struct(F.col("pb").alias("s"), F.col("pa").alias("d")),
-            )
-        ).alias("x")
-    ).select("x.s", "x.d")
-    nodes = li.select(F.col("l_partkey").alias("id")).distinct()
-    # Seed frontier checkpointed once (r15): level 1 referenced the
-    # distinct-seed aggregate twice (broadcast + anti side) and the final
-    # union a third time — three full lineitem scans for one small set.
-    frontier = nodes.where(F.col("id") % 97 == 1).localCheckpoint(eager=False)
-    visited = frontier.withColumn("lvl", F.lit(0).cast("int"))
-    for lvl in (1, 2, 3):
-        nxt = (
-            e.join(
-                F.broadcast(frontier.select(F.col("id").alias("s"))), "s"
-            )
-            .select(F.col("d").alias("id"))
-            # visited is node-bounded (the broadcast-frontier size class);
-            # without the hint the checkpointed union has no stats and
-            # levels 2-3 plan the anti-join as SMJ — two exchanges + two
-            # sorts per level on both sides (r15, guide §3.1). Applied
-            # BEFORE the distinct (r16): the broadcast anti is a map-side
-            # filter, so already-visited targets never reach the
-            # distinct's exchange.
-            .join(F.broadcast(visited.select("id")), "id", "left_anti")
-            .distinct()
-            .withColumn("lvl", F.lit(lvl).cast("int"))
-        )
-        nxt = nxt.localCheckpoint(eager=False)
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited.orderBy("id").select(
-        F.col("id").alias("l_partkey"), "lvl"
+    Oracle: the same levels unrolled into chained CTEs over the DISTINCT
+    pair graph (NOT IN exclusions over the prior levels; ids are
+    non-null there)."""
+    return spark.sql(
+        _BFS_SQL,
+        li=_t(spark, sf_dir, "lineitem"),
+        n=spark.sparkContext.defaultParallelism,
     )
 
 

@@ -520,8 +520,10 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                     > F.struct("ts_us", "event_id")
                 )
             )
+            # null-safe key: NULL is one user, as the batch window's
+            # (and the oracle's) PARTITION BY user_id reads it
             merged = s.join(
-                bb, s["user_id"] == bb["b_user_id"], "full_outer"
+                bb, s["user_id"].eqNullSafe(bb["b_user_id"]), "full_outer"
             ).select(
                 F.coalesce("user_id", "b_user_id").alias("user_id"),
                 F.when(take_b, F.col("b_ts_us")).otherwise(F.col("ts_us")).alias("ts_us"),

@@ -87,10 +87,11 @@ def local_rows_df(spark, rows, schema):
 
 
 # Width cost classes for `checkpoint`: (rows per task, minimum width).
-# Driver-loop iteration frames (hash-min CC, BFS levels) re-scan their
-# checkpoint once per step, so per-task scheduling dominates and ~64k rows
-# per task is right (profiled ~0.7 s/iteration of near-empty tasks on a
-# 92k-edge graph at the inherited shuffle width). Geometry stores feed
+# Frames that later steps re-scan (the hash-min CC edges once per driver
+# iteration, the MinHash signature and gram frames once per consumer) are
+# cheap per row, so per-task scheduling dominates and ~64k rows per task
+# is right (profiled ~0.7 s/iteration of near-empty tasks on a 92k-edge
+# graph at the inherited shuffle width). Geometry stores feed
 # heavy per-row kernels (WKB parse, rasterize): ~1k rows per task keeps
 # every kernel busy, and the floor of 4 keeps tiny gate stores parallel
 # (measured at the 15k-row sf0.1 store: width 32 cost spatial_point_filter

@@ -115,9 +115,23 @@ def test_checkpoint_width_follows_rows_and_floor(spark, rows, cost, width):
     assert cp.count() == rows
 
 
-# Every entry whose width this policy decides (graph pairs, CC edges,
-# signature and gram checkpoints, spread inputs, both store kinds), plus
-# the rows-only MinHash entry that shares the signature checkpoint.
+def test_bfs_levels_is_one_lazy_plan(spark, sf_dir):
+    """graph_bfs_levels runs no job while it is built (once the lineitem
+    schema is memoized), and its count runs at most 8: the order exchange,
+    each round's part aggregate, the two label broadcasts and the count."""
+    QUERIES["graph_bfs_levels"](spark, sf_dir)
+    df, build_jobs = _jobs(
+        spark, "bfs-build", lambda: QUERIES["graph_bfs_levels"](spark, sf_dir)
+    )
+    _, count_jobs = _jobs(spark, "bfs-count", df.count)
+    assert build_jobs == 0
+    assert count_jobs <= 8
+
+
+# Every entry whose width this policy decides (CC edges, signature and
+# gram checkpoints, spread inputs, both store kinds), the BFS entry's
+# keyed order exchange, and the rows-only MinHash entry that shares the
+# signature checkpoint.
 WIDTH_ENTRIES = [
     "graph_bfs_levels",
     "minhash_neardup_oracle",

@@ -66,7 +66,7 @@ FINGERPRINTS = {
     "spatial_clip_convex_rings": (3, 0, 0, 1, 0, 0, 0),
     "bpe_encode_merges": (5, 0, 0, 0, 0, 0, 0),
     "spatial_clip_holed_boundary": (3, 0, 0, 1, 0, 0, 0),
-    "graph_bfs_levels": (1, 0, 0, 0, 0, 0, 4),
+    "graph_bfs_levels": (9, 0, 0, 0, 0, 0, 0),
     "winnowing_fingerprints": (2, 0, 0, 0, 0, 0, 0),
     "spatial_convex_hull_edges": (3, 0, 0, 1, 1, 0, 0),
 }

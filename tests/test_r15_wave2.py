@@ -2,7 +2,8 @@
 
 - graph_bfs_levels: exact hop counts on a synthetic PATH graph (the one
   topology where every level 0..3 and unreachability all appear at
-  once), an isolated-seed fixture, and sf0.001 oracle parity.
+  once), an isolated-seed fixture, NULL keys against the DuckDB oracle,
+  and sf0.001 oracle parity.
 - winnowing_fingerprints: the full selection pipeline re-implemented
   independently in Python (token poly-hash → gram keys → rightmost-min
   windows → distinct positions) and compared row-for-row on fixtures
@@ -31,13 +32,13 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _write_lineitem(rows, dirname: str) -> None:
-    """rows: list of (orderkey, linenumber, partkey)."""
+    """rows: list of (orderkey, linenumber, partkey); a key may be None."""
     base = pd.Timestamp("1995-01-01")
     df = pd.DataFrame(
         {
-            "l_orderkey": [r[0] for r in rows],
-            "l_partkey": [r[2] for r in rows],
-            "l_suppkey": [r[0] % 5 + 1 for r in rows],
+            "l_orderkey": pd.array([r[0] for r in rows], dtype="Int64"),
+            "l_partkey": pd.array([r[2] for r in rows], dtype="Int64"),
+            "l_suppkey": [(r[0] or 0) % 5 + 1 for r in rows],
             "l_linenumber": [r[1] for r in rows],
             "l_quantity": [1.0] * len(rows),
             "l_extendedprice": [100.0] * len(rows),
@@ -103,6 +104,32 @@ class TestGraphBfsLevels:
         # distances from {1, 98}: 2→1 (from 1), 6→1 (from 98),
         # 3→2, 5→2, 4→3 (tie: 3 from both ends)
         assert got == {1: 0, 98: 0, 2: 1, 6: 1, 3: 2, 5: 2, 4: 3}
+
+    def test_null_keys_match_oracle(self, spark):
+        """NULL keys as the oracle reads them: a NULL order never links
+        two parts (40 and 41 share only a NULL order, beside seed 98), a
+        seed whose only row has a NULL order is still level 0 (98), and
+        a NULL part is never a node, not even inside a seed's order."""
+        rows = [
+            (1, 1, 1), (1, 2, 2), (1, 3, None), (2, 1, 2), (2, 2, 3),
+            (None, 1, 98), (None, 2, 40), (None, 3, 41),
+            (5, 1, 40), (6, 1, None), (6, 2, 41),
+        ]
+        with tempfile.TemporaryDirectory() as d:
+            _write_lineitem(rows, d)
+            con = duckdb.connect()
+            con.execute(
+                "CREATE VIEW lineitem AS SELECT * FROM "
+                f"read_parquet('{d}/lineitem.parquet')"
+            )
+            want = con.execute(ORACLES["graph_bfs_levels"]).fetchall()
+            con.close()
+            got = [
+                tuple(r)
+                for r in QUERIES["graph_bfs_levels"](spark, d).collect()
+            ]
+        assert want == [(1, 0), (2, 1), (3, 2), (98, 0)]
+        assert got == want
 
     def test_oracle_parity_sf0001(self, spark):
         con = duckdb.connect()

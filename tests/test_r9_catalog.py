@@ -3,10 +3,11 @@ union edge cases, time-weighted average arithmetic."""
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
-from govgis_nov2023_slim_spatial_server_spark.catalog import QUERIES
+from govgis_nov2023_slim_spatial_server_spark.catalog import ORACLES, QUERIES
 
 
 def _write_part(rows, d):
@@ -198,6 +199,51 @@ def test_stream_cdc_apply_out_of_order_versions(spark, tmp_path):
     }
     # user 1 -> ('click', 2.0) wins; user 2 -> ('signup', 7.5)
     assert out == {"click": (1, 20000), "signup": (1, 75000)}
+
+
+def test_stream_cdc_apply_null_user_is_one_key(spark, tmp_path):
+    """NULL is one key, as the oracle's PARTITION BY user_id reads it:
+    NULL-user changes arrive in all three batches (events 1, 5 and 9)
+    and merge into ONE snapshot row, the version-latest (event 5; event
+    9 arrives last with an older ts and must lose)."""
+    base = pd.Timestamp("2024-03-01 00:00:00")
+    rows = [  # (event_id, user_id, seconds, event_type, value)
+        (1, None, 100, "view", 1.0),
+        (2, 1, 200, "click", 2.0),
+        (3, 2, 300, "view", 3.0),
+        (4, 1, 400, "view", 4.0),
+        (5, None, 500, "click", 5.0),
+        (6, 3, 600, "click", 6.0),
+        (7, 2, 700, "click", 7.0),
+        (8, 3, 50, "view", 8.0),
+        (9, None, 50, "view", 9.0),
+    ]
+    df = pd.DataFrame(
+        {
+            "event_id": [r[0] for r in rows],
+            "user_id": pd.array([r[1] for r in rows], dtype="Int64"),
+            "ts": [base + pd.Timedelta(seconds=r[2]) for r in rows],
+            "event_type": [r[3] for r in rows],
+            "value": [r[4] for r in rows],
+            "props": "{}",
+        }
+    )
+    df["ts"] = df["ts"].astype("datetime64[us]")
+    df.to_parquet(f"{tmp_path}/events.parquet", index=False)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/events.parquet')"
+    )
+    want = {r[0]: r[1:] for r in con.execute(ORACLES["stream_cdc_apply"]).fetchall()}
+    con.close()
+    got = {
+        r["event_type"]: (r["n_users"], r["sum_last_value_e4"])
+        for r in QUERIES["stream_cdc_apply"](spark, str(tmp_path)).collect()
+    }
+    # users NULL -> click 5.0, 1 -> view 4.0, 2 -> click 7.0, 3 -> click 6.0
+    assert want == {"click": (3, 180000), "view": (1, 40000)}
+    assert got == want
 
 
 def test_wkb_linestring_codec_and_length():
