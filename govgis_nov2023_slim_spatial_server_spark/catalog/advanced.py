@@ -6,6 +6,9 @@ reference user gets the full general-analytics surface.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -14,8 +17,8 @@ from ..functions.text import tokens
 from ..functions.vector import dot, euclidean_distance, l2_norm
 from ..schemas import load_table
 from ..session import local_rows_df
-from ._registry import fmt_vec_sql, query, rnd_nz
-from .vector_text import PROBE_SQL, PROBE_VEC
+from ._registry import query, rnd_nz
+from .vector_text import PROBE_SQL, PROBE_VEC, seed_centroids
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -573,44 +576,20 @@ def kmeans_assign_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     with vector_centroids_by_label (the M-step mean), this is the full
     k-means iteration a clustering/topic-bucketing pipeline loops.
 
-    Scale shape: the k centroids are collected to the driver (bounded —
-    k rows, the IVF-seed pattern) and compiled into the row expression as
-    literals, so the argmin is a per-row LEAST over k (distance, cid)
-    structs: NO cross join, NO per-vector window or shuffle — the only
+    Scale shape: the k centroids are collected to the driver
+    (`seed_centroids`, bounded — k rows) and compiled into the row
+    expression as literals (`operators.kmeans.assign_nearest`), so the
+    argmin is a per-row LEAST over k (distance, cid) structs: NO cross join, NO per-vector window or shuffle — the only
     Exchange left is the map-combined k-row per-cluster aggregate. This
     is exactly how IVF cell assignment scans 100 TB. Distances use the
     same sequential-fold arithmetic as knn_euclidean, so DuckDB's
     list_distance matches bit-for-bit; struct comparison is
     lexicographic, giving the same (dist, cid) tie-break as the oracle's
     window."""
-    e = _t(spark, sf_dir, "embeddings")
-    cents = sorted(
-        e.where(F.col("vec_id").between(1, 8))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    best = F.least(
-        *[
-            F.struct(
-                euclidean_distance(
-                    "embedding", [float(x) for x in r["embedding"]]
-                ).alias("dist"),
-                F.lit(r["vec_id"]).cast("long").alias("cid"),
-            )
-            for r in cents
-        ]
-    )
-    from ..functions.hashes import _let
+    from ..operators.kmeans import assign_nearest
 
-    a = e.select(
-        _let(
-            best,
-            lambda b: F.struct(
-                b.getField("cid").alias("cid"), b.getField("dist").alias("dist")
-            ),
-        ).alias("__b")
-    ).select("__b.cid", "__b.dist")
+    e = _t(spark, sf_dir, "embeddings")
+    a = assign_nearest(e, seed_centroids(e))
     return (
         a.groupBy("cid")
         .agg(
@@ -957,8 +936,7 @@ _QH_BIN_ROWS_MAX = 1 << 22
 
 def _qh_hist_collect(base, aggs, w0: int):
     """Limit-guarded pass-1 histogram collect with the ×16 auto-widen
-    (r12 VERDICT #6; factored in r14 per r13 VERDICT #3 so BOTH quantile
-    entries share it): a histogram wider than ``_QH_GUARD`` (group × bin)
+    (r12 VERDICT #6): a histogram wider than ``_QH_GUARD`` (group × bin)
     rows is rebuilt at 16× the width — the LIMIT caps every attempt's
     collect at guard+1 rows, so the driver never materializes an
     overflow. ``base`` must carry columns ``s`` (group) and ``cents``
@@ -974,6 +952,185 @@ def _qh_hist_collect(base, aggs, w0: int):
         if len(hist) <= _QH_GUARD:
             return hist, w
         w <<= 4  # auto-widen: one extra bounded pass per factor-16 step
+
+
+def _qh_walk(bins, rank: int):
+    """The first of the value-sorted ``(bin, weight, rows)`` triples whose
+    cumulative weight reaches ``rank``: returns ``(bin, rank's offset
+    within it, its row count)``. Pass 1's walk and every refine level
+    share it."""
+    cum = 0
+    for b, ws, c in bins:
+        if cum + ws >= rank:
+            return b, rank - cum, c
+        cum += ws
+
+
+def _hist_quantiles(
+    spark: SparkSession,
+    t: DataFrame,
+    group: str,
+    price: str,
+    weight: str | None,
+    total: str,
+    tag: str,
+) -> DataFrame:
+    """EXACT per-``group`` weighted lower median and ceil-rank p90 of
+    ``price`` (int64 cents, FLOOR(x·100+0.5) on both engines) WITHOUT a
+    global sort. ``weight`` is an integral column; ``None`` is weight 1,
+    which makes the weighted rule the plain order statistic: the k-th
+    smallest value is the smallest v with #{x ≤ v} ≥ k, ties included.
+    Ranks are int-exact on both engines: r50 = (W+1) DIV 2,
+    r90 = (9W+9) DIV 10 = ceil(0.9·W) over the group's total weight W.
+    Output: ``group``, ``total`` (W), ``{tag}50_cents``, ``{tag}90_cents``
+    and the two /100 doubles.
+
+      pass 1: map-combined SUM(weight) + row-count histogram per
+              (group, cents DIV 2^21) — |groups| × occupied-bins rows,
+              corpus-size-independent (`_qh_hist_collect`, auto-widen
+              ×16 past _QH_GUARD);
+      driver: `_qh_walk` locates each rank's bin and its in-bin weight
+              offset; a target bin counted above _QH_BIN_ROWS_MAX rows is
+              re-histogrammed WITHIN itself at 128× finer width (the
+              guard is row count, the window-sort cost; the walk
+              advances by weight) until it fits or reaches width 1;
+      pass 2: re-scan ONLY the target bins behind pushed-down price RANGE
+              predicates (widened ±2 cents so float rounding can't
+              exclude a boundary row) and take MIN(cents) among rows
+              whose in-bin RANGE-cumulative weight reaches the offset —
+              ties share their tie-group total, so duplicates cannot
+              order-diverge. A width-1 bin holds one value and resolves
+              driver-side with no scan.
+
+    NULLs follow the oracles: a NULL price counts toward W and sorts last
+    (its bin walks last and resolves to NULL), and a NULL group is one
+    group (null-safe predicates, the total carried in the target rows
+    rather than a map keyed by the group)."""
+    cents = F.floor(F.col(price) * 100 + F.lit(0.5)).cast("long")
+    wcol = F.lit(1) if weight is None else F.col(weight).cast("long")
+
+    def rows(cond=None) -> DataFrame:
+        src = t if cond is None else t.where(cond)
+        return src.select(
+            F.col(group).alias("s"), cents.alias("cents"), wcol.alias("w")
+        )
+
+    def interval(ts: list[dict]):
+        # price RANGE predicates for parquet row-group pruning; the exact
+        # int64 cents bounds are the downstream refine
+        return reduce(
+            operator.or_,
+            [
+                (F.col(group).isNull() if x["s"] is None else F.col(group) == x["s"])
+                & (F.col(price) >= x["lo"] / 100.0 - 0.02)
+                & (F.col(price) < x["hi"] / 100.0 + 0.02)
+                for x in ts
+            ],
+        )
+
+    aggs = [F.sum("w").alias("wsum"), F.count(F.lit(1)).alias("cnt")]
+    hist, w0 = _qh_hist_collect(rows(), aggs, _QH_W)
+    by_s: dict = {}
+    for r in hist:
+        by_s.setdefault(r["s"], []).append((r["b"], r["wsum"], r["cnt"]))
+    # targets: the smallest cents in [lo, hi) whose in-interval cumulative
+    # weight reaches off; cnt is the interval's ROW count; lo is None for
+    # the NULL-price bin
+    targets = []
+    for s, bins in by_s.items():
+        bins.sort(key=lambda x: (x[0] is None, x[0] or 0))
+        n = sum(ws for _, ws, _ in bins)
+        for q, rank in (("50", (n + 1) // 2), ("90", (9 * n + 9) // 10)):
+            b, off, c = _qh_walk(bins, rank)
+            lo = None if b is None else b * w0
+            targets.append({"s": s, "n": n, "tag": f"{tag}{q}", "lo": lo,
+                            "hi": None if b is None else lo + w0,
+                            "off": off, "cnt": c})
+    if not targets:  # empty input table
+        return spark.createDataFrame(
+            [],
+            f"{group} string, {total} long, {tag}50_cents long,"
+            f" {tag}90_cents long, {tag}50 double, {tag}90 double",
+        )
+
+    # recursion-within-bin: every level narrows ALL still-oversized
+    # targets (they share a width by construction — a target leaves the
+    # set the level its count fits) with ONE bounded histogram pass
+    cur_w = w0
+    while cur_w > 1:
+        oversized = [
+            x for x in targets
+            if x["lo"] is not None and x["cnt"] > _QH_BIN_ROWS_MAX
+        ]
+        if not oversized:
+            break
+        sub_w = max(1, cur_w >> 7)
+        sub_by: dict = {}
+        for r in (
+            rows(interval(oversized))
+            .groupBy(
+                "s",
+                F.expr(f"cents DIV {cur_w}").alias("pb"),
+                F.expr(f"cents DIV {sub_w}").alias("sb"),
+            )
+            .agg(*aggs)
+            .collect()
+        ):  # bounded: ≤ |oversized| × (cur_w/sub_w ≤ 128) rows
+            sub_by.setdefault((r["s"], r["pb"]), []).append(
+                (r["sb"], r["wsum"], r["cnt"])
+            )
+        for x in oversized:
+            sb, x["off"], x["cnt"] = _qh_walk(
+                sorted(sub_by[(x["s"], x["lo"] // cur_w)]), x["off"]
+            )
+            x["lo"], x["hi"] = sb * sub_w, (sb + 1) * sub_w
+        cur_w = sub_w
+
+    direct = [x for x in targets if x["lo"] is None or x["hi"] - x["lo"] == 1]
+    scan = [x for x in targets if x["lo"] is not None and x["hi"] - x["lo"] > 1]
+    parts = []
+    if scan:
+        tgt = local_rows_df(
+            spark,
+            [(x["s"], x["n"], x["lo"], x["hi"], x["off"], x["tag"]) for x in scan],
+            "ts string, n long, lo long, hi long, off long, tag string",
+        )
+        joined = rows(interval(scan)).join(
+            F.broadcast(tgt),
+            F.col("s").eqNullSafe(F.col("ts"))
+            & (F.col("cents") >= F.col("lo"))
+            & (F.col("cents") < F.col("hi")),
+        )
+        w = Window.partitionBy("ts", "lo", "tag").orderBy("cents")
+        parts.append(
+            joined.withColumn("cum", F.sum("w").over(w))
+            .where(F.col("cum") >= F.col("off"))
+            .groupBy("s", "n", "tag")
+            .agg(F.min("cents").alias("cents"))
+        )
+    if direct:
+        parts.append(
+            local_rows_df(
+                spark,
+                [(x["s"], x["n"], x["tag"], x["lo"]) for x in direct],
+                "s string, n long, tag string, cents long",
+            )
+        )
+    qs = ("50", "90")
+    out = reduce(DataFrame.unionByName, parts).groupBy("s").agg(
+        F.max("n").alias(total),
+        *[
+            F.max(F.when(F.col("tag") == f"{tag}{q}", F.col("cents")))
+            .alias(f"{tag}{q}_cents")
+            for q in qs
+        ],
+    )
+    return out.select(
+        F.col("s").alias(group),
+        total,
+        *[f"{tag}{q}_cents" for q in qs],
+        *[(F.col(f"{tag}{q}_cents").cast("double") / 100).alias(f"{tag}{q}") for q in qs],
+    )
 
 
 @query(
@@ -1000,170 +1157,17 @@ def _qh_hist_collect(base, aggs, w0: int):
     """,
 )
 def exact_quantiles_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT per-group quantiles (lower median, ceil-rank p90) WITHOUT a
-    global sort — the technique that makes exact order statistics viable
-    at 100 TB, where the catalog's other quantile entries either sort
-    within a partition-sized group (percentiles_by_status) or accept
-    sketch bounds (approx_stats_events). Two passes:
-
-      pass 1: map-combined histogram groupBy(status, cents DIV 2^21) —
-              output is |groups| × occupied-bins rows, INDEPENDENT of
-              corpus size (the bounded collect guard asserts it);
-      driver: walk each group's sorted bins to locate the bin holding
-              each target rank (rank semantics pinned int-exact on both
-              engines: r50 = (n+1) DIV 2, r90 = (9n+9) DIV 10 = ceil(.9n));
-      pass 2: re-scan ONLY the selected bins — the filter carries
-              redundant o_totalprice RANGE predicates (widened ±2 cents
-              so float rounding can't exclude a boundary row) that push
-              down to the parquet scan's row-group min/max pruning, plus
-              the exact (status, cents DIV W) refine; a row_number window
-              over each bin's few rows picks the in-bin offset.
-
-    The selected VALUE is the k-th smallest of the multiset, well-defined
-    under duplicate cents regardless of row_number tie order. n_orders
-    rejoins as a literal map (the kmeans n_iter1 pattern — no join node).
-    Everything stays int64 cents until the final /100 (FLOOR(x·100+0.5)
-    both sides, the _revenue_e4 discipline; /100 is one IEEE division of
-    identical ints). Both scale knobs are CODE, not docstring (r12
-    VERDICT #6): a histogram wider than _QH_GUARD bins rebuilds at 16×
-    width (limit-guarded collect, so the driver never materializes the
-    overflow), and a target bin counted above _QH_BIN_ROWS_MAX is
-    re-histogrammed WITHIN itself at 128× finer width — each level
-    divides the candidate rows by up to 128, and a width-1 bin resolves
-    driver-side (every row in it IS the answer value), so pass 2 only
-    ever window-sorts a bounded bin."""
+    """EXACT per-status quantiles of o_totalprice (lower median, ceil-rank
+    p90) WITHOUT a global sort — the technique that makes exact order
+    statistics viable at 100 TB, where the catalog's other quantile
+    entries either sort within a partition-sized group
+    (percentiles_by_status) or accept sketch bounds (approx_stats_events).
+    `_hist_quantiles` at weight 1: the selected VALUE is the k-th smallest
+    of the multiset, well-defined under duplicate cents; everything stays
+    int64 cents until the final /100 (the _revenue_e4 discipline)."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    base = o.select(F.col("o_orderstatus").alias("s"), cents.alias("cents"))
-    hist, w0 = _qh_hist_collect(base, [F.count(F.lit(1)).alias("cnt")], _QH_W)
-    by_s: dict[str, list[tuple[int, int]]] = {}
-    for row in hist:
-        by_s.setdefault(row["s"], []).append((row["b"], row["cnt"]))
-    # targets: dicts {s, lo, hi, off, cnt, tag} — the off-th smallest
-    # cents within the half-open cents interval [lo, hi)
-    targets: list[dict] = []
-    n_by_s: dict[str, int] = {}
-    for s, bl in by_s.items():
-        bl.sort()
-        n = sum(c for _, c in bl)
-        n_by_s[s] = n
-        for tag, rank in (("p50", (n + 1) // 2), ("p90", (9 * n + 9) // 10)):
-            cum = 0
-            for b, c in bl:
-                if cum + c >= rank:
-                    targets.append(
-                        {"s": s, "lo": b * w0, "hi": (b + 1) * w0,
-                         "off": rank - cum, "cnt": c, "tag": tag}
-                    )
-                    break
-                cum += c
-    if not targets:  # empty input table
-        return spark.createDataFrame(
-            [],
-            "o_orderstatus string, n_orders long, p50_cents long,"
-            " p90_cents long, p50 double, p90 double",
-        )
-
-    def _interval_cond(ts: list[dict]):
-        # price RANGE predicates (pushed to parquet row-group pruning;
-        # widened ±2 cents so float rounding can't exclude a boundary
-        # row) plus the exact int64 cents bounds as the refine
-        cond = None
-        for t in ts:
-            c = (
-                (F.col("o_orderstatus") == t["s"])
-                & (F.col("o_totalprice") >= t["lo"] / 100.0 - 0.02)
-                & (F.col("o_totalprice") < t["hi"] / 100.0 + 0.02)
-            )
-            cond = c if cond is None else (cond | c)
-        return cond
-
-    # recursion-within-bin: every refine level narrows ALL still-oversized
-    # targets (they share a width by construction — a target leaves the
-    # set the level its count fits) with ONE bounded histogram pass
-    cur_w = w0
-    while cur_w > 1:
-        oversized = [t for t in targets if t["cnt"] > _QH_BIN_ROWS_MAX]
-        if not oversized:
-            break
-        sub_w = max(1, cur_w >> 7)
-        sub_hist = (
-            o.where(_interval_cond(oversized))
-            .select(F.col("o_orderstatus").alias("s"), cents.alias("cents"))
-            .groupBy(
-                "s",
-                F.expr(f"cents DIV {cur_w}").alias("pb"),
-                F.expr(f"cents DIV {sub_w}").alias("sb"),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )  # bounded: ≤ |oversized| × (cur_w/sub_w ≤ 128) rows
-        sub_by: dict[tuple[str, int], list[tuple[int, int]]] = {}
-        for row in sub_hist:
-            sub_by.setdefault((row["s"], row["pb"]), []).append(
-                (row["sb"], row["cnt"])
-            )
-        for t in oversized:
-            sl = sorted(sub_by[(t["s"], t["lo"] // cur_w)])
-            cum = 0
-            for sb, c in sl:
-                if cum + c >= t["off"]:
-                    t["lo"], t["hi"] = sb * sub_w, (sb + 1) * sub_w
-                    t["off"], t["cnt"] = t["off"] - cum, c
-                    break
-                cum += c
-        cur_w = sub_w
-
-    # width-1 intervals resolve driver-side: all rows in [lo, lo+1) have
-    # cents == lo, so the off-th smallest IS lo — no scan needed
-    direct = [t for t in targets if t["hi"] - t["lo"] == 1]
-    scan = [t for t in targets if t["hi"] - t["lo"] != 1]
-    parts = []
-    if scan:
-        tgt = local_rows_df(
-            spark,
-            [(t["s"], t["lo"], t["hi"], t["off"], t["tag"]) for t in scan],
-            "ts string, lo long, hi long, off long, tag string",
-        )
-        filt = (
-            o.where(_interval_cond(scan))
-            .select(F.col("o_orderstatus").alias("s"), cents.alias("cents"))
-        )
-        joined = filt.join(
-            F.broadcast(tgt),
-            (F.col("s") == F.col("ts"))
-            & (F.col("cents") >= F.col("lo"))
-            & (F.col("cents") < F.col("hi")),
-        )
-        w = Window.partitionBy("ts", "lo", "tag").orderBy("cents")
-        parts.append(
-            joined.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == F.col("off"))
-            .select("s", "tag", "cents")
-        )
-    if direct:
-        parts.append(
-            local_rows_df(
-                spark,
-                [(t["s"], t["tag"], t["lo"]) for t in direct],
-                "s string, tag string, cents long",
-            )
-        )
-    picked = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    n_map = F.create_map(
-        *[x for s, n in n_by_s.items() for x in (F.lit(s), F.lit(n))]
-    )
-    out = picked.groupBy("s").agg(
-        F.max(F.when(F.col("tag") == "p50", F.col("cents"))).alias("p50_cents"),
-        F.max(F.when(F.col("tag") == "p90", F.col("cents"))).alias("p90_cents"),
-    )
-    return out.select(
-        F.col("s").alias("o_orderstatus"),
-        F.element_at(n_map, F.col("s")).alias("n_orders"),
-        "p50_cents",
-        "p90_cents",
-        (F.col("p50_cents").cast("double") / 100).alias("p50"),
-        (F.col("p90_cents").cast("double") / 100).alias("p90"),
+    return _hist_quantiles(
+        spark, o, "o_orderstatus", "o_totalprice", None, "n_orders", "p"
     )
 
 
@@ -1423,191 +1427,15 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def weighted_median_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHTED exact quantiles (weighted lower median and ceil-rank
     weighted p90 of l_extendedprice, weighted by integral l_quantity)
-    per return flag, WITHOUT a global sort — the weighted-rank
-    generalization of `exact_quantiles_histogram` (quantity-weighted
-    price quantiles are the 'where does the median shipped unit price
-    sit' question; sample-weighted percentiles are the survey/training-
-    mixture form). Weighted rank semantics, identical in both engines
-    in pure int64: the weighted p-quantile is the SMALLEST value v whose
-    cumulative weight reaches r, with r50 = (W+1) DIV 2 and
-    r90 = (9W+9) DIV 10 = ceil(0.9·W); cumulative weight uses RANGE
-    framing (ties share their full tie-group total — both engines'
-    default ORDER BY frame), so duplicate prices cannot order-diverge.
-
-    Two passes, the sibling entry's shape with weighted counts: pass 1
-    map-combined SUM(weight) histogram per (flag, cents DIV W) —
-    |groups| × occupied-bins rows, corpus-size-independent; driver walk
-    locates each weighted rank's bin and its in-bin weight offset;
-    pass 2 re-scans ONLY target bins behind pushed-down price-range
-    predicates and takes MIN(cents) among rows whose in-interval RANGE
-    cumulative weight reaches the offset. BOTH scale knobs are shared
-    CODE with the sibling (r13 VERDICT #3 — this entry used to assert
-    at the guard): pass 1 goes through `_qh_hist_collect` (auto-widen
-    ×16 under the LIMIT-guarded collect), and a target bin whose ROW
-    count exceeds _QH_BIN_ROWS_MAX is re-histogrammed WITHIN itself at
-    128× finer width — the refine guard is row count (window-sort cost
-    is rows) while rank location advances by cumulative WEIGHT; a
-    width-1 bin resolves driver-side (every row in it IS the value, so
-    the off-th weighted rank is the bin itself). Knob paths pinned in
-    tests/test_r14_catalog.py against the oracle at forced-narrow
-    widths."""
-    li = _t(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    wcol = F.col("l_quantity").cast("long")
-    base = li.select(
-        F.col("l_returnflag").alias("s"),
-        cents.alias("cents"),
-        wcol.alias("w"),
-    )
-    hist, w0 = _qh_hist_collect(
-        base,
-        [F.sum("w").alias("wsum"), F.count(F.lit(1)).alias("cnt")],
-        _QH_W,
-    )
-    by_s: dict[str, list[tuple[int, int, int]]] = {}
-    for row in hist:
-        by_s.setdefault(row["s"], []).append(
-            (row["b"], row["wsum"], row["cnt"])
-        )
-    # targets: dicts {s, lo, hi, off, cnt, tag} — the smallest cents in
-    # the half-open interval [lo, hi) whose in-interval RANGE-cumulative
-    # WEIGHT reaches off; cnt is the interval's ROW count (refine guard)
-    targets: list[dict] = []
-    tw_by_s: dict[str, int] = {}
-    for s, bl in by_s.items():
-        bl.sort()
-        tw = sum(ws for _, ws, _ in bl)
-        tw_by_s[s] = tw
-        for tag, rank in (
-            ("wp50", (tw + 1) // 2),
-            ("wp90", (9 * tw + 9) // 10),
-        ):
-            cum = 0
-            for b, ws, c in bl:
-                if cum + ws >= rank:
-                    targets.append(
-                        {"s": s, "lo": b * w0, "hi": (b + 1) * w0,
-                         "off": rank - cum, "cnt": c, "tag": tag}
-                    )
-                    break
-                cum += ws
-    if not targets:
-        return spark.createDataFrame(
-            [],
-            "l_returnflag string, total_weight long, wp50_cents long,"
-            " wp90_cents long, wp50 double, wp90 double",
-        )
-
-    def _interval_cond(ts: list[dict]):
-        # price RANGE predicates (pushed to parquet row-group pruning;
-        # widened ±2 cents so float rounding can't exclude a boundary
-        # row) — the exact int64 cents bounds are the downstream refine
-        cond = None
-        for t in ts:
-            c = (
-                (F.col("l_returnflag") == t["s"])
-                & (F.col("l_extendedprice") >= t["lo"] / 100.0 - 0.02)
-                & (F.col("l_extendedprice") < t["hi"] / 100.0 + 0.02)
-            )
-            cond = c if cond is None else (cond | c)
-        return cond
-
-    # recursion-within-bin (the sibling's loop, weighted offsets): every
-    # level narrows ALL still-oversized targets — oversized by ROW count,
-    # located by cumulative WEIGHT — with ONE bounded histogram pass
-    cur_w = w0
-    while cur_w > 1:
-        oversized = [t for t in targets if t["cnt"] > _QH_BIN_ROWS_MAX]
-        if not oversized:
-            break
-        sub_w = max(1, cur_w >> 7)
-        sub_hist = (
-            li.where(_interval_cond(oversized))
-            .select(
-                F.col("l_returnflag").alias("s"),
-                cents.alias("cents"),
-                wcol.alias("w"),
-            )
-            .groupBy(
-                "s",
-                F.expr(f"cents DIV {cur_w}").alias("pb"),
-                F.expr(f"cents DIV {sub_w}").alias("sb"),
-            )
-            .agg(F.sum("w").alias("wsum"), F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )  # bounded: ≤ |oversized| × (cur_w/sub_w ≤ 128) rows
-        sub_by: dict[tuple[str, int], list[tuple[int, int, int]]] = {}
-        for row in sub_hist:
-            sub_by.setdefault((row["s"], row["pb"]), []).append(
-                (row["sb"], row["wsum"], row["cnt"])
-            )
-        for t in oversized:
-            sl = sorted(sub_by[(t["s"], t["lo"] // cur_w)])
-            cum = 0
-            for sb, ws, c in sl:
-                if cum + ws >= t["off"]:
-                    t["lo"], t["hi"] = sb * sub_w, (sb + 1) * sub_w
-                    t["off"], t["cnt"] = t["off"] - cum, c
-                    break
-                cum += ws
-        cur_w = sub_w
-
-    # width-1 intervals resolve driver-side: every row in [lo, lo+1) has
-    # cents == lo, so the off-th weighted rank IS lo — no scan needed
-    direct = [t for t in targets if t["hi"] - t["lo"] == 1]
-    scan = [t for t in targets if t["hi"] - t["lo"] != 1]
-    parts = []
-    if scan:
-        tgt = local_rows_df(
-            spark,
-            [(t["s"], t["lo"], t["hi"], t["off"], t["tag"]) for t in scan],
-            "ts string, lo long, hi long, off long, tag string",
-        )
-        filt = li.where(_interval_cond(scan)).select(
-            F.col("l_returnflag").alias("s"),
-            cents.alias("cents"),
-            wcol.alias("w"),
-        )
-        joined = filt.join(
-            F.broadcast(tgt),
-            (F.col("s") == F.col("ts"))
-            & (F.col("cents") >= F.col("lo"))
-            & (F.col("cents") < F.col("hi")),
-        )
-        # RANGE cumulative (default frame under orderBy): tie groups
-        # share their full total on both engines
-        w = Window.partitionBy("ts", "lo", "tag").orderBy("cents")
-        parts.append(
-            joined.withColumn("cum", F.sum("w").over(w))
-            .where(F.col("cum") >= F.col("off"))
-            .groupBy("s", "tag")
-            .agg(F.min("cents").alias("cents"))
-        )
-    if direct:
-        parts.append(
-            local_rows_df(
-                spark,
-                [(t["s"], t["tag"], t["lo"]) for t in direct],
-                "s string, tag string, cents long",
-            )
-        )
-    picked = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    tw_map = F.create_map(
-        *[x for s, n in tw_by_s.items() for x in (F.lit(s), F.lit(n))]
-    )
-    out = picked.groupBy("s").agg(
-        F.max(F.when(F.col("tag") == "wp50", F.col("cents"))).alias(
-            "wp50_cents"
-        ),
-        F.max(F.when(F.col("tag") == "wp90", F.col("cents"))).alias(
-            "wp90_cents"
-        ),
-    )
-    return out.select(
-        F.col("s").alias("l_returnflag"),
-        F.element_at(tw_map, F.col("s")).alias("total_weight"),
-        "wp50_cents",
-        "wp90_cents",
-        (F.col("wp50_cents").cast("double") / 100).alias("wp50"),
-        (F.col("wp90_cents").cast("double") / 100).alias("wp90"),
+    per return flag, WITHOUT a global sort: `_hist_quantiles` with a
+    weight (quantity-weighted price quantiles are the 'where does the
+    median shipped unit price sit' question; sample-weighted percentiles
+    are the survey/training-mixture form). The weighted p-quantile is the
+    SMALLEST value whose RANGE-cumulative weight reaches the rank. A NULL
+    flag is no group here, as in the oracle's inner join on the flag.
+    Knob paths pinned in tests/test_r14_catalog.py against the oracle at
+    forced-narrow widths."""
+    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag").isNotNull())
+    return _hist_quantiles(
+        spark, li, "l_returnflag", "l_extendedprice", "l_quantity", "total_weight", "wp"
     )

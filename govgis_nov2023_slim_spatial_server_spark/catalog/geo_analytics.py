@@ -824,9 +824,9 @@ def _area_result(runs: DataFrame, nation: DataFrame, area_alias: str) -> DataFra
     )
 
 
-@query(
-    "spatial_union_area",
-    f"""
+# The oracle's closed-form rasterize of the lattice store: `occ` holds
+# each nation's DISTINCT occupied cell ids (ix, iy)
+_OCC_SQL = f"""
     WITH p AS ({_GEO_PARAM_SQL}),
     g AS (
       SELECT k, c_nationkey, x0, y0, w, h,
@@ -851,7 +851,35 @@ def _area_result(runs: DataFrame, nation: DataFrame, area_alias: str) -> DataFra
       WHERE CASE WHEN k % 2 = 1
             THEN NOT (cx > x0 + w * 0.5 AND cy > y0 + h * 0.5)
             ELSE NOT (cx > x0 + w * 0.25 AND cx < x0 + w * 0.75
-                  AND cy > y0 + h * 0.25 AND cy < y0 + h * 0.75) END)
+                  AND cy > y0 + h * 0.25 AND cy < y0 + h * 0.75) END)"""
+
+# `occ` dilated by the ±4-cell square (x, then y): the cells of `dxy`
+_DILATE_SQL = """,
+    dd AS (SELECT unnest(range(-4, 5)) AS d),
+    dx AS (
+      SELECT DISTINCT c_nationkey, ix + dd.d AS ix, iy
+      FROM occ CROSS JOIN dd),
+    dxy AS (
+      SELECT DISTINCT c_nationkey, ix, iy + dd.d AS iy
+      FROM dx CROSS JOIN dd)"""
+
+_RINGS_TAIL_SQL = """
+    SELECT n.n_name AS n_name,
+           CAST(COUNT(*) AS BIGINT) AS n_cells,
+           CAST(COUNT(*) AS DOUBLE) * 0.00390625 AS {area_alias},
+           CAST(MIN(ix) AS DOUBLE) * 0.0625 AS x_min,
+           CAST(MIN(iy) AS DOUBLE) * 0.0625 AS y_min,
+           CAST(MAX(ix) + 1 AS DOUBLE) * 0.0625 AS x_max,
+           CAST(MAX(iy) + 1 AS DOUBLE) * 0.0625 AS y_max
+    FROM {src} JOIN nation n ON {src}.c_nationkey = n.n_nationkey
+    GROUP BY n.n_name
+"""
+
+
+@query(
+    "spatial_union_area",
+    _OCC_SQL
+    + """
     SELECT n.n_name AS n_name, CAST(COUNT(*) AS BIGINT) AS n_cells,
            CAST(COUNT(*) AS DOUBLE) * 0.00390625 AS union_area
     FROM occ JOIN nation n ON occ.c_nationkey = n.n_nationkey
@@ -896,39 +924,9 @@ def spatial_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "spatial_buffer_union_area",
-    f"""
-    WITH p AS ({_GEO_PARAM_SQL}),
-    g AS (
-      SELECT k, c_nationkey, x0, y0, w, h,
-             (k % 40) * 24 - 2000 AS ix0,
-             384 + (k % 16) * 20 AS iy0,
-             16 + (k % 7) * 4 AS nx,
-             16 + (k % 5) * 4 AS ny
-      FROM p),
-    ii AS (SELECT unnest(range(0, 40)) AS i),
-    jj AS (SELECT unnest(range(0, 32)) AS j),
-    cells AS (
-      SELECT g.c_nationkey,
-             g.ix0 + ii.i AS ix, g.iy0 + jj.j AS iy,
-             g.x0 + (ii.i + 0.5) * 0.0625 AS cx,
-             g.y0 + (jj.j + 0.5) * 0.0625 AS cy,
-             g.k, g.x0, g.y0, g.w, g.h
-      FROM g CROSS JOIN ii CROSS JOIN jj
-      WHERE ii.i < g.nx AND jj.j < g.ny),
-    occ AS (
-      SELECT DISTINCT c_nationkey, ix, iy
-      FROM cells
-      WHERE CASE WHEN k % 2 = 1
-            THEN NOT (cx > x0 + w * 0.5 AND cy > y0 + h * 0.5)
-            ELSE NOT (cx > x0 + w * 0.25 AND cx < x0 + w * 0.75
-                  AND cy > y0 + h * 0.25 AND cy < y0 + h * 0.75) END),
-    dd AS (SELECT unnest(range(-4, 5)) AS d),
-    dx AS (
-      SELECT DISTINCT c_nationkey, ix + dd.d AS ix, iy
-      FROM occ CROSS JOIN dd),
-    dxy AS (
-      SELECT DISTINCT c_nationkey, ix, iy + dd.d AS iy
-      FROM dx CROSS JOIN dd)
+    _OCC_SQL
+    + _DILATE_SQL
+    + """
     SELECT n.n_name AS n_name, CAST(COUNT(*) AS BIGINT) AS n_cells,
            CAST(COUNT(*) AS DOUBLE) * 0.00390625 AS buffer_area
     FROM dxy JOIN nation n ON dxy.c_nationkey = n.n_nationkey
@@ -977,49 +975,10 @@ def spatial_buffer_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "spatial_buffer_rings",
-    f"""
-    WITH p AS ({_GEO_PARAM_SQL}),
-    g AS (
-      SELECT k, c_nationkey, x0, y0, w, h,
-             (k % 40) * 24 - 2000 AS ix0,
-             384 + (k % 16) * 20 AS iy0,
-             16 + (k % 7) * 4 AS nx,
-             16 + (k % 5) * 4 AS ny
-      FROM p),
-    ii AS (SELECT unnest(range(0, 40)) AS i),
-    jj AS (SELECT unnest(range(0, 32)) AS j),
-    cells AS (
-      SELECT g.c_nationkey,
-             g.ix0 + ii.i AS ix, g.iy0 + jj.j AS iy,
-             g.x0 + (ii.i + 0.5) * 0.0625 AS cx,
-             g.y0 + (jj.j + 0.5) * 0.0625 AS cy,
-             g.k, g.x0, g.y0, g.w, g.h
-      FROM g CROSS JOIN ii CROSS JOIN jj
-      WHERE ii.i < g.nx AND jj.j < g.ny),
-    occ AS (
-      SELECT DISTINCT c_nationkey, ix, iy
-      FROM cells
-      WHERE CASE WHEN k % 2 = 1
-            THEN NOT (cx > x0 + w * 0.5 AND cy > y0 + h * 0.5)
-            ELSE NOT (cx > x0 + w * 0.25 AND cx < x0 + w * 0.75
-                  AND cy > y0 + h * 0.25 AND cy < y0 + h * 0.75) END),
-    dd AS (SELECT unnest(range(-4, 5)) AS d),
-    dx AS (
-      SELECT DISTINCT c_nationkey, ix + dd.d AS ix, iy
-      FROM occ CROSS JOIN dd),
-    dxy AS (
-      SELECT DISTINCT c_nationkey, ix, iy + dd.d AS iy
-      FROM dx CROSS JOIN dd)
-    SELECT n.n_name AS n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_cells,
-           CAST(COUNT(*) AS DOUBLE) * 0.00390625 AS buffer_area,
-           CAST(MIN(ix) AS DOUBLE) * 0.0625 AS x_min,
-           CAST(MIN(iy) AS DOUBLE) * 0.0625 AS y_min,
-           CAST(MAX(ix) + 1 AS DOUBLE) * 0.0625 AS x_max,
-           CAST(MAX(iy) + 1 AS DOUBLE) * 0.0625 AS y_max
-    FROM dxy JOIN nation n ON dxy.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
+    _OCC_SQL
+    + _DILATE_SQL
+    + _RINGS_TAIL_SQL.format(area_alias="buffer_area", src="dxy")
+    + "    ",
 )
 def spatial_buffer_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST_Buffer returning GEOMETRY — the buffered union's actual
@@ -1047,42 +1006,9 @@ def spatial_buffer_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "spatial_union_rings",
-    f"""
-    WITH p AS ({_GEO_PARAM_SQL}),
-    g AS (
-      SELECT k, c_nationkey, x0, y0, w, h,
-             (k % 40) * 24 - 2000 AS ix0,
-             384 + (k % 16) * 20 AS iy0,
-             16 + (k % 7) * 4 AS nx,
-             16 + (k % 5) * 4 AS ny
-      FROM p),
-    ii AS (SELECT unnest(range(0, 40)) AS i),
-    jj AS (SELECT unnest(range(0, 32)) AS j),
-    cells AS (
-      SELECT g.c_nationkey,
-             g.ix0 + ii.i AS ix, g.iy0 + jj.j AS iy,
-             g.x0 + (ii.i + 0.5) * 0.0625 AS cx,
-             g.y0 + (jj.j + 0.5) * 0.0625 AS cy,
-             g.k, g.x0, g.y0, g.w, g.h
-      FROM g CROSS JOIN ii CROSS JOIN jj
-      WHERE ii.i < g.nx AND jj.j < g.ny),
-    occ AS (
-      SELECT DISTINCT c_nationkey, ix, iy
-      FROM cells
-      WHERE CASE WHEN k % 2 = 1
-            THEN NOT (cx > x0 + w * 0.5 AND cy > y0 + h * 0.5)
-            ELSE NOT (cx > x0 + w * 0.25 AND cx < x0 + w * 0.75
-                  AND cy > y0 + h * 0.25 AND cy < y0 + h * 0.75) END)
-    SELECT n.n_name AS n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_cells,
-           CAST(COUNT(*) AS DOUBLE) * 0.00390625 AS union_area,
-           CAST(MIN(ix) AS DOUBLE) * 0.0625 AS x_min,
-           CAST(MIN(iy) AS DOUBLE) * 0.0625 AS y_min,
-           CAST(MAX(ix) + 1 AS DOUBLE) * 0.0625 AS x_max,
-           CAST(MAX(iy) + 1 AS DOUBLE) * 0.0625 AS y_max
-    FROM occ JOIN nation n ON occ.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
+    _OCC_SQL
+    + _RINGS_TAIL_SQL.format(area_alias="union_area", src="occ")
+    + "    ",
 )
 def spatial_union_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST_Union returning GEOMETRY — the catalog's first geometry-
@@ -1120,24 +1046,10 @@ def spatial_union_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rings_result(runs, load_table(spark, sf_dir, "nation"), "union_area")
 
 
-
 # --------------------------------------------------------------------------
 # ST_Union on GENERAL (non-lattice) polygons: grid-snap at a declared
 # tolerance; ST_Intersection / ST_Difference geometry (boolean sweep)
 # --------------------------------------------------------------------------
-
-
-_RINGS_TAIL_SQL = """
-    SELECT n.n_name AS n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_cells,
-           CAST(COUNT(*) AS DOUBLE) * 0.00390625 AS {area_alias},
-           CAST(MIN(ix) AS DOUBLE) * 0.0625 AS x_min,
-           CAST(MIN(iy) AS DOUBLE) * 0.0625 AS y_min,
-           CAST(MAX(ix) + 1 AS DOUBLE) * 0.0625 AS x_max,
-           CAST(MAX(iy) + 1 AS DOUBLE) * 0.0625 AS y_max
-    FROM {src} JOIN nation n ON {src}.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-"""
 
 
 def _rings_result(runs: DataFrame, nation: DataFrame, area_alias: str) -> DataFrame:
@@ -1322,17 +1234,9 @@ def spatial_symdiff_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND CASE WHEN k % 2 = 1
             THEN NOT (cx > x0 + w * 0.5 AND cy > y0 + h * 0.5)
             ELSE NOT (cx > x0 + w * 0.25 AND cx < x0 + w * 0.75
-                  AND cy > y0 + h * 0.25 AND cy < y0 + h * 0.75) END)
-    SELECT n.n_name AS n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_cells,
-           CAST(COUNT(*) AS DOUBLE) * 0.00390625 AS union_area,
-           CAST(MIN(ix) AS DOUBLE) * 0.0625 AS x_min,
-           CAST(MIN(iy) AS DOUBLE) * 0.0625 AS y_min,
-           CAST(MAX(ix) + 1 AS DOUBLE) * 0.0625 AS x_max,
-           CAST(MAX(iy) + 1 AS DOUBLE) * 0.0625 AS y_max
-    FROM occ JOIN nation n ON occ.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
+                  AND cy > y0 + h * 0.25 AND cy < y0 + h * 0.75) END)"""
+    + _RINGS_TAIL_SQL.format(area_alias="union_area", src="occ")
+    + "    ",
 )
 def spatial_union_snap_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST_Union on GENERAL (non-lattice) polygons via grid-snap at the

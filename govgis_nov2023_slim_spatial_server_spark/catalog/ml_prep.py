@@ -16,12 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashes import word_shingle_hashes, word_shingles
+from ..functions.hashes import word_shingle_hashes
 from ..operators.windows import floor_round
 from ..schemas import load_table
 from ..session import checkpoint, local_rows_df, spread
 from ._registry import fmt_vec_sql, query, rnd_nz
-from .vector_text import _SHINGLE_SQL
+from .vector_text import _SHINGLE_SQL, seed_centroids
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1280,13 +1280,7 @@ def kmeans_two_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEAST form) — so a 100 TB corpus is read once per iteration with no
     shuffle beyond the k-row aggregate."""
     e = spread(_t(spark, sf_dir, "embeddings"))
-    seeds = sorted(
-        e.where(F.col("vec_id").between(1, 8)).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    a1 = _assign_best(
-        e, [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in seeds]
-    )
+    a1 = _assign_best(e, seed_centroids(e))
     # M-step: per-dim mean quantized to the shared 1/1024 grid (bounded
     # k×dim collect — same driver-state pattern as the IVF seeds). The
     # SAME aggregation carries the iteration-1 member counts (cnt at

@@ -61,6 +61,42 @@ _CUST_RECT_SQL = """
 """
 
 
+def _supplier_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The supplier twin of `_customer_rects`: deterministic rectangles
+    keyed on s_suppkey, the probe side of the three supplier-overlap
+    joins."""
+    k = F.col("s_suppkey")
+    xmin = F.lit(-125.0) + (k % 55).cast("double")
+    ymin = F.lit(24.0) + (k % 22).cast("double")
+    return _t(spark, sf_dir, "supplier").select(
+        "s_suppkey",
+        xmin.alias("xmin"),
+        ymin.alias("ymin"),
+        (xmin + F.lit(1.0) + (k % 3).cast("double") * 0.5).alias("xmax"),
+        (ymin + F.lit(1.0)).alias("ymax"),
+    )
+
+
+# supplier rectangles × customer rectangles (custkey < 200): overlap count
+# per supplier — the one oracle of the three supplier-overlap joins
+_SUPP_OVERLAP_SQL = f"""
+    WITH cr AS ({_CUST_RECT_SQL}),
+    sr AS (
+      SELECT s_suppkey,
+             -125.0 + (s_suppkey % 55) AS xmin,
+             24.0 + (s_suppkey % 22)   AS ymin,
+             -125.0 + (s_suppkey % 55) + 1.0 + (s_suppkey % 3) * 0.5 AS xmax,
+             24.0 + (s_suppkey % 22) + 1.0                           AS ymax
+      FROM supplier)
+    SELECT s_suppkey, COUNT(*) AS n_overlaps
+    FROM sr JOIN cr
+      ON cr.xmin <= sr.xmax AND sr.xmin <= cr.xmax
+     AND cr.ymin <= sr.ymax AND sr.ymin <= cr.ymax
+    WHERE cr.c_custkey < 200
+    GROUP BY s_suppkey
+    """
+
+
 _spatial_layers_cache = MaterializedStoreCache()
 
 
@@ -110,42 +146,14 @@ def spatial_point_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "spatial_join_overlap",
-    f"""
-    WITH cr AS ({_CUST_RECT_SQL}),
-    sr AS (
-      SELECT s_suppkey,
-             -125.0 + (s_suppkey % 55) AS xmin,
-             24.0 + (s_suppkey % 22)   AS ymin,
-             -125.0 + (s_suppkey % 55) + 1.0 + (s_suppkey % 3) * 0.5 AS xmax,
-             24.0 + (s_suppkey % 22) + 1.0                           AS ymax
-      FROM supplier)
-    SELECT s_suppkey, COUNT(*) AS n_overlaps
-    FROM sr JOIN cr
-      ON cr.xmin <= sr.xmax AND sr.xmin <= cr.xmax
-     AND cr.ymin <= sr.ymax AND sr.ymin <= cr.ymax
-    WHERE cr.c_custkey < 200
-    GROUP BY s_suppkey
-    """,
-)
+@query("spatial_join_overlap", _SUPP_OVERLAP_SQL)
 def spatial_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial (rectangle-overlap) join — the range-join shape. At scale
     this gets a grid-cell blocking key to become an equi-join; here the
     direct predicate form is the semantics oracle."""
     cr = _customer_rects(spark, sf_dir).where(F.col("c_custkey") < 200)
-    s = _t(spark, sf_dir, "supplier")
-    k = F.col("s_suppkey")
-    xmin = F.lit(-125.0) + (k % 55).cast("double")
-    ymin = F.lit(24.0) + (k % 22).cast("double")
-    sr = s.select(
-        "s_suppkey",
-        F.struct(
-            xmin.alias("xmin"),
-            ymin.alias("ymin"),
-            (xmin + F.lit(1.0) + (k % 3).cast("double") * 0.5).alias("xmax"),
-            (ymin + F.lit(1.0)).alias("ymax"),
-        ).alias("sbox"),
+    sr = _supplier_rects(spark, sf_dir).select(
+        "s_suppkey", F.struct("xmin", "ymin", "xmax", "ymax").alias("sbox")
     )
     crb = cr.select(
         "c_custkey",
@@ -158,25 +166,7 @@ def spatial_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "spatial_join_blocked",
-    f"""
-    WITH cr AS ({_CUST_RECT_SQL}),
-    sr AS (
-      SELECT s_suppkey,
-             -125.0 + (s_suppkey % 55) AS xmin,
-             24.0 + (s_suppkey % 22)   AS ymin,
-             -125.0 + (s_suppkey % 55) + 1.0 + (s_suppkey % 3) * 0.5 AS xmax,
-             24.0 + (s_suppkey % 22) + 1.0                           AS ymax
-      FROM supplier)
-    SELECT s_suppkey, COUNT(*) AS n_overlaps
-    FROM sr JOIN cr
-      ON cr.xmin <= sr.xmax AND sr.xmin <= cr.xmax
-     AND cr.ymin <= sr.ymax AND sr.ymin <= cr.ymax
-    WHERE cr.c_custkey < 200
-    GROUP BY s_suppkey
-    """,
-)
+@query("spatial_join_blocked", _SUPP_OVERLAP_SQL)
 def spatial_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB spatial-join path: grid-cell blocking turns the overlap
     predicate into an equi-join on (cell_x, cell_y) — shuffled hash join,
@@ -185,17 +175,7 @@ def spatial_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked construction's exactness, not just its plan shape."""
     from ..operators.spatial_join import grid_blocked_overlap_join
 
-    s = _t(spark, sf_dir, "supplier")
-    k = F.col("s_suppkey")
-    xmin = F.lit(-125.0) + (k % 55).cast("double")
-    ymin = F.lit(24.0) + (k % 22).cast("double")
-    sr = s.select(
-        "s_suppkey",
-        xmin.alias("xmin"),
-        ymin.alias("ymin"),
-        (xmin + F.lit(1.0) + (k % 3).cast("double") * 0.5).alias("xmax"),
-        (ymin + F.lit(1.0)).alias("ymax"),
-    )
+    sr = _supplier_rects(spark, sf_dir)
     cr = _customer_rects(spark, sf_dir).where(F.col("c_custkey") < 200)
     return (
         grid_blocked_overlap_join(sr, cr, cell=2.0)
@@ -204,25 +184,7 @@ def spatial_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "spatial_join_exact",
-    f"""
-    WITH cr AS ({_CUST_RECT_SQL}),
-    sr AS (
-      SELECT s_suppkey,
-             -125.0 + (s_suppkey % 55) AS xmin,
-             24.0 + (s_suppkey % 22)   AS ymin,
-             -125.0 + (s_suppkey % 55) + 1.0 + (s_suppkey % 3) * 0.5 AS xmax,
-             24.0 + (s_suppkey % 22) + 1.0                           AS ymax
-      FROM supplier)
-    SELECT s_suppkey, COUNT(*) AS n_overlaps
-    FROM sr JOIN cr
-      ON cr.xmin <= sr.xmax AND sr.xmin <= cr.xmax
-     AND cr.ymin <= sr.ymax AND sr.ymin <= cr.ymax
-    WHERE cr.c_custkey < 200
-    GROUP BY s_suppkey
-    """,
-)
+@query("spatial_join_exact", _SUPP_OVERLAP_SQL)
 def spatial_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General `ST_Intersects(polyA, polyB)` join — the full PostGIS-parity
     filter-and-refine: grid-cell blocked bbox equi-join (coarse, native),
@@ -240,18 +202,7 @@ def spatial_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with join selectivity, not the cross product."""
     from ..operators.spatial_join import grid_blocked_overlap_join
 
-    s = _t(spark, sf_dir, "supplier")
-    k = F.col("s_suppkey")
-    xmin = F.lit(-125.0) + (k % 55).cast("double")
-    ymin = F.lit(24.0) + (k % 22).cast("double")
-    sr = s.select(
-        "s_suppkey",
-        xmin.alias("xmin"),
-        ymin.alias("ymin"),
-        (xmin + F.lit(1.0) + (k % 3).cast("double") * 0.5).alias("xmax"),
-        (ymin + F.lit(1.0)).alias("ymax"),
-    )
-    sr = sr.withColumn(
+    sr = _supplier_rects(spark, sf_dir).withColumn(
         "geom_wkb",
         make_box_wkb_udf()(
             F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax")

@@ -58,6 +58,19 @@ def _dist_col() -> F.Column:
     return 1 - dot("embedding", PROBE_VEC) / l2_norm("embedding")
 
 
+def seed_centroids(e: DataFrame) -> list[tuple[int, list[float]]]:
+    """The k=8 data-derived centroids every k-means and IVF entry seeds
+    from: the vectors with vec_id 1..8, as cid-sorted ``(cid, vector)``
+    pairs. A bounded k-row driver collect; each oracle replays the same
+    seeds as ``WHERE vec_id BETWEEN 1 AND 8``."""
+    return sorted(
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in e.where(F.col("vec_id").between(1, 8))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -119,19 +132,21 @@ def knn_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LSH_PLANES = make_lsh_planes(6, 64, seed=42)
 _LSH_CANDS = query_buckets(PROBE_VEC, _LSH_PLANES, n_probes=2)
+# DuckDB's sign-LSH bucket of `embedding`: bit i is set when the vector
+# lies on the non-negative side of plane i (the operators/knn bucket rule)
+_LSH_BUCKET_SQL = "\n           + ".join(
+    f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
+    f"{fmt_vec_sql(list(plane))}) >= 0 THEN {1 << i} ELSE 0 END)"
+    for i, plane in enumerate(_LSH_PLANES)
+)
 
 
 def _lsh_oracle_sql() -> str:
-    bucket = "\n           + ".join(
-        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
-        f"{fmt_vec_sql(list(_LSH_PLANES[i]))}) >= 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(len(_LSH_PLANES))
-    )
     cands = ", ".join(str(c) for c in _LSH_CANDS)
     return f"""
     WITH b AS (
       SELECT vec_id, embedding,
-           {bucket} AS bucket
+           {_LSH_BUCKET_SQL} AS bucket
       FROM embeddings)
     SELECT vec_id,
            ROUND(1 - list_dot_product(CAST(embedding AS DOUBLE[]), {PROBE_SQL}), 4) + 0.0 AS dist
@@ -160,22 +175,22 @@ def knn_lsh_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", rnd_nz(F.col("dist"), 4).alias("dist"))
 
 
-def _sim_join_lsh_oracle_sql() -> str:
-    bucket = "\n           + ".join(
-        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
-        f"{fmt_vec_sql(list(_LSH_PLANES[i]))}) >= 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(len(_LSH_PLANES))
-    )
-    return f"""
+# the corpus `b` with norms and buckets, and the probes (vec_id < 5)
+# exploded over their own bucket and its bit-0 flip (n_probes=2) as `p`
+_LSH_PROBE_CTES = f"""
     WITH b AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
              sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm,
-             {bucket} AS bucket
+             {_LSH_BUCKET_SQL} AS bucket
       FROM embeddings),
     p AS (
       SELECT vec_id AS probe_id, emb AS pemb, pnrm,
              unnest([bucket, xor(bucket, 1)]) AS bucket
-      FROM (SELECT vec_id, emb, nrm AS pnrm, bucket FROM b WHERE vec_id < 5)),
+      FROM (SELECT vec_id, emb, nrm AS pnrm, bucket FROM b WHERE vec_id < 5))"""
+
+
+def _sim_join_lsh_oracle_sql() -> str:
+    return _LSH_PROBE_CTES + """,
     j AS (
       SELECT p.probe_id, b.vec_id,
              1 - list_dot_product(b.emb, p.pemb) / (b.nrm * p.pnrm) AS d
@@ -217,21 +232,7 @@ def similarity_join_lsh_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_oracle_sql() -> str:
-    bucket = "\n           + ".join(
-        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
-        f"{fmt_vec_sql(list(_LSH_PLANES[i]))}) >= 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(len(_LSH_PLANES))
-    )
-    return f"""
-    WITH b AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-             sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm,
-             {bucket} AS bucket
-      FROM embeddings),
-    p AS (
-      SELECT vec_id AS probe_id, emb AS pemb, pnrm,
-             unnest([bucket, xor(bucket, 1)]) AS bucket
-      FROM (SELECT vec_id, emb, nrm AS pnrm, bucket FROM b WHERE vec_id < 5)),
+    return _LSH_PROBE_CTES + """,
     approx AS (
       SELECT probe_id, vec_id FROM (
         SELECT p.probe_id, b.vec_id,
@@ -311,14 +312,9 @@ def ann_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_balance_oracle_sql() -> str:
-    bucket = "\n           + ".join(
-        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
-        f"{fmt_vec_sql(list(_LSH_PLANES[i]))}) >= 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(len(_LSH_PLANES))
-    )
     return f"""
     WITH g AS (
-      SELECT {bucket} AS bucket, CAST(COUNT(*) AS BIGINT) AS n
+      SELECT {_LSH_BUCKET_SQL} AS bucket, CAST(COUNT(*) AS BIGINT) AS n
       FROM embeddings GROUP BY 1)
     SELECT CAST(SUM(n) AS BIGINT) AS n_vectors,
            CAST(COUNT(*) AS BIGINT) AS n_buckets_used,
@@ -420,13 +416,7 @@ def ivf_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.knn import similarity_join
 
     e = _t(spark, sf_dir, "embeddings")
-    cents_rows = sorted(
-        e.where(F.col("vec_id").between(1, 8)).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    cents = np.asarray(
-        [[float(x) for x in r["embedding"]] for r in cents_rows], dtype=np.float64
-    )
+    cents = np.asarray([v for _, v in seed_centroids(e)], dtype=np.float64)
     probe_rows = sorted(
         e.where(F.col("vec_id") < 5).select("vec_id", "embedding").collect(),
         key=lambda r: r["vec_id"],
@@ -620,13 +610,7 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ivf import assign_clusters
 
     e = _t(spark, sf_dir, "embeddings")
-    cents_rows = sorted(
-        e.where(F.col("vec_id").between(1, 8)).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    cents = np.asarray(
-        [[float(x) for x in r["embedding"]] for r in cents_rows], dtype=np.float64
-    )
+    cents = np.asarray([v for _, v in seed_centroids(e)], dtype=np.float64)
     g = assign_clusters(e, cents).groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -691,13 +675,7 @@ def knn_ivf_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ivf import assign_clusters, ivf_search
 
     e = _t(spark, sf_dir, "embeddings")
-    cents_rows = sorted(
-        e.where(F.col("vec_id").between(1, 8)).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    cents = np.asarray(
-        [[float(x) for x in r["embedding"]] for r in cents_rows], dtype=np.float64
-    )
+    cents = np.asarray([v for _, v in seed_centroids(e)], dtype=np.float64)
     assigned = assign_clusters(e, cents)
     out = ivf_search(assigned, cents, PROBE_VEC, k=10, n_probe=2)
     return out.select("vec_id", rnd_nz("dist", 4).alias("dist"))

@@ -25,14 +25,7 @@ from ..functions.hashes import (
     word_shingles,
 )
 from ..functions.text import fingerprint_udf
-from ..functions.vector import cosine_similarity
 from ..session import checkpoint, spread
-
-
-def exact_dedup(df: DataFrame, subset: list[str]) -> DataFrame:
-    """Reference O2 parity: hash-shuffle on the key columns, first-wins
-    (nondeterministic in both engines)."""
-    return df.dropDuplicates(subset)
 
 
 def exact_dedup_deterministic(
@@ -64,43 +57,13 @@ def fingerprint_dup_groups(
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    materialize: bool = True,
-) -> DataFrame:
-    """Candidate near-dup pairs via MinHash-LSH banding.
-
-    shingle → signature (native exprs, no shuffle) → explode band keys →
-    self-join on (band, key) → distinct pairs. The explode multiplies rows
-    by `bands`, but each carries only (id, band, key) — 20 bytes — so the
-    bucket shuffle is tiny relative to the corpus.
-
-    ``materialize`` localCheckpoints the signature table so the self-join
-    scans it once instead of recomputing shingling+hashing per branch
-    (signatures are 8·num_perm bytes/doc — tiny next to the text). At
-    production scale the equivalent move is writing signatures to a table
-    and joining that.
-    """
-    rows = num_perm // bands
-    sigs = spread(df).select(
-        F.col(id_col).alias("id"),
-        minhash_signature(
-            word_shingles(text_col, shingle_k), num_perm=num_perm, seed=seed
-        ).alias("sig"),
-    )
-    if materialize:
-        sigs = sigs.localCheckpoint(eager=False)
-    buckets = sigs.select(
-        "id", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = buckets.alias("a")
-    b = buckets.alias("b")
+def _band_pairs(banded: DataFrame) -> DataFrame:
+    """Candidate pairs of an LSH banding: the (band, key) self-join with
+    ``a.id < b.id``, then DISTINCT (a pair colliding in several bands is
+    one candidate). ``banded`` carries ``id``, ``band``, ``key``; the
+    explode multiplies rows by the band count, but each carries only
+    (id, band, key), so the bucket shuffle is tiny next to the corpus."""
+    a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
             b,
@@ -110,6 +73,24 @@ def minhash_lsh_candidates(
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
+    )
+
+
+def _verified_pairs(
+    banded: DataFrame, sigs: DataFrame, threshold: float
+) -> DataFrame:
+    """`_band_pairs` verified by EXACT shingle Jaccard ≥ threshold: the
+    shingle arrays (``sigs``' ``id``, ``sh``) join back by id, so only
+    candidate pairs (a vanishing fraction of N²) carry full shingle
+    payloads through the shuffle. Returns (id_a, id_b, jaccard)."""
+    sh = sigs.select("id", "sh")
+    return (
+        _band_pairs(banded)
+        .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -123,13 +104,9 @@ def minhash_near_duplicates(
     bands: int = 16,
     seed: int = 42,
 ) -> DataFrame:
-    """LSH candidates verified by EXACT shingle Jaccard ≥ threshold.
-
-    Verification joins the shingle arrays back by id — only candidate pairs
-    (a vanishing fraction of N²) carry full shingle payloads through the
-    shuffle.
-    """
-    from ..functions.hashes import _let
+    """MinHash-LSH near-dup pairs: shingle → signature → murmur band keys
+    → `_verified_pairs`. ``threshold=0.0`` keeps every LSH candidate."""
+    from ..functions.hashes import _let, base_hash_array, minhash_signature_arrow
 
     rows = num_perm // bands
     # ONE materialization of (id, shingles, signature): the shingle array is
@@ -143,8 +120,6 @@ def minhash_near_duplicates(
     # spread the scan first: shingling + base hashing + permutations are
     # the CPU hot path and a single-file corpus otherwise runs them on one
     # core
-    from ..functions.hashes import base_hash_array, minhash_signature_arrow
-
     sig_udf = minhash_signature_arrow(num_perm=num_perm, seed=seed)
     # narrow the materialized signature table by row count (r16,
     # session.checkpoint): it feeds four downstream branches (banding
@@ -164,28 +139,10 @@ def minhash_near_duplicates(
         )
         .select("id", "__x.sh", sig_udf(F.col("__x.bh")).alias("sig"))
     )
-    buckets = sigs.select(
+    banded = sigs.select(
         "id", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sh = sigs.select("id", "sh")
-    return (
-        cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified_pairs(banded, sigs, threshold)
 
 
 def minhash_near_duplicates_exactband(
@@ -206,10 +163,9 @@ def minhash_near_duplicates_exactband(
     (``array<long>`` equality) instead of a murmur bucket key — both so an
     ANSI-SQL oracle computes the byte-identical candidate set. Slower per
     row (char-level fold); exists as the correctness anchor the murmur path
-    is validated against.
+    is validated against. The Jaccard is rounded after the filter.
     """
     from ..functions.hashes import _let
-    from ..functions.hashes import minhash_signature as _sig
 
     rows = num_perm // bands
     sigs = spread(df).select(
@@ -218,7 +174,9 @@ def minhash_near_duplicates_exactband(
             word_shingles(text_col, shingle_k),
             lambda s: F.struct(
                 s.alias("sh"),
-                _sig(s, num_perm=num_perm, seed=seed, base_hash="poly").alias("sig"),
+                minhash_signature(
+                    s, num_perm=num_perm, seed=seed, base_hash="poly"
+                ).alias("sig"),
             ),
         ).alias("__x"),
     ).select("id", "__x.sh", "__x.sig")
@@ -237,24 +195,8 @@ def minhash_near_duplicates_exactband(
             )
         ).alias("bk"),
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sh = sigs.select("id", "sh")
-    return (
-        cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+    return _verified_pairs(banded, sigs, threshold).withColumn(
+        "jaccard", F.round("jaccard", 4)
     )
 
 

@@ -13,7 +13,6 @@ from govgis_nov2023_slim_spatial_server_spark.functions.hashes import (
 )
 from govgis_nov2023_slim_spatial_server_spark.operators.dedup import (
     exact_dedup_deterministic,
-    minhash_lsh_candidates,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
@@ -71,7 +70,10 @@ def test_minhash_estimates_jaccard(spark, near_dup_df):
 
 
 def test_minhash_lsh_finds_neardups(spark, near_dup_df):
-    cands = minhash_lsh_candidates(near_dup_df, "doc_id", "text", 3, 64, 16)
+    # threshold 0 keeps every LSH candidate pair of the verified path
+    cands = minhash_near_duplicates(
+        near_dup_df, "doc_id", "text", threshold=0.0, shingle_k=3, num_perm=64, bands=16
+    )
     pairs = {(r["id_a"], r["id_b"]) for r in cands.collect()}
     # exact dup must always collide; near-dups (high jaccard) should mostly
     assert (0, 200) in pairs

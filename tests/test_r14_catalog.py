@@ -20,9 +20,13 @@ from govgis_nov2023_slim_spatial_server_spark.catalog import ORACLES, QUERIES
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _oracle_rows(name: str, sf_dir: str):
+def _oracle_rows(
+    name: str,
+    sf_dir: str,
+    tables=("orders", "lineitem", "customer", "nation", "region"),
+):
     con = duckdb.connect()
-    for t in ("orders", "lineitem", "customer", "nation", "region"):
+    for t in tables:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
@@ -76,6 +80,80 @@ class TestWeightedQuantileKnobs:
         assert _spark_rows(spark, "weighted_median_histogram", SF_DIR) == (
             _oracle_rows("weighted_median_histogram", SF_DIR)
         )
+
+
+def _write_quantile_tables(tmp_path, orders, lineitem):
+    """orders: (status, price) rows; lineitem: (flag, price, quantity)
+    rows. Written through pyarrow so a None is a parquet NULL, not NaN."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array(range(1, len(orders) + 1), pa.int64()),
+                "o_orderstatus": pa.array([r[0] for r in orders], pa.string()),
+                "o_totalprice": pa.array([r[1] for r in orders], pa.float64()),
+            }
+        ),
+        tmp_path / "orders.parquet",
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "l_returnflag": pa.array([r[0] for r in lineitem], pa.string()),
+                "l_extendedprice": pa.array([r[1] for r in lineitem], pa.float64()),
+                "l_quantity": pa.array([r[2] for r in lineitem], pa.float64()),
+            }
+        ),
+        tmp_path / "lineitem.parquet",
+    )
+
+
+class TestQuantileNulls:
+    """NULL prices count toward the total and sort last, so a rank landing
+    among them is NULL; a NULL status is one more group of the unweighted
+    entry, and no group of the weighted one (the oracle's inner join on
+    the flag drops it). The forced-narrow knobs push the NULL group
+    through the refine's null-safe interval predicates."""
+
+    ORDERS = [
+        ("O", 10.0), ("O", 20.0), ("O", None),
+        (None, 20.0), (None, 30.0),
+        ("F", 5.0),
+    ]
+    LINEITEM = [
+        ("O", 10.0, 1.0), ("O", 20.0, 2.0), ("O", None, 3.0),
+        (None, 20.0, 1.0), (None, 30.0, 1.0),
+        ("A", 7.0, 4.0),
+    ]
+
+    @pytest.mark.parametrize("knobs", [{}, {"_QH_W": 16, "_QH_BIN_ROWS_MAX": 1}])
+    def test_null_prices_and_groups_match_oracle(
+        self, spark, tmp_path, monkeypatch, knobs
+    ):
+        from govgis_nov2023_slim_spatial_server_spark.catalog import advanced
+
+        for k, v in knobs.items():
+            monkeypatch.setattr(advanced, k, v)
+        _write_quantile_tables(tmp_path, self.ORDERS, self.LINEITEM)
+        sf = str(tmp_path)
+        unweighted = _spark_rows(spark, "exact_quantiles_histogram", sf)
+        weighted = _spark_rows(spark, "weighted_median_histogram", sf)
+        tables = ("orders", "lineitem")
+        assert unweighted == _oracle_rows("exact_quantiles_histogram", sf, tables)
+        assert weighted == _oracle_rows("weighted_median_histogram", sf, tables)
+        assert ("O", 3, 2000, None, 20.0, None) in unweighted
+        assert (None, 2, 2000, 3000, 20.0, 30.0) in unweighted
+        assert ("O", 6, 2000, None, 20.0, None) in weighted
+        assert [r[0] for r in weighted] == ["A", "O"]
+
+    def test_empty_tables(self, spark, tmp_path):
+        _write_quantile_tables(tmp_path, [], [])
+        sf = str(tmp_path)
+        for name in ("exact_quantiles_histogram", "weighted_median_histogram"):
+            assert _spark_rows(spark, name, sf) == []
+            assert _oracle_rows(name, sf, ("orders", "lineitem")) == []
 
 
 # ---------------------------------------------------------------------------
