@@ -958,9 +958,11 @@ def _qh_walk(bins, rank: int):
     """The first of the value-sorted ``(bin, weight, rows)`` triples whose
     cumulative weight reaches ``rank``: returns ``(bin, rank's offset
     within it, its row count)``. Pass 1's walk and every refine level
-    share it."""
+    share it. A NULL weight (a bin whose weights are all NULL) adds
+    nothing, as SQL's SUM skips NULLs."""
     cum = 0
     for b, ws, c in bins:
+        ws = ws or 0
         if cum + ws >= rank:
             return b, rank - cum, c
         cum += ws
@@ -1003,9 +1005,10 @@ def _hist_quantiles(
               driver-side with no scan.
 
     NULLs follow the oracles: a NULL price counts toward W and sorts last
-    (its bin walks last and resolves to NULL), and a NULL group is one
-    group (null-safe predicates, the total carried in the target rows
-    rather than a map keyed by the group)."""
+    (its bin walks last and resolves to NULL), a NULL weight counts as
+    nothing (a group whose weights are all NULL is one row of NULLs), and
+    a NULL group is one group (null-safe predicates, the total carried in
+    the target rows rather than a map keyed by the group)."""
     cents = F.floor(F.col(price) * 100 + F.lit(0.5)).cast("long")
     wcol = F.lit(1) if weight is None else F.col(weight).cast("long")
 
@@ -1039,7 +1042,12 @@ def _hist_quantiles(
     targets = []
     for s, bins in by_s.items():
         bins.sort(key=lambda x: (x[0] is None, x[0] or 0))
-        n = sum(ws for _, ws, _ in bins)
+        if all(ws is None for _, ws, _ in bins):
+            # every weight NULL: W and both quantiles are NULL, one row
+            for q in ("50", "90"):
+                targets.append({"s": s, "n": None, "tag": f"{tag}{q}", "lo": None})
+            continue
+        n = sum(ws or 0 for _, ws, _ in bins)
         for q, rank in (("50", (n + 1) // 2), ("90", (9 * n + 9) // 10)):
             b, off, c = _qh_walk(bins, rank)
             lo = None if b is None else b * w0

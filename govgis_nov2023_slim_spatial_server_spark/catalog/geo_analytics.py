@@ -36,9 +36,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
+from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
+from ..functions.arrow import row_udf
 from ..functions.spatial import (
     make_area_centroid_udf,
     make_points_in_polys_udf,
@@ -133,44 +133,33 @@ _S_A2, _S_SX, _S_SY = _shoelace_sql(_SHELL_VERTS)
 _H_A2, _H_SX, _H_SY = _shoelace_sql(_HOLE_VERTS)
 
 
-def make_shape_wkb_udf():
-    """pandas UDF: (key, x0, y0, w, h) → polygon WKB. Odd keys: L-shaped
-    hexagon (CCW). Even keys: donut — CCW rect shell + CW rect hole. The
-    Python floats here are the same exact dyadic values the oracle's SQL
-    arithmetic produces, so the geometry is bit-identical across engines."""
-
-    @pandas_udf(BinaryType())
-    def _shape(
-        keys: pd.Series, x0s: pd.Series, y0s: pd.Series, ws: pd.Series, hs: pd.Series
-    ) -> pd.Series:
-        out = []
-        for k, x0, y0, w, h in zip(keys, x0s, y0s, ws, hs):
-            x0, y0, w, h = float(x0), float(y0), float(w), float(h)
-            if int(k) % 2 == 1:
-                rings = [
-                    [
-                        (x0, y0),
-                        (x0 + w, y0),
-                        (x0 + w, y0 + h * 0.5),
-                        (x0 + w * 0.5, y0 + h * 0.5),
-                        (x0 + w * 0.5, y0 + h),
-                        (x0, y0 + h),
-                    ]
-                ]
-            else:
-                rings = [
-                    [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)],
-                    [
-                        (x0 + w * 0.25, y0 + h * 0.25),
-                        (x0 + w * 0.25, y0 + h * 0.75),
-                        (x0 + w * 0.75, y0 + h * 0.75),
-                        (x0 + w * 0.75, y0 + h * 0.25),
-                    ],
-                ]
-            out.append(wkb_polygon(rings))
-        return pd.Series(out, dtype=object)
-
-    return _shape
+def _shape_wkb(k: int, x0: float, y0: float, w: float, h: float) -> bytes:
+    """Polygon WKB of one store shape. Odd keys: L-shaped hexagon (CCW).
+    Even keys: donut — CCW rect shell + CW rect hole. The Python floats
+    here are the same exact dyadic values the oracle's SQL arithmetic
+    produces, so the geometry is bit-identical across engines."""
+    if k % 2 == 1:
+        rings = [
+            [
+                (x0, y0),
+                (x0 + w, y0),
+                (x0 + w, y0 + h * 0.5),
+                (x0 + w * 0.5, y0 + h * 0.5),
+                (x0 + w * 0.5, y0 + h),
+                (x0, y0 + h),
+            ]
+        ]
+    else:
+        rings = [
+            [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)],
+            [
+                (x0 + w * 0.25, y0 + h * 0.25),
+                (x0 + w * 0.25, y0 + h * 0.75),
+                (x0 + w * 0.75, y0 + h * 0.75),
+                (x0 + w * 0.75, y0 + h * 0.25),
+            ],
+        ]
+    return wkb_polygon(rings)
 
 
 def _shape_store(spark: SparkSession, sf_dir: str, jitter: bool) -> DataFrame:
@@ -202,7 +191,7 @@ def _shape_store(spark: SparkSession, sf_dir: str, jitter: bool) -> DataFrame:
     return params.select(
         "c_custkey",
         "c_nationkey",
-        make_shape_wkb_udf()(
+        row_udf(BinaryType(), _shape_wkb)(
             F.col("c_custkey"), F.col("x0"), F.col("y0"), F.col("w"), F.col("h")
         ).alias("geom_wkb"),
     )
@@ -259,7 +248,7 @@ def spatial_area_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference inherits from PostGIS and backend/models.py never has to
     implement): parse each geometry once, emit shoelace area and centroid —
     holes subtracted (even keys are donuts), non-convexity handled (odd
-    keys are L-shapes). Map-only: at 100 TB this is one scan-side pandas
+    keys are L-shapes). Map-only: at 100 TB this is one scan-side row
     UDF pass, no shuffle at all. Raw doubles are hash-safe because every
     coordinate is lattice-dyadic (module docstring); the oracle replays the
     identical shoelace closed-form per shape."""
@@ -571,6 +560,26 @@ def spatial_dissolve_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _zigzag_wkb(k: int) -> bytes:
+    """Supplier ``k``'s zigzag polyline on the binary-exact lattice: a
+    LINESTRING for odd keys, the same vertex walk split at vertex 1 into a
+    two-part MULTILINESTRING for even keys."""
+    npts = 3 + k % 4
+    x0 = -120.0 + (k % 30) * 1.5
+    y0 = 30.0 + (k % 12) * 1.25
+    step = 0.5 + (k % 3) * 0.25
+    amp = 0.75 + (k % 5) * 0.25
+    pts = [(x0 + i * step, y0 + (i % 2) * amp + i * 0.125) for i in range(npts)]
+    if k % 2 == 0:
+        return wkb_multilinestring([pts[:2], pts[1:]])
+    return wkb_linestring(pts)
+
+
+_LENGTH_SCHEMA = StructType(
+    [StructField("length", DoubleType(), True), StructField("n_points", LongType(), True)]
+)
+
+
 @query(
     "spatial_linestring_length",
     """
@@ -623,60 +632,22 @@ def spatial_linestring_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical per-segment sqrt list sequentially (IEEE sqrt is
     correctly rounded; the fold starts 0.0+s1 = s1 = DuckDB list_reduce's
     first-element init — the ewma discipline). Map-only plan: one scan,
-    two pandas UDFs, no exchange (plan-asserted in tests).
+    two row UDFs, no exchange (plan-asserted in tests).
     """
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     s = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("long").alias("s_suppkey")
     )
 
-    @pandas_udf(BinaryType())
-    def _make_line(keys: pd.Series) -> pd.Series:
-        out = []
-        for k in keys:
-            k = int(k)
-            npts = 3 + k % 4
-            x0 = -120.0 + (k % 30) * 1.5
-            y0 = 30.0 + (k % 12) * 1.25
-            step = 0.5 + (k % 3) * 0.25
-            amp = 0.75 + (k % 5) * 0.25
-            pts = [
-                (x0 + i * step, y0 + (i % 2) * amp + i * 0.125)
-                for i in range(npts)
-            ]
-            if k % 2 == 0:
-                out.append(wkb_multilinestring([pts[:2], pts[1:]]))
-            else:
-                out.append(wkb_linestring(pts))
-        return pd.Series(out, dtype=object)
-
-    length_schema = StructType(
-        [
-            StructField("length", DoubleType(), True),
-            StructField("n_points", LongType(), True),
-        ]
-    )
-
-    @pandas_udf(length_schema)
-    def _length(wkbs: pd.Series) -> pd.DataFrame:
-        lengths, counts = [], []
-        for w in wkbs:
-            ln, np_ = wkb_length_npoints(w)
-            lengths.append(ln)
-            counts.append(np_)
-        return pd.DataFrame({"length": lengths, "n_points": counts})
-
     geom = s.select(
         "s_suppkey",
-        _make_line(F.col("s_suppkey")).alias("geom_wkb"),
+        row_udf(BinaryType(), _zigzag_wkb)(F.col("s_suppkey")).alias("geom_wkb"),
     )
     r = geom.select(
         "s_suppkey",
         F.when(F.col("s_suppkey") % 2 == 0, F.lit("MULTILINESTRING"))
         .otherwise(F.lit("LINESTRING"))
         .alias("geom_type"),
-        _length(F.col("geom_wkb")).alias("lnp"),
+        row_udf(_LENGTH_SCHEMA, wkb_length_npoints)(F.col("geom_wkb")).alias("lnp"),
     )
     return r.select(
         "s_suppkey", "geom_type", F.col("lnp.n_points").alias("n_points"),

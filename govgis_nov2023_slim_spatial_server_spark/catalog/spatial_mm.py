@@ -2,7 +2,7 @@
 
 The driver tables carry no geometry, so spatial queries derive
 deterministic rectangles arithmetically from table keys, encode them
-through the REAL WKB path (pandas-UDF box encoder → WKB bytes → bbox
+through the REAL WKB path (row-UDF box encoder → WKB bytes → bbox
 derivation → coarse prune → exact ray-casting refine), and the oracle
 checks the same containment with plain double arithmetic — exercising the
 full geometry stack against an exactly-computable answer.

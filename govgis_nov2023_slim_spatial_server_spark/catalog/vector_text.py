@@ -397,7 +397,7 @@ def ivf_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the IVF probe-and-rank path against brute-force
     ground truth, per probe — the IVF twin of ann_recall_at_10, closing
     the quality audit over BOTH approximate-search mechanisms. Runs the
-    real operators (assign_clusters' BLAS argmin, ivf_search's
+    real operators (assign_clusters' Arrow argmin, ivf_search's
     2-nearest-cell prune + exact in-cell top-10) with data-derived
     centroids (vec_id 1..8, the bounded k-row collect), so the oracle
     replays the identical pipeline: assign → rank cells per probe →
@@ -601,7 +601,7 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     written partitioned by cluster id (write_ivf), so cell skew IS
     partition skew: a hot cell throttles every probe that hits it, and
     the fix (re-train centroids, split the cell) is triggered by this
-    monitor. Uses the same data-derived centroids and BLAS argmin as the
+    monitor. Uses the same data-derived centroids and Arrow argmin as the
     proven knn_ivf_oracle pipeline.
 
     One broadcast-argmin map (no shuffle) + one ≤8-group aggregate."""
@@ -658,8 +658,9 @@ def _ivf_oracle_sql() -> str:
 def knn_ivf_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF probe-and-rank COMPOSITION made exactly graded (VERDICT r4
     #4): kmeans_assign_step already grades the E-step alone; this entry
-    runs the real IVF operators end-to-end — assign_clusters (one BLAS
-    matmul per Arrow batch) then ivf_search (rank cells against the query,
+    runs the real IVF operators end-to-end — assign_clusters (the
+    ``argmin_euclidean_arrow`` kernel: distance, then cid, the oracle's
+    order) then ivf_search (rank cells against the query,
     scan only the n_probe=2 nearest, exact cosine top-10 inside them) —
     with the centroids data-derived (the vectors with vec_id 1..8, the
     bounded k-row collect of operators/ivf.py) so the oracle can replay
@@ -2199,24 +2200,19 @@ def pq_adc_rank(
     spread via `session.spread` (single small parquet files scan
     as ONE partition; no-op at scale). Measured 2.06 → 0.5 s class at
     sf0.1; the oracle hash pins bit-equality."""
-    probe = [float(x) for x in PROBE_VEC]
+    import numpy as np
+
+    from ..functions.vector import _sq_fold, pq_encode_adc_arrow
+    from ..session import spread
 
     # 4x8 ADC lookup table: probe-subspace -> codeword distances, computed
     # with the same sequential fold the oracle's list_reduce performs
-    lut: list[list[float]] = []
-    for s in range(4):
-        row = []
-        for cw in codebook:
-            acc = 0.0
-            for i in range(16):
-                d = probe[s * 16 + i] - cw[s * 16 + i]
-                acc += d * d
-            row.append(acc)
-        lut.append(row)
-
-    from ..functions.vector import pq_encode_adc_arrow
-    from ..session import spread
-
+    probe = np.array([PROBE_VEC], dtype=np.float64)
+    cb = np.array(codebook, dtype=np.float64)
+    lut = [
+        _sq_fold(probe[:, s * 16 : (s + 1) * 16], cb[:, s * 16 : (s + 1) * 16])[0]
+        for s in range(4)
+    ]
     kernel = pq_encode_adc_arrow(codebook, lut)
     r = spread(e.select("vec_id", "embedding")).select(
         "vec_id", kernel(F.col("embedding")).alias("__pq")

@@ -7,16 +7,16 @@ MinHash shingling and base hashing are native Spark expressions (shingle
 arrays via ``transform``/``slice``, murmur3 via ``F.hash``); the
 64-permutation min over the universal-hash family ``(a·h + b) mod p`` has
 two interchangeable kernels: a fully-native ``array_min(transform(...))``
-form (the SQL-reproducible anchor) and an Arrow-vectorized pandas-UDF form
+form (the SQL-reproducible anchor) and an Arrow-vectorized batch-UDF form
 (``minhash_signature_arrow``) that computes bit-identical signatures ~2x
 faster — higher-order functions are interpreted per element, while the
 numpy broadcast is one fused pass per row. Both distribute identically at
 100 TB; the production LSH path uses the Arrow kernel.
 
 SimHash needs per-bit vote accumulation (64 counters per doc) — that is the
-one genuinely imperative kernel, implemented as an Arrow-batched pandas UDF
-over blake2b-derived 64-bit token hashes (deterministic across workers,
-unlike Python's builtin ``hash``).
+one genuinely imperative kernel, implemented as a row lift
+(``functions/arrow.py``) over blake2b-derived 64-bit token hashes
+(deterministic across workers, unlike Python's builtin ``hash``).
 """
 
 from __future__ import annotations
@@ -24,12 +24,12 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType
 
+from .arrow import batch_udf, row_udf
 from .text import tokens
 
 _MERSENNE_P = (1 << 61) - 1
@@ -209,7 +209,7 @@ def base_hash_array(shingle_col: Column) -> Column:
 
 
 def minhash_signature_arrow(num_perm: int = 64, seed: int = 42):
-    """Arrow-vectorized MinHash permutations: a pandas UDF mapping a
+    """Arrow-vectorized MinHash permutations: a batch UDF mapping a
     base-hash array column (from :func:`base_hash_array`) to the
     array<long> signature.
 
@@ -219,31 +219,31 @@ def minhash_signature_arrow(num_perm: int = 64, seed: int = 42):
     passes. Exact int64 arithmetic (a < 2^30, h < 2^32 ⇒ a·h + b < 2^63,
     no overflow), so signatures are BIT-IDENTICAL to the native path
     (asserted in tests/test_hashes.py); measured ~1.9x faster on the sf0.1
-    corpus. Native expressions remain the right tool for the
+    corpus. A NULL or empty row gets the all-p sentinel, as the native
+    form's ``coalesce`` gives it. Each batch is read as numpy views of the
+    flat hash values and the row offsets; the loop stays per row, because
+    a whole-batch broadcast would hold batch × shingles × num_perm int64
+    values. Native expressions remain the right tool for the
     SQL-reproducible poly twin; this is the production murmur path."""
-    import numpy as np
-    import pandas as pd
-
     params = _perm_params(num_perm, seed)
-    a_arr = np.array([a for a, _ in params], dtype=np.int64)
-    b_arr = np.array([b for _, b in params], dtype=np.int64)
+    a_arr = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    b_arr = np.array([b for _, b in params], dtype=np.int64)[:, None]
+    empty = np.full(num_perm, _MERSENNE_P, dtype=np.int64)
 
-    @pandas_udf(returnType="array<long>")
-    def _sig(hs: pd.Series) -> pd.Series:
+    def minhash_batch(hs: pa.Array) -> list:
+        vals = hs.values.to_numpy()  # zero-copy: raises on a NULL hash
+        offs = hs.offsets.to_numpy()
+        valid = hs.is_valid().to_numpy(zero_copy_only=False)
         out = []
-        for h in hs:
-            h = np.asarray(h, dtype=np.int64)
-            if h.size == 0:
-                out.append(np.full(num_perm, _MERSENNE_P, dtype=np.int64))
+        for i in range(len(hs)):
+            h = vals[offs[i] : offs[i + 1]]
+            if valid[i] and h.size:
+                out.append(((a_arr * h + b_arr) % _MERSENNE_P).min(axis=1))
             else:
-                out.append(
-                    ((a_arr[:, None] * h[None, :] + b_arr[:, None]) % _MERSENNE_P).min(
-                        axis=1
-                    )
-                )
-        return pd.Series(out)
+                out.append(empty)
+        return out
 
-    return _sig
+    return batch_udf(ArrayType(LongType()), minhash_batch)
 
 
 def lsh_band_keys(sig_col: Column, bands: int, rows_per_band: int) -> Column:
@@ -280,7 +280,7 @@ def jaccard(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# SimHash (pandas UDF kernel)
+# SimHash (row kernel)
 # ---------------------------------------------------------------------------
 
 
@@ -311,11 +311,7 @@ def simhash_str(s: str | None) -> int | None:
 
 
 def simhash_udf():
-    @pandas_udf(LongType())
-    def _simhash(s: pd.Series) -> pd.Series:
-        return s.apply(simhash_str).astype("Int64")
-
-    return _simhash
+    return row_udf(LongType(), simhash_str)
 
 
 def simhash_poly(col: Column | str, n_bits: int = 16) -> Column:
@@ -327,7 +323,7 @@ def simhash_poly(col: Column | str, n_bits: int = 16) -> Column:
     matching ``simhash_str``); bit j of the result is set iff the signed
     vote sum over ``(token_hash >> j) & 1`` is strictly positive. n_bits is
     intentionally small (default 16) — the production 64-bit path stays on
-    the blake2b pandas-UDF kernel; this variant exists so DuckDB can compute
+    the blake2b row kernel; this variant exists so DuckDB can compute
     the byte-identical signature and anchor the kernel in the driver gate.
     """
     c = F.col(col) if isinstance(col, str) else col

@@ -10,8 +10,8 @@ backend/models.py:37-42).
 shapely/pyproj are not available in this environment, so the WKB codec,
 ray-casting point-in-polygon, and EPSG:3857 web-mercator math are
 implemented directly from their public specifications (OGC SFA WKB layout;
-even-odd ray casting; EPSG spherical-mercator formulas). All Python
-boundaries are Arrow-batched (pandas or Arrow) UDFs.
+even-odd ray casting; EPSG spherical-mercator formulas). Every Python
+boundary is a ``functions/arrow.py`` UDF.
 
 Scale design (SURVEY.md §4.3.1): Spark has no secondary indexes, so the
 R-tree's coarse-filter role is played by a derived ``bbox`` struct column —
@@ -30,15 +30,13 @@ import math
 import struct
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
-from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BinaryType, BooleanType, DoubleType, StructField, StructType
 
 from ..schemas import BBOX_SCHEMA, GEOMETRY_SCHEMA
+from .arrow import batch_udf, row_udf
 
 # ---------------------------------------------------------------------------
 # WKB codec (OGC Simple Features; EWKB SRID flag tolerated on read)
@@ -663,107 +661,78 @@ def polygons_intersect_wkb(wa: bytes | None, wb: bytes | None) -> bool:
 # ---------------------------------------------------------------------------
 
 
+def _geometry_row(wkb: bytes | None) -> dict:
+    """``wkb_geometry`` as one struct<bbox, geom_rings> value. The bbox
+    turns a NaN bound into NULL, so a NaN box never reaches the native
+    range filter; the rings keep NaN for ``point_in_rings``."""
+    b, rings = wkb_geometry(wkb)
+    bounds = [None if v is None or math.isnan(v) else v for v in b or (None,) * 4]
+    return {"bbox": dict(zip(BBOX_SCHEMA.names, bounds)), "geom_rings": rings}
+
+
 def wkb_geometry_udf():
-    """Arrow UDF: WKB binary → struct<bbox, geom_rings> (ingest-time
-    derivation of both the pruning and the refine column, one parse per
-    row, ``wkb_geometry``). An Arrow rather than a pandas UDF because the
-    pandas conversion turns every NaN into NULL: a NaN ring coordinate
-    must reach ``point_in_rings`` as NaN. The bbox keeps that NaN → NULL
-    rule explicitly."""
-    out_type = to_arrow_type(GEOMETRY_SCHEMA)
+    """WKB binary → struct<bbox, geom_rings>: the ingest-time derivation of
+    both the pruning and the refine column, one parse per row."""
+    return row_udf(GEOMETRY_SCHEMA, _geometry_row)
 
-    @arrow_udf(GEOMETRY_SCHEMA)
-    def _geometry(wkbs: pa.Array) -> pa.Array:
-        out = []
-        for w in wkbs.to_pylist():
-            b, rings = wkb_geometry(w)
-            bounds = [None if v is None or math.isnan(v) else v for v in b or (None,) * 4]
-            out.append({"bbox": dict(zip(BBOX_SCHEMA.names, bounds)), "geom_rings": rings})
-        return pa.array(out, type=out_type)
 
-    return _geometry
+def _box_row(xmin, ymin, xmax, ymax) -> bytes | None:
+    vals = (xmin, ymin, xmax, ymax)
+    if any(v is None or math.isnan(v) for v in vals):
+        return None
+    return wkb_box(*vals)
 
 
 def make_box_wkb_udf():
-    """pandas UDF: four double columns (xmin,ymin,xmax,ymax) → rectangle
-    polygon WKB. Used by fixtures/tests to build real WKB geometry from
-    arithmetic bounds so the full codec path is exercised."""
-    from pyspark.sql.types import BinaryType
+    """Four double columns (xmin,ymin,xmax,ymax) → rectangle polygon WKB;
+    a NULL or NaN bound gives NULL. Used by fixtures/tests to build real
+    WKB geometry from arithmetic bounds so the full codec path is
+    exercised."""
+    return row_udf(BinaryType(), _box_row)
 
-    @pandas_udf(BinaryType())
-    def _box(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if any(v is None or (isinstance(v, float) and math.isnan(v)) for v in (a, b, c, d))
-                else wkb_box(float(a), float(b), float(c), float(d))
-                for a, b, c, d in zip(xmin, ymin, xmax, ymax)
-            ],
-            dtype=object,
-        )
 
-    return _box
+def _points_in_polys_batch(wkbs: pa.Array, lons: pa.Array, lats: pa.Array) -> np.ndarray:
+    out = np.zeros(len(wkbs), dtype=bool)
+    lon_arr = lons.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    lat_arr = lats.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    groups: dict[bytes, list[int]] = {}
+    for i, w in enumerate(wkbs.to_pylist()):
+        if w is not None:
+            groups.setdefault(w, []).append(i)
+    for w, idxs in groups.items():
+        try:
+            polys = parse_wkb_polygons(w)
+        except (ValueError, struct.error):
+            continue
+        ii = np.asarray(idxs)
+        out[ii] = points_in_polys(polys, lon_arr[ii], lat_arr[ii])
+    return out
 
 
 def make_points_in_polys_udf():
-    """pandas UDF: (geometry WKB, lon, lat) columns → ST_Contains boolean.
-    The refine step of the points-in-polygons join: rows are grouped by
-    geometry within each Arrow batch (one parse per distinct WKB — the
-    blocked join delivers many points per polygon) and each group's points
-    are ray-cast in one vectorized call. Malformed WKB → False, the same
+    """(geometry WKB, lon, lat) columns → ST_Contains boolean. The refine
+    step of the points-in-polygons join: rows are grouped by geometry
+    within each Arrow batch (one parse per distinct WKB — the blocked join
+    delivers many points per polygon) and each group's points are
+    ray-cast in one vectorized call. Malformed WKB → False, the same
     in-band contract as the other refine predicates."""
+    return batch_udf(BooleanType(), _points_in_polys_batch)
 
-    @pandas_udf(BooleanType())
-    def _contains(wkbs: pd.Series, lons: pd.Series, lats: pd.Series) -> pd.Series:
-        out = np.zeros(len(wkbs), dtype=bool)
-        lon_arr = lons.to_numpy(dtype=np.float64, na_value=np.nan)
-        lat_arr = lats.to_numpy(dtype=np.float64, na_value=np.nan)
-        groups: dict[bytes, list[int]] = {}
-        for i, w in enumerate(wkbs):
-            if w is not None:
-                groups.setdefault(bytes(w), []).append(i)
-        for w, idxs in groups.items():
-            try:
-                polys = parse_wkb_polygons(w)
-            except (ValueError, struct.error):
-                continue
-            ii = np.asarray(idxs)
-            out[ii] = points_in_polys(polys, lon_arr[ii], lat_arr[ii])
-        return pd.Series(out)
 
-    return _contains
+AREA_CENTROID_SCHEMA = StructType(
+    [
+        StructField("area", DoubleType(), True),
+        StructField("cx", DoubleType(), True),
+        StructField("cy", DoubleType(), True),
+    ]
+)
 
 
 def make_area_centroid_udf():
-    """pandas UDF: WKB binary → struct<area double, cx double, cy double>
-    (ST_Area / ST_Centroid in one parse — a query computing both should
-    not decode the geometry twice)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("area", DoubleType(), True),
-            StructField("cx", DoubleType(), True),
-            StructField("cy", DoubleType(), True),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _area_centroid(wkbs: pd.Series) -> pd.DataFrame:
-        n = len(wkbs)
-        areas = np.full(n, np.nan, dtype=np.float64)
-        cxs = np.full(n, np.nan, dtype=np.float64)
-        cys = np.full(n, np.nan, dtype=np.float64)
-        for i, w in enumerate(wkbs):
-            a, cx, cy = wkb_area_centroid(w)
-            if a is not None:
-                areas[i] = a
-            if cx is not None:
-                cxs[i] = cx
-            if cy is not None:
-                cys[i] = cy
-        return pd.DataFrame({"area": areas, "cx": cxs, "cy": cys})
-
-    return _area_centroid
+    """WKB binary → struct<area double, cx double, cy double> (ST_Area /
+    ST_Centroid in one parse — a query computing both should not decode
+    the geometry twice)."""
+    return row_udf(AREA_CENTROID_SCHEMA, wkb_area_centroid)
 
 
 def _sql_double(x: float) -> str:
@@ -832,10 +801,34 @@ def point_in_rings(rings: str, lon: float, lat: float) -> Column:
     return F.expr(point_in_rings_sql(rings, lon, lat))
 
 
+def _polys_intersect_batch(wa: pa.Array, wb: pa.Array) -> np.ndarray:
+    cache: dict = {}
+
+    def _parsed(w):
+        if w is None:
+            return None
+        p = cache.get(w)
+        if p is None:
+            try:
+                p = parse_wkb_polygons(w)
+            except (ValueError, struct.error):
+                p = False
+            cache[w] = p
+        return p
+
+    out = np.zeros(len(wa), dtype=bool)
+    for i, (a, b) in enumerate(zip(wa.to_pylist(), wb.to_pylist())):
+        ga = _parsed(a)
+        gb = _parsed(b)
+        if ga and gb:
+            out[i] = polygons_intersect(ga, gb)
+    return out
+
+
 def make_polys_intersect_udf():
-    """Exact refinement for polygon×polygon joins: Arrow-batched pandas
-    UDF over TWO WKB columns. Runs after the coarse bbox/grid join, so
-    per-row cost is paid only on candidate pairs.
+    """Exact refinement for polygon×polygon joins over TWO WKB columns.
+    Runs after the coarse bbox/grid join, so per-row cost is paid only on
+    candidate pairs.
 
     Parse results are memoized PER BATCH: in a blocked join every
     geometry appears in as many candidate rows as it has cell partners
@@ -845,33 +838,7 @@ def make_polys_intersect_udf():
     (ValueError, struct.error) → False contract of
     ``polygons_intersect_wkb`` is preserved: unparseable bytes memoize a
     False sentinel and the pair refines to False."""
-
-    @pandas_udf(BooleanType())
-    def _intersects(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        cache: dict = {}
-
-        def _parsed(w):
-            if w is None:
-                return None
-            b = bytes(w)
-            p = cache.get(b)
-            if p is None:
-                try:
-                    p = parse_wkb_polygons(b)
-                except (ValueError, struct.error):
-                    p = False
-                cache[b] = p
-            return p
-
-        out = np.zeros(len(wa), dtype=bool)
-        for i, (a, b) in enumerate(zip(wa, wb)):
-            pa = _parsed(a)
-            pb = _parsed(b)
-            if pa and pb:
-                out[i] = polygons_intersect(pa, pb)
-        return pd.Series(out)
-
-    return _intersects
+    return batch_udf(BooleanType(), _polys_intersect_batch)
 
 
 def bboxes_overlap(a: Column, b: Column) -> Column:
@@ -958,27 +925,20 @@ def reproject_point(x: float, y: float, src_epsg: int, dst_epsg: int = 4326) -> 
 
 
 def make_reproject_udf(src_epsg: int, dst_epsg: int = 4326):
-    """Column-wise reprojection for (x, y) double columns (vectorized
-    web-mercator math; the extension of reference backend/models.py:37-42)."""
+    """Column-wise reprojection of (x, y) double columns (the extension of
+    reference backend/models.py:37-42): two row lifts of
+    ``reproject_point``, returned as the (x, y) UDF pair. A NULL
+    coordinate gives NULL and a NaN one NaN, as the native formulas do;
+    a point outside the projection's domain raises as ``reproject_point``
+    does."""
 
-    @pandas_udf(BBOX_SCHEMA["xmin"].dataType)  # DoubleType
-    def _x(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if src_epsg == 3857 and dst_epsg == 4326:
-            return pd.Series(np.degrees(np.asarray(xs, dtype=np.float64) / _R))
-        if src_epsg == 4326 and dst_epsg == 3857:
-            return pd.Series(_R * np.radians(np.asarray(xs, dtype=np.float64)))
-        return pd.Series([reproject_point(x, y, src_epsg, dst_epsg)[0] for x, y in zip(xs, ys)])
+    def reproject_x(x: float | None, y: float | None) -> float | None:
+        return None if x is None or y is None else reproject_point(x, y, src_epsg, dst_epsg)[0]
 
-    @pandas_udf(BBOX_SCHEMA["xmin"].dataType)
-    def _y(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        y64 = np.asarray(ys, dtype=np.float64)
-        if src_epsg == 3857 and dst_epsg == 4326:
-            return pd.Series(np.degrees(2.0 * np.arctan(np.exp(y64 / _R)) - np.pi / 2.0))
-        if src_epsg == 4326 and dst_epsg == 3857:
-            return pd.Series(_R * np.log(np.tan(np.pi / 4.0 + np.radians(y64) / 2.0)))
-        return pd.Series([reproject_point(x, y, src_epsg, dst_epsg)[1] for x, y in zip(xs, ys)])
+    def reproject_y(x: float | None, y: float | None) -> float | None:
+        return None if x is None or y is None else reproject_point(x, y, src_epsg, dst_epsg)[1]
 
-    return _x, _y
+    return row_udf(DoubleType(), reproject_x), row_udf(DoubleType(), reproject_y)
 
 
 def validate_lonlat(lon: float, lat: float) -> None:

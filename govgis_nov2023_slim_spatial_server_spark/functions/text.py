@@ -9,18 +9,18 @@ quality scoring, language ID, and document fingerprinting.
 Design rule: everything that CAN be a built-in ``pyspark.sql.functions``
 expression IS one (JVM codegen, oracle-expressible in ANSI SQL); only
 genuinely imperative transforms (HTML→MD, rolling-hash fingerprint) are
-Arrow-batched pandas UDFs.
+row lifts over ``functions/arrow.py``.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType, StringType
+
+from .arrow import row_udf
 
 # ---------------------------------------------------------------------------
 # Tokenization / counting (native)
@@ -182,7 +182,7 @@ def lang_id(col: Column | str, default: str = "und") -> Column:
 
 
 # ---------------------------------------------------------------------------
-# HTML → Markdown (pandas UDF). The markdownify package the reference uses
+# HTML → Markdown (row lift). The markdownify package the reference uses
 # (backend/mcp.py:1-3, `md(obj)` with default options) is not installed in
 # this environment, so this is a small stdlib html.parser re-implementation
 # of markdownify's DEFAULT behaviors for the common tags:
@@ -346,15 +346,11 @@ def html_to_markdown_str(s: str | None) -> str | None:
 
 
 def html_to_markdown_udf():
-    @pandas_udf(StringType())
-    def _h2md(s: pd.Series) -> pd.Series:
-        return s.apply(html_to_markdown_str)
-
-    return _h2md
+    return row_udf(StringType(), html_to_markdown_str)
 
 
 # ---------------------------------------------------------------------------
-# Document fingerprint (rolling polynomial hash; pandas UDF)
+# Document fingerprint (rolling polynomial hash)
 # ---------------------------------------------------------------------------
 
 # Canonical rolling-hash constants, shared with the MinHash poly hash
@@ -379,8 +375,4 @@ def fingerprint_str(s: str | None) -> int | None:
 
 
 def fingerprint_udf():
-    @pandas_udf(LongType())
-    def _fp(s: pd.Series) -> pd.Series:
-        return s.apply(fingerprint_str).astype("Int64")
-
-    return _fp
+    return row_udf(LongType(), fingerprint_str)

@@ -9,11 +9,12 @@ Distances are exact (the reference has NO ANN index — SURVEY.md §4.1 —
 so brute-force is semantic parity, not a shortcut) and come in one tier:
 **native higher-order functions** (``zip_with`` + ``aggregate``), which stay
 entirely JVM-side inside whole-stage codegen with no Python boundary; at
-100 TB the Arrow serialization of a pandas UDF is pure overhead for a
+100 TB the Arrow serialization of a Python UDF is pure overhead for a
 64–1024-wide fused multiply-add. The Arrow kernels below
 (``argmin_euclidean_arrow``, ``pq_encode_adc_arrow``) are not a second
 distance tier: each replaces a many-fold-per-row native form inside one
-catalog entry and is pinned bit-identical to it.
+catalog entry and is pinned bit-identical to it. Both, and the driver-side
+PQ lookup table, fold squared differences through the one ``_sq_fold``.
 
 All fold orders are sequential left-to-right, so results are deterministic
 and oracle-comparable.
@@ -26,12 +27,13 @@ import struct
 from collections.abc import Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from .arrow import batch_udf, matrix
 
 
 @functools.lru_cache(maxsize=1)
@@ -176,20 +178,39 @@ def quantize_int8(emb_col: Column | str) -> Column:
     return _let(v, _with_v)
 
 
+def _sq_fold(x: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, k) squared Euclidean distances from each row of ``x`` (n, d) to
+    each row of ``C`` (k, d), as the sequential left fold
+    ``acc = acc + d_j·d_j`` in element order j = 0..d−1: the fold of the
+    native ``aggregate(zip_with(x, c, x − y), 0.0, acc + d·d)`` and of
+    DuckDB's ``list_reduce``, operation for operation. Never ``np.sum`` or
+    a BLAS product, whose reassociated sums drift in the last ulp and can
+    reorder near-ties. Temporaries are (n, k) float64."""
+    acc = np.zeros((x.shape[0], C.shape[0]), dtype=np.float64)
+    for j in range(x.shape[1]):
+        d = x[:, j, None] - C[None, :, j]
+        acc = acc + d * d
+    return acc
+
+
+_ARGMIN_TYPE = StructType(
+    [StructField("cid", LongType(), False), StructField("dist", DoubleType(), False)]
+)
+
+
 def argmin_euclidean_arrow(cents: list[tuple[int, list[float]]]):
-    """Arrow-vectorized per-row argmin over centroid literals: a pandas
+    """Arrow-vectorized per-row argmin over centroid literals: a batch
     UDF mapping an embedding column to struct<cid: long, dist: double>,
     BIT-IDENTICAL to the native form it replaces —
     ``LEAST(struct(SQRT(aggregate(zip_with(emb, c, x−y), 0.0,
     acc + d·d)), cid) …)`` — because every step reproduces the same
     IEEE-754 operations in the same order:
 
-    - float32 → float64 widening is exact; (x − c) and d·d are single
-      binary64 ops on identical inputs;
-    - the HOF's sequential left fold is replicated by ``np.cumsum`` along
-      the dim axis (cumsum adds strictly left-to-right — NOT ``np.sum``,
-      whose pairwise summation reassociates and drifts in the last ulp);
-    - ``np.sqrt`` and the JVM's SQRT are both correctly rounded;
+    - float32 → float64 widening is exact (``matrix``); (x − c) and d·d
+      are single binary64 ops on identical inputs;
+    - ``_sq_fold`` is the HOF's sequential left fold;
+    - ``np.sqrt`` and the JVM's SQRT are both correctly rounded, and the
+      argmin compares the sqrt'ed values, as LEAST does;
     - ``np.argmin`` returns the FIRST minimum = the lowest cid on exact
       distance ties, exactly the lexicographic-min (dist, cid) struct
       that LEAST picks, given ``cents`` sorted by cid (asserted).
@@ -197,60 +218,34 @@ def argmin_euclidean_arrow(cents: list[tuple[int, list[float]]]):
     Why it exists: higher-order functions are interpreted per element
     (the CLAUDE.md MinHash lesson — `minhash_signature_arrow` is the
     precedent kernel), so k=8 × dim=64 lambda evaluations per row
-    dominate the kmeans assignment pass; the numpy broadcast is one
-    fused pass per Arrow batch (measured ~2× on the entry, bit-equal
-    output asserted in tests/test_vector.py against the native form).
-    Batch temporaries are batch × k × dim float64 — ~4 MB at the default
-    10k Arrow batch, constant in corpus size."""
+    dominate the kmeans assignment pass; the numpy fold is k × dim lane
+    ops per Arrow batch (measured ~2× on the entry, bit-equal output
+    asserted in tests/test_vector.py against the native form)."""
     assert all(
         cents[i][0] < cents[i + 1][0] for i in range(len(cents) - 1)
     ), "cents must be sorted by cid (tie-break contract)"
     C = np.array([v for _, v in cents], dtype=np.float64)  # (k, dim)
     cids = np.array([c for c, _ in cents], dtype=np.int64)
 
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_type = StructType(
-        [
-            StructField("cid", LongType(), False),
-            StructField("dist", DoubleType(), False),
-        ]
-    )
-
-    @pandas_udf(out_type)
-    def _assign(batch: pd.Series) -> pd.DataFrame:
-        if len(batch) == 0:
-            return pd.DataFrame({"cid": [], "dist": []})
-        # float64 directly (ADVICE r15): exact for the float32 arrays the
-        # column physically carries, and LOSSLESS if an upstream select
-        # ever ships array<double> (the float32 coercion would silently
-        # truncate those).
-        x = np.array(list(batch), dtype=np.float64)
-        d = x[:, None, :] - C[None, :, :]
-        sq = d * d
-        dist = np.sqrt(np.cumsum(sq, axis=2)[:, :, -1])  # (n, k)
+    def argmin_batch(emb: pa.Array) -> dict:
+        dist = np.sqrt(_sq_fold(matrix(emb, C.shape[1]), C))
         am = np.argmin(dist, axis=1)
-        rows = np.arange(len(x))
-        return pd.DataFrame(
-            {"cid": cids[am], "dist": dist[rows, am]}
-        )
+        return {"cid": cids[am], "dist": dist[np.arange(len(am)), am]}
 
-    return _assign
+    return batch_udf(_ARGMIN_TYPE, argmin_batch)
 
 
 def pq_encode_adc_arrow(codebook: list[list[float]], lut: list[list[float]]):
-    """Arrow-vectorized PQ encode + ADC distance: a pandas UDF mapping an
+    """Arrow-vectorized PQ encode + ADC distance: a batch UDF mapping an
     embedding column to struct<code0..code3: long, adc_dist: double>,
     BIT-IDENTICAL to the native form it replaces in `pq_adc_rank` —
     per subspace ``LEAST(struct(aggregate(zip_with(slice(emb), cw, x−y),
     0.0, acc + d·d), code) …).c`` then four literal-LUT lookups summed as
     ``((d0 + d1) + d2) + d3`` — by the `argmin_euclidean_arrow` argument:
 
-    - float32 → float64 widening is exact; (x − c) and d·d are single
-      binary64 ops on identical inputs;
-    - the HOF's sequential left fold is replicated by accumulating the 16
-      per-element squares in index order (``acc = acc + d_j·d_j`` per j —
-      never ``np.sum``, whose pairwise summation reassociates);
+    - float32 → float64 widening is exact; per subspace, ``_sq_fold`` is
+      the HOF's sequential fold, and the argmin compares its squared
+      values, as LEAST does;
     - ``np.argmin`` returns the FIRST minimum = the lowest code on exact
       distance ties, exactly what LEAST over struct(d, code) picks with
       codes ascending;
@@ -260,47 +255,26 @@ def pq_encode_adc_arrow(codebook: list[list[float]], lut: list[list[float]]):
     Why it exists (guide §4.1): the native encode is 4 subspaces × k
     codewords interpreted ``aggregate(zip_with(...))`` folds PER ROW —
     measured 2.1 s for 2 000 rows on one core at sf0.1 — while this
-    kernel is 64·k fused numpy lane ops per Arrow batch. Batch
-    temporaries are batch × k float64 per subspace (~1.3 MB at the
-    default 10k Arrow batch), constant in corpus size."""
+    kernel is 64·k fused numpy lane ops per Arrow batch."""
     C = np.array(codebook, dtype=np.float64)  # (k, 64)
     L = [np.array(row, dtype=np.float64) for row in lut]  # 4 × (k,)
     n_sub = len(lut)
     sub_dim = C.shape[1] // n_sub
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
     out_type = StructType(
         [StructField(f"code{s}", LongType(), False) for s in range(n_sub)]
         + [StructField("adc_dist", DoubleType(), False)]
     )
 
-    @pandas_udf(out_type)
-    def _encode(batch: pd.Series) -> pd.DataFrame:
+    def pq_encode_batch(emb: pa.Array) -> dict:
+        x = matrix(emb, C.shape[1])
         cols: dict[str, np.ndarray] = {}
-        if len(batch) == 0:
-            return pd.DataFrame(
-                {
-                    **{f"code{s}": np.array([], dtype=np.int64) for s in range(n_sub)},
-                    "adc_dist": np.array([], dtype=np.float64),
-                }
-            )
-        # float64 directly (ADVICE r15): exact for float32 input, lossless
-        # for float64 — never a silent truncation.
-        x = np.array(list(batch), dtype=np.float64)
         adc = None
         for s in range(n_sub):
-            sub = x[:, s * sub_dim : (s + 1) * sub_dim]  # (n, 16)
-            csub = C[:, s * sub_dim : (s + 1) * sub_dim]  # (k, 16)
-            acc = np.zeros((len(x), C.shape[0]), dtype=np.float64)
-            for j in range(sub_dim):  # sequential left fold, element order
-                d = sub[:, j][:, None] - csub[None, :, j]
-                acc = acc + d * d
-            codes = np.argmin(acc, axis=1).astype(np.int64)
+            sub = slice(s * sub_dim, (s + 1) * sub_dim)
+            codes = np.argmin(_sq_fold(x[:, sub], C[:, sub]), axis=1)
             cols[f"code{s}"] = codes
-            term = L[s][codes]
-            adc = term if adc is None else adc + term  # ((d0+d1)+d2)+d3
+            adc = L[s][codes] if adc is None else adc + L[s][codes]  # ((d0+d1)+d2)+d3
         cols["adc_dist"] = adc
-        return pd.DataFrame(cols)
+        return cols
 
-    return _encode
+    return batch_udf(out_type, pq_encode_batch)

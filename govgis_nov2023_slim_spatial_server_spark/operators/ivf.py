@@ -5,8 +5,8 @@ Classic IVF-Flat decomposition (Jégou et al., public literature):
 1. TRAIN: k-means centroids from a driver-side sample (sampling is the
    standard IVF move — centroid quality needs thousands of vectors, not
    all of them).
-2. ASSIGN: every corpus vector gets its nearest-centroid id via one
-   Arrow-batched numpy matmul per batch (matrix × centroidsᵀ).
+2. ASSIGN: every corpus vector gets its nearest-centroid id from the
+   Arrow argmin kernel (``functions/vector.argmin_euclidean_arrow``).
 3. SEARCH: rank centroids against the query, scan only the ``n_probe``
    nearest clusters exactly.
 
@@ -19,12 +19,10 @@ recall vs exact KNN is asserted in tests.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType
 
+from ..functions.vector import argmin_euclidean_arrow
 from .knn import knn
 
 
@@ -58,20 +56,11 @@ def train_centroids(
 def assign_clusters(
     df: DataFrame, centroids: np.ndarray, emb_col: str = "embedding"
 ) -> DataFrame:
-    """Nearest-centroid id per row — one BLAS matmul per Arrow batch."""
-    cents = centroids.copy()
-    cnorm2 = (cents**2).sum(axis=1)
-
-    @pandas_udf(IntegerType())
-    def _assign(batch: pd.Series) -> pd.Series:
-        if len(batch) == 0:
-            return pd.Series([], dtype="int32")
-        mat = np.stack(batch.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² constant per row → drop
-        scores = -2.0 * (mat @ cents.T) + cnorm2[None, :]
-        return pd.Series(scores.argmin(axis=1).astype("int32"))
-
-    return df.withColumn("cluster", _assign(F.col(emb_col)))
+    """Nearest-centroid id per row: the cid of ``argmin_euclidean_arrow``
+    over the centroids numbered 0..k−1, i.e. the order (Euclidean
+    distance, then id) that the IVF oracles replay in SQL."""
+    assign = argmin_euclidean_arrow(list(enumerate(centroids)))
+    return df.withColumn("cluster", assign(F.col(emb_col))["cid"].cast("int"))
 
 
 def ivf_search(

@@ -26,6 +26,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegralType
+
+from ..functions.arrow import row_udf
 
 
 # the pinned HLL mix rounds (shared by the Spark expression and the DuckDB
@@ -220,14 +223,21 @@ class BloomFilter:
 
 def _build_distributed(df: DataFrame, col: str, make_sketch):
     """One mapInPandas pass → one serialized partial per partition →
-    associative driver merge (driver sees n_partitions blobs, not rows)."""
+    associative driver merge (driver sees n_partitions blobs, not rows).
+    Values are hashed as the Python values a row lift sees: an integral
+    column holding a NULL reaches pandas as float64, so it is cast back
+    (5, not 5.0, or every probe of that key would miss)."""
     import pickle
+
+    integral = isinstance(df.schema[col].dataType, IntegralType)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sk = make_sketch()
         any_rows = False
         for pdf in batches:
             vals = pdf[col].dropna()
+            if integral:
+                vals = vals.astype("int64")
             if len(vals):
                 sk.add_values(vals.tolist())
                 any_rows = True
@@ -267,12 +277,7 @@ def bloom_prefilter_join(
     bf = bloom_filter(small, key, expected_items=max(n, 1), fpp=fpp)
     bf_b = big.sparkSession.sparkContext.broadcast(bf)
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BooleanType
+    def might_contain(v) -> bool:
+        return v is not None and bf_b.value.might_contain(v)
 
-    @pandas_udf(BooleanType())
-    def _might_contain(vals: pd.Series) -> pd.Series:
-        sk = bf_b.value
-        return vals.apply(lambda v: v is not None and sk.might_contain(v))
-
-    return big.where(_might_contain(F.col(key))).join(small, key)
+    return big.where(row_udf(BooleanType(), might_contain)(F.col(key))).join(small, key)

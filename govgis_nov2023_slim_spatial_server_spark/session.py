@@ -3,7 +3,7 @@
 The reference delegates all execution to PostgreSQL over a per-request
 connection (reference backend/app.py:19-25). Here the resident SparkSession
 is the engine: AQE handles runtime re-planning (skew joins, partition
-coalescing), Arrow makes every pandas-UDF boundary vectorized, and shuffle
+coalescing), Arrow makes every Python UDF boundary vectorized, and shuffle
 partitioning is sized by env so the same code runs local[2] in tests and
 1000 executors in production.
 """
@@ -27,7 +27,7 @@ def get_spark(
     Settings rationale (all public Spark knobs):
     - AQE on: runtime coalescing of shuffle partitions + skew-join splitting;
       at 100 TB the static partition count is always wrong for some stage.
-    - Arrow on: pandas UDFs (vector math, spatial refinement) move data in
+    - Arrow on: Python UDFs (vector math, spatial refinement) move data in
       columnar batches instead of pickled rows.
     - ``spark.sql.files.maxPartitionBytes`` left at default 128 MB — right
       for large parquet scans; on small files Spark's split size

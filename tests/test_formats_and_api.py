@@ -14,6 +14,7 @@ from govgis_nov2023_slim_spatial_server_spark.sources.formats import (
     write_csv,
     write_orc,
     write_json,
+    write_bucketed_table,
     write_partitioned_parquet,
 )
 
@@ -180,3 +181,30 @@ def test_upsert_partitioned_parquet_keep_latest(spark, tmp_path):
         r["k"]: (r["v"], r["ver"]) for r in spark.read.parquet(path).collect()
     }
     assert again == got
+
+
+def test_bucketed_table_join_avoids_shuffle(spark, sf_dir):
+    """Bucketing both join sides on the key removes the Exchange under the
+    join — the co-located-join contract write_bucketed_table exists for."""
+    import shutil
+
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for t in ("b_orders", "b_customer"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        # a fresh in-memory catalog doesn't know about files a previous
+        # session left in the warehouse — clear the location too
+        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+    write_bucketed_table(o, "b_orders", ["o_custkey"], num_buckets=8)
+    write_bucketed_table(
+        c.withColumnRenamed("c_custkey", "o_custkey"), "b_customer", ["o_custkey"], num_buckets=8
+    )
+    joined = (
+        spark.table("b_orders")
+        .join(spark.table("b_customer").hint("merge"), "o_custkey")
+        .select("o_orderkey", "c_name")
+    )
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan  # both sides pre-bucketed → no shuffle
+    assert joined.count() > 0

@@ -148,6 +148,30 @@ class TestQuantileNulls:
         assert ("O", 6, 2000, None, 20.0, None) in weighted
         assert [r[0] for r in weighted] == ["A", "O"]
 
+    @pytest.mark.parametrize("knobs", [{}, {"_QH_W": 16, "_QH_BIN_ROWS_MAX": 1}])
+    def test_null_weights_match_oracle(self, spark, tmp_path, monkeypatch, knobs):
+        """A NULL weight counts as nothing: a flag whose weights are all
+        NULL is one row of NULLs (the oracle's SUM is NULL), and a NULL
+        weight ahead of the rank does not move it."""
+        from govgis_nov2023_slim_spatial_server_spark.catalog import advanced
+
+        for k, v in knobs.items():
+            monkeypatch.setattr(advanced, k, v)
+        lineitem = [
+            ("A", 10.0, 1.0), ("A", 20.0, 2.0),
+            ("B", 5.0, None),
+            ("C", 5.0, None), ("C", 8.0, 2.0),
+        ]
+        _write_quantile_tables(tmp_path, [], lineitem)
+        sf = str(tmp_path)
+        weighted = _spark_rows(spark, "weighted_median_histogram", sf)
+        assert weighted == _oracle_rows(
+            "weighted_median_histogram", sf, ("orders", "lineitem")
+        )
+        assert ("A", 3, 2000, 2000, 20.0, 20.0) in weighted
+        assert ("B", None, None, None, None, None) in weighted
+        assert ("C", 2, 800, 800, 8.0, 8.0) in weighted
+
     def test_empty_tables(self, spark, tmp_path):
         _write_quantile_tables(tmp_path, [], [])
         sf = str(tmp_path)

@@ -37,6 +37,19 @@ def test_bloom_prefilter_join_exact(spark, sf_dir):
     assert filtered == plain  # false positives removed by the join → exact
 
 
+@pytest.mark.parametrize("big_nulls", [False, True])
+def test_bloom_prefilter_join_exact_with_null_keys(spark, big_nulls):
+    """A NULL in an integral key column must not change how the other keys
+    hash on either side of the filter (pandas widens such a column to
+    float64: 5.0 hashed apart from 5 and every probe missed)."""
+    small = spark.createDataFrame([(1, "a"), (2, "b"), (None, "n")], "k long, s string")
+    big_keys = [1, 2, 2, 3] + ([None] if big_nulls else [])
+    big = spark.createDataFrame([(k,) for k in big_keys], "k long")
+    assert bloom_prefilter_join(big, small, "k").count() == big.join(small, "k").count() == 3
+    cms = count_min_sketch(small, "k")
+    assert (cms.estimate(1), cms.estimate(2)) == (1, 1)
+
+
 def test_hll_error_band_across_regimes(spark):
     """The pinned-mix HLL estimate stays inside ±3σ (σ = 1.04/√64 ≈ 13%)
     of the true distinct count for sequential AND random key sets across
